@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main — times every registered query at full
   * materialization (noop sink: all partitions computed, every row
   * serialized, nothing written), so projections/sorts/joins are all
@@ -7,59 +6,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default: one post-shuffle partition per core (local-mode
-      // measurements; cluster deployments size this by bytes per
-      // guide §2.2). Env knob exists for scaling experiments only.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing targets BYTES (minPartitionSize, default 1m),
-      // which under-parallelizes CPU-dense stages whose inputs are
-      // kilobytes of compressed columns (sketch verifies, windowed
-      // rank floors): a sub-1-MB stage coalesces to ONE task on any
-      // core count. 64k keeps such stages near the core count while
-      // staying irrelevant at cluster scale, where post-shuffle
-      // partitions dwarf it (parallelismFirst still bounds the task
-      // count by defaultParallelism). Parameterised; production
-      // deployments with byte-bound stages should keep Spark's 1m.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
-      // guide §2.2: size post-shuffle partitions by BYTES (advisory),
-      // not by core count — parallelismFirst=true (Spark's default)
-      // keeps every byte-small exchange at defaultParallelism tasks,
-      // whose per-task overhead made the whole bench run SLOWER at 32
-      // cores than at 8 (measured r17). Explicitly-pinned exchanges
-      // (Par.widen's repartition(n)) are untouched by AQE, so
-      // CPU-dense map passes stay wide. Env knobs for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PAR_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      // single-file (Unsafe) shuffle writer for EVERY exchange — the
-      // writer any real cluster already uses (the bypass-merge writer
-      // only fires when reducers ≤ 200). Bypass opens R files + R
-      // serializer streams per MAP task, so a local-mode R=cores
-      // session pays M·R file opens per shuffle; measured r17 on this
-      // box it made the whole bench SLOWER at 32 cores than at 8
-      // (d18 1.60 s → 0.86 s, t15 0.88 → 0.50, q08 0.88 → 0.51 from
-      // this one setting). Scale-independent: at cluster R the
-      // default already lands on the same writer.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning was
-      // measured BOTH ways in r17 and stays at Spark's default (off):
-      // it let AQE re-plan q57's cached itemset build (1.13 s →
-      // 0.55 s) but byte-coalesced the interior distincts of d19's
-      // variant cache and serialized its CPU-dense depth-2 explode
-      // (1.81 s → 2.79 s, reproduced) — the same failure mode as the
-      // parallelismFirst=false experiment. q57 got its win from a
-      // Par.widen instead.
-    // free-form experiment overrides: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
+    val builder = GraftSession.builder(GraftSession.envCores(32))
+    // the one experiment override, applied over GraftSession's
+    // settings: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); builder.config(k, v)
     })

@@ -120,6 +120,6 @@ object GraftCatalog {
     // scan-free by hist_daily/agg_daily — exactness-preserving, so
     // leaving it enabled is safe for every other SQL statement (the
     // routing rules fail closed when their layer was not chosen)
-    plans.RollupRouting.enable(spark)
+    plans.RuleSwitch.install(spark, new plans.RollupRoutingRule(spark))
   }
 }

@@ -104,7 +104,7 @@ object ResultCache {
 
   /** The stamp computed over any logical plan — the analyzed-plan
     * face serves [[through]], the OPTIMIZED-plan face serves the
-    * transparent tier ([[graft.plans.TransparentResultCache]]), each
+    * transparent tier ([[graft.plans.TransparentResultCacheRule]]), each
     * keying its own entries (the two plan forms canonicalize
     * differently, so the keyspaces never collide). */
   private[graft] def planStamp(
@@ -264,7 +264,7 @@ object ResultCache {
     }
 
   /** PUBLISH for the transparent tier ([[graft.plans
-    * .TransparentResultCache]]): write `df`'s result keyed by its
+    * .TransparentResultCacheRule]]): write `df`'s result keyed by its
     * OPTIMIZED plan — the form the optimizer rule sees — so the NEXT
     * optimization of the same query substitutes the entry with no
     * caller cooperation. Returns true when an entry was written

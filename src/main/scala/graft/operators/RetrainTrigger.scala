@@ -129,13 +129,7 @@ object RetrainTrigger {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val tau = args.lift(1).map(_.toDouble).getOrElse(0.6)
     val iters = 2
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(8)
     IndexStore.ivfPivots(spark, dir, iters) // ensure deployed artifact
     val (r0, fired, r1) = check(spark, dir,
       IndexStore.ivfPivotPath(dir), iters, tau, queryIds = 0L until 5L)

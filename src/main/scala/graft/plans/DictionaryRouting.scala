@@ -153,21 +153,3 @@ class DictionaryRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }.getOrElse(agg)
   }
 }
-
-object DictionaryRouting {
-  /** Idempotently enable code-space routing on `s` — exactness-
-    * preserving by construction (see class scaladoc), so session-wide
-    * enablement is safe, the [[RollupRouting.enable]] contract. */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[DictionaryRoutingRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ new DictionaryRoutingRule(s)
-
-  /** Test seam: remove the rule so plan-pinning suites sharing the
-    * session don't see foreign rewrites. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[DictionaryRoutingRule])
-}

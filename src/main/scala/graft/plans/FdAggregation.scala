@@ -157,20 +157,3 @@ class FdAggregationRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
   }
 }
-
-object FdAggregation {
-  /** Idempotently enable FD group-by reduction on `s` — exactness-
-    * preserving by construction (see class scaladoc). */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[FdAggregationRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ new FdAggregationRule(s)
-
-  /** Test seam: remove the rule so plan-pinning suites sharing the
-    * session don't see foreign rewrites. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[FdAggregationRule])
-}

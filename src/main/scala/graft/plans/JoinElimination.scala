@@ -46,8 +46,8 @@ import graft.operators.StatsCatalog
   * The right key attribute is traced through the wrapper chain to the
   * relation's own column so the stats lookup names the real column.
   * The rewrite keeps the parent node's expressions (and so its
-  * exprIds) untouched — parents never see the substitution. Enabled
-  * per session via [[JoinElimination.enable]].
+  * exprIds) untouched — parents never see the substitution. Installed
+  * per session via [[RuleSwitch.install]].
   *
   * Plan-time cost, stated: a CANDIDATE join (left-outer, unused
   * right side, single-root parquet relation) pays one watermark
@@ -134,23 +134,6 @@ class JoinEliminationRule(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 object JoinElimination {
-  /** Idempotently enable the rewrite on `s`. Exactness-preserving by
-    * construction (every fire is licensed by an exact-stats
-    * uniqueness proof), so leaving it enabled is safe session-wide —
-    * the same contract as [[RollupRouting.enable]]. */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[JoinEliminationRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ new JoinEliminationRule(s)
-
-  /** Test/gate seam: unregister the rule so sessions shared across
-    * queries optimize rule-clean (r14 wrong #4). */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[JoinEliminationRule])
-
   /** Registered table identities: canonical path → the (dir, table)
     * whose ANALYZE stats govern it — the catalog-alias face
     * [[RollupRouting.registerEventsPath]] established (r10 ask):

@@ -293,26 +293,3 @@ object JoinOrdering {
   private[plans] val chosenMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 }
-
-object TransparentJoinOrdering {
-  /** Idempotently enable transparent ordering on `s`, INSERTED BEFORE
-    * any registered steering rule (order first, steer second — see
-    * class scaladoc). Exactness-preserving: reordering inner
-    * equi-joins is result-invisible (q87 hash-gates it), so
-    * session-wide enablement is safe. */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[TransparentJoinOrderingRule])) {
-      val (steer, rest) = s.experimental.extraOptimizations
-        .partition(_.isInstanceOf[TransparentJoinSteeringRule])
-      s.experimental.extraOptimizations =
-        rest ++ (new TransparentJoinOrderingRule(s) +: steer)
-    }
-
-  /** Test seam: remove the rule so plan-pinning suites sharing the
-    * session don't see foreign reorders. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[TransparentJoinOrderingRule])
-}

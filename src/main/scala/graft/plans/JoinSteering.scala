@@ -362,30 +362,3 @@ private[plans] object SimpleSides {
       case _ => None
     }
 }
-
-object TransparentJoinSteering {
-  /** Enable transparent steering on `s` with the given thresholds —
-    * LAST CALL WINS (an existing rule instance is replaced, so a
-    * session reconfiguring its budget gets deterministic behavior).
-    * Exactness-preserving by construction (broadcast is a hint;
-    * salting is result-invisible, q83 hash-gated), so session-wide
-    * enablement is safe — the [[RollupRouting.enable]] contract. */
-  def enable(s: SparkSession,
-      broadcastBytes: Long = 32L * 1024 * 1024,
-      skewAvgFreq: Double = 64.0,
-      factor: Int = 8,
-      hashBytes: Long = 64L * 1024 * 1024): Unit = {
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[TransparentJoinSteeringRule]) :+
-        new TransparentJoinSteeringRule(s, broadcastBytes, skewAvgFreq,
-          factor, hashBytes)
-  }
-
-  /** Test seam: remove the rule so plan-pinning suites sharing the
-    * session don't see foreign rewrites. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[TransparentJoinSteeringRule])
-}

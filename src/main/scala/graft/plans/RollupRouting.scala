@@ -53,13 +53,13 @@ import graft.operators.{AggRollup, HistogramRollup, TopKRollup}
   * FIRST, so the rewrite vetoes itself fail-closed. Non-matching
   * plans (extra predicates, other aggregates, non-aligned bounds,
   * computed columns, missing artifact) pass through untouched —
-  * false-negative-safe, never false-positive. The q42/q47 oracles run
-  * the RAW aggregates and the hash gate proves exactness end-to-end.
+  * false-negative-safe, never false-positive. RollupRoutingSpec
+  * proves routed answers equal the RAW aggregates.
   *
   * Output attributes keep the ORIGINAL exprIds (alias projection over
   * the spliced subtree), so parent operators (sorts, joins) are
   * oblivious to the substitution — the invariant any plan-rewrite
-  * rule must hold. Enabled per session via [[RollupRouting.enable]]
+  * rule must hold. Installed per session via [[RuleSwitch.install]]
   * (`spark.experimental.extraOptimizations`), or cluster-wide by
   * composing into an extensions class. */
 class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -454,18 +454,6 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 object RollupRouting {
-  /** Idempotently enable routing on `s` (the rollups must exist or
-    * the rule leaves plans untouched — build them with
-    * [[HistogramRollup.ensure]] / [[AggRollup.ensure]]).
-    * Session-scoped and exactness-preserving, so leaving it enabled
-    * is safe for every later query: anything the matcher fires on is
-    * provably equal to its raw plan. */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[RollupRoutingRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ new RollupRoutingRule(s)
-
   /** Registered event-table identities: canonical path → the rollup
     * dir whose artifacts serve it. Registration is the caller's
     * ASSERTION OF IDENTITY — the path must read exactly the same rows
@@ -498,11 +486,4 @@ object RollupRouting {
   /** Test seam: drop registered identities. */
   private[graft] def clearRegisteredPathsForTest(): Unit =
     registeredPaths.clear()
-
-  /** Test seam: remove the rule so suites sharing one session don't
-    * leak routing into unrelated plan pins. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[RollupRoutingRule])
 }

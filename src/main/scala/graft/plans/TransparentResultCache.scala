@@ -76,21 +76,3 @@ class TransparentResultCacheRule(spark: SparkSession)
     }
   }
 }
-
-object TransparentResultCache {
-  /** Idempotently enable transparent result serving on `s`.
-    * Exactness-preserving by the cache's keying contract, so leaving
-    * it enabled is safe for every later query. */
-  def enable(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[TransparentResultCacheRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ new TransparentResultCacheRule(s)
-
-  /** Test seam: remove the rule so plan-pinning suites sharing the
-    * session don't see foreign substitutions. */
-  private[graft] def disableForTest(s: SparkSession): Unit =
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[TransparentResultCacheRule])
-}

@@ -1,6 +1,10 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
+import graft.plans.{DictionaryRoutingRule, FdAggregationRule,
+  JoinEliminationRule, RollupRoutingRule, RuleSwitch,
+  TransparentJoinOrderingRule, TransparentJoinSteeringRule,
+  TransparentResultCacheRule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,20 +23,19 @@ import org.apache.spark.sql.functions._
   *    (`TransformTaxiTrips.py:106-113` analog);
   *  - every aggregate column is rounded and aliased identically on the
   *    Spark and DuckDB sides (driver hash-compares by column name).
+  *
+  * Rule gates (q42 … q99) install their graft rule with
+  * [[graft.plans.RuleSwitch]] only while they build and optimize the
+  * frame: the rewrite is pinned in the frame's own optimized plan,
+  * which their require()s check. The bench's and Verify's `write`
+  * re-plans from the analyzed plan under the caller's rules, so it
+  * executes the raw plan — the one the DuckDB oracle replays.
   */
 object RelationalQueries {
   private type QFn = (SparkSession, String) => DataFrame
 
   private def q(name: String, doc: String, oracle: String)(fn: QFn) =
     GraftQuery(name, fn, Some(oracle), doc)
-
-  /** Force `df`'s optimized plan, then run `cleanup` (unregistering
-    * whatever session rule the gate enabled): optimizedPlan memoizes,
-    * so THIS query still executes its rewritten shape while every
-    * LATER query on the shared session optimizes rule-clean — the
-    * r14 "gate-enabled rules leak into subsequent bench legs" fix. */
-  private def pinThen(df: DataFrame)(cleanup: => Unit): DataFrame =
-    try { df.queryExecution.optimizedPlan; df } finally cleanup
 
   /** q57's pair budget: admitted basket pairs ≤ this × |lineitem| —
     * the d01 `BudgetPerDoc` discipline applied to co-occurrence
@@ -794,7 +797,10 @@ object RelationalQueries {
       |GROUP BY n_name
       |ORDER BY n_name""".stripMargin
   ) { (s, dir) =>
-    graft.GraftCatalog.registerAll(s, dir)
+    // registerAll also installs rollup routing for dashboard callers;
+    // this body needs only the views, so the scope keeps the rule off
+    // the shared session
+    RuleSwitch.scoped(s, Nil)(graft.GraftCatalog.registerAll(s, dir))
     s.sql("""
       SELECT n_name,
              count(*) AS rich_customers,
@@ -1722,11 +1728,11 @@ object RelationalQueries {
     * event_type, counted), and the injected Catalyst rule substitutes
     * the persisted daily histogram table when the rewrite is provably
     * exact (bin counts SUM to exact per-group counts over day-aligned
-    * windows). The oracle runs the same raw aggregate in DuckDB — the
-    * hash gate IS the exactness proof; RollupRoutingSpec pins that
-    * the routed plan reads hist_daily and never touches
-    * events.parquet, and that non-matching variants pass through
-    * unrouted. At 100 TB this turns any dashboard's count-by-type
+    * windows). The pin proves the rule fires; the write executes the
+    * raw plan, which the DuckDB oracle checks. RollupRoutingSpec is
+    * the exactness proof: routed answers equal raw ones, the routed
+    * plan reads hist_daily and never touches events.parquet, and
+    * non-matching variants pass through unrouted. At 100 TB this turns any dashboard's count-by-type
     * window query into kilobytes of bin IO with zero client
     * changes. */
   val q42RoutedCount: GraftQuery = q(
@@ -1739,13 +1745,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.HistogramRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    RuleSwitch.pinned(s, new RollupRoutingRule(s))(Tables(s, dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-08 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-18 00:00:00")))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"))
-      .orderBy($"event_type"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type"))
   }
 
   /** q43 — K-ANONYMITY RELEASE
@@ -2013,13 +2018,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    RuleSwitch.pinned(s, new RollupRoutingRule(s))(Tables(s, dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-06 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-20 00:00:00")))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
-      .orderBy($"event_type"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type"))
   }
 
   /** q48 — COUNT-MIN SKETCH POINT FREQUENCY
@@ -2114,13 +2118,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    RuleSwitch.pinned(s, new RollupRoutingRule(s))(Tables(s, dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-10 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-24 00:00:00")))
       .groupBy($"event_type", date_trunc("day", $"ts").as("day"))
       .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
-      .orderBy($"event_type", $"day"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type", $"day"))
   }
 
   /** q50 — ZERO-COPY SHALLOW CLONE
@@ -2810,14 +2813,13 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.TopKRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    RuleSwitch.pinned(s, new RollupRoutingRule(s))(Tables(s, dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-01 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-14 00:00:00")))
       .groupBy($"user_id")
       .agg(count(lit(1)).as("cnt"))
       .orderBy($"cnt".desc, $"user_id")
-      .limit(20))(graft.plans.RollupRouting.disableForTest(s))
+      .limit(20))
   }
 
   /** q62 — COLUMN STATISTICS CATALOG ([[graft.operators
@@ -2873,9 +2875,11 @@ object RelationalQueries {
     * watermark-intact — fails closed to the raw plan on any doubt).
     * The query is the generated-BI shape: join the wide view, read
     * two columns. The optimized plan has NO JOIN AT ALL (pinned in
-    * JoinEliminationSpec) — at 100 TB the dimension scan + broadcast
-    * simply never runs; the oracle executes the join for real, so the
-    * hash gate is the semantic-equivalence proof. */
+    * JoinEliminationSpec) — at 100 TB, in a session that keeps the
+    * rule installed, the dimension scan + broadcast never runs. The
+    * gate's own write runs the raw join, as the oracle does, so the
+    * hash gate checks the raw plan; the spec is the rewrite's
+    * semantic-equivalence proof. */
   val q63JoinElimination: GraftQuery = q(
     "q63_join_elimination",
     "stats-proven join elimination: unused unique-key LEFT JOIN removed by the optimizer, oracle runs the join for real",
@@ -2888,13 +2892,13 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.StatsCatalog.ensure(s, dir, "nation")
-    graft.plans.JoinElimination.enable(s)
     val c = Tables(s, dir, "customer")
     val n = Tables(s, dir, "nation")
-    pinThen(c.join(n, c("c_nationkey") === n("n_nationkey"), "left")
-      .groupBy($"c_mktsegment")
-      .agg(count(lit(1)).as("n"), round(sum($"c_acctbal"), 2).as("bal"))
-      .orderBy($"c_mktsegment"))(graft.plans.JoinElimination.disableForTest(s))
+    RuleSwitch.pinned(s, new JoinEliminationRule(s))(
+      c.join(n, c("c_nationkey") === n("n_nationkey"), "left")
+        .groupBy($"c_mktsegment")
+        .agg(count(lit(1)).as("n"), round(sum($"c_acctbal"), 2).as("bal"))
+        .orderBy($"c_mktsegment"))
   }
 
   /** q64 — ORDER-PRESERVING DICTIONARY ENCODING ([[graft.operators
@@ -3022,13 +3026,12 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    RuleSwitch.pinned(s, new RollupRoutingRule(s))(Tables(s, dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-04 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-29 00:00:00")))
       .groupBy($"event_type", date_trunc("week", $"ts").as("wk"))
       .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
-      .orderBy($"event_type", $"wk"))(graft.plans.RollupRouting.disableForTest(s))
+      .orderBy($"event_type", $"wk"))
   }
 
   /** q67 — CARDINALITY ESTIMATION FROM THE ANALYZE CATALOG
@@ -3153,11 +3156,10 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.AggRollup.ensure(s, dir)
-    graft.plans.RollupRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    RuleSwitch.pinned(s, new RollupRoutingRule(s))(Tables(s, dir, "events")
       .where($"ts" >= lit(graft.operators.MinMaxManifest.utc("2024-01-06 00:00:00")) &&
         $"ts" < lit(graft.operators.MinMaxManifest.utc("2024-01-27 00:00:00")))
-      .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp")))(graft.plans.RollupRouting.disableForTest(s))
+      .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp")))
   }
 
   /** q69 — STATS-ADVISED SKEW JOIN ([[graft.operators.Steering
@@ -3267,8 +3269,9 @@ object RelationalQueries {
     * then doubles longs, not strings, through the exchange), decode
     * join above on result-sized rows, original exprIds preserved.
     * Plan-pinned in DictionaryRoutingSpec (code-space exchange +
-    * fail-closed vetoes); the oracle runs the plain value-space
-    * aggregate, so the hash gate is the bijection argument's proof. */
+    * fail-closed vetoes, routed answers equal raw ones); the gate's
+    * pin proves the rule fires, and its write executes the plain
+    * value-space aggregate the oracle checks. */
   val q71RoutedDictionary: GraftQuery = q(
     "q71_routed_dictionary",
     "optimizer-routed dictionary encoding: plain GROUP BY string rewritten to code space, decode at serve",
@@ -3279,11 +3282,10 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     graft.operators.Dictionary.ensure(s, dir, "events", "event_type")
-    graft.plans.DictionaryRouting.enable(s)
-    pinThen(Tables(s, dir, "events")
+    RuleSwitch.pinned(s, new DictionaryRoutingRule(s))(Tables(s, dir, "events")
       .groupBy($"event_type")
       .agg(countDistinct($"user_id").as("users"), count(lit(1)).as("n"))
-      .orderBy($"event_type"))(graft.plans.DictionaryRouting.disableForTest(s))
+      .orderBy($"event_type"))
   }
 
   /** q72 — COST-BASED JOIN-ORDER SELECTION ([[graft.plans
@@ -3446,8 +3448,9 @@ object RelationalQueries {
     * count becomes provably ndv(key) for the estimator. The FD here
     * is proven from data (the exact tuple-NDV pass), not assumed
     * from the schema; fail-closed legs are spec-pinned in
-    * FdAggregationSpec. The oracle runs the plain two-column
-    * grouping — the hash gate is the rewrite's exactness proof. */
+    * FdAggregationSpec, which also proves the rewrite bit-identical.
+    * The gate's pin proves the rule fires; its write executes the
+    * plain two-column grouping the oracle checks. */
   val q75FdGroupBy: GraftQuery = q(
     "q75_fd_groupby",
     "FD-proven GROUP BY reduction: optimizer drops the determined display column from the grouping key, restores it as max()",
@@ -3460,13 +3463,12 @@ object RelationalQueries {
     val SC = graft.operators.StatsCatalog
     SC.ensure(s, dir, "nation")
     SC.ensureColumnGroup(s, dir, "nation", Seq("n_nationkey", "n_name"))
-    graft.plans.FdAggregation.enable(s)
-    pinThen(Tables(s, dir, "customer")
+    RuleSwitch.pinned(s, new FdAggregationRule(s))(Tables(s, dir, "customer")
       .join(Tables(s, dir, "nation"), $"c_nationkey" === $"n_nationkey")
       .groupBy($"n_nationkey", $"n_name")
       .agg(count(lit(1)).as("customers"),
         round(sum($"c_acctbal"), 2).as("bal"))
-      .orderBy($"n_nationkey"))(graft.plans.FdAggregation.disableForTest(s))
+      .orderBy($"n_nationkey"))
   }
 
   /** q76 — GDPR PURGE ON THE ENTITY STORE ([[graft.operators
@@ -3745,7 +3747,7 @@ object RelationalQueries {
   }
 
   /** q82 — TRANSPARENT RESULT-CACHE SERVING ([[graft.plans
-    * .TransparentResultCache]] × [[graft.operators.ResultCache
+    * .TransparentResultCacheRule]] × [[graft.operators.ResultCache
     * .publish]], D90's transparent face): the r13 verdict's "API-level, not
     * transparent" serving tier closed. D90's `through` made the
     * second run of a query free for callers who ASK; this makes it
@@ -3755,9 +3757,9 @@ object RelationalQueries {
     * optimized-canonicalized plan ‖ source stamp so any semantic
     * difference or mutated input misses. The query publishes once,
     * then REQUIRES the serve to plan as a cache read (a routing
-    * failure fails Verify loudly, never silently scans); the oracle
-    * runs the raw aggregate — the hash gate proves the substitution
-    * is result-invisible. */
+    * failure fails Verify loudly, never silently scans). The write
+    * executes the raw aggregate, which the oracle checks;
+    * TransparentResultCacheSpec proves the served rows equal it. */
   val q82TransparentCache: GraftQuery = q(
     "q82_transparent_cache",
     "transparent result-cache serving: a published result substitutes into the next identical plan via the optimizer; oracle recomputes from the raw table",
@@ -3769,8 +3771,7 @@ object RelationalQueries {
       |ORDER BY o_orderstatus""".stripMargin
   ) { (s, dir) =>
     import s.implicits._
-    graft.plans.TransparentResultCache.enable(s)
-    try {
+    RuleSwitch.scoped(s, Seq(new TransparentResultCacheRule(s))) {
       def shape = Tables(s, dir, "orders")
         .groupBy($"o_orderstatus")
         .agg(count(lit(1)).as("n"), sum($"o_custkey").as("ck_sum"))
@@ -3779,12 +3780,8 @@ object RelationalQueries {
       val served = shape
       require(served.inputFiles.forall(_.contains("result_cache")),
         "the identical plan must serve through the transparent tier")
-      // the substituted plan is pinned (optimizedPlan memoizes); the
-      // rule must not tax every LATER query's optimization (r14
-      // wrong #4: gate-enabled session rules leaked into bench legs)
-      require(served.queryExecution.optimizedPlan != null)
       served
-    } finally graft.plans.TransparentResultCache.disableForTest(s)
+    }
   }
 
   /** q83 — TRANSPARENT JOIN STEERING ([[graft.plans
@@ -3800,9 +3797,9 @@ object RelationalQueries {
     * actually fired (a silent pass-through would fail Verify
     * loudly); JoinSteeringSpec pins the other arms (broadcast
     * hint, plain pass-through) and every fail-closed veto. The
-    * oracle replays the PLAIN join in DuckDB, so the hash gate
-    * proves the rule is result-invisible end to end — the proof an
-    * optimizer rewrite owes. */
+    * write executes the PLAIN join, which the DuckDB oracle
+    * replays; JoinSteeringSpec compares the salted answers with the
+    * plain ones — the proof an optimizer rewrite owes. */
   val q83TransparentSteering: GraftQuery = q(
     "q83_transparent_steering",
     "transparent join steering: a PLAIN join is salted by the optimizer rule from persisted stats; oracle replays the plain join",
@@ -3824,13 +3821,10 @@ object RelationalQueries {
     SC.ensure(s, fix, "skew_dim")
     SC.ensureKeyProfile(s, fix, "skew_fact", "k", hotFreq = 200L)
     // budget scaled so the near-fact-sized dim can never broadcast
-    // (the q69 knob); the FULL returned frame's plan is forced and
-    // pinned BEFORE the rule unregisters, so the execution runs the
-    // steered shape while later queries optimize rule-clean (r14
-    // wrong #4)
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
+    // (the q69 knob); the require() checks the returned frame's own
+    // optimized plan, taken while the rule is installed
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s,
+        broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8))) {
       val fact = Tables(s, fix, "skew_fact")
       val dim = Tables(s, fix, "skew_dim")
       val served = fact.join(dim, fact("k") === dim("k"))
@@ -3841,7 +3835,7 @@ object RelationalQueries {
       require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
         "the plain join must be steered into the salted shape by the rule")
       served
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    }
   }
 
   /** q84 — ADVICE SURVIVES APPENDS AT O(batch) ([[graft.operators
@@ -3931,9 +3925,8 @@ object RelationalQueries {
     SC.ensure(s, fix, "skew_fact")
     SC.ensure(s, fix, "skew_dim")
     SC.ensureKeyProfile(s, fix, "skew_fact", "k", hotFreq = 200L)
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s,
+        broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8))) {
       val fact = Tables(s, fix, "skew_fact")
       val dim = Tables(s, fix, "skew_dim").where($"seg" =!= 3L)
       val served = fact.join(dim, fact("k") === dim("k"), "left")
@@ -3945,7 +3938,7 @@ object RelationalQueries {
       require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
         "the plain LEFT enrich must be steered into the salted shape")
       served
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    }
   }
 
   /** q86 — CARDINALITY FEEDBACK ([[graft.operators.CardFeedback]] ×
@@ -4013,9 +4006,10 @@ object RelationalQueries {
     * innermost join must hold customer–orders — a silent
     * fall-through fails Verify loudly); JoinOrderingSpec pins the
     * vetoes, the fixed point, and the composition with the steering
-    * rule. The oracle replays the order-invariant join in DuckDB —
-    * the hash gate is the result-invisibility proof every plan
-    * rewrite owes. */
+    * rule, and compares the re-shaped answers with the declared
+    * order's — the result-invisibility proof every plan rewrite
+    * owes. The write executes the declared order, which the DuckDB
+    * oracle replays. */
   val q87TransparentOrdering: GraftQuery = q(
     "q87_transparent_ordering",
     "transparent join ordering: a worst-order declared chain is re-shaped by the optimizer rule from ANALYZE stats; oracle replays the join",
@@ -4030,13 +4024,11 @@ object RelationalQueries {
     import s.implicits._
     val SC = graft.operators.StatsCatalog
     Seq("customer", "orders", "lineitem").foreach(SC.ensure(s, dir, _))
-    graft.plans.TransparentJoinOrdering.enable(s)
-    try {
+    RuleSwitch.scoped(s, Seq(new TransparentJoinOrderingRule(s))) {
       val cu = Tables(s, dir, "customer").where($"c_custkey" <= 150L)
       val or = Tables(s, dir, "orders")
       val li = Tables(s, dir, "lineitem")
-      // the WORST declared order: the fact-fact pair first; the FULL
-      // frame's plan is forced and pinned before the rule unregisters
+      // the WORST declared order: the fact-fact pair first
       val served = li
         .join(or, li("l_orderkey") === or("o_orderkey"))
         .join(cu, or("o_custkey") === cu("c_custkey"))
@@ -4057,7 +4049,7 @@ object RelationalQueries {
       require(deepTables == Set("customer", "orders"),
         s"the rule must re-shape the worst declared order, innermost = $deepTables")
       served
-    } finally graft.plans.TransparentJoinOrdering.disableForTest(s)
+    }
   }
 
   /** q88 — APPROXIMATE QUERY PROCESSING OVER A DETERMINISTIC SAMPLE
@@ -4169,8 +4161,8 @@ object RelationalQueries {
     * a ~n/3-row probe; the MCV tier prices it truly. The oracle
     * replays the order-invariant join in DuckDB — the flip is
     * result-invisible, which is the proof every learned rewrite
-    * owes. The gate restores the config and unregisters the rule so
-    * later queries run algebra-clean (r14 wrong #4). */
+    * owes. The gate restores the caller's config and rules so later
+    * queries run algebra-clean (r14 wrong #4). */
   val q90LearnedOrdering: GraftQuery = q(
     "q90_learned_ordering",
     "one MCV artifact flips the transparent join order via session-config tiers; oracle replays the order-invariant join",
@@ -4195,7 +4187,6 @@ object RelationalQueries {
     val fix = graft.operators.Steering.ensureOrderTierFixture(s, dir)
     Seq("skew_fact", "ord_b", "ord_c").foreach(SC.ensure(s, fix, _))
     SC.ensureMcv(s, fix, "skew_fact", "k")
-    graft.plans.TransparentJoinOrdering.enable(s)
     def shape = {
       val a = Tables(s, fix, "skew_fact").where($"k" === -1L)
       val b = Tables(s, fix, "ord_b")
@@ -4219,22 +4210,15 @@ object RelationalQueries {
           }
       }.toSet
     }
-    val prev = s.conf.getOption("spark.graft.ordering.tiers")
-    try {
-      s.conf.unset("spark.graft.ordering.tiers")
+    val tiers = "spark.graft.ordering.tiers"
+    RuleSwitch.scoped(s, Seq(new TransparentJoinOrderingRule(s)), tiers -> None) {
       require(innermost(shape) == Set("skew_fact", "ord_b"),
         "with tiers unset the uniform algebra keeps the declared order")
-      s.conf.set("spark.graft.ordering.tiers", "mcv")
+      s.conf.set(tiers, "mcv")
       val served = shape
       require(innermost(served) == Set("ord_b", "ord_c"),
         "one MCV artifact must flip the transparent order to seed the dim join")
       served
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.ordering.tiers", v)
-        case None => s.conf.unset("spark.graft.ordering.tiers")
-      }
-      graft.plans.TransparentJoinOrdering.disableForTest(s)
     }
   }
 
@@ -4282,9 +4266,8 @@ object RelationalQueries {
     s.sql("DROP TABLE IF EXISTS graft_cat_fact")
     s.sql(s"CREATE TABLE graft_cat_fact USING parquet LOCATION '$catPath'")
     Tables(s, fix, "skew_dim").createOrReplaceTempView("graft_cat_dim")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s,
+        broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8))) {
       val served = s.sql(
         """SELECT d.seg, count(*) AS n, count(DISTINCT f.k) AS keys,
           |       sum(CAST(floor(f.value) AS BIGINT)) AS v_fp
@@ -4293,7 +4276,7 @@ object RelationalQueries {
       require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
         "the catalog-table join must be steered through the registered identity")
       served
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    }
   }
 
   /** q92 — COMPOSITE-KEY JOINS GET THE BROADCAST ARM
@@ -4327,10 +4310,8 @@ object RelationalQueries {
     val fix = graft.operators.Steering.ensureCompositeFixture(s, dir)
     SC.ensure(s, fix, "comp_fact")
     SC.ensure(s, fix, "comp_dim")
-    graft.plans.TransparentJoinSteering.enable(s)
-    val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s)),
+        "spark.sql.autoBroadcastJoinThreshold" -> Some("-1")) {
       val fact = Tables(s, fix, "comp_fact")
       val dim = Tables(s, fix, "comp_dim")
       val served = fact
@@ -4344,9 +4325,6 @@ object RelationalQueries {
         "with size-based broadcast disabled, only the rule's hint can " +
           "produce a BroadcastHashJoin on the composite key")
       served
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-      graft.plans.TransparentJoinSteering.disableForTest(s)
     }
   }
 
@@ -4435,10 +4413,9 @@ object RelationalQueries {
     SC.ensure(s, fix, "mcv_fact")
     SC.ensure(s, fix, "mcv_dim")
     SC.ensureMcv(s, fix, "mcv_fact", "k")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    val prev = s.conf.getOption("spark.graft.steering.tiers")
-    try {
+    val tiers = "spark.graft.steering.tiers"
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s,
+        broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)), tiers -> None) {
       def shape = {
         val fact = Tables(s, fix, "mcv_fact")
         val dim = Tables(s, fix, "mcv_dim")
@@ -4448,20 +4425,13 @@ object RelationalQueries {
             sum(floor($"value").cast("long")).as("v_fp"))
           .orderBy($"seg")
       }
-      s.conf.unset("spark.graft.steering.tiers")
       require(!shape.queryExecution.optimizedPlan.toString.contains("__salt_f"),
         "with no profile and the tier unset, the mean-frequency algebra passes through")
-      s.conf.set("spark.graft.steering.tiers", "mcv")
+      s.conf.set(tiers, "mcv")
       val served = shape
       require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
         "the MCV tier must diagnose the skew and salt the hot key")
       served
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.steering.tiers", v)
-        case None => s.conf.unset("spark.graft.steering.tiers")
-      }
-      graft.plans.TransparentJoinSteering.disableForTest(s)
     }
   }
 
@@ -4654,9 +4624,8 @@ object RelationalQueries {
     SC.ensure(s, fix, "skew_fact")
     SC.ensure(s, fix, "skew_dim")
     SC.ensureKeyProfile(s, fix, "skew_fact", "k", hotFreq = 200L)
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    try {
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s,
+        broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8))) {
       def leg(kind: String, label: String) = {
         val fact = Tables(s, fix, "skew_fact")
         val dim = Tables(s, fix, "skew_dim").where($"seg" =!= 3L)
@@ -4672,7 +4641,7 @@ object RelationalQueries {
       require(anti.queryExecution.optimizedPlan.toString.contains("__salt_f"),
         "the plain LEFT ANTI join must be steered into the salted shape")
       anti.unionByName(semi).orderBy($"leg")
-    } finally graft.plans.TransparentJoinSteering.disableForTest(s)
+    }
   }
 
   /** q98 — O(batch)-MAINTAINED MCV LISTS FEED THE LEARNED TIER
@@ -4712,11 +4681,9 @@ object RelationalQueries {
     require(SM.mcvMaintIfCurrent(s, fix, "mcvm_fact", "k")
         .exists(_.headOption.exists(_._1 == "-7")),
       "the maintained MCV list must rank the hot value first")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    val prev = s.conf.getOption("spark.graft.steering.tiers")
-    try {
-      s.conf.set("spark.graft.steering.tiers", "mcv")
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s,
+        broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)),
+        "spark.graft.steering.tiers" -> Some("mcv")) {
       val fact = Tables(s, fix, "mcvm_fact")
       val dim = Tables(s, fix, "mcvm_dim")
       val served = fact.join(dim, fact("k") === dim("k"))
@@ -4727,12 +4694,6 @@ object RelationalQueries {
       require(served.queryExecution.optimizedPlan.toString.contains("__salt_f"),
         "the maintained MCV tier must diagnose the skew and salt the hot key across the append")
       served
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.steering.tiers", v)
-        case None => s.conf.unset("spark.graft.steering.tiers")
-      }
-      graft.plans.TransparentJoinSteering.disableForTest(s)
     }
   }
 
@@ -4743,8 +4704,8 @@ object RelationalQueries {
     * and the result cache (D90) — enabled in ONE session together
     * with BOTH learned-tier configs, each gate-representative shape
     * run under the full stack and require()-pinned to the rewrite it
-    * owns. Until now each rule was gated in isolation (`pinThen`
-    * enables → pins → unregisters), so rule-ordering interactions —
+    * owns. Until now each rule was gated in isolation (`RuleSwitch`
+    * installs → pins → restores), so rule-ordering interactions —
     * the exact class of bug a fixed-point batch of seven rewrites
     * can hide — were untested. The composition disciplines this
     * pins: dictionary routing DECLINES rollup-servable shapes (the
@@ -4810,7 +4771,6 @@ object RelationalQueries {
   ) { (s, dir) =>
     import s.implicits._
     val SC = graft.operators.StatsCatalog
-    import graft.{plans => P}
     // ---- artifacts every rule needs (all idempotent per fingerprint)
     graft.operators.HistogramRollup.ensure(s, dir)
     graft.operators.Dictionary.ensure(s, dir, "events", "event_type")
@@ -4824,21 +4784,19 @@ object RelationalQueries {
     // ---- the whole brain, one session: registration order puts the
     // rollup router before the dictionary router (the shared-shape
     // tie the dict rule's rollupServable screen already declines —
-    // pinned below), ordering before steering (enable() inserts it
-    // so), the cache last
-    P.RollupRouting.enable(s)
-    P.DictionaryRouting.enable(s)
-    P.FdAggregation.enable(s)
-    P.JoinElimination.enable(s)
-    P.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8)
-    P.TransparentJoinOrdering.enable(s)
-    P.TransparentResultCache.enable(s)
-    val prevOrd = s.conf.getOption("spark.graft.ordering.tiers")
-    val prevSteer = s.conf.getOption("spark.graft.steering.tiers")
-    s.conf.set("spark.graft.ordering.tiers", "mcv,feedback")
-    s.conf.set("spark.graft.steering.tiers", "mcv")
-    try {
+    // pinned below), ordering before steering (RuleSwitch.install
+    // inserts it so), the cache last
+    RuleSwitch.scoped(s, Seq(
+        new RollupRoutingRule(s),
+        new DictionaryRoutingRule(s),
+        new FdAggregationRule(s),
+        new JoinEliminationRule(s),
+        new TransparentJoinSteeringRule(s,
+          broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8),
+        new TransparentJoinOrderingRule(s),
+        new TransparentResultCacheRule(s)),
+        "spark.graft.ordering.tiers" -> Some("mcv,feedback"),
+        "spark.graft.steering.tiers" -> Some("mcv")) {
       def shaped(label: String, df: org.apache.spark.sql.DataFrame,
           key: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column,
           v: org.apache.spark.sql.Column) =
@@ -4919,8 +4877,9 @@ object RelationalQueries {
       require(!elim.queryExecution.optimizedPlan.exists(
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
         "composed: the elimination rule must drop the unused join")
-      // one frame, one hash: the union's own plan is forced while the
-      // full stack is registered (the pinThen discipline)
+      // one frame, one hash: the union's own plan is optimized under
+      // the full stack too (the rules compose on one plan); the write
+      // re-plans it from the analyzed plan, rule-free
       val out = shaped("routed", routed, $"event_type", $"n", lit(0.0))
         .unionByName(shaped("dict", dict, $"event_type", $"n",
           $"users".cast("double")))
@@ -4934,22 +4893,6 @@ object RelationalQueries {
         .orderBy($"shape", $"key")
       out.queryExecution.optimizedPlan
       out
-    } finally {
-      prevOrd match {
-        case Some(v) => s.conf.set("spark.graft.ordering.tiers", v)
-        case None => s.conf.unset("spark.graft.ordering.tiers")
-      }
-      prevSteer match {
-        case Some(v) => s.conf.set("spark.graft.steering.tiers", v)
-        case None => s.conf.unset("spark.graft.steering.tiers")
-      }
-      P.RollupRouting.disableForTest(s)
-      P.DictionaryRouting.disableForTest(s)
-      P.FdAggregation.disableForTest(s)
-      P.JoinElimination.disableForTest(s)
-      P.TransparentJoinSteering.disableForTest(s)
-      P.TransparentJoinOrdering.disableForTest(s)
-      P.TransparentResultCache.disableForTest(s)
     }
   }
 
@@ -5123,12 +5066,10 @@ object RelationalQueries {
     val SC = graft.operators.StatsCatalog
     SC.ensure(s, dir, "orders")
     SC.ensure(s, dir, "lineitem")
-    graft.plans.TransparentJoinSteering.enable(s,
-      broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8,
-      hashBytes = 8L * 1024 * 1024 * 1024)
-    val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    RuleSwitch.scoped(s, Seq(new TransparentJoinSteeringRule(s,
+        broadcastBytes = 1024L, skewAvgFreq = 64.0, factor = 8,
+        hashBytes = 8L * 1024 * 1024 * 1024)),
+        "spark.sql.autoBroadcastJoinThreshold" -> Some("-1")) {
       def leg(kind: String, label: String) = {
         val or = Tables(s, dir, "orders")
         val li = Tables(s, dir, "lineitem").where($"l_quantity" > 45.0)
@@ -5144,9 +5085,6 @@ object RelationalQueries {
       val anti = leg("left_anti", "anti")
       val semi = leg("left_semi", "semi")
       anti.unionByName(semi).orderBy($"leg")
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-      graft.plans.TransparentJoinSteering.disableForTest(s)
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ACCURACY receipt for [[graft.plans.CardinalityEstimator]] (D82):
@@ -18,15 +17,7 @@ import org.apache.spark.sql.functions._
 object EstimatorAudit {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.envCores(32))
     import spark.implicits._
     sys.props.getOrElseUpdate("graft.index.dir",
       java.nio.file.Files.createTempDirectory("est-audit").toString)

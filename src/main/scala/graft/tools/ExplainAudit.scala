@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.QueryRegistry
 
 /** Prints the formatted physical plan of every registered query —
@@ -14,16 +13,10 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSet else Set.empty[String]
-    // session shape matches Bench (core count, shuffle width) so the
-    // dumped plans are the plans the bench measures — scale-adaptive
-    // operators (Par.widen) are core-count-sensitive and a local[4]
-    // dump silently hid their exchanges (r17)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session at the bench's core count, so the dumped
+    // plans are the plans the bench measures — scale-adaptive
+    // operators (Par.widen) are core-count-sensitive
+    val spark = graft.GraftSession(graft.GraftSession.envCores(32))
     spark.sparkContext.setLogLevel("ERROR")
     QueryRegistry.all
       .filter(q => names.isEmpty || names.contains(q.name))

@@ -1,24 +1,26 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite run (Spark sessions
   * are expensive; ScalaTest suites run sequentially in the forked
-  * JVM). */
+  * JVM) — the engine's own session, so plan and partition pins hold
+  * under the settings the bench measures. */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Each test gets the shared session's rule list back as it found
+    * it, so a rule a test installs (directly, or through a library
+    * call such as GraftCatalog.registerAll) never reaches a later
+    * test's plans. */
+  override def withFixture(test: NoArgTest): Outcome =
+    graft.plans.RuleSwitch.scoped(spark, Nil)(super.withFixture(test))
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

@@ -129,7 +129,6 @@ class RuntimeFilterSpec extends SparkSpec {
       assert(paths.exists(_.contains("hist_daily")) &&
         !paths.exists(_.contains("events.parquet")),
         s"the SQL dashboard aggregate must route to the rollup: $paths")
-      graft.plans.RollupRouting.disableForTest(spark)
     }
   }
 

@@ -30,10 +30,9 @@ class DictionaryRoutingSpec extends SparkSpec {
 
   test("the plain string GROUP BY routes to code space and back") {
     withIndexRoot("graft-dictroute") {
-      try {
-        val truth = shape().collect().map(_.toString).toSeq
-        Dictionary.ensure(spark, sf, "events", "event_type")
-        DictionaryRouting.enable(spark)
+      val truth = shape().collect().map(_.toString).toSeq
+      Dictionary.ensure(spark, sf, "events", "event_type")
+      RuleSwitch.scoped(spark, Seq(new DictionaryRoutingRule(spark))) {
         val routed = shape()
         // the aggregate now groups by the dictionary CODE, not the
         // string — longs through every exchange
@@ -44,14 +43,13 @@ class DictionaryRoutingSpec extends SparkSpec {
           "the exchange must move codes")
         // and the serve is bit-identical to value space
         assert(routed.collect().map(_.toString).toSeq === truth)
-      } finally DictionaryRouting.disableForTest(spark)
+      }
     }
   }
 
   test("fail-closed vetoes: no artifact, broken watermark, unsafe shapes") {
     withIndexRoot("graft-dictroute-veto") {
-      try {
-        DictionaryRouting.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new DictionaryRoutingRule(spark))) {
         // no dictionary artifact: untouched
         assert(!groupKeys(shape()).contains("code"))
         Dictionary.ensure(spark, sf, "events", "event_type")
@@ -72,7 +70,7 @@ class DictionaryRoutingSpec extends SparkSpec {
         EnsureWatermark.invalidate(
           Dictionary.dictPath(sf, "events", "event_type"))
         assert(!groupKeys(shape()).contains("code"))
-      } finally DictionaryRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -86,14 +84,13 @@ class DictionaryRoutingSpec extends SparkSpec {
         .groupBy($"tag")
         .agg(countDistinct($"uid").as("users"), count(lit(1)).as("n"))
         .orderBy($"tag")
-      try {
-        val truth = q().collect().map(_.toString).toSeq
-        Dictionary.ensure(spark, dir, "tags", "tag")
-        DictionaryRouting.enable(spark)
+      val truth = q().collect().map(_.toString).toSeq
+      Dictionary.ensure(spark, dir, "tags", "tag")
+      RuleSwitch.scoped(spark, Seq(new DictionaryRoutingRule(spark))) {
         assert(groupKeys(q()).contains("code"))
         assert(q().collect().map(_.toString).toSeq === truth,
           "the NULL group must encode to the NULL code and decode back")
-      } finally DictionaryRouting.disableForTest(spark)
+      }
     }
   }
 }

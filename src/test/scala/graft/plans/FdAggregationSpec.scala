@@ -41,14 +41,13 @@ class FdAggregationSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum($"payload").as("s"))
         .orderBy($"k")
       val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new FdAggregationRule(spark))) {
         assert(groupSizes(shape) === Seq(1),
           s"proven k -> name must group by k alone:\n${shape.queryExecution.optimizedPlan}")
         val reduced = shape.collect().map(_.toString).sorted
         assert(reduced.sameElements(plain),
           "the rewrite must be result-invisible, NULL name group included")
-      } finally FdAggregation.disableForTest(spark)
+      }
     }
   }
 
@@ -63,12 +62,11 @@ class FdAggregationSpec extends SparkSpec {
       def shape = f.groupBy($"k", $"name", $"grp")
         .agg(count(lit(1)).as("n"))
       val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new FdAggregationRule(spark))) {
         assert(groupSizes(shape) === Seq(1),
           s"k -> name AND k -> grp must both drop:\n${shape.queryExecution.optimizedPlan}")
         assert(shape.collect().map(_.toString).sorted.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+      }
     }
   }
 
@@ -90,12 +88,11 @@ class FdAggregationSpec extends SparkSpec {
       def shape = f.union(g).groupBy($"k", $"name")
         .agg(count(lit(1)).as("n"), sum($"payload").as("s"))
       val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new FdAggregationRule(spark))) {
         assert(groupSizes(shape) === Seq(2),
           s"Union on the path must veto:\n${shape.queryExecution.optimizedPlan}")
         assert(shape.collect().map(_.toString).sorted.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+      }
     }
   }
 
@@ -111,12 +108,11 @@ class FdAggregationSpec extends SparkSpec {
         .join(dim, Seq("k"))
         .groupBy($"k", $"name").agg(count(lit(1)).as("n"))
       val plain = shape.collect().map(_.toString).sorted
-      try {
-        FdAggregation.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new FdAggregationRule(spark))) {
         assert(groupSizes(shape) === Seq(1),
           s"Filter/Join are row-preserving, the rewrite must still fire:\n${shape.queryExecution.optimizedPlan}")
         assert(shape.collect().map(_.toString).sorted.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+      }
     }
   }
 
@@ -127,8 +123,10 @@ class FdAggregationSpec extends SparkSpec {
       StatsCatalog.ensure(spark, dir, "fd")
       StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
       graft.Tables(spark, dir, "fd").createOrReplaceTempView("fd_embed")
-      try {
-        FdAggregation.enable(spark)
+      // references INSIDE aggregate functions stay safe to rewrite
+      def inAgg = spark.sql(
+        "SELECT k, name, count(name) AS n FROM fd_embed GROUP BY k, name")
+      val got = RuleSwitch.scoped(spark, Seq(new FdAggregationRule(spark))) {
         // upper(name) is valid SQL while name is a grouping column —
         // after a naive rewrite it would reference a dropped one
         def embedded = spark.sql(
@@ -136,16 +134,12 @@ class FdAggregationSpec extends SparkSpec {
         assert(groupSizes(embedded) === Seq(2),
           s"embedded reference must bail:\n${embedded.queryExecution.optimizedPlan}")
         embedded.collect() // and the plan must still execute
-        // references INSIDE aggregate functions stay safe to rewrite
-        def inAgg = spark.sql(
-          "SELECT k, name, count(name) AS n FROM fd_embed GROUP BY k, name")
         assert(groupSizes(inAgg) === Seq(1),
           s"agg-internal references are exact under the FD:\n${inAgg.queryExecution.optimizedPlan}")
-        val got = inAgg.collect().map(_.toString).sorted
-        FdAggregation.disableForTest(spark)
-        val plain = inAgg.collect().map(_.toString).sorted
-        assert(got.sameElements(plain))
-      } finally FdAggregation.disableForTest(spark)
+        inAgg.collect().map(_.toString).sorted
+      }
+      val plain = inAgg.collect().map(_.toString).sorted
+      assert(got.sameElements(plain))
     }
   }
 
@@ -155,8 +149,7 @@ class FdAggregationSpec extends SparkSpec {
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "fd")
       val f = graft.Tables(spark, dir, "fd")
-      try {
-        FdAggregation.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new FdAggregationRule(spark))) {
         // no group artifact at all -> untouched
         def nameShape = f.groupBy($"k", $"name").agg(count(lit(1)))
         assert(groupSizes(nameShape) === Seq(2), "absent artifact -> no rewrite")
@@ -170,7 +163,7 @@ class FdAggregationSpec extends SparkSpec {
         EnsureWatermark.invalidate(
           StatsCatalog.groupStatsPath(dir, "fd", Seq("k", "name")))
         assert(groupSizes(nameShape) === Seq(2), "stale artifact -> no rewrite")
-      } finally FdAggregation.disableForTest(spark)
+      }
     }
   }
 }

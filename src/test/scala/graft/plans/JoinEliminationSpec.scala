@@ -42,7 +42,7 @@ class JoinEliminationSpec extends SparkSpec {
       val dir = tmpDir("graft-jelim-data")
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
-      JoinElimination.enable(spark)
+      RuleSwitch.install(spark, new JoinEliminationRule(spark))
       // Project shape
       val p = leftJoined(dir).select($"seg", $"v")
       assert(joins(p).isEmpty, s"join must be eliminated:\n${p.queryExecution.optimizedPlan}")
@@ -69,7 +69,7 @@ class JoinEliminationSpec extends SparkSpec {
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
       StatsCatalog.ensure(spark, dir, "multi")
-      JoinElimination.enable(spark)
+      RuleSwitch.install(spark, new JoinEliminationRule(spark))
       // (a) right column referenced -> join stays
       assert(joins(leftJoined(dir).select($"seg", $"dname")).nonEmpty)
       // (b) inner join -> stays (needs left-side referential integrity
@@ -97,7 +97,7 @@ class JoinEliminationSpec extends SparkSpec {
       val dir = tmpDir("graft-jelim-alias-data")
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
-      JoinElimination.enable(spark)
+      RuleSwitch.install(spark, new JoinEliminationRule(spark))
       // a catalog-managed copy of dim at a path the convention cannot
       // name — registration asserts identity, stats stay the original's
       graft.Tables(spark, dir, "dim")
@@ -122,7 +122,7 @@ class JoinEliminationSpec extends SparkSpec {
       val dir = tmpDir("graft-jelim-conj-data")
       writeTables(dir)
       StatsCatalog.ensure(spark, dir, "dim")
-      JoinElimination.enable(spark)
+      RuleSwitch.install(spark, new JoinEliminationRule(spark))
       val f = graft.Tables(spark, dir, "fact")
       val d = graft.Tables(spark, dir, "dim")
       val extra = f.join(d, f("fk") === d("dk") && f("v") > 25.0, "left")

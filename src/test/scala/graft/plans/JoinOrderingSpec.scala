@@ -42,16 +42,16 @@ class JoinOrderingSpec extends SparkSpec {
     withIndexRoot("graft-tjo") {
       val dir = tmpDir("graft-tjo-data")
       writeTables(dir)
-      try {
-        val fact = graft.Tables(spark, dir, "fact")
-        val dima = graft.Tables(spark, dir, "dima").where($"dak" <= 5L)
-        val dimb = graft.Tables(spark, dir, "dimb")
-        def worst = fact
-          .join(dimb, $"kb" === $"dbk")
-          .join(dima, $"ka" === $"dak")
+      val fact = graft.Tables(spark, dir, "fact")
+      val dima = graft.Tables(spark, dir, "dima").where($"dak" <= 5L)
+      val dimb = graft.Tables(spark, dir, "dimb")
+      def worst = fact
+        .join(dimb, $"kb" === $"dbk")
+        .join(dima, $"ka" === $"dak")
+      val ordering = Seq(new TransparentJoinOrderingRule(spark))
 
+      val (ordered, got) = RuleSwitch.scoped(spark, ordering) {
         // no stats -> untouched even when enabled
-        TransparentJoinOrdering.enable(spark)
         assert(innermostTables(worst) === Set("fact", "dimb"),
           "without ANALYZE evidence the declared order must stand")
 
@@ -60,16 +60,16 @@ class JoinOrderingSpec extends SparkSpec {
         val ordered = worst
         assert(innermostTables(ordered) === Set("fact", "dima"),
           s"the DP must re-shape the chain:\n${ordered.queryExecution.optimizedPlan}")
-        // result-invisible
-        val got = ordered.select($"payload", $"aname", $"bname")
-          .collect().map(_.toString).sorted
-        TransparentJoinOrdering.disableForTest(spark)
-        val want = worst.select($"payload", $"aname", $"bname")
-          .collect().map(_.toString).sorted
-        assert(got.sameElements(want), "reordering must be result-invisible")
+        (ordered, ordered.select($"payload", $"aname", $"bname")
+          .collect().map(_.toString).sorted)
+      }
+      // result-invisible
+      val want = worst.select($"payload", $"aname", $"bname")
+        .collect().map(_.toString).sorted
+      assert(got.sameElements(want), "reordering must be result-invisible")
 
+      RuleSwitch.scoped(spark, ordering) {
         // fixed point: the ordered plan re-optimizes to ITSELF
-        TransparentJoinOrdering.enable(spark)
         val once = ordered.queryExecution.optimizedPlan
         val rule = new TransparentJoinOrderingRule(spark)
         assert(rule.apply(once).fastEquals(once),
@@ -90,23 +90,15 @@ class JoinOrderingSpec extends SparkSpec {
 
         // composition: steering broadcasts the ordered chain's dims
         // in the same batch (order first, steer second)
-        TransparentJoinSteering.enable(spark,
-          broadcastBytes = 32L * 1024 * 1024, skewAvgFreq = 1e9)
-        val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
+        RuleSwitch.scoped(spark, Seq(new TransparentJoinSteeringRule(spark,
+            broadcastBytes = 32L * 1024 * 1024, skewAvgFreq = 1e9)),
+            "spark.sql.autoBroadcastJoinThreshold" -> Some("-1")) {
           val composed = worst
           assert(innermostTables(composed) === Set("fact", "dima"))
           assert(composed.queryExecution.executedPlan.toString
             .contains("BroadcastHashJoin"),
             "the steering rule must hint the ordered chain's dims")
-        } finally {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-          TransparentJoinSteering.disableForTest(spark)
         }
-      } finally {
-        TransparentJoinOrdering.disableForTest(spark)
-        TransparentJoinSteering.disableForTest(spark)
       }
     }
   }
@@ -115,48 +107,46 @@ class JoinOrderingSpec extends SparkSpec {
     withIndexRoot("graft-tjo-interior") {
       val dir = tmpDir("graft-tjo-interior-data")
       writeTables(dir)
-      try {
-        Seq("fact", "dima", "dimb").foreach(StatsCatalog.ensure(spark, dir, _))
-        TransparentJoinOrdering.enable(spark)
-        val fact = graft.Tables(spark, dir, "fact")
-        val dima = graft.Tables(spark, dir, "dima").where($"dak" <= 5L)
-        val dimb = graft.Tables(spark, dir, "dimb")
-        // a NON-PUSHABLE interior filter: it references BOTH sides of
-        // the first join, so Catalyst cannot push it below — before
-        // r16 it truncated every flatten at two leaves
-        def interior = fact
-          .join(dimb, $"kb" === $"dbk")
-          .where($"payload" + $"dbk" > 2L)
-          .join(dima, $"ka" === $"dak")
+      Seq("fact", "dima", "dimb").foreach(StatsCatalog.ensure(spark, dir, _))
+      val fact = graft.Tables(spark, dir, "fact")
+      val dima = graft.Tables(spark, dir, "dima").where($"dak" <= 5L)
+      val dimb = graft.Tables(spark, dir, "dimb")
+      val ordering = Seq(new TransparentJoinOrderingRule(spark))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select($"payload", $"aname", $"bname").collect().map(_.toString).sorted
+      // a NON-PUSHABLE interior filter: it references BOTH sides of
+      // the first join, so Catalyst cannot push it below — before
+      // r16 it truncated every flatten at two leaves
+      def interior = fact
+        .join(dimb, $"kb" === $"dbk")
+        .where($"payload" + $"dbk" > 2L)
+        .join(dima, $"ka" === $"dak")
+      val got = RuleSwitch.scoped(spark, ordering) {
         assert(innermostTables(interior) === Set("fact", "dima"),
           s"an interior filter must not truncate the flatten:\n${interior.queryExecution.optimizedPlan}")
-        // the residual predicate SURVIVES the rewrite: result equals
-        // the unruled plan's
-        val got = interior.select($"payload", $"aname", $"bname")
-          .collect().map(_.toString).sorted
-        TransparentJoinOrdering.disableForTest(spark)
-        val want = interior.select($"payload", $"aname", $"bname")
-          .collect().map(_.toString).sorted
-        assert(got.sameElements(want),
-          "the interior-filter rewrite must be result-invisible")
+        rows(interior)
+      }
+      // the residual predicate SURVIVES the rewrite: result equals
+      // the unruled plan's
+      assert(got.sameElements(rows(interior)),
+        "the interior-filter rewrite must be result-invisible")
 
-        TransparentJoinOrdering.enable(spark)
-        // a SubqueryAlias-wrapped interior (the generated-BI CTE
-        // shape) flattens too
-        def aliased = fact
-          .join(dimb, $"kb" === $"dbk").alias("mid")
-          .join(dima, $"ka" === $"dak")
+      // a SubqueryAlias-wrapped interior (the generated-BI CTE
+      // shape) flattens too
+      def aliased = fact
+        .join(dimb, $"kb" === $"dbk").alias("mid")
+        .join(dima, $"ka" === $"dak")
+      // DEEPEST-LEGAL residual placement (r16 close): a residual
+      // over the INNERMOST chosen pair (fact, dima) must sit below
+      // the top join, not above the whole chain — the declared
+      // plan's early filtering survives the reorder
+      def deepResid = fact
+        .join(dimb, $"kb" === $"dbk")
+        .join(dima, $"ka" === $"dak")
+        .where($"payload" + $"dak" > 2L)
+      val gotD = RuleSwitch.scoped(spark, ordering) {
         assert(innermostTables(aliased) === Set("fact", "dima"),
           s"an interior alias must not truncate the flatten:\n${aliased.queryExecution.optimizedPlan}")
-
-        // DEEPEST-LEGAL residual placement (r16 close): a residual
-        // over the INNERMOST chosen pair (fact, dima) must sit below
-        // the top join, not above the whole chain — the declared
-        // plan's early filtering survives the reorder
-        def deepResid = fact
-          .join(dimb, $"kb" === $"dbk")
-          .join(dima, $"ka" === $"dak")
-          .where($"payload" + $"dak" > 2L)
         val drPlan = deepResid.queryExecution.optimizedPlan
         assert(innermostTables(deepResid) === Set("fact", "dima"))
         val innerJoin = drPlan.collect {
@@ -174,15 +164,12 @@ class JoinOrderingSpec extends SparkSpec {
             case _ => false
           }.isDefined),
           s"the residual must sit directly over the innermost join:\n$drPlan")
-        val gotD = deepResid.select($"payload", $"aname", $"bname")
-          .collect().map(_.toString).sorted
-        TransparentJoinOrdering.disableForTest(spark)
-        val wantD = deepResid.select($"payload", $"aname", $"bname")
-          .collect().map(_.toString).sorted
-        assert(gotD.sameElements(wantD),
-          "deep placement must be result-invisible")
-        TransparentJoinOrdering.enable(spark)
+        rows(deepResid)
+      }
+      assert(gotD.sameElements(rows(deepResid)),
+        "deep placement must be result-invisible")
 
+      RuleSwitch.scoped(spark, ordering) {
         // fixed point: the filtered rewrite re-optimizes to itself
         val rule = new TransparentJoinOrderingRule(spark)
         val once = interior.queryExecution.optimizedPlan
@@ -198,7 +185,7 @@ class JoinOrderingSpec extends SparkSpec {
           .join(dimb, $"kb" === $"dbk")
           .join(dima, $"ka" === $"dak")
         assert(innermostTables(worst) === Set("fact", "dima"))
-      } finally TransparentJoinOrdering.disableForTest(spark)
+      }
     }
   }
 
@@ -206,12 +193,11 @@ class JoinOrderingSpec extends SparkSpec {
     withIndexRoot("graft-tjo-maint") {
       val dir = tmpDir("graft-tjo-maint-data")
       writeTables(dir)
-      try {
-        // fact gets NO exact ANALYZE — only the O(batch)-maintained
-        // tier (the streamed-table state); the dims are exact
-        Seq("dima", "dimb").foreach(StatsCatalog.ensure(spark, dir, _))
-        graft.operators.StatsMaintain.ensure(spark, dir, "fact")
-        TransparentJoinOrdering.enable(spark)
+      // fact gets NO exact ANALYZE — only the O(batch)-maintained
+      // tier (the streamed-table state); the dims are exact
+      Seq("dima", "dimb").foreach(StatsCatalog.ensure(spark, dir, _))
+      graft.operators.StatsMaintain.ensure(spark, dir, "fact")
+      RuleSwitch.scoped(spark, Seq(new TransparentJoinOrderingRule(spark))) {
         val fact = graft.Tables(spark, dir, "fact")
         val dima = graft.Tables(spark, dir, "dima").where($"dak" <= 5L)
         val dimb = graft.Tables(spark, dir, "dimb")
@@ -227,7 +213,7 @@ class JoinOrderingSpec extends SparkSpec {
           .write.mode("append").parquet(s"$dir/fact.parquet")
         assert(innermostTables(worst) === Set("fact", "dimb"),
           "appended-but-unmaintained evidence must veto the reorder")
-      } finally TransparentJoinOrdering.disableForTest(spark)
+      }
     }
   }
 
@@ -235,10 +221,9 @@ class JoinOrderingSpec extends SparkSpec {
     withIndexRoot("graft-tjo-memo") {
       val dir = tmpDir("graft-tjo-memo-data")
       writeTables(dir)
-      try {
-        Seq("fact", "dima", "dimb").foreach(StatsCatalog.ensure(spark, dir, _))
-        spark.conf.set("spark.graft.ordering.tiers", "mcv,feedback")
-        TransparentJoinOrdering.enable(spark)
+      Seq("fact", "dima", "dimb").foreach(StatsCatalog.ensure(spark, dir, _))
+      RuleSwitch.scoped(spark, Seq(new TransparentJoinOrderingRule(spark)),
+          "spark.graft.ordering.tiers" -> Some("mcv,feedback")) {
         val fact = graft.Tables(spark, dir, "fact")
         val dima = graft.Tables(spark, dir, "dima").where($"dak" <= 5L)
         val dimb = graft.Tables(spark, dir, "dimb")
@@ -265,9 +250,6 @@ class JoinOrderingSpec extends SparkSpec {
         assert(rule.apply(once).fastEquals(once))
         assert(JoinOrderer.enumerations.get === c2,
           "the new stamp serves from the memo again")
-      } finally {
-        spark.conf.unset("spark.graft.ordering.tiers")
-        TransparentJoinOrdering.disableForTest(spark)
       }
     }
   }
@@ -277,8 +259,7 @@ class JoinOrderingSpec extends SparkSpec {
       val dir = tmpDir("graft-tjo-tiers-data")
       writeTables(dir)
       Seq("fact", "dima", "dimb").foreach(StatsCatalog.ensure(spark, dir, _))
-      TransparentJoinOrdering.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new TransparentJoinOrderingRule(spark))) {
         val fact = graft.Tables(spark, dir, "fact")
         // dima's second conjunct is outside the algebra (arithmetic on
         // the attribute — pmod survives constant folding, unlike the
@@ -303,22 +284,21 @@ class JoinOrderingSpec extends SparkSpec {
         val observed = graft.operators.CardFeedback.record(spark,
           org.apache.spark.sql.graftbridge.planToDf(spark, leaf))
         assert(observed.contains(30L))
-        spark.conf.set("spark.graft.ordering.tiers", "feedback")
-        try {
+        val learned = RuleSwitch.scoped(spark, Nil,
+            "spark.graft.ordering.tiers" -> Some("feedback")) {
           assert(innermostTables(worst) === Set("fact", "dimb"),
             "one recorded observation must flip the TRANSPARENT order")
-          // result-invisible either way
-          val learned = worst.select($"payload", $"aname", $"bname")
+          worst.select($"payload", $"aname", $"bname")
             .collect().map(_.toString).sorted
-          spark.conf.unset("spark.graft.ordering.tiers")
-          val uniform = worst.select($"payload", $"aname", $"bname")
-            .collect().map(_.toString).sorted
-          assert(learned.sameElements(uniform))
-        } finally spark.conf.unset("spark.graft.ordering.tiers")
+        }
+        // result-invisible either way
+        val uniform = worst.select($"payload", $"aname", $"bname")
+          .collect().map(_.toString).sorted
+        assert(learned.sameElements(uniform))
         // the uniform pin stands after the config clears
         assert(innermostTables(worst) === Set("fact", "dima"),
           "clearing the config restores the declared uniform algebra")
-      } finally TransparentJoinOrdering.disableForTest(spark)
+      }
     }
   }
 }

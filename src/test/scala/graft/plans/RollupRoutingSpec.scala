@@ -35,8 +35,7 @@ class RollupRoutingSpec extends SparkSpec {
       val expected = rawAgg.orderBy($"event_type")
         .collect().map(_.toString).toSeq
       graft.operators.HistogramRollup.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         val routed = rawAgg.orderBy($"event_type")
         val paths = scanPaths(routed)
         assert(paths.exists(_.contains("hist_daily")),
@@ -45,15 +44,14 @@ class RollupRoutingSpec extends SparkSpec {
           s"the routed plan must never scan the raw table: $paths")
         assert(routed.collect().map(_.toString).toSeq === expected,
           "routing must be invisible in the answer — integer-exact")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
   test("non-matching shapes pass through unrouted") {
     withIndexRoot("graft-route-spec") {
       graft.operators.HistogramRollup.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         val ev = graft.Tables(spark, sf, "events")
         val window = $"ts" >= lit(M.utc(lo)) && $"ts" < lit(M.utc(hi))
         val variants = Seq(
@@ -76,7 +74,7 @@ class RollupRoutingSpec extends SparkSpec {
           assert(!paths.exists(_.contains("hist_daily")),
             s"variant $i must not be routed: $paths")
         }
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -84,8 +82,7 @@ class RollupRoutingSpec extends SparkSpec {
     withIndexRoot("graft-route-append") {
       val HR = graft.operators.HistogramRollup
       HR.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         // sanity: routing fires on the pure ensure() build
         assert(scanPaths(rawAgg).exists(_.contains("hist_daily")))
         // append a batch that is NOT in events.parquet — the r8
@@ -108,7 +105,7 @@ class RollupRoutingSpec extends SparkSpec {
           .where($"ts" >= lit(M.utc(lo)) && $"ts" < lit(M.utc(hi)) &&
             $"event_type" === "click").count()
         assert(n === direct)
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -122,8 +119,7 @@ class RollupRoutingSpec extends SparkSpec {
       val expected = rawSumAgg.orderBy($"event_type")
         .collect().map(_.toString).toSeq
       graft.operators.AggRollup.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         val routed = rawSumAgg.orderBy($"event_type")
         val paths = scanPaths(routed)
         assert(paths.exists(_.contains("agg_daily")),
@@ -148,7 +144,7 @@ class RollupRoutingSpec extends SparkSpec {
         assert(fp.exists(_.contains("events.parquet")) &&
           !fp.exists(_.contains("agg_daily")),
           s"a float sum must never be routed: $fp")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -156,8 +152,7 @@ class RollupRoutingSpec extends SparkSpec {
     withIndexRoot("graft-route-sum-append") {
       val AR = graft.operators.AggRollup
       AR.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         assert(scanPaths(rawSumAgg).exists(_.contains("agg_daily")))
         val extra = Seq((9999902L,
             java.sql.Timestamp.valueOf("2024-01-10 09:00:00"),
@@ -179,7 +174,7 @@ class RollupRoutingSpec extends SparkSpec {
           "reEnsure must restore routing")
         assert(routed.collect().map(_.toString).toSeq === expected,
           "routing after reEnsure must be exact again")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -187,8 +182,7 @@ class RollupRoutingSpec extends SparkSpec {
     withIndexRoot("graft-route-reensure") {
       val HR = graft.operators.HistogramRollup
       HR.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         assert(scanPaths(rawAgg).exists(_.contains("hist_daily")))
         val extra = Seq((9999903L,
             java.sql.Timestamp.valueOf("2024-01-11 07:00:00"),
@@ -205,7 +199,7 @@ class RollupRoutingSpec extends SparkSpec {
           "reEnsure must restore count routing")
         assert(routed.collect().map(_.toString).toSeq === expected,
           "count routing after reEnsure must be exact again")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -226,8 +220,7 @@ class RollupRoutingSpec extends SparkSpec {
         .collect().map(_.toString).toSeq
       graft.operators.HistogramRollup.ensure(spark, sf)
       graft.operators.AggRollup.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         val pc = scanPaths(countTs)
         assert(pc.exists(_.contains("hist_daily")) &&
           !pc.exists(_.contains("events.parquet")),
@@ -264,7 +257,7 @@ class RollupRoutingSpec extends SparkSpec {
               s"off-UTC sessions must fall back to the raw table: $off")
           }
         } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -300,15 +293,14 @@ class RollupRoutingSpec extends SparkSpec {
       val expected = windows.flatMap { case (lo, hi) =>
         shapes(lo, hi).map(_.collect().map(_.toString).sorted.toSeq)
       }
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         val got = windows.flatMap { case (lo, hi) =>
           shapes(lo, hi).map(_.collect().map(_.toString).sorted.toSeq)
         }
         expected.zip(got).zipWithIndex.foreach { case ((e, g), i) =>
           assert(g === e, s"variant $i diverged under routing")
         }
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -324,8 +316,7 @@ class RollupRoutingSpec extends SparkSpec {
       def aliasAgg = spark.read.parquet(alias)
         .where($"ts" >= lit(M.utc(lo)) && $"ts" < lit(M.utc(hi)))
         .groupBy($"event_type").agg(count(lit(1)).as("n"))
-      RollupRouting.enable(spark)
-      try {
+      try RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         // unregistered: identity unknown -> pass through (never guess)
         val before = scanPaths(aliasAgg)
         assert(before.exists(_.contains("events_catalog_tbl")) &&
@@ -353,7 +344,6 @@ class RollupRoutingSpec extends SparkSpec {
           .collect().map(_.toString).toSeq === expected)
       } finally {
         RollupRouting.clearRegisteredPathsForTest()
-        RollupRouting.disableForTest(spark)
         spark.catalog.dropTempView("events_view")
       }
     }
@@ -368,8 +358,7 @@ class RollupRoutingSpec extends SparkSpec {
         .orderBy($"cnt".desc, $"user_id").limit(5)
       val expected = rawTopK.collect().map(_.toString).toSeq
       T.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         // at sf0.001 every cell keeps everyone (≤10 users) — total
         // tail 0, so the route is provable for any k
         val routed = rawTopK
@@ -399,19 +388,18 @@ class RollupRoutingSpec extends SparkSpec {
         T.reEnsure(spark, sf)
         assert(scanPaths(rawTopK).isEmpty,
           "reEnsure must restore the top-k route")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
   test("a missing rollup artifact leaves the plan untouched") {
     withIndexRoot("graft-route-absent") {
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         val paths = scanPaths(rawAgg)
         assert(paths.exists(_.contains("events.parquet")) &&
           !paths.exists(_.contains("hist_daily")),
           s"no artifact -> no rewrite: $paths")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -422,8 +410,7 @@ class RollupRoutingSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(floor($"value")).as("v_fp"))
       val expected = tile.collect().map(_.toString).toSeq
       graft.operators.AggRollup.ensure(spark, sf)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         val routed = tile
         val paths = scanPaths(routed)
         assert(paths.exists(_.contains("agg_daily")) &&
@@ -444,7 +431,7 @@ class RollupRoutingSpec extends SparkSpec {
           .agg(avg($"value").as("a"))
         assert(scanPaths(avgTile).exists(_.contains("events.parquet")),
           "a float avg must stay on the raw scan")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 
@@ -470,8 +457,7 @@ class RollupRoutingSpec extends SparkSpec {
       val truths = Seq("month", "quarter", "year")
         .map(g => g -> grainAgg(g).collect().map(_.toString).toSeq).toMap
       graft.operators.AggRollup.ensure(spark, dir)
-      RollupRouting.enable(spark)
-      try {
+      RuleSwitch.scoped(spark, Seq(new RollupRoutingRule(spark))) {
         Seq("month", "quarter", "year").foreach { g =>
           val routed = grainAgg(g)
           val paths = scanPaths(routed)
@@ -490,7 +476,7 @@ class RollupRoutingSpec extends SparkSpec {
         val hourly = grainAgg("hour")
         assert(scanPaths(hourly).exists(_.contains("events.parquet")),
           "hour grain must stay on the raw scan")
-      } finally RollupRouting.disableForTest(spark)
+      }
     }
   }
 }

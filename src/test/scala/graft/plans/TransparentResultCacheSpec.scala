@@ -24,8 +24,7 @@ class TransparentResultCacheSpec extends SparkSpec {
       def shape = graft.Tables(spark, dir, "t")
         .groupBy($"k").agg(count(lit(1)).as("n"), sum($"v").as("s"))
         .orderBy($"k")
-      try {
-        TransparentResultCache.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new TransparentResultCacheRule(spark))) {
         val computed = shape.collect().map(_.toString).toSeq
         assert(ResultCache.publish(spark, shape), "first publish writes")
         assert(!ResultCache.publish(spark, shape),
@@ -40,7 +39,7 @@ class TransparentResultCacheSpec extends SparkSpec {
           .where($"v" > 100L).groupBy($"k").agg(count(lit(1)).as("n"))
         assert(other.inputFiles.exists(_.contains("t.parquet")),
           "a different plan never serves another plan's entry")
-      } finally TransparentResultCache.disableForTest(spark)
+      }
     }
   }
 
@@ -50,8 +49,7 @@ class TransparentResultCacheSpec extends SparkSpec {
       writeTable(dir)
       def shape = graft.Tables(spark, dir, "t")
         .groupBy($"k").agg(sum($"v").as("s")).orderBy($"k")
-      try {
-        TransparentResultCache.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new TransparentResultCacheRule(spark))) {
         assert(ResultCache.publish(spark, shape))
         assert(shape.inputFiles.forall(_.contains("result_cache")))
         (1L to 900L).map(i => (i % 9, i)).toDF("k", "v")
@@ -60,7 +58,7 @@ class TransparentResultCacheSpec extends SparkSpec {
           "mutated source -> different stamp -> compute from source")
         assert(shape.agg(sum($"s")).head().getLong(0) ===
           (1L to 900L).sum)
-      } finally TransparentResultCache.disableForTest(spark)
+      }
     }
   }
 
@@ -68,8 +66,7 @@ class TransparentResultCacheSpec extends SparkSpec {
     withIndexRoot("graft-trc-unc") {
       val dir = tmpDir("graft-trc-unc-data")
       writeTable(dir)
-      try {
-        TransparentResultCache.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new TransparentResultCacheRule(spark))) {
         // PROJECTED rand survives optimization (a rand FILTER like
         // `rand() >= 0.0` is simplified away entirely — the optimized
         // plan is then genuinely deterministic and publishing it is
@@ -83,7 +80,7 @@ class TransparentResultCacheSpec extends SparkSpec {
           .agg(sum($"b").as("s"))
         assert(!ResultCache.publish(spark, local),
           "non-file leaves are uncacheable")
-      } finally TransparentResultCache.disableForTest(spark)
+      }
     }
   }
 
@@ -91,8 +88,7 @@ class TransparentResultCacheSpec extends SparkSpec {
     withIndexRoot("graft-trc-time") {
       val dir = tmpDir("graft-trc-time-data")
       writeTable(dir)
-      try {
-        TransparentResultCache.enable(spark)
+      RuleSwitch.scoped(spark, Seq(new TransparentResultCacheRule(spark))) {
         // the optimizer's ComputeCurrentTime replaces the time family
         // with LITERALS of the query's moment BEFORE this keyspace —
         // so the evaluated instant is part of the key: same-moment
@@ -111,7 +107,7 @@ class TransparentResultCacheSpec extends SparkSpec {
         // tier screens against cannot occur in this keyspace
         assert(timeShape.inputFiles.exists(_.contains("t.parquet")),
           "a later moment must miss the earlier moment's entry")
-      } finally TransparentResultCache.disableForTest(spark)
+      }
     }
   }
 }
