@@ -205,37 +205,6 @@ object IndexStore {
     s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
   }
 
-  /** Swap `stage` in as `target`, failing loud — the shared commit
-    * move of every staged artifact maintenance (SampledAgg samples,
-    * StatsMaintain key profiles). Single-maintainer scope: the
-    * delete→rename pair is not atomic, so the paired [[recoverSwap]]
-    * covers the crash window between them. */
-  private[operators] def stageSwap(fs: org.apache.hadoop.fs.FileSystem,
-      stage: String, target: String): Unit = {
-    val st = new org.apache.hadoop.fs.Path(stage)
-    val tg = new org.apache.hadoop.fs.Path(target)
-    fs.delete(tg, true)
-    require(fs.rename(st, tg), s"artifact swap: rename $st -> $tg failed")
-  }
-
-  /** Recovery leg for a crash inside [[stageSwap]]: a missing target
-    * with a READY stage promotes the stage; anything else discards
-    * it. `readySubs` names the stage's required sub-artifacts (a
-    * composite stage is ready only when every part is); empty means
-    * the stage itself must be ready. */
-  private[operators] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-      stage: String, target: String, readySubs: Seq[String] = Nil): Unit = {
-    val st = new org.apache.hadoop.fs.Path(stage)
-    val tg = new org.apache.hadoop.fs.Path(target)
-    val ready =
-      if (readySubs.isEmpty) artifactReady(stage)
-      else readySubs.forall(sub => artifactReady(s"$stage/$sub"))
-    if (!fs.exists(tg) && ready)
-      require(fs.rename(st, tg), s"artifact recovery: rename $st -> $tg failed")
-    else fs.delete(st, true)
-    ()
-  }
-
   /** Artifact directory for the IVF pivots of `dir`'s embeddings. */
   def ivfPivotPath(dir: String): String =
     s"$root/${fingerprint(dir, "embeddings")}/ivf_pivots"

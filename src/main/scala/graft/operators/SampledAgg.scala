@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructType, StructField, LongType, StringType, IntegerType}
+import org.apache.spark.sql.types.{StructType, StructField, LongType}
 
 /** APPROXIMATE QUERY PROCESSING over a DETERMINISTIC materialized
   * sample (D98) — the BlinkDB / warehouse-sampling capability
@@ -37,12 +37,14 @@ import org.apache.spark.sql.types.{StructType, StructField, LongType, StringType
   * statistical error model is the caller's to apply — the spec pins
   * a 6σ binomial bound holding on the gate fixture).
   *
-  * Artifact lifecycle = the StatsMaintain contract: data written
-  * first, the kilobyte meta (with the covered source fingerprint)
-  * LAST as the commit point; [[sampleIfCurrent]] serves only while
-  * covered == live listing, so an appended-but-unmaintained corpus
-  * fails closed. `ppm` must divide 10⁶ (the scale factor stays an
-  * integer — the replay's precondition). */
+  * Artifact lifecycle = the StatsMaintain contract, the shared
+  * [[EnsureWatermark]] commit-and-serve protocol: data written into a
+  * fresh version, the stamp (covered source fingerprint, covered row
+  * count, baked knobs) LAST as the commit point; [[sampleIfCurrent]]
+  * serves only while covered == live listing, so an
+  * appended-but-unmaintained corpus fails closed. `ppm` must divide
+  * 10⁶ (the scale factor stays an integer — the replay's
+  * precondition). */
 object SampledAgg {
 
   val M = 1000000L
@@ -50,8 +52,14 @@ object SampledAgg {
   def samplePath(dir: String, table: String, keyCol: String,
       ppm: Long): String =
     s"${IndexStore.root}/aqp_${IndexStore.tablePathKey(dir, table)}_${table}_${keyCol}_$ppm"
-  private def dataPath(p: String) = s"$p/data"
-  private def metaPath(p: String) = s"$p/meta"
+  private val DataPart = Seq("data")
+
+  /** Rows of `table` persisted under `path` — the sample IS table
+    * rows, so the table's schema is the artifact's (no footer
+    * inference job on the serve path). */
+  private def tableRows(s: SparkSession, dir: String, table: String,
+      path: String): DataFrame =
+    s.read.schema(graft.Tables(s, dir, table).schema).parquet(path)
 
   /** The deterministic membership predicate — change ONLY in
     * lockstep with [[membershipSql]]. */
@@ -66,100 +74,49 @@ object SampledAgg {
     require(ppm > 0 && M % ppm == 0,
       s"ppm must divide $M so the scale factor stays integer, got $ppm")
 
-  /** Build the materialized sample once per (table fingerprint,
-    * keyCol, ppm); idempotent while current. One filtered scan. */
+  /** Build the materialized sample once per (table listing, keyCol,
+    * ppm); idempotent while current. One filtered scan. */
   def ensureSample(s: SparkSession, dir: String, table: String,
       keyCol: String, ppm: Long): Unit = {
     requireDivides(ppm)
-    if (sampleIfCurrent(s, dir, table, keyCol, ppm).isDefined) return
-    val p = samplePath(dir, table, keyCol, ppm)
-    val (fs, dp) = IndexStore.fsOf(dataPath(p))
-    fs.delete(dp, true)
-    graft.Tables(s, dir, table).where(membership(keyCol, ppm))
-      .write.mode("overwrite").parquet(dataPath(p))
-    writeMeta(s, dir, table, keyCol, ppm,
-      graft.Tables(s, dir, table).count())
+    if (sampleStamp(dir, table, keyCol, ppm).isEmpty)
+      buildSample(s, dir, table, keyCol, ppm)
   }
 
-  /** `rows` = the live table count the caller already holds (review
-    * pass 2: recounting here doubled the metadata jobs per maintain). */
-  private def writeMeta(s: SparkSession, dir: String, table: String,
-      keyCol: String, ppm: Long, rows: Long): Unit = {
-    import s.implicits._
-    // the covered ROW COUNT rides the meta (r16 review #1): the
-    // sample's own size relates to the table only statistically, so
-    // the append-maintain coherence check needs the exact total
-    Seq((IndexStore.fingerprint(dir, table), ppm, rows))
-      .toDF("covered", "ppm", "rows").coalesce(1)
-      .write.mode("overwrite").parquet(metaPath(samplePath(dir, table, keyCol, ppm)))
+  private def sampleStamp(dir: String, table: String, keyCol: String,
+      ppm: Long): Option[EnsureWatermark.Stamp] =
+    EnsureWatermark.current(samplePath(dir, table, keyCol, ppm), DataPart,
+      dir, table).filter(_.knobs.get("ppm").contains(ppm))
+
+  private def buildSample(s: SparkSession, dir: String, table: String,
+      keyCol: String, ppm: Long): Unit = {
+    val t = graft.Tables(s, dir, table)
+    EnsureWatermark.commit(samplePath(dir, table, keyCol, ppm), dir, table,
+        t.count(), Map("ppm" -> ppm)) { v =>
+      t.where(membership(keyCol, ppm)).write.parquet(s"$v/data")
+    }
   }
 
-  /** Stage-then-swap commit moves: the shared [[IndexStore.stageSwap]]
-    * / [[IndexStore.recoverSwap]] pair (r15 — StatsMaintain's key
-    * profiles adopted the same discipline, so the helpers moved to
-    * the one store both ride). */
-  private def stageSwap(fs: org.apache.hadoop.fs.FileSystem,
-      stage: String, target: String): Unit =
-    IndexStore.stageSwap(fs, stage, target)
-
-  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-      stage: String, target: String): Unit =
-    IndexStore.recoverSwap(fs, stage, target)
-
-  /** O(batch + sample) maintenance, IDEMPOTENT under retries and
-    * crash-repairing (r14 review): the caller appended `batch` to
-    * the table ALREADY. An already-covered listing is a no-op; the
-    * merge deduplicates on the row-unique `keyCol`, so a retry after
-    * any crash window converges to exactly the rebuild's rows; the
-    * merged data stages first and swaps with loud renames, meta
-    * (the commit point) last. `keyCol` MUST be row-unique — the same
-    * contract the stratified rank already requires. */
+  /** O(batch + sample) maintenance: the caller appended `batch` to
+    * the table ALREADY; the batch's members union into the stamped
+    * sample, deduplicated on the row-unique `keyCol` — the same
+    * contract the stratified rank already requires. Idempotent and
+    * crash-convergent by the shared protocol. */
   def appendMaintainSample(s: SparkSession, dir: String, table: String,
       keyCol: String, ppm: Long, batch: DataFrame): Unit = {
     requireDivides(ppm)
-    if (sampleIfCurrent(s, dir, table, keyCol, ppm).isDefined) return
     val p = samplePath(dir, table, keyCol, ppm)
-    require(IndexStore.artifactReady(metaPath(p)),
-      "sample must be built (ensureSample) before appendMaintainSample")
-    // ROWCOUNT COHERENCE (r16 review #1): merging assumes live table
-    // = covered listing + exactly this batch; an out-of-band delete
-    // would leave deleted rows IN the sample stamped current —
-    // breaking the bit-identical-to-rebuild contract. Pre-rows-stamp
-    // metas (missing field) rebuild once; metadata-speed counts.
-    val metaDf = s.read.parquet(metaPath(p))
-    val coveredRows =
-      if (metaDf.schema.fieldNames.contains("rows"))
-        metaDf.head().getAs[Long]("rows")
-      else -1L
-    val liveRows = graft.Tables(s, dir, table).count()
-    if (coveredRows < 0 || BigInt(coveredRows) + BigInt(batch.count()) !=
-        BigInt(liveRows))
-      return ensureSample(s, dir, table, keyCol, ppm)
-    val (fs, _) = IndexStore.fsOf(p)
-    recoverSwap(fs, s"$p/stage_data", dataPath(p))
-    val merged = s.read.parquet(dataPath(p))
-      .union(batch.where(membership(keyCol, ppm)))
-      .dropDuplicates(keyCol)
-    merged.write.mode("overwrite").parquet(s"$p/stage_data")
-    stageSwap(fs, s"$p/stage_data", dataPath(p))
-    writeMeta(s, dir, table, keyCol, ppm, liveRows)
+    EnsureWatermark.maintain(s, p, DataPart, dir, table, batch)(
+        _ => buildSample(s, dir, table, keyCol, ppm)) { (st, liveRows) =>
+      EnsureWatermark.commit(p, dir, table, liveRows, Map("ppm" -> ppm)) { v =>
+        tableRows(s, dir, table, st.part(p, "data"))
+          .union(batch.where(membership(keyCol, ppm)))
+          .dropDuplicates(keyCol)
+          .write.parquet(s"$v/data")
+      }
+    }
   }
 
-  // Explicit schemas on the serve-path reads (the *IfCurrent probes a
-  // tolerance ladder walks on EVERY query): a schema-less
-  // read.parquet launches a footer-inference JOB per call (~30–50 ms;
-  // q95's profile was 31 single-task metadata jobs and nothing else —
-  // r17, guide §5). Meta DDLs change only in lockstep with the
-  // write* helpers; data schemas derive from the source table (the
-  // sample IS table rows) or the writer's fixed columns. The
-  // maintain/ensure cold paths keep inference — their legacy-layout
-  // branches inspect the file's ACTUAL fields.
-  private val SampleMetaSchema =
-    StructType.fromDDL("covered STRING, ppm BIGINT, rows BIGINT")
-  private val StratMetaSchema =
-    StructType.fromDDL("covered STRING, k INT")
-  private val HistMetaSchema =
-    StructType.fromDDL("covered STRING, bin_width_e4 BIGINT, num_bins INT")
   private def grpType(s: SparkSession, dir: String, table: String,
       groupCol: String) =
     graft.Tables(s, dir, table).schema(groupCol).dataType
@@ -167,16 +124,9 @@ object SampledAgg {
   /** The sampled rows while the artifact covers the LIVE listing —
     * an appended-but-unmaintained corpus fails closed. */
   def sampleIfCurrent(s: SparkSession, dir: String, table: String,
-      keyCol: String, ppm: Long): Option[DataFrame] = {
-    val p = samplePath(dir, table, keyCol, ppm)
-    if (!IndexStore.artifactReady(metaPath(p)) ||
-        !IndexStore.artifactReady(dataPath(p))) return None
-    val meta = s.read.schema(SampleMetaSchema).parquet(metaPath(p)).head()
-    if (meta.getAs[String]("covered") != IndexStore.fingerprint(dir, table) ||
-        meta.getAs[Long]("ppm") != ppm) None
-    else Some(s.read.schema(graft.Tables(s, dir, table).schema)
-      .parquet(dataPath(p)))
-  }
+      keyCol: String, ppm: Long): Option[DataFrame] =
+    sampleStamp(dir, table, keyCol, ppm).map(st => tableRows(s, dir, table,
+      st.part(samplePath(dir, table, keyCol, ppm), "data")))
 
   /** The integer scale factor 10⁶/ppm — apply to sampled counts and
     * integer-valued sampled sums for the Horvitz–Thompson estimate. */
@@ -222,105 +172,71 @@ object SampledAgg {
     (sample, counts)
   }
 
-  /** Counts persist WITH the covered stamp they were computed for —
-    * the crash-window discriminator: a retry that finds the counts
-    * already stamped with the live listing must not add the batch
-    * again (r14 review: the one leg dedup alone cannot repair). */
-  private def writeStratCounts(s: SparkSession, counts: DataFrame,
-      covered: String, path: String): Unit =
-    counts.withColumn("covered", lit(covered))
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  private val StratParts = Seq("data", "counts")
 
-  /** Build the stratified sample once per fingerprint: one ranked
-    * pass (the Z-order/recluster class of one-time cost) + one count
-    * pass; idempotent while current. */
+  private def stratStamp(dir: String, table: String, keyCol: String,
+      stratumCol: String, k: Int): Option[EnsureWatermark.Stamp] =
+    EnsureWatermark.current(stratSamplePath(dir, table, keyCol, stratumCol, k),
+      StratParts, dir, table).filter(_.knobs.get("k").contains(k.toLong))
+
+  /** Build the stratified sample once per listing: one ranked pass
+    * (the Z-order/recluster class of one-time cost) + one count pass;
+    * idempotent while current. */
   def ensureStratifiedSample(s: SparkSession, dir: String, table: String,
       keyCol: String, stratumCol: String, k: Int): Unit = {
     require(k > 0, "k must be positive")
-    if (stratifiedIfCurrent(s, dir, table, keyCol, stratumCol, k).isDefined) return
-    val p = stratSamplePath(dir, table, keyCol, stratumCol, k)
-    val (fs, dp) = IndexStore.fsOf(dataPath(p))
-    fs.delete(dp, true)
-    val (fs2, cp) = IndexStore.fsOf(s"$p/counts")
-    fs2.delete(cp, true)
-    val (sample, counts) = buildStrat(s,
-      graft.Tables(s, dir, table), keyCol, stratumCol, k)
-    sample.write.mode("overwrite").parquet(dataPath(p))
-    writeStratCounts(s, counts,
-      IndexStore.fingerprint(dir, table), s"$p/counts")
-    writeStratMeta(s, dir, table, keyCol, stratumCol, k)
+    if (stratStamp(dir, table, keyCol, stratumCol, k).isEmpty)
+      buildStratified(s, dir, table, keyCol, stratumCol, k)
   }
 
-  private def writeStratMeta(s: SparkSession, dir: String, table: String,
+  private def buildStratified(s: SparkSession, dir: String, table: String,
       keyCol: String, stratumCol: String, k: Int): Unit = {
-    import s.implicits._
-    Seq((IndexStore.fingerprint(dir, table), k))
-      .toDF("covered", "k").coalesce(1).write.mode("overwrite")
-      .parquet(metaPath(stratSamplePath(dir, table, keyCol, stratumCol, k)))
+    val t = graft.Tables(s, dir, table)
+    val (sample, counts) = buildStrat(s, t, keyCol, stratumCol, k)
+    EnsureWatermark.commit(stratSamplePath(dir, table, keyCol, stratumCol, k),
+        dir, table, t.count(), Map("k" -> k.toLong)) { v =>
+      sample.write.parquet(s"$v/data")
+      counts.coalesce(1).write.parquet(s"$v/counts")
+    }
   }
 
-  /** O(batch + sample) maintenance, EXACT and IDEMPOTENT (r14
-    * review): the caller appended `batch` ALREADY. An already-
-    * covered listing is a no-op. The data merge deduplicates on the
-    * row-unique `keyCol` before re-ranking, so a retry after any
-    * crash window converges to the rebuild's rows; the counts carry
-    * their covered stamp, so a retry that finds them already at the
-    * live listing (crash between counts swap and meta) never adds
-    * the batch twice. Swaps fail loud; meta commits last. */
+  private def stratCounts(s: SparkSession, dir: String, table: String,
+      stratumCol: String, path: String): DataFrame =
+    s.read.schema(StructType(Seq(
+        StructField("stratum", grpType(s, dir, table, stratumCol)),
+        StructField("n", LongType))))
+      .parquet(path)
+
+  /** O(batch + sample) maintenance, EXACT: the caller appended
+    * `batch` ALREADY. The data merge deduplicates on the row-unique
+    * `keyCol` before re-ranking; per-stratum counts add exactly.
+    * Idempotent and crash-convergent by the shared protocol. */
   def appendMaintainStratified(s: SparkSession, dir: String, table: String,
       keyCol: String, stratumCol: String, k: Int, batch: DataFrame): Unit = {
-    if (stratifiedIfCurrent(s, dir, table, keyCol, stratumCol, k).isDefined)
-      return
     val p = stratSamplePath(dir, table, keyCol, stratumCol, k)
-    require(IndexStore.artifactReady(metaPath(p)),
-      "stratified sample must be built (ensureStratifiedSample) first")
-    val (fs, _) = IndexStore.fsOf(p)
-    recoverSwap(fs, s"$p/stage/data", dataPath(p))
-    recoverSwap(fs, s"$p/stage/counts", s"$p/counts")
-    val live = IndexStore.fingerprint(dir, table)
-    val (batchSample, batchCounts) = buildStrat(s, batch, keyCol, stratumCol, k)
-    val merged = s.read.parquet(dataPath(p)).union(batchSample)
-      .dropDuplicates(keyCol)
-      .withColumn("__rk", row_number().over(rankCol(keyCol, stratumCol)))
-      .where(col("__rk") <= k).drop("__rk")
-    val oldCounts = s.read.parquet(s"$p/counts")
-    val countsApplied = oldCounts.limit(1).select(col("covered"))
-      .collect().headOption.exists(_.getString(0) == live)
-    // ROWCOUNT COHERENCE (r16 review #1): the recorded counts' total
-    // IS the covered row count; unless they already cover the live
-    // listing (the crash window), Σn_old + |batch| must equal
-    // |table| — an out-of-band delete would otherwise stamp exact
-    // per-stratum counts over rows that no longer exist
-    if (!countsApplied) {
-      val oldTotal = Option(oldCounts.agg(sum(col("n"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (BigInt(oldTotal) + BigInt(batch.count()) !=
-          BigInt(graft.Tables(s, dir, table).count()))
-        // rebuild IN PLACE — never delete the artifact first (r16
-        // review pass 2: deleting meta opens a crash window where
-        // every retry hits the entry require and throws forever;
-        // ensure's own overwrite sequence converges from stale state)
-        return ensureStratifiedSample(s, dir, table, keyCol, stratumCol, k)
+    EnsureWatermark.maintain(s, p, StratParts, dir, table, batch)(
+        _ => buildStratified(s, dir, table, keyCol, stratumCol, k)) {
+        (st, liveRows) =>
+      val (batchSample, batchCounts) = buildStrat(s, batch, keyCol, stratumCol, k)
+      EnsureWatermark.commit(p, dir, table, liveRows, Map("k" -> k.toLong)) { v =>
+        tableRows(s, dir, table, st.part(p, "data")).union(batchSample)
+          .dropDuplicates(keyCol)
+          .withColumn("__rk", row_number().over(rankCol(keyCol, stratumCol)))
+          .where(col("__rk") <= k).drop("__rk")
+          .write.parquet(s"$v/data")
+        stratCounts(s, dir, table, stratumCol, st.part(p, "counts"))
+          .union(batchCounts)
+          .groupBy(col("stratum")).agg(sum(col("n")).as("n"))
+          .coalesce(1).write.parquet(s"$v/counts")
+      }
     }
-    val mergedCounts =
-      if (countsApplied) oldCounts.select(col("stratum"), col("n"))
-      else oldCounts.select(col("stratum"), col("n")).union(batchCounts)
-        .groupBy(col("stratum")).agg(sum(col("n")).as("n"))
-    // stage-then-swap: the merges read the paths they replace
-    merged.write.mode("overwrite").parquet(s"$p/stage/data")
-    writeStratCounts(s, mergedCounts, live, s"$p/stage/counts")
-    stageSwap(fs, s"$p/stage/data", dataPath(p))
-    stageSwap(fs, s"$p/stage/counts", s"$p/counts")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/stage"), true)
-    writeStratMeta(s, dir, table, keyCol, stratumCol, k)
   }
 
   // ------------------------------------------------------------------
   // EXACT GROUP ROLLUP (r16, the ladder's error-0 rung): a persisted
   // (group, n, Σ⌊v⌋) table — |groups| rows, kilobytes — maintained
-  // ADDITIVELY at O(batch) (counts and integer sums add exactly, the
-  // stratified-counts covered-stamp discipline for crash
-  // idempotency). When current it DOMINATES every sampled rung on
+  // ADDITIVELY at O(batch) (counts and integer sums add exactly).
+  // When current it DOMINATES every sampled rung on
   // both axes (error 0 ≤ any tolerance; |groups| rows ≤ any sample),
   // so the tolerance ladders consult it FIRST — the D50 rollup
   // lesson restated inside AQP: a dashboard that declared ±5% gets
@@ -336,62 +252,50 @@ object SampledAgg {
       .agg(count(lit(1)).as("n"),
         sum(floor(col(valueCol)).cast("long")).as("s"))
 
-  /** Rows + the covered stamp they were computed for land TOGETHER
-    * (the [[writeStratCounts]] discipline): a retry discriminates
-    * "merged already" by the rows' own stamp. */
-  private def writeGroupRollup(s: SparkSession, rows: DataFrame,
-      covered: String, path: String): Unit =
-    rows.withColumn("covered", lit(covered))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/data")
-
-  /** Build once per fingerprint from one grouped pass; idempotent
-    * while current. */
+  /** Build once per listing from one grouped pass; idempotent while
+    * current. */
   def ensureGroupRollup(s: SparkSession, dir: String, table: String,
+      groupCol: String, valueCol: String): Unit =
+    if (EnsureWatermark.current(groupRollupPath(dir, table, groupCol, valueCol),
+        DataPart, dir, table).isEmpty)
+      buildGroupRollup(s, dir, table, groupCol, valueCol)
+
+  private def buildGroupRollup(s: SparkSession, dir: String, table: String,
       groupCol: String, valueCol: String): Unit = {
-    if (groupRollupIfCurrent(s, dir, table, groupCol, valueCol).isDefined)
-      return
-    val p = groupRollupPath(dir, table, groupCol, valueCol)
-    writeGroupRollup(s, rollupAgg(graft.Tables(s, dir, table),
-      groupCol, valueCol), IndexStore.fingerprint(dir, table), p)
+    val t = graft.Tables(s, dir, table)
+    EnsureWatermark.commit(groupRollupPath(dir, table, groupCol, valueCol),
+        dir, table, t.count()) { v =>
+      rollupAgg(t, groupCol, valueCol).coalesce(1).write.parquet(s"$v/data")
+    }
   }
 
-  /** O(batch) ADDITIVE maintenance, idempotent: the caller appended
-    * `batch` ALREADY; counts and integer sums add exactly, so the
-    * merged artifact equals a rebuild. A retry that finds the rows
-    * already stamped with the live listing is a no-op (the stamp
-    * rides the rows — one atomic parquet overwrite, no torn window
-    * between data and stamp). */
+  private def rollupRows(s: SparkSession, dir: String, table: String,
+      groupCol: String, path: String): DataFrame =
+    s.read.schema(StructType(Seq(
+        StructField("grp", grpType(s, dir, table, groupCol)),
+        StructField("n", LongType), StructField("s", LongType))))
+      .parquet(path)
+
+  /** O(batch) ADDITIVE maintenance: the caller appended `batch`
+    * ALREADY; counts and integer sums add exactly, so the merged
+    * artifact equals a rebuild. Idempotent and crash-convergent by
+    * the shared protocol — whose rowcount-coherence screen matters
+    * most here: a blind merge after an out-of-band delete would
+    * stamp WRONG EXACT data (served at rel_err 0) as current. */
   def appendMaintainGroupRollup(s: SparkSession, dir: String, table: String,
       groupCol: String, valueCol: String, batch: DataFrame): Unit = {
-    if (groupRollupIfCurrent(s, dir, table, groupCol, valueCol).isDefined)
-      return
     val p = groupRollupPath(dir, table, groupCol, valueCol)
-    if (!IndexStore.artifactReady(s"$p/data"))
-      // unbuilt or torn mid-overwrite: the repair is a full rebuild —
-      // loud-absent converges, never a crash-looping require (the r15
-      // keyprof lesson)
-      return ensureGroupRollup(s, dir, table, groupCol, valueCol)
-    val oldSlim = s.read.parquet(s"$p/data").select(col("grp"), col("n"), col("s"))
-    val old = oldSlim.collect().toSeq // |groups| rows — kilobytes by contract
-    // ROWCOUNT COHERENCE (r16 review #1): merging assumes live table
-    // = covered listing + exactly this batch. The rollup's own Σn IS
-    // the covered row count, so an out-of-band delete/replacement
-    // between the covered stamp and this append shows up as
-    // Σn_old + |batch| ≠ |table| — and a blind merge would stamp
-    // WRONG EXACT data (served at rel_err 0) as current. Mismatch →
-    // full rebuild; the counts are parquet-metadata-speed.
-    val oldRows = old.map(_.getAs[Long]("n")).foldLeft(BigInt(0))(_ + _)
-    if (oldRows + BigInt(batch.count()) !=
-        BigInt(graft.Tables(s, dir, table).count()))
-      return ensureGroupRollup(s, dir, table, groupCol, valueCol)
-    val oldDf = s.createDataFrame(
-      s.sparkContext.parallelize(old, 1), oldSlim.schema)
-    val merged = rollupAgg(batch, groupCol, valueCol)
-      .select(col("grp"), col("n"), col("s"))
-      .union(oldDf)
-      .groupBy(col("grp"))
-      .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
-    writeGroupRollup(s, merged, IndexStore.fingerprint(dir, table), p)
+    EnsureWatermark.maintain(s, p, DataPart, dir, table, batch)(
+        _ => buildGroupRollup(s, dir, table, groupCol, valueCol)) {
+        (st, liveRows) =>
+      EnsureWatermark.commit(p, dir, table, liveRows) { v =>
+        rollupAgg(batch, groupCol, valueCol)
+          .union(rollupRows(s, dir, table, groupCol, st.part(p, "data")))
+          .groupBy(col("grp"))
+          .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
+          .coalesce(1).write.parquet(s"$v/data")
+      }
+    }
   }
 
   /** Drop the rollup artifact — the q100 gate's determinism reset
@@ -432,16 +336,8 @@ object SampledAgg {
   def groupRollupIfCurrent(s: SparkSession, dir: String, table: String,
       groupCol: String, valueCol: String): Option[DataFrame] = {
     val p = groupRollupPath(dir, table, groupCol, valueCol)
-    if (!IndexStore.artifactReady(s"$p/data")) return None
-    val df = s.read.schema(StructType(Seq(
-        StructField("grp", grpType(s, dir, table, groupCol)),
-        StructField("n", LongType), StructField("s", LongType),
-        StructField("covered", StringType))))
-      .parquet(s"$p/data")
-    val covered = df.limit(1).select(col("covered")).collect()
-      .headOption.map(_.getString(0))
-    if (!covered.contains(IndexStore.fingerprint(dir, table))) None
-    else Some(df.select(col("grp"), col("n"), col("s")))
+    EnsureWatermark.current(p, DataPart, dir, table)
+      .map(st => rollupRows(s, dir, table, groupCol, st.part(p, "data")))
   }
 
   // ------------------------------------------------------------------
@@ -810,11 +706,10 @@ object SampledAgg {
   // for ANY (table, groupCol, valueCol), additively O(batch)-
   // maintainable, serving per-group percentiles at |groups|·bins
   // rows with the one-bin-width disclosed bound. NULL values land in
-  // the SENTINEL bin −1, so Σcnt equals the table row count and the
-  // rowcount coherence check rides the artifact's own mass (no extra
-  // stamp field). Contract: groupCol is a dashboard dimension
+  // the SENTINEL bin −1, so Σcnt equals the table row count.
+  // Contract: groupCol is a dashboard dimension
   // (bounded cardinality — the artifact is |groups|·(numBins+2)
-  // rows); the merge stages and swaps, never a driver collect.
+  // rows); the merge is a distributed aggregate, never a collect.
   // ------------------------------------------------------------------
 
   def groupHistPath(dir: String, table: String, groupCol: String,
@@ -834,112 +729,65 @@ object SampledAgg {
       .groupBy(col("grp"), col("bin"))
       .agg(count(lit(1)).as("cnt"))
 
-  private def writeGroupHistMeta(s: SparkSession, p: String,
-      covered: String, binWidthE4: Long, numBins: Int): Unit = {
-    import s.implicits._
-    Seq((covered, binWidthE4, numBins))
-      .toDF("covered", "bin_width_e4", "num_bins")
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/meta")
-  }
-
-  /** Build once per fingerprint from one binning pass. `binWidth`
-    * must render exactly at e4 scale (the integer-replay contract).
-    * The covered stamp AND the knobs ride the DATA rows (review pass
-    * 3: the crash-window meta re-commit must recover the knobs the
-    * data was actually binned with, never the surviving meta's); the
-    * meta (knobs + stamp) is the serve point. A current artifact
-    * with DIFFERENT knobs than requested is re-provisioned, never a
-    * silent no-op (the stratifiedIfCurrent k-check precedent). */
+  /** Build once per listing from one binning pass. `binWidth` must
+    * render exactly at e4 scale (the integer-replay contract); both
+    * knobs are baked into the stamp. A current artifact with
+    * DIFFERENT knobs than requested is re-provisioned, never a silent
+    * no-op (the stratifiedIfCurrent k-check precedent). */
   def ensureGroupHistogram(s: SparkSession, dir: String, table: String,
       groupCol: String, valueCol: String, binWidth: Double = 5.0,
       numBins: Int = 100): Unit = {
     val binWidthE4 = math.round(binWidth * 10000.0)
     require(binWidthE4 > 0 && binWidthE4 / 10000.0 == binWidth,
       s"binWidth must be exact at e4 scale, got $binWidth")
-    if (groupHistIfCurrent(s, dir, table, groupCol, valueCol)
+    if (!groupHistIfCurrent(s, dir, table, groupCol, valueCol)
         .exists { case (_, bw, nb) => bw == binWidthE4 && nb == numBins })
-      return
-    val p = groupHistPath(dir, table, groupCol, valueCol)
-    val covered = IndexStore.fingerprint(dir, table)
-    histBins(graft.Tables(s, dir, table), groupCol, valueCol,
-        binWidth, numBins)
-      .withColumn("covered", lit(covered))
-      .withColumn("bin_width_e4", lit(binWidthE4))
-      .withColumn("num_bins", lit(numBins))
-      .write.mode("overwrite").parquet(s"$p/data")
-    writeGroupHistMeta(s, p, covered, binWidthE4, numBins)
+      buildGroupHistogram(s, dir, table, groupCol, valueCol,
+        binWidthE4, numBins)
   }
 
-  /** O(batch) ADDITIVE maintenance, idempotent and crash-convergent:
-    * bin counts add exactly, so the merged artifact equals a rebuild;
-    * the data's own covered stamp discriminates the rows-committed/
-    * meta-missing crash window (re-commit the meta, merge nothing);
-    * the rowcount coherence screen (Σcnt IS the covered row count —
-    * the null sentinel makes that exact) rebuilds on out-of-band
-    * mutation; a torn artifact reads absent and rebuilds. */
+  private def buildGroupHistogram(s: SparkSession, dir: String,
+      table: String, groupCol: String, valueCol: String, binWidthE4: Long,
+      numBins: Long): Unit = {
+    val t = graft.Tables(s, dir, table)
+    EnsureWatermark.commit(groupHistPath(dir, table, groupCol, valueCol),
+        dir, table, t.count(),
+        Map("bin_width_e4" -> binWidthE4, "num_bins" -> numBins)) { v =>
+      histBins(t, groupCol, valueCol, binWidthE4 / 10000.0, numBins.toInt)
+        .write.parquet(s"$v/data")
+    }
+  }
+
+  private def histRows(s: SparkSession, dir: String, table: String,
+      groupCol: String, path: String): DataFrame =
+    s.read.schema(StructType(Seq(
+        StructField("grp", grpType(s, dir, table, groupCol)),
+        StructField("bin", LongType), StructField("cnt", LongType))))
+      .parquet(path)
+
+  /** O(batch) ADDITIVE maintenance: bin counts add exactly, so the
+    * merged artifact equals a rebuild. Idempotent and
+    * crash-convergent by the shared protocol; the knobs the data was
+    * binned with come from its own stamp, so a torn custom-knob
+    * artifact rebuilds at its own granularity (an absent one at the
+    * defaults). */
   def appendMaintainGroupHistogram(s: SparkSession, dir: String,
       table: String, groupCol: String, valueCol: String,
       batch: DataFrame): Unit = {
-    if (groupHistIfCurrent(s, dir, table, groupCol, valueCol).isDefined)
-      return
     val p = groupHistPath(dir, table, groupCol, valueCol)
-    if (!IndexStore.artifactReady(s"$p/data")) {
-      // torn or unbuilt data: rebuild with the META's knobs when it
-      // survived (review pass 3: a torn custom-knob artifact must not
-      // silently degrade to the defaults), else the defaults
-      if (IndexStore.artifactReady(s"$p/meta")) {
-        val m = s.read.parquet(s"$p/meta").head()
-        return ensureGroupHistogram(s, dir, table, groupCol, valueCol,
-          m.getAs[Long]("bin_width_e4") / 10000.0, m.getAs[Int]("num_bins"))
+    EnsureWatermark.maintain(s, p, DataPart, dir, table, batch) {
+      case Some(st) => buildGroupHistogram(s, dir, table, groupCol, valueCol,
+        st.knobs("bin_width_e4"), st.knobs("num_bins"))
+      case None => ensureGroupHistogram(s, dir, table, groupCol, valueCol)
+    } { (st, liveRows) =>
+      EnsureWatermark.commit(p, dir, table, liveRows, st.knobs) { v =>
+        histRows(s, dir, table, groupCol, st.part(p, "data"))
+          .union(histBins(batch, groupCol, valueCol,
+            st.knobs("bin_width_e4") / 10000.0, st.knobs("num_bins").toInt))
+          .groupBy(col("grp"), col("bin")).agg(sum(col("cnt")).as("cnt"))
+          .write.parquet(s"$v/data")
       }
-      return ensureGroupHistogram(s, dir, table, groupCol, valueCol)
     }
-    if (!IndexStore.artifactReady(s"$p/meta"))
-      return ensureGroupHistogram(s, dir, table, groupCol, valueCol)
-    val (fs, _) = IndexStore.fsOf(p)
-    IndexStore.recoverSwap(fs, s"$p/stage_data", s"$p/data")
-    val live = IndexStore.fingerprint(dir, table)
-    val old = s.read.parquet(s"$p/data")
-    if (!old.schema.fieldNames.contains("bin_width_e4")) {
-      // pre-knob-stamp layout: rebuild once under the meta's knobs
-      val m = s.read.parquet(s"$p/meta").head()
-      return ensureGroupHistogram(s, dir, table, groupCol, valueCol,
-        m.getAs[Long]("bin_width_e4") / 10000.0, m.getAs[Int]("num_bins"))
-    }
-    val head = old.limit(1)
-      .select(col("covered"), col("bin_width_e4"), col("num_bins"))
-      .collect().headOption
-    val dataCovered = head.map(_.getString(0))
-    // the knobs the data was ACTUALLY binned with ride the rows —
-    // the only truth the crash-window re-commit may stamp (review
-    // pass 3: the surviving meta could carry a superseded
-    // provisioning's knobs)
-    val (binWidthE4, numBins) = head
-      .map(r => (r.getLong(1), r.getInt(2)))
-      .getOrElse((50000L, 100))
-    if (dataCovered.contains(live)) {
-      // crash window: data committed for this listing, meta did not
-      // land — re-commit the meta (with the data's own knobs), merge
-      // nothing
-      writeGroupHistMeta(s, p, live, binWidthE4, numBins)
-      return
-    }
-    val oldTotal = Option(old.agg(sum(col("cnt"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (BigInt(oldTotal) + BigInt(batch.count()) !=
-        BigInt(graft.Tables(s, dir, table).count()))
-      return ensureGroupHistogram(s, dir, table, groupCol, valueCol,
-        binWidthE4 / 10000.0, numBins)
-    val merged = old.select(col("grp"), col("bin"), col("cnt"))
-      .union(histBins(batch, groupCol, valueCol,
-        binWidthE4 / 10000.0, numBins))
-      .groupBy(col("grp"), col("bin")).agg(sum(col("cnt")).as("cnt"))
-      .withColumn("covered", lit(live))
-      .withColumn("bin_width_e4", lit(binWidthE4))
-      .withColumn("num_bins", lit(numBins))
-    merged.write.mode("overwrite").parquet(s"$p/stage_data")
-    IndexStore.stageSwap(fs, s"$p/stage_data", s"$p/data")
-    writeGroupHistMeta(s, p, live, binWidthE4, numBins)
   }
 
   /** (bins frame (grp, bin, cnt), binWidthE4, numBins) while the
@@ -948,22 +796,12 @@ object SampledAgg {
       groupCol: String, valueCol: String)
       : Option[(DataFrame, Long, Int)] = {
     val p = groupHistPath(dir, table, groupCol, valueCol)
-    if (!IndexStore.artifactReady(s"$p/data") ||
-        !IndexStore.artifactReady(s"$p/meta")) return None
-    val meta = s.read.schema(HistMetaSchema).parquet(s"$p/meta").head()
-    if (meta.getAs[String]("covered") != IndexStore.fingerprint(dir, table))
-      None
-    else {
-      Some((s.read.schema(StructType(Seq(
-          StructField("grp", grpType(s, dir, table, groupCol)),
-          StructField("bin", LongType), StructField("cnt", LongType),
-          StructField("covered", StringType),
-          StructField("bin_width_e4", LongType),
-          StructField("num_bins", IntegerType))))
-        .parquet(s"$p/data")
-        .select(col("grp"), col("bin"), col("cnt")),
-      meta.getAs[Long]("bin_width_e4"), meta.getAs[Int]("num_bins")))
-    }
+    for {
+      st <- EnsureWatermark.current(p, DataPart, dir, table)
+      binWidthE4 <- st.knobs.get("bin_width_e4")
+      numBins <- st.knobs.get("num_bins")
+    } yield (histRows(s, dir, table, groupCol, st.part(p, "data")),
+      binWidthE4, numBins.toInt)
   }
 
   /** Tolerance-declared PER-GROUP percentiles for any (table,
@@ -1065,21 +903,9 @@ object SampledAgg {
       keyCol: String, stratumCol: String,
       k: Int): Option[(DataFrame, DataFrame)] = {
     val p = stratSamplePath(dir, table, keyCol, stratumCol, k)
-    if (!IndexStore.artifactReady(metaPath(p)) ||
-        !IndexStore.artifactReady(dataPath(p)) ||
-        !IndexStore.artifactReady(s"$p/counts")) return None
-    val meta = s.read.schema(StratMetaSchema).parquet(metaPath(p)).head()
-    if (meta.getAs[String]("covered") != IndexStore.fingerprint(dir, table) ||
-        meta.getAs[Int]("k") != k) None
-    else {
-      val countsSchema = StructType(Seq(
-        StructField("stratum", grpType(s, dir, table, stratumCol)),
-        StructField("n", LongType),
-        StructField("covered", StringType)))
-      Some((s.read.schema(graft.Tables(s, dir, table).schema)
-          .parquet(dataPath(p)),
-        s.read.schema(countsSchema).parquet(s"$p/counts")
-          .select(col("stratum"), col("n"))))
+    stratStamp(dir, table, keyCol, stratumCol, k).map { st =>
+      (tableRows(s, dir, table, st.part(p, "data")),
+        stratCounts(s, dir, table, stratumCol, st.part(p, "counts")))
     }
   }
 }

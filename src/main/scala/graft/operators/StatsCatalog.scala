@@ -181,24 +181,10 @@ object StatsCatalog {
     else Some(readStats(s, path))
   }
 
-  /** MEMOIZED artifact read (r12 advice #1: the plan-time metadata
-    * reads inside optimizer rules were unmemoized Spark jobs — one
-    * `spark.read.parquet().collect()` per candidate join per
-    * optimization). Keyed on the watermark's BUILD STAMP (the exact
-    * data-file listing, recomputed from FS metadata every call — the
-    * cheap part), so the expensive collect runs once per artifact
-    * BUILD: a reEnsure writes new files → new stamp → re-read; a
-    * broken watermark (stamp absent) falls through to a direct
-    * uncached read, because build-path callers (ensure's upgrade
-    * check) still need the rows while proof-path callers
-    * ([[uniqueNonNull]]) have already failed closed. */
   // fixed artifact schemas (writers above) — see IndexStore.readAs
   private val StatsDdl =
     "column STRING, n BIGINT, nulls BIGINT, ndv BIGINT, " +
       "min STRING, max STRING, exact BOOLEAN"
-
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Map[String, ColStats])]()
 
   /** Test seam: number of actual stats-parquet collects — the
     * memoization spec's receipt. */
@@ -216,18 +202,26 @@ object StatsCatalog {
     }.toMap
   }
 
+  /** MEMOIZED artifact read (r12 advice #1: the plan-time metadata
+    * reads inside optimizer rules were unmemoized Spark jobs — one
+    * `spark.read.parquet().collect()` per candidate join per
+    * optimization). Keyed on the watermark's BUILD STAMP (the exact
+    * data-file listing, recomputed from FS metadata every call — the
+    * cheap part) through [[EnsureWatermark.memo]], so the expensive
+    * collect runs once per artifact BUILD; a broken watermark (stamp
+    * absent) falls through to a direct uncached read, because
+    * build-path callers (ensure's upgrade check) still need the rows
+    * while proof-path callers ([[uniqueNonNull]]) have already failed
+    * closed. */
   private def readStats(s: SparkSession, path: String): Map[String, ColStats] =
     EnsureWatermark.stampIfHolds(path) match {
       case None => collectStats(s, path)
-      case Some(stamp) =>
-        val cached = statsCache.get(path)
-        if (cached != null && cached._1 == stamp) cached._2
-        else {
-          val m = collectStats(s, path)
-          statsCache.put(path, (stamp, m))
-          m
-        }
+      case Some(stamp) => memoStats(s, path, stamp)
     }
+
+  private def memoStats(s: SparkSession, path: String,
+      stamp: String): Map[String, ColStats] =
+    EnsureWatermark.memo(path, stamp)(collectStats(s, path))
 
   /** PROOF face: true iff `column`'s non-null values are pairwise
     * distinct, proven by EXACT-mode stats that are still current —
@@ -245,15 +239,8 @@ object StatsCatalog {
       column: String): Boolean = {
     val path = statsPath(dir, table)
     EnsureWatermark.stampIfHolds(path).exists { stamp =>
-      val cached = statsCache.get(path)
-      val m =
-        if (cached != null && cached._1 == stamp) cached._2
-        else {
-          val fresh = collectStats(s, path)
-          statsCache.put(path, (stamp, fresh))
-          fresh
-        }
-      m.get(column).exists(st => st.exact && st.uniqueNonNull)
+      memoStats(s, path, stamp).get(column)
+        .exists(st => st.exact && st.uniqueNonNull)
     }
   }
 
@@ -413,15 +400,20 @@ object StatsCatalog {
 
   /** (hot keys ranked by frequency, max frequency) — None when no
     * profile was ensured. An EMPTY profile is meaningful: no key
-    * reaches the hot threshold, so max_freq is bounded by it. */
+    * reaches the hot threshold, so max_freq is bounded by it.
+    * Stamp-memoized like [[readStats]]: the steering rule reads it at
+    * optimize time, once per join side. */
   def keyProfile(s: SparkSession, dir: String, table: String,
       column: String): Option[(Seq[String], Long)] = {
     val path = keyProfilePath(dir, table, column)
-    if (!EnsureWatermark.holds(path)) return None
-    val rows = IndexStore.readAs(s, "key STRING, freq BIGINT", path)
-      .orderBy(col("freq").desc, col("key")).collect()
-    Some((rows.map(_.getString(0)).toSeq,
-      rows.headOption.map(_.getLong(1)).getOrElse(0L)))
+    EnsureWatermark.stampIfHolds(path).map { stamp =>
+      EnsureWatermark.memo(path, stamp) {
+        val rows = IndexStore.readAs(s, "key STRING, freq BIGINT", path)
+          .orderBy(col("freq").desc, col("key")).collect()
+        (rows.map(_.getString(0)).toSeq,
+          rows.headOption.map(_.getLong(1)).getOrElse(0L))
+      }
+    }
   }
 
   // ------------------------------------------------------------------
@@ -464,27 +456,19 @@ object StatsCatalog {
     EnsureWatermark.write(path)
   }
 
-  /** Stamp-keyed memo for plan-time group reads — the same
-    * one-job-per-build discipline as [[readStats]]. */
-  private val groupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, GroupStats)]()
-
   /** Non-building read face: the group's stats when the artifact is
-    * current, None otherwise — never launches an ANALYZE. */
+    * current, None otherwise — never launches an ANALYZE.
+    * Stamp-memoized like [[readStats]]. */
   def columnGroupIfReady(s: SparkSession, dir: String, table: String,
       columns: Seq[String]): Option[GroupStats] = {
     val cols = columns.sorted
     val path = groupStatsPath(dir, table, cols)
     EnsureWatermark.stampIfHolds(path).map { stamp =>
-      val cached = groupCache.get(path)
-      if (cached != null && cached._1 == stamp) cached._2
-      else {
+      EnsureWatermark.memo(path, stamp) {
         val r = IndexStore.readAs(s,
           "columns STRING, n BIGINT, ndv BIGINT, exact BOOLEAN", path).head()
-        val g = GroupStats(cols, r.getAs[Long]("n"), r.getAs[Long]("ndv"),
+        GroupStats(cols, r.getAs[Long]("n"), r.getAs[Long]("ndv"),
           r.getAs[Boolean]("exact"))
-        groupCache.put(path, (stamp, g))
-        g
       }
     }
   }
@@ -530,70 +514,41 @@ object StatsCatalog {
     EnsureWatermark.write(path)
   }
 
-  /** The table's LIVE listing fingerprint — the public face for
-    * plan-layer memo keys (r16): a maintained-evidence leaf keys on
-    * it, since the maintained artifacts only serve while covering
-    * exactly this listing. */
-  def listingFingerprint(dir: String, table: String): String =
-    IndexStore.fingerprint(dir, table)
-
   /** Cheap MCV-TIER WATERMARK for one table (r16, the learned-tier
-    * memo key): one hash over the exact MCV artifacts' listing (they
-    * live under the table's fingerprint dir, so a table mutation
-    * re-keys automatically) and the maintained MCV listing (under
-    * the maint path). Any build, maintenance, or retirement of
-    * either tier changes the stamp — FS metadata only, no jobs. */
+    * memo key): the stamps of both tiers' artifacts — the exact MCV
+    * lists' watermark listings (they live under the table's
+    * fingerprint dir, so a table mutation re-keys automatically) and
+    * the maintained lists' commit versions. Any build, maintenance,
+    * or retirement of either tier changes it — one listing per tier
+    * root plus one small read per artifact, no jobs. */
   def mcvTierStamp(dir: String, table: String): String = {
-    // RECURSIVE file listing, the storeStamp discipline (r16 review,
-    // both passes): the maintained tier's part files live at depth 3
-    // (mcv_<col>/data/rows/part-*), so only a recursive listing
-    // reaches the per-write UUID names that defeat coarse-mtime ticks
-    def listDesc(root: String, prefix: String): String = {
+    def tier(root: String, prefix: String)(stamp: String => String): String = {
       val (fs, p) = IndexStore.fsOf(root)
       if (!fs.exists(p)) "absent"
-      else fs.listStatus(p)
-        .filter(_.getPath.getName.startsWith(prefix))
-        .flatMap { st =>
-          if (!st.isDirectory) Seq(s"${st.getPath.getName}:${st.getLen}")
-          else {
-            val it = fs.listFiles(st.getPath, true)
-            val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-            while (it.hasNext) {
-              val f = it.next()
-              parts += s"${f.getPath.toUri.getPath}:${f.getLen}"
-            }
-            parts.toSeq
-          }
-        }
-        .sorted.mkString(",")
+      else fs.listStatus(p).map(_.getPath.getName)
+        .filter(_.startsWith(prefix)).sorted
+        .map(n => s"$n=${stamp(s"$root/$n")}").mkString(",")
     }
-    val exact = listDesc(
+    val exact = tier(
       s"${IndexStore.root}/${IndexStore.fingerprint(dir, table)}",
-      s"stats_${table}_mcv_")
-    val maint = listDesc(StatsMaintain.maintPath(dir, table), "mcv_")
+      s"stats_${table}_mcv_")(EnsureWatermark.stampIfHolds(_).getOrElse("torn"))
+    val maint = tier(StatsMaintain.maintPath(dir, table), "mcv_")(
+      EnsureWatermark.stampOf(_).fold("absent")(_.version))
     s"$exact;$maint"
   }
 
-  /** Stamp-keyed memo for plan-time MCV reads — the readStats
-    * discipline. */
-  private val mcvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(String, Long)])]()
-
   /** Non-building read face: the (value, freq) list ranked
     * (freq DESC, value ASC) when the artifact is current, None
-    * otherwise — never launches an ANALYZE. */
+    * otherwise — never launches an ANALYZE. Stamp-memoized like
+    * [[readStats]]. */
   def mcvIfReady(s: SparkSession, dir: String, table: String,
       column: String): Option[Seq[(String, Long)]] = {
     val path = mcvPath(dir, table, column)
     EnsureWatermark.stampIfHolds(path).map { stamp =>
-      val cached = mcvCache.get(path)
-      if (cached != null && cached._1 == stamp) cached._2
-      else {
-        val rows = IndexStore.readAs(s, "value STRING, freq BIGINT", path)
+      EnsureWatermark.memo(path, stamp) {
+        IndexStore.readAs(s, "value STRING, freq BIGINT", path)
           .orderBy(col("freq").desc, col("value")).collect()
           .map(r => (r.getString(0), r.getLong(1))).toSeq
-        mcvCache.put(path, (stamp, rows))
-        rows
       }
     }
   }

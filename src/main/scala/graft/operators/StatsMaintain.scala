@@ -24,14 +24,14 @@ import org.apache.spark.sql.types._
   *    (spec-pinned), so maintenance never degrades the sketch, only
   *    the estimate keeps HLL's usual error.
   *
-  * CURRENCY contract: the summary records the source-listing
-  * fingerprint it COVERS; [[statsIfCurrent]] serves only while that
-  * matches the live listing. The caller appends the data file FIRST,
-  * then maintains — a crash between the two leaves covered ≠ live →
-  * fail-closed stale, repaired by [[reEnsure]] or a late
-  * [[appendMaintain]] of the same batch. The summary (which carries
-  * the stamp) is written LAST, after the registers — a torn write
-  * fails `artifactReady` or the stamp check, never serves halves.
+  * CURRENCY contract: the [[EnsureWatermark]] commit-and-serve
+  * protocol every maintained family here shares (and SampledAgg's
+  * four): each commit stamps the source-listing fingerprint it
+  * COVERS; [[statsIfCurrent]] serves only while that matches the live
+  * listing. The caller appends the data file FIRST, then maintains —
+  * a crash between the two leaves covered ≠ live → fail-closed
+  * stale, repaired by [[reEnsure]] or a late [[appendMaintain]] of
+  * the same batch.
   *
   * Costs, stated: the one-time [[ensure]] pays one scan per column
   * for registers (the ExactNdvBatch class of trade — bounded
@@ -50,8 +50,9 @@ object StatsMaintain {
     // on ONE artifact ([[IndexStore.tablePathKey]], shared with the
     // AQP artifact families)
     s"${IndexStore.root}/stats_maint_${IndexStore.tablePathKey(dir, table)}_$table"
-  private def sumPath(dir: String, table: String) = s"${maintPath(dir, table)}/summary"
-  private def regPath(dir: String, table: String) = s"${maintPath(dir, table)}/registers"
+  private[graft] def statsPath(dir: String, table: String) =
+    s"${maintPath(dir, table)}/stats"
+  private val StatsParts = Seq("summary", "registers")
 
   /** One maintained column: exact n/nulls/min/max + the HLL NDV
     * estimate (rounded long; advisory-grade by construction).
@@ -130,38 +131,35 @@ object StatsMaintain {
     }.reduce(_.union(_))
   }
 
+  /** Commit one column-stats state; the row count every column's
+    * `n` carries is the covered row count. */
   private def writeArtifact(s: SparkSession, dir: String, table: String,
       sums: Seq[(String, Long, Long, Option[String], Option[String])],
       regs: DataFrame, degraded: Boolean = false): Unit = {
     import s.implicits._
-    // registers first; the summary carries the covered stamp and is
-    // the COMMIT point (see class scaladoc)
-    regs.coalesce(1).write.mode("overwrite").parquet(regPath(dir, table))
-    val covered = IndexStore.fingerprint(dir, table)
-    sums.map { case (c, n, nulls, mn, mx) =>
-        (c, n, nulls, mn, mx, covered, degraded) }
-      .toDF("column", "n", "nulls", "min", "max", "covered", "degraded")
-      .coalesce(1).write.mode("overwrite").parquet(sumPath(dir, table))
-    // a rebuild at an UNCHANGED listing (reEnsure clearing the
-    // degraded flag) must not be shadowed by the covered-keyed memo
-    // (r16: the stamp alone cannot see an artifact rewrite)
-    statsMemo.remove(maintPath(dir, table))
-    ()
+    EnsureWatermark.commit(statsPath(dir, table), dir, table,
+        sums.headOption.fold(0L)(_._2)) { v =>
+      regs.coalesce(1).write.parquet(s"$v/registers")
+      sums.map { case (c, n, nulls, mn, mx) => (c, n, nulls, mn, mx, degraded) }
+        .toDF("column", "n", "nulls", "min", "max", "degraded")
+        .coalesce(1).write.parquet(s"$v/summary")
+    }
   }
 
   /** Build once from a full scan; safe to call when already current. */
   def ensure(s: SparkSession, dir: String, table: String): Unit =
-    if (statsIfCurrent(s, dir, table).isEmpty) reEnsure(s, dir, table)
+    if (EnsureWatermark.current(statsPath(dir, table), StatsParts, dir, table)
+        .isEmpty) reEnsure(s, dir, table)
 
   /** Whether a maintained artifact EXISTS (current or stale) — the
     * bootstrap probe for ingest glue: absent → build from the table
     * so far; present → O(batch) maintenance (never a full rescan). */
   def built(dir: String, table: String): Boolean =
-    IndexStore.artifactReady(sumPath(dir, table))
+    EnsureWatermark.stampOf(statsPath(dir, table)).isDefined
 
   /** [[built]] for the maintained key profile. */
   def keyProfileBuilt(dir: String, table: String, column: String): Boolean =
-    IndexStore.artifactReady(s"${keyProfPath(dir, table, column)}/meta")
+    EnsureWatermark.stampOf(keyProfPath(dir, table, column)).isDefined
 
   /** Drop EVERY maintained artifact of (dir, table) — column stats,
     * key profiles, column groups, MCV lists (they all live under
@@ -170,17 +168,11 @@ object StatsMaintain {
     * transitions its markers, so that any crash-replay state finds
     * the artifacts absent and REBUILDS — an O(batch) merge into
     * artifacts still carrying the replaced rows' contributions would
-    * be wrong advisory stats stamped current. Idempotent; also clears
-    * the plan-time memos so a same-process replay cannot serve the
-    * dropped state. */
+    * be wrong advisory stats stamped current. Idempotent. */
   def dropMaintained(dir: String, table: String): Unit = {
     val (fs, p) = IndexStore.fsOf(maintPath(dir, table))
     fs.delete(p, true)
-    val prefix = maintPath(dir, table)
-    statsMemo.keySet.removeIf(_.startsWith(prefix))
-    keyProfMemo.keySet.removeIf(_.startsWith(prefix))
-    grpMemo.keySet.removeIf(_.startsWith(prefix))
-    mcvMemo.keySet.removeIf(_.startsWith(prefix))
+    ()
   }
 
   /** Full rebuild — the repair path for a stale or torn artifact. */
@@ -190,71 +182,47 @@ object StatsMaintain {
   }
 
   /** O(batch) maintenance: the caller appended `batch`'s rows to the
-    * table ALREADY (covered stamp is taken from the post-append
-    * listing); this merges the batch's partials into the artifact —
-    * the batch is the only data scanned. */
+    * table ALREADY; this merges the batch's partials into the
+    * artifact — the batch is the only data scanned. Idempotent and
+    * crash-convergent by the shared protocol
+    * ([[EnsureWatermark.maintain]]). */
   def appendMaintain(s: SparkSession, dir: String, table: String,
       batch: DataFrame): Unit = {
-    import s.implicits._
-    // idempotent entry (r15, the column-group discipline): an
-    // already-covered artifact is a no-op, so double calls never
-    // double-count n/nulls; the registers-then-summary write order
-    // makes the remaining crash windows converge on retry (the old
-    // summary is re-read, the register merge is idempotent)
-    if (statsIfCurrent(s, dir, table).isDefined) return
-    require(built(dir, table),
-      "maintained stats must be built (ensure) before appendMaintain")
-    val old = readArtifact(s, dir, table).getOrElse {
-      // built summary but unreadable registers = a crash tore the
-      // registers overwrite mid-write; the repair is a full rebuild
-      // (r15 self-review: the ingest glue replays this path forever
-      // if it throws instead of converging)
-      return reEnsure(s, dir, table)
-    }
-    val dtypes = graft.Tables(s, dir, table).schema
-      .fields.map(f => f.name -> f.dataType).toMap
-    val batchSums = summarize(batch).map(t => t._1 -> t).toMap
-    // ROWCOUNT COHERENCE (r16 review #1): merging assumes the live
-    // table = the covered listing + exactly this batch; a delete or
-    // replacement that happened WITHOUT its deleteMaintain shows up
-    // as n_old + |batch| ≠ |table| — a blind merge would stamp stats
-    // (and their downstream consumers' trust) over rows that no
-    // longer exist. Mismatch → full rebuild, metadata-speed counts.
-    if (old.headOption.map(_.n).exists(oldN =>
-        BigInt(oldN) + BigInt(batchSums.values.headOption.map(_._2)
-          .getOrElse(batch.count())) !=
-          BigInt(graft.Tables(s, dir, table).count())))
-      return reEnsure(s, dir, table)
-    // every appended row advances EVERY maintained column's row count
-    // — a column the batch frame lacks is served as NULL by the
-    // parquet scan for each batch row, so n and nulls advance
-    // together and the bounds stand (r13 advice: the old behavior
-    // froze n for the missing column while its siblings advanced,
-    // leaving statsIfCurrent internally inconsistent)
-    val batchN = batchSums.values.headOption.map(_._2).getOrElse(0L)
-    val mergedSums = old.map { m =>
-      val dt = dtypes(m.column)
-      batchSums.get(m.column) match {
-        case None => (m.column, m.n + batchN, m.nulls + batchN, m.min, m.max)
-        case Some((_, bn, bnulls, bmin, bmax)) =>
-          (m.column, m.n + bn, m.nulls + bnulls,
-            mergeBound(dt, m.min, bmin, takeMin = true),
-            mergeBound(dt, m.max, bmax, takeMin = false))
+    val path = statsPath(dir, table)
+    EnsureWatermark.maintain(s, path, StatsParts, dir, table, batch)(
+        _ => reEnsure(s, dir, table)) { (st, _) =>
+      val old = readArtifact(s, path, st)
+      val dtypes = graft.Tables(s, dir, table).schema
+        .fields.map(f => f.name -> f.dataType).toMap
+      val batchSums = summarize(batch).map(t => t._1 -> t).toMap
+      // every appended row advances EVERY maintained column's row
+      // count — a column the batch frame lacks is served as NULL by
+      // the parquet scan for each batch row, so n and nulls advance
+      // together and the bounds stand (r13 advice: the old behavior
+      // froze n for the missing column while its siblings advanced,
+      // leaving statsIfCurrent internally inconsistent)
+      val batchN = batchSums.values.headOption.map(_._2).getOrElse(0L)
+      val mergedSums = old.map { m =>
+        val dt = dtypes(m.column)
+        batchSums.get(m.column) match {
+          case None => (m.column, m.n + batchN, m.nulls + batchN, m.min, m.max)
+          case Some((_, bn, bnulls, bmin, bmax)) =>
+            (m.column, m.n + bn, m.nulls + bnulls,
+              mergeBound(dt, m.min, bmin, takeMin = true),
+              mergeBound(dt, m.max, bmax, takeMin = false))
+        }
       }
+      // register max-merge: batch registers (a Spark job over the
+      // batch) ∪ the stamped version's rows
+      val merged = registerRows(batch)
+        .union(s.read.parquet(st.part(path, "registers")))
+        .groupBy(col("column"), col("reg")).agg(max(col("rho")).as("rho"))
+      // a degraded (delete-maintained) artifact stays degraded under
+      // appends: the kept bounds remain valid bounds, but only a full
+      // re-ANALYZE restores exactness (r16)
+      writeArtifact(s, dir, table, mergedSums, merged,
+        degraded = old.exists(_.degraded))
     }
-    // register max-merge: batch registers (a Spark job over the
-    // batch) ∪ the old rows (kilobytes, re-parallelized) — the write
-    // never reads the path it replaces
-    val oldRegs = s.read.parquet(regPath(dir, table))
-      .as[(String, Long, Long)].collect().toSeq
-    val merged = registerRows(batch)
-      .union(oldRegs.toDF("column", "reg", "rho"))
-      .groupBy(col("column"), col("reg")).agg(max(col("rho")).as("rho"))
-    // a degraded (delete-maintained) artifact stays degraded under
-    // appends: the kept bounds remain valid bounds, but only a full
-    // re-ANALYZE restores exactness (r16)
-    writeArtifact(s, dir, table, mergedSums, merged,
-      degraded = old.exists(_.degraded))
   }
 
   /** O(batch) DELETE maintenance (r16, the D42 gap between D91 and
@@ -269,22 +237,17 @@ object StatsMaintain {
     * is an UPPER bound on live NDV. The artifact marks itself
     * `degraded`; [[Steering.adviseAnalyze]] reports `degraded_stats`
     * for it, and a full [[reEnsure]] (or the next ensure after a
-    * fingerprint move) restores exactness. Idempotent and
-    * crash-convergent like [[appendMaintain]]: an already-covered
-    * artifact no-ops; a crash between the (unchanged) registers
-    * rewrite and the summary leaves the old summary — fail-closed
-    * stale, the retry re-subtracts against the OLD counts exactly
-    * once. A batch column the frame lacks follows the appendMaintain
-    * convention (the scan served those rows' column as NULL). */
+    * fingerprint move) restores exactness. An already-covered
+    * artifact no-ops; an absent or torn one rebuilds. A batch column
+    * the frame lacks follows the appendMaintain convention (the scan
+    * served those rows' column as NULL). */
   def deleteMaintain(s: SparkSession, dir: String, table: String,
       deleted: DataFrame): Unit = {
-    import s.implicits._
-    if (statsIfCurrent(s, dir, table).isDefined) return
-    require(built(dir, table),
-      "maintained stats must be built (ensure) before deleteMaintain")
-    val old = readArtifact(s, dir, table).getOrElse {
-      return reEnsure(s, dir, table)
-    }
+    val path = statsPath(dir, table)
+    val st = EnsureWatermark.intact(path, StatsParts)
+      .getOrElse(return reEnsure(s, dir, table))
+    if (st.covered == IndexStore.fingerprint(dir, table)) return
+    val old = readArtifact(s, path, st)
     val batchSums = summarize(deleted).map(t => t._1 -> t).toMap
     val batchN = batchSums.values.headOption.map(_._2).getOrElse(0L)
     val mergedSums = old.map { m =>
@@ -297,10 +260,8 @@ object StatsMaintain {
             m.min, m.max)
       }
     }
-    val oldRegs = s.read.parquet(regPath(dir, table))
-      .as[(String, Long, Long)].collect().toSeq
     writeArtifact(s, dir, table, mergedSums,
-      oldRegs.toDF("column", "reg", "rho"), degraded = true)
+      s.read.parquet(st.part(path, "registers")), degraded = true)
   }
 
   /** True when the maintained artifact is CURRENT but degraded (a
@@ -310,31 +271,26 @@ object StatsMaintain {
     statsIfCurrent(s, dir, table)
       .exists(_.values.exists(_.degraded))
 
-  private def readArtifact(s: SparkSession, dir: String,
-      table: String): Option[Seq[MaintainedCol]] = {
-    if (!IndexStore.artifactReady(sumPath(dir, table)) ||
-        !IndexStore.artifactReady(regPath(dir, table))) return None
-    val ests = estimates(s, dir, table)
-    val df = s.read.parquet(sumPath(dir, table))
-    // pre-r16 artifacts lack the degraded column — they were never
-    // delete-maintained, so false is exact, not a guess
-    val hasDeg = df.schema.fieldNames.contains("degraded")
-    Some(df.collect().toSeq.map { r =>
-      MaintainedCol(r.getAs[String]("column"), r.getAs[Long]("n"),
-        r.getAs[Long]("nulls"), Option(r.getAs[String]("min")),
-        Option(r.getAs[String]("max")),
-        ests.getOrElse(r.getAs[String]("column"), 0L),
-        degraded = hasDeg && r.getAs[Boolean]("degraded"))
-    })
+  private def readArtifact(s: SparkSession, path: String,
+      st: EnsureWatermark.Stamp): Seq[MaintainedCol] = {
+    val ests = estimates(s, st.part(path, "registers"))
+    IndexStore.readAs(s, "column STRING, n BIGINT, nulls BIGINT, " +
+        "min STRING, max STRING, degraded BOOLEAN", st.part(path, "summary"))
+      .collect().toSeq.map { r =>
+        MaintainedCol(r.getAs[String]("column"), r.getAs[Long]("n"),
+          r.getAs[Long]("nulls"), Option(r.getAs[String]("min")),
+          Option(r.getAs[String]("max")),
+          ests.getOrElse(r.getAs[String]("column"), 0L),
+          degraded = r.getAs[Boolean]("degraded"))
+      }
   }
 
   /** HLL estimate per column from the persisted registers (the
     * [[SketchRollup.estimate]] formula keyed by column). */
-  private def estimates(s: SparkSession, dir: String,
-      table: String): Map[String, Long] = {
+  private def estimates(s: SparkSession, regPath: String): Map[String, Long] = {
     val m = SketchRollup.M
     val twoPow52 = 4503599627370496L
-    s.read.parquet(regPath(dir, table))
+    s.read.parquet(regPath)
       .groupBy(col("column"))
       .agg(count(lit(1)).as("regs_hit"),
         sum(pow(lit(2.0), lit(SketchRollup.MaxRho) - col("rho")).cast("long"))
@@ -405,158 +361,34 @@ object StatsMaintain {
   //    PROOF face ([[StatsCatalog.determines]]) still demands the
   //    exact listing (spec-pinned).
   //
-  // Same currency contract as the column stats: every artifact
-  // carries the post-append listing fingerprint it covers and
-  // serves only while that matches the live listing.
+  // Same currency contract as the column stats: the shared
+  // [[EnsureWatermark]] commit-and-serve protocol.
   // ------------------------------------------------------------------
 
-  // keyprof2: the r15 stage/data/stamp layout is incompatible with the
-  // r14 flat rows/meta one, and a warm host's old-layout artifact must
-  // read as ABSENT (→ clean rebuild), never as torn (→ a crash-looping
-  // require) — the fixture-version discipline applied to the artifact
-  // path (r15 self-review)
-  private def keyProfPath(dir: String, table: String, column: String) =
-    s"${maintPath(dir, table)}/keyprof2_$column"
-  private def grpPath(dir: String, table: String, cols: Seq[String]) =
+  private[graft] def keyProfPath(dir: String, table: String, column: String) =
+    topKPath(KeyProf, dir, table, column)
+  private[graft] def grpPath(dir: String, table: String, cols: Seq[String]) =
     s"${maintPath(dir, table)}/grp_${cols.sorted.mkString("__")}"
 
   /** Build the maintained key profile from one full groupBy pass:
     * top `trackK` keys by count (ties by key ASC — deterministic),
-    * with the serve threshold `hotFreq` baked into the artifact.
+    * with the serve threshold `hotFreq` baked into the stamp.
     * Idempotent while current. */
   def ensureKeyProfileMaint(s: SparkSession, dir: String, table: String,
-      column: String, hotFreq: Long = 1000L, trackK: Int = 4096): Unit = {
-    if (keyProfileReadIfCurrent(s, dir, table, column).isDefined) return
-    val counts = graft.Tables(s, dir, table)
-      .where(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("key"))
-      .agg(count(lit(1)).as("freq"))
-    writeKeyProf(s, dir, table, column, counts, hotFreq, trackK,
-      graft.Tables(s, dir, table).count())
-  }
+      column: String, hotFreq: Long = 1000L, trackK: Int = 4096): Unit =
+    ensureTopK(s, KeyProf, dir, table, column, hotFreq, trackK)
 
-  /** Commit one key-profile state, crash-convergently (r14 advice:
-    * the old in-place rows overwrite made the rows file both the
-    * merge INPUT and a pre-commit output — a crash between rows and
-    * meta, then a retry, re-summed the batch into already-merged
-    * counts). Now the rows and the covered stamp they were computed
-    * for stage TOGETHER and land in ONE swap (`$p/data`), so a retry
-    * can always discriminate "merged already" from "not yet"; the
-    * meta (knobs + covered stamp, the SERVE point) lands last — and
-    * SEPARATE from the rows, so an EMPTY tracked set still serves
-    * and still remembers its baked thresholds (r14 review). */
-  private def writeKeyProf(s: SparkSession, dir: String, table: String,
-      column: String, counts: DataFrame, hotFreq: Long, trackK: Int,
-      liveRows: Long): Unit = {
-    import s.implicits._
-    val p = keyProfPath(dir, table, column)
-    val (fs, _) = IndexStore.fsOf(p)
-    val covered = IndexStore.fingerprint(dir, table)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/stage"), true)
-    counts
-      .orderBy(col("freq").desc, col("key"))
-      .limit(trackK)
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/stage/rows")
-    // the stamp carries the COVERED ROW COUNT too (r16 review #1):
-    // the tracked top-K cannot reconstruct the total, and the
-    // append-maintain coherence check needs it (threaded in — review
-    // pass 2: recounting here doubled the metadata jobs)
-    Seq((covered, liveRows))
-      .toDF("covered", "rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/stage/stamp")
-    IndexStore.stageSwap(fs, s"$p/stage", s"$p/data")
-    writeKeyProfMeta(s, p, covered, hotFreq, trackK)
-  }
-
-  private def writeKeyProfMeta(s: SparkSession, p: String, covered: String,
-      hotFreq: Long, trackK: Int): Unit = {
-    import s.implicits._
-    Seq((covered, hotFreq, trackK))
-      .toDF("covered", "hot_freq", "track_k")
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/meta")
-  }
-
-  /** O(batch) profile maintenance, IDEMPOTENT under retries and
-    * crash-convergent (r14 advice): the caller appended `batch`'s
-    * rows ALREADY; this sums the batch's per-key counts into the
-    * tracked set (tracked keys add, new keys enter at their batch
-    * count) and re-takes the top-K — the batch is the only data
-    * scanned; the old rows are a ≤trackK-row kilobyte frame. An
-    * already-covered artifact is a no-op (double calls never
-    * double-count); a crash between the data swap and the meta
-    * commit is discriminated by the data's own covered stamp — the
-    * retry sees rows already at the live listing and re-commits
-    * only the meta, never re-merging the batch. */
+  /** O(batch) profile maintenance: the caller appended `batch`'s rows
+    * ALREADY; this sums the batch's per-key counts into the tracked
+    * set (tracked keys add, new keys enter at their batch count) and
+    * re-takes the top-K — the batch is the only data scanned; the old
+    * rows are a ≤trackK-row kilobyte frame. Idempotent and
+    * crash-convergent by the shared protocol; the baked knobs come
+    * from the stamp, never reset to defaults. */
   def appendMaintainKeyProfile(s: SparkSession, dir: String, table: String,
-      column: String, batch: DataFrame): Unit = {
-    import s.implicits._
-    if (keyProfileReadIfCurrent(s, dir, table, column).isDefined) return
-    val path = keyProfPath(dir, table, column)
-    require(IndexStore.artifactReady(s"$path/meta"),
-      "maintained key profile must be built (ensureKeyProfileMaint) before appendMaintainKeyProfile")
-    val (fs, _) = IndexStore.fsOf(path)
-    IndexStore.recoverSwap(fs, s"$path/stage", s"$path/data",
-      readySubs = Seq("rows", "stamp"))
-    require(IndexStore.artifactReady(s"$path/data/rows") &&
-        IndexStore.artifactReady(s"$path/data/stamp"),
-      "torn maintained key profile: rebuild with ensureKeyProfileMaint")
-    // the baked knobs come from the meta — present even for an empty
-    // tracked set, never silently reset to defaults
-    val meta = s.read.parquet(s"$path/meta").head()
-    val (hotFreq, trackK) =
-      (meta.getAs[Long]("hot_freq"), meta.getAs[Int]("track_k"))
-    val live = IndexStore.fingerprint(dir, table)
-    val stampDf = s.read.parquet(s"$path/data/stamp")
-    val stampRow = stampDf.head()
-    val dataStamp = stampRow.getAs[String]("covered")
-    if (dataStamp == live) {
-      // the crash window: rows committed for this listing, meta (the
-      // serve point) did not land — re-commit the meta, merge nothing
-      writeKeyProfMeta(s, path, live, hotFreq, trackK)
-      return
-    }
-    // ROWCOUNT COHERENCE (r16 review #1): tracked counts are lower
-    // bounds of TRUE counts only while the table grew by exactly the
-    // batches maintained; an out-of-band delete would make them
-    // OVER-estimates ("a value the bound calls hot" might not be).
-    // Pre-rows-stamp artifacts (missing field) rebuild once.
-    val oldRows =
-      if (stampDf.schema.fieldNames.contains("rows"))
-        stampRow.getAs[Long]("rows")
-      else -1L
-    val liveRows = graft.Tables(s, dir, table).count()
-    if (oldRows < 0 || BigInt(oldRows) + BigInt(batch.count()) !=
-        BigInt(liveRows))
-      return ensureKeyProfileMaint(s, dir, table, column, hotFreq, trackK)
-    val old = s.read.parquet(s"$path/data/rows").select(col("key"), col("freq"))
-      .as[(String, Long)].collect().toSeq
-    val merged = batch
-      .where(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("key"))
-      .agg(count(lit(1)).as("freq"))
-      .union(old.toDF("key", "freq"))
-      .groupBy(col("key")).agg(sum(col("freq")).as("freq"))
-    writeKeyProf(s, dir, table, column, merged, hotFreq, trackK, liveRows)
-  }
-
-  private def keyProfileReadIfCurrent(s: SparkSession, dir: String,
-      table: String, column: String): Option[(Long, Seq[Row])] = {
-    val path = keyProfPath(dir, table, column)
-    if (!IndexStore.artifactReady(s"$path/meta") ||
-        !IndexStore.artifactReady(s"$path/data/rows")) return None
-    val live = IndexStore.fingerprint(dir, table)
-    val cached = keyProfMemo.get(path)
-    if (cached != null && cached._1 == live) return Some(cached._2)
-    val meta = s.read.parquet(s"$path/meta").head()
-    if (meta.getAs[String]("covered") != live) None
-    else {
-      val rows = s.read.parquet(s"$path/data/rows")
-        .orderBy(col("freq").desc, col("key")).collect().toSeq
-      val v = (meta.getAs[Long]("hot_freq"), rows)
-      keyProfMemo.put(path, (live, v))
-      Some(v)
-    }
-  }
+      column: String, batch: DataFrame): Unit =
+    appendTopK(s, KeyProf, dir, table, column, batch)(
+      ensureKeyProfileMaint(s, dir, table, column))
 
   /** Serving face, shaped like [[StatsCatalog.keyProfile]]: (keys at
     * or above the baked hot threshold ranked by frequency, max
@@ -566,10 +398,9 @@ object StatsMaintain {
     * (see the block comment), so a served hot key is genuinely hot. */
   def keyProfileIfCurrent(s: SparkSession, dir: String, table: String,
       column: String, maxHot: Int = 1024): Option[(Seq[String], Long)] =
-    keyProfileReadIfCurrent(s, dir, table, column).map { case (hotFreq, rows) =>
-      val hot = rows.filter(_.getAs[Long]("freq") >= hotFreq)
-        .take(maxHot).map(_.getAs[String]("key"))
-      (hot, rows.headOption.map(_.getAs[Long]("freq")).getOrElse(0L))
+    topKIfCurrent(s, KeyProf, dir, table, column).map { case (hotFreq, rows) =>
+      (rows.filter(_._2 >= hotFreq).take(maxHot).map(_._1),
+        rows.headOption.map(_._2).getOrElse(0L))
     }
 
   // ------------------------------------------------------------------
@@ -578,26 +409,23 @@ object StatsMaintain {
   // TIERS (D99) read [[StatsCatalog.mcvIfReady]], which is exact-
   // listing-keyed — one appended file stales it and the steering /
   // ordering tier silently reverts to uniform until a full
-  // re-ANALYZE. Same space-saving top-K algebra as the maintained
-  // key profile, applied to VALUES instead of join keys: an append
-  // sums the batch's per-value counts into the tracked set and
-  // re-takes the top trackK. A tracked count is a LOWER bound for
-  // values that ever left the set — fine for BOTH consumers: the
+  // re-ANALYZE. The maintained key profile's top-K algebra, applied
+  // to VALUES instead of join keys. A tracked count is a LOWER bound
+  // for values that ever left the set — fine for BOTH consumers: the
   // estimator's MCV-hit equality under-corrects toward uniform
   // (never fabricates skew), and a value the bound calls hot IS hot
   // (the dispatch's salt-set argument). The serve face returns the
   // top `k` (baked at build — the exact MCV's contract) ranked
   // (freq DESC, value ASC), shaped exactly like mcvIfReady so every
-  // consumer composes by orElse. Same currency contract and the
-  // keyprof2 stage/data/stamp crash discipline.
+  // consumer composes by orElse.
   // ------------------------------------------------------------------
 
-  private def mcvMaintPath(dir: String, table: String, column: String) =
-    s"${maintPath(dir, table)}/mcv_$column"
+  private[graft] def mcvMaintPath(dir: String, table: String, column: String) =
+    topKPath(Mcv, dir, table, column)
 
   /** [[built]] for the maintained MCV list. */
   def mcvMaintBuilt(dir: String, table: String, column: String): Boolean =
-    IndexStore.artifactReady(s"${mcvMaintPath(dir, table, column)}/meta")
+    EnsureWatermark.stampOf(mcvMaintPath(dir, table, column)).isDefined
 
   /** Build the maintained MCV list from one full groupBy pass: track
     * the top `trackK` values by count (ties by value ASC), serve the
@@ -605,121 +433,15 @@ object StatsMaintain {
   def ensureMcvMaint(s: SparkSession, dir: String, table: String,
       column: String, k: Int = 32, trackK: Int = 4096): Unit = {
     require(k > 0 && trackK >= k, s"need trackK >= k > 0, got k=$k trackK=$trackK")
-    if (mcvMaintReadIfCurrent(s, dir, table, column).isDefined) return
-    val counts = graft.Tables(s, dir, table)
-      .where(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("value"))
-      .agg(count(lit(1)).as("freq"))
-    writeMcvMaint(s, dir, table, column, counts, k, trackK,
-      graft.Tables(s, dir, table).count())
+    ensureTopK(s, Mcv, dir, table, column, k.toLong, trackK)
   }
 
-  /** Commit one maintained-MCV state — the [[writeKeyProf]] crash
-    * discipline verbatim: rows + the covered stamp they were computed
-    * for stage TOGETHER and land in ONE swap, the meta (knobs +
-    * stamp, the SERVE point) last, so a retry can always discriminate
-    * "merged already" from "not yet". */
-  private def writeMcvMaint(s: SparkSession, dir: String, table: String,
-      column: String, counts: DataFrame, k: Int, trackK: Int,
-      liveRows: Long): Unit = {
-    import s.implicits._
-    val p = mcvMaintPath(dir, table, column)
-    val (fs, _) = IndexStore.fsOf(p)
-    val covered = IndexStore.fingerprint(dir, table)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p/stage"), true)
-    counts
-      .orderBy(col("freq").desc, col("value"))
-      .limit(trackK)
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/stage/rows")
-    // covered row count in the stamp — the coherence check's input
-    // (r16 review #1), the keyprof discipline; threaded in, never
-    // recounted (review pass 2)
-    Seq((covered, liveRows))
-      .toDF("covered", "rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/stage/stamp")
-    IndexStore.stageSwap(fs, s"$p/stage", s"$p/data")
-    writeMcvMaintMeta(s, p, covered, k, trackK)
-  }
-
-  private def writeMcvMaintMeta(s: SparkSession, p: String, covered: String,
-      k: Int, trackK: Int): Unit = {
-    import s.implicits._
-    Seq((covered, k, trackK)).toDF("covered", "k", "track_k")
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/meta")
-  }
-
-  /** O(batch) MCV maintenance, IDEMPOTENT under retries and
-    * crash-convergent (the [[appendMaintainKeyProfile]] argument,
-    * value-grained): the caller appended `batch`'s rows ALREADY; this
-    * sums the batch's per-value counts into the tracked set and
-    * re-takes the top trackK — the batch is the only data scanned;
-    * the old rows are a ≤trackK-row kilobyte frame. */
+  /** O(batch) MCV maintenance — [[appendMaintainKeyProfile]],
+    * value-grained. */
   def appendMaintainMcv(s: SparkSession, dir: String, table: String,
-      column: String, batch: DataFrame): Unit = {
-    import s.implicits._
-    if (mcvMaintReadIfCurrent(s, dir, table, column).isDefined) return
-    val path = mcvMaintPath(dir, table, column)
-    require(IndexStore.artifactReady(s"$path/meta"),
-      "maintained MCV must be built (ensureMcvMaint) before appendMaintainMcv")
-    val (fs, _) = IndexStore.fsOf(path)
-    IndexStore.recoverSwap(fs, s"$path/stage", s"$path/data",
-      readySubs = Seq("rows", "stamp"))
-    require(IndexStore.artifactReady(s"$path/data/rows") &&
-        IndexStore.artifactReady(s"$path/data/stamp"),
-      "torn maintained MCV: rebuild with ensureMcvMaint")
-    val meta = s.read.parquet(s"$path/meta").head()
-    val (k, trackK) = (meta.getAs[Int]("k"), meta.getAs[Int]("track_k"))
-    val live = IndexStore.fingerprint(dir, table)
-    val stampDf = s.read.parquet(s"$path/data/stamp")
-    val stampRow = stampDf.head()
-    val dataStamp = stampRow.getAs[String]("covered")
-    if (dataStamp == live) {
-      // crash window: rows committed for this listing, meta (the
-      // serve point) did not land — re-commit the meta, merge nothing
-      writeMcvMaintMeta(s, path, live, k, trackK)
-      return
-    }
-    // rowcount coherence (r16 review #1) — the keyprof argument,
-    // value-grained: an out-of-band delete would turn the tracked
-    // lower bounds into over-estimates; mismatch → full rebuild
-    val oldRows =
-      if (stampDf.schema.fieldNames.contains("rows"))
-        stampRow.getAs[Long]("rows")
-      else -1L
-    val liveRows = graft.Tables(s, dir, table).count()
-    if (oldRows < 0 || BigInt(oldRows) + BigInt(batch.count()) !=
-        BigInt(liveRows))
-      return ensureMcvMaint(s, dir, table, column, k, trackK)
-    val old = s.read.parquet(s"$path/data/rows")
-      .select(col("value"), col("freq")).as[(String, Long)].collect().toSeq
-    val merged = batch
-      .where(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("value"))
-      .agg(count(lit(1)).as("freq"))
-      .union(old.toDF("value", "freq"))
-      .groupBy(col("value")).agg(sum(col("freq")).as("freq"))
-    writeMcvMaint(s, dir, table, column, merged, k, trackK, liveRows)
-  }
-
-  private def mcvMaintReadIfCurrent(s: SparkSession, dir: String,
-      table: String, column: String): Option[(Int, Seq[(String, Long)])] = {
-    val path = mcvMaintPath(dir, table, column)
-    if (!IndexStore.artifactReady(s"$path/meta") ||
-        !IndexStore.artifactReady(s"$path/data/rows")) return None
-    val live = IndexStore.fingerprint(dir, table)
-    val cached = mcvMemo.get(path)
-    if (cached != null && cached._1 == live) return Some(cached._2)
-    val meta = s.read.parquet(s"$path/meta").head()
-    if (meta.getAs[String]("covered") != live) None
-    else {
-      val rows = s.read.parquet(s"$path/data/rows")
-        .orderBy(col("freq").desc, col("value")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-      val v = (meta.getAs[Int]("k"), rows)
-      mcvMemo.put(path, (live, v))
-      Some(v)
-    }
-  }
+      column: String, batch: DataFrame): Unit =
+    appendTopK(s, Mcv, dir, table, column, batch)(
+      ensureMcvMaint(s, dir, table, column))
 
   /** Serving face, shaped like [[StatsCatalog.mcvIfReady]]: the top
     * `k` (value, freq) pairs ranked (freq DESC, value ASC) while the
@@ -728,9 +450,96 @@ object StatsMaintain {
     * the block comment) — advisory-exact for both consumers. */
   def mcvMaintIfCurrent(s: SparkSession, dir: String, table: String,
       column: String): Option[Seq[(String, Long)]] =
-    mcvMaintReadIfCurrent(s, dir, table, column).map { case (k, rows) =>
-      rows.take(k)
+    topKIfCurrent(s, Mcv, dir, table, column).map { case (k, rows) =>
+      rows.take(k.toInt)
     }
+
+  // ------------------------------------------------------------------
+  // The tracked top-K count algebra both faces above share: one
+  // `rows` part of (value, freq), ranked (freq DESC, value ASC) and
+  // capped at the stamp's `track_k`, plus one baked serve knob.
+  // ------------------------------------------------------------------
+
+  /** One top-K face: its path prefix, its value column, and the name
+    * of its baked serve knob. */
+  private final case class TopK(prefix: String, valueCol: String,
+      serveKnob: String)
+  private val KeyProf = TopK("keyprof2_", "key", "hot_freq")
+  private val Mcv = TopK("mcv_", "value", "k")
+  private val TopKParts = Seq("rows")
+
+  private def topKPath(f: TopK, dir: String, table: String, column: String) =
+    s"${maintPath(dir, table)}/${f.prefix}$column"
+
+  private def topKCounts(f: TopK, df: DataFrame, column: String): DataFrame =
+    df.where(col(column).isNotNull)
+      .groupBy(col(column).cast(StringType).as(f.valueCol))
+      .agg(count(lit(1)).as("freq"))
+
+  /** Commit `counts`' top `trackK`; `rows` is the live table count
+    * the caller already holds (never recounted here). */
+  private def commitTopK(f: TopK, dir: String, table: String, column: String,
+      counts: DataFrame, serve: Long, trackK: Long, rows: Long): Unit =
+    EnsureWatermark.commit(topKPath(f, dir, table, column), dir, table, rows,
+        Map(f.serveKnob -> serve, "track_k" -> trackK)) { v =>
+      counts.orderBy(col("freq").desc, col(f.valueCol)).limit(trackK.toInt)
+        .coalesce(1).write.parquet(s"$v/rows")
+    }
+
+  private def buildTopK(s: SparkSession, f: TopK, dir: String, table: String,
+      column: String, serve: Long, trackK: Long): Unit = {
+    val df = graft.Tables(s, dir, table)
+    commitTopK(f, dir, table, column, topKCounts(f, df, column), serve,
+      trackK, df.count())
+  }
+
+  private def ensureTopK(s: SparkSession, f: TopK, dir: String,
+      table: String, column: String, serve: Long, trackK: Long): Unit =
+    if (EnsureWatermark.current(topKPath(f, dir, table, column), TopKParts,
+        dir, table).isEmpty)
+      buildTopK(s, f, dir, table, column, serve, trackK)
+
+  /** The merge: the batch's per-value counts summed into the tracked
+    * set, the top-K re-taken under the stamp's knobs. A torn artifact
+    * rebuilds under its stamp's knobs; an absent one through the
+    * face's own ensure (`rebuildAbsent`). Tracked counts are lower
+    * bounds only while the table grew by exactly the batches
+    * maintained — the shared rowcount-coherence screen rebuilds
+    * otherwise (an out-of-band delete would turn them into
+    * OVER-estimates). */
+  private def appendTopK(s: SparkSession, f: TopK, dir: String, table: String,
+      column: String, batch: DataFrame)(rebuildAbsent: => Unit): Unit = {
+    val path = topKPath(f, dir, table, column)
+    EnsureWatermark.maintain(s, path, TopKParts, dir, table, batch) {
+      case Some(st) => buildTopK(s, f, dir, table, column,
+        st.knobs(f.serveKnob), st.knobs("track_k"))
+      case None => rebuildAbsent
+    } { (st, liveRows) =>
+      val merged = topKCounts(f, batch, column)
+        .union(IndexStore.readAs(s, s"${f.valueCol} STRING, freq BIGINT",
+          st.part(path, "rows")))
+        .groupBy(col(f.valueCol)).agg(sum(col("freq")).as("freq"))
+      commitTopK(f, dir, table, column, merged, st.knobs(f.serveKnob),
+        st.knobs("track_k"), liveRows)
+    }
+  }
+
+  /** (baked serve knob, tracked (value, freq) rows ranked) while
+    * current — stamp-memoized, so a plan-time probe of an unchanged
+    * artifact runs no job. */
+  private def topKIfCurrent(s: SparkSession, f: TopK, dir: String,
+      table: String, column: String): Option[(Long, Seq[(String, Long)])] = {
+    val path = topKPath(f, dir, table, column)
+    EnsureWatermark.current(path, TopKParts, dir, table).flatMap { st =>
+      st.knobs.get(f.serveKnob).map { serve =>
+        EnsureWatermark.memo(path, st.version)((serve,
+          IndexStore.readAs(s, s"${f.valueCol} STRING, freq BIGINT",
+              st.part(path, "rows"))
+            .orderBy(col("freq").desc, col(f.valueCol)).collect()
+            .map(r => (r.getString(0), r.getLong(1))).toSeq))
+      }
+    }
+  }
 
   /** Null-sentineled deterministic tuple rendering — the column-group
     * register hash input. concat_ws alone would collide (null, "x")
@@ -754,61 +563,41 @@ object StatsMaintain {
       .agg(max(col("rho")).as("rho"))
   }
 
+  private val GroupParts = Seq("registers")
+
   /** Build the maintained tuple-NDV group from one pass; idempotent
     * while current. */
   def ensureColumnGroupMaint(s: SparkSession, dir: String, table: String,
       columns: Seq[String]): Unit = {
     require(columns.size >= 2, "a column group needs at least 2 columns")
-    if (columnGroupApproxIfCurrent(s, dir, table, columns).isDefined) return
-    val df = graft.Tables(s, dir, table)
-    writeGrpArtifact(s, dir, table, columns, df.count(),
-      grpRegisterRows(df, columns))
+    if (EnsureWatermark.current(grpPath(dir, table, columns), GroupParts,
+        dir, table).isEmpty) buildGroup(s, dir, table, columns)
   }
 
-  private def writeGrpArtifact(s: SparkSession, dir: String, table: String,
-      columns: Seq[String], n: Long, regs: DataFrame): Unit = {
-    import s.implicits._
-    val path = grpPath(dir, table, columns)
-    // registers first, summary (with the covered stamp) last — the
-    // torn-write discipline of the column artifact
-    regs.coalesce(1).write.mode("overwrite").parquet(s"$path/registers")
-    Seq((columns.sorted.mkString(","), n, IndexStore.fingerprint(dir, table)))
-      .toDF("columns", "n", "covered")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/summary")
+  private def buildGroup(s: SparkSession, dir: String, table: String,
+      columns: Seq[String]): Unit = {
+    val df = graft.Tables(s, dir, table)
+    EnsureWatermark.commit(grpPath(dir, table, columns), dir, table,
+        df.count()) { v =>
+      grpRegisterRows(df, columns).coalesce(1).write.parquet(s"$v/registers")
+    }
   }
 
   /** O(batch) group maintenance: register MAX-merge (exact vs a
-    * rebuild) + row-count add; scans only the batch. IDEMPOTENT
-    * (r14 advice): an already-covered artifact is a no-op, so a
-    * double call (or a retry after the summary committed) never adds
-    * the batch's count twice. The remaining crash windows converge:
-    * a crash between the registers write and the summary write
-    * leaves the OLD summary (old n, old covered stamp — fail-closed
-    * stale), and the retry re-reads that old n and MAX-merges the
-    * registers again (register merge is idempotent by algebra), so
-    * the batch's count lands exactly once; a summary torn mid-write
-    * fails `artifactReady` and the entry require(), repaired by a
-    * full ensure rebuild — loud, never silently wrong. */
+    * rebuild); the covered row count rides the stamp. Scans only the
+    * batch; idempotent and crash-convergent by the shared protocol. */
   def appendMaintainColumnGroup(s: SparkSession, dir: String, table: String,
       columns: Seq[String], batch: DataFrame): Unit = {
-    import s.implicits._
-    if (columnGroupApproxIfCurrent(s, dir, table, columns).isDefined) return
     val path = grpPath(dir, table, columns)
-    require(IndexStore.artifactReady(s"$path/summary") &&
-        IndexStore.artifactReady(s"$path/registers"),
-      "maintained column group must be built (ensureColumnGroupMaint) before appendMaintainColumnGroup")
-    val oldN = s.read.parquet(s"$path/summary").head().getAs[Long]("n")
-    // rowcount coherence (r16 review pass 2: the one maintainer the
-    // first pass missed) — the summary's own n is the covered total
-    if (BigInt(oldN) + BigInt(batch.count()) !=
-        BigInt(graft.Tables(s, dir, table).count()))
-      return ensureColumnGroupMaint(s, dir, table, columns)
-    val oldRegs = s.read.parquet(s"$path/registers")
-      .as[(String, Long, Long)].collect().toSeq
-    val merged = grpRegisterRows(batch, columns)
-      .union(oldRegs.toDF("column", "reg", "rho"))
-      .groupBy(col("column"), col("reg")).agg(max(col("rho")).as("rho"))
-    writeGrpArtifact(s, dir, table, columns, oldN + batch.count(), merged)
+    EnsureWatermark.maintain(s, path, GroupParts, dir, table, batch)(
+        _ => buildGroup(s, dir, table, columns)) { (st, liveRows) =>
+      EnsureWatermark.commit(path, dir, table, liveRows) { v =>
+        grpRegisterRows(batch, columns)
+          .union(s.read.parquet(st.part(path, "registers")))
+          .groupBy(col("column"), col("reg")).agg(max(col("rho")).as("rho"))
+          .coalesce(1).write.parquet(s"$v/registers")
+      }
+    }
   }
 
   /** Serving face for the ESTIMATOR's correlated-GROUP-BY fix:
@@ -817,19 +606,10 @@ object StatsMaintain {
   def columnGroupApproxIfCurrent(s: SparkSession, dir: String,
       table: String, columns: Seq[String]): Option[StatsCatalog.GroupStats] = {
     val path = grpPath(dir, table, columns)
-    if (!IndexStore.artifactReady(s"$path/summary") ||
-        !IndexStore.artifactReady(s"$path/registers")) return None
-    val live = IndexStore.fingerprint(dir, table)
-    val cached = grpMemo.get(path)
-    if (cached != null && cached._1 == live) return Some(cached._2)
-    val r = s.read.parquet(s"$path/summary").head()
-    if (r.getAs[String]("covered") != live) None
-    else {
-      val est = grpEstimate(s, s"$path/registers")
-      val g = StatsCatalog.GroupStats(columns.sorted, r.getAs[Long]("n"),
-        est, exact = false)
-      grpMemo.put(path, (live, g))
-      Some(g)
+    EnsureWatermark.current(path, GroupParts, dir, table).map { st =>
+      EnsureWatermark.memo(path, st.version)(
+        StatsCatalog.GroupStats(columns.sorted, st.rows,
+          grpEstimate(s, st.part(path, "registers")), exact = false))
     }
   }
 
@@ -843,48 +623,24 @@ object StatsMaintain {
     SketchRollup.estimateScalar(hit, if (hit == 0) 0L else r.getAs[Long]("z_obs"))
   }
 
-  /** Stamp-keyed memos for the PLAN-TIME serving faces — the
-    * [[StatsCatalog]] readStats discipline (r12 advice #1): the
-    * estimator and the advice sites read these on every candidate
-    * plan, and each uncached read is a Spark job (the register
-    * estimate is an aggregation). Keyed on the COVERED fingerprint,
-    * which each call still recomputes from live FS metadata (the
-    * cheap, fail-closed part): a maintenance write changes covered →
-    * re-read; a table mutation diverges covered from live → the
-    * staleness check fails before the memo is consulted. */
-  /** Test seam: a cold (post-crash) process has empty memos — the
-    * crash-window specs model one by clearing them. */
-  private[graft] def clearMemosForTest(): Unit = {
-    statsMemo.clear(); keyProfMemo.clear(); grpMemo.clear(); mcvMemo.clear()
-  }
-
-  private val statsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[String, MaintainedCol])]()
-  private val keyProfMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Long, Seq[Row]))]()
-  private val grpMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, StatsCatalog.GroupStats)]()
-  private val mcvMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Int, Seq[(String, Long)]))]()
-
   /** The serving face: Some only while the artifact is intact AND
     * covers exactly the table's LIVE listing — an appended-but-not-
-    * maintained file fails closed. */
+    * maintained file fails closed. Stamp-memoized: the estimator and
+    * the advice sites probe it on every candidate plan. */
   def statsIfCurrent(s: SparkSession, dir: String,
       table: String): Option[Map[String, MaintainedCol]] = {
-    if (!IndexStore.artifactReady(sumPath(dir, table))) return None
-    val live = IndexStore.fingerprint(dir, table)
-    val memoKey = maintPath(dir, table)
-    val cached = statsMemo.get(memoKey)
-    if (cached != null && cached._1 == live) return Some(cached._2)
-    val rows = s.read.parquet(sumPath(dir, table)).limit(1)
-      .select(col("covered")).collect()
-    val covered = rows.headOption.map(_.getString(0)).getOrElse(return None)
-    if (covered != live) None
-    else readArtifact(s, dir, table).map { cols =>
-      val m = cols.map(c => c.column -> c).toMap
-      statsMemo.put(memoKey, (covered, m))
-      m
+    val path = statsPath(dir, table)
+    EnsureWatermark.current(path, StatsParts, dir, table).map { st =>
+      EnsureWatermark.memo(path, st.version)(
+        readArtifact(s, path, st).map(c => c.column -> c).toMap)
     }
   }
+
+  /** The maintained column stats' identity for plan-layer memo keys:
+    * the live listing plus the committed version, so every
+    * maintenance re-keys it — an append moves the listing, a rebuild
+    * at an unchanged listing commits a new version. FS metadata only. */
+  def statsStamp(dir: String, table: String): String =
+    IndexStore.fingerprint(dir, table) + ":" +
+      EnsureWatermark.stampOf(statsPath(dir, table)).fold("absent")(_.version)
 }

@@ -219,11 +219,11 @@ class TransparentJoinOrderingRule(spark: SparkSession)
     val stampKey = sides.flatten.map { case (_, d, t) =>
       graft.operators.EnsureWatermark
         .stampIfHolds(StatsCatalog.statsPath(d, t))
-        // a maintained-evidence leaf keys on its LIVE listing
-        // fingerprint: maintenance moves it (the artifact only serves
-        // while covering it), so the memo re-keys exactly when the
+        // a maintained-evidence leaf keys on its LIVE listing and the
+        // maintained stats' commit version: every maintenance moves
+        // one of them, so the memo re-keys exactly when the
         // maintained stats can have changed
-        .getOrElse("maint:" + StatsCatalog.listingFingerprint(d, t))
+        .getOrElse("maint:" + graft.operators.StatsMaintain.statsStamp(d, t))
     }.mkString("|")
     val tierStamp =
       (if (useMcv) sides.flatten.map { case (_, d, t) =>

@@ -21,6 +21,26 @@ trait SparkSpec extends AnyFunSuite {
     * test's plans. */
   override def withFixture(test: NoArgTest): Outcome =
     graft.plans.RuleSwitch.scoped(spark, Nil)(super.withFixture(test))
+  /** Spark jobs launched while `body` runs — the listener bus is
+    * asynchronous, so poll until the count is stable. */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var prev = -1
+      var cur = n.get()
+      while (cur != prev) { Thread.sleep(300); prev = cur; cur = n.get() }
+      cur
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

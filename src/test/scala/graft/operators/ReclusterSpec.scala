@@ -85,26 +85,6 @@ class ReclusterSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs launched while `body` runs (listener bus is async —
-    * poll until the count is stable). */
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      var cur = n.get()
-      while (cur != prev) { Thread.sleep(300); prev = cur; cur = n.get() }
-      cur
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("staging is one job however many components overlap") {
     // r12 advice #2 receipt: the rewrite is a single tagged-union
     // write — job count must NOT grow with the component count (at
@@ -124,7 +104,7 @@ class ReclusterSpec extends SparkSpec {
         ss.foreach(c => MinMaxManifest.appendBatch(spark, sf,
           ev.where(c), batchFiles = 1, table = T))
         var comps = 0
-        val j = countJobs { comps = MinMaxManifest.reclusterOverlap(spark, sf, T) }
+        val j = jobsDuring { comps = MinMaxManifest.reclusterOverlap(spark, sf, T) }
         assert(comps === 3, s"expected 3 overlap components, got $comps")
         assertDisjoint()
         j
@@ -137,7 +117,7 @@ class ReclusterSpec extends SparkSpec {
         MinMaxManifest.appendBatch(spark, sf, ev.where(s1),
           batchFiles = 1, table = T)
         var comps = 0
-        val j = countJobs { comps = MinMaxManifest.reclusterOverlap(spark, sf, T) }
+        val j = jobsDuring { comps = MinMaxManifest.reclusterOverlap(spark, sf, T) }
         assert(comps === 1)
         j
       }

@@ -65,20 +65,10 @@ class RuntimeFilterSpec extends SparkSpec {
       }
       // WARM re-registration of the chosen layer runs ZERO jobs: the
       // ensure guard is FS metadata and the view is a lazy plan
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        graft.GraftCatalog.registerRollups(spark, sf, layers = Seq("hll_daily"))
-        Thread.sleep(300) // let the listener bus drain
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get === 0L,
-        s"warm registration must run zero Spark jobs, ran ${jobs.get}")
+      val jobs = jobsDuring(
+        graft.GraftCatalog.registerRollups(spark, sf, layers = Seq("hll_daily")))
+      assert(jobs === 0,
+        s"warm registration must run zero Spark jobs, ran $jobs")
     }
   }
 

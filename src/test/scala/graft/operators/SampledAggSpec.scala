@@ -61,12 +61,10 @@ class SampledAggSpec extends SparkSpec {
         "maintenance must be bit-identical to a rebuild")
       // RETRY idempotence (r14 review): a double call is a no-op...
       SampledAgg.appendMaintainSample(spark, dir, "ev", "id", ppm, batch)
-      // ...and the crash window (data merged, meta not yet committed:
-      // simulated by staling the meta) converges on retry instead of
-      // double-appending the batch's rows
-      Seq(("stale", ppm)).toDF("covered", "ppm").coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"${SampledAgg.samplePath(dir, "ev", "id", ppm)}/meta")
+      // ...and a stale stamp over the merged data converges on retry
+      // instead of double-appending the batch's rows
+      EnsureWatermark.rewriteStampForTest(
+        SampledAgg.samplePath(dir, "ev", "id", ppm))(_.copy(covered = "stale"))
       SampledAgg.appendMaintainSample(spark, dir, "ev", "id", ppm, batch)
       val retried = SampledAgg.sampleIfCurrent(spark, dir, "ev", "id", ppm)
         .getOrElse(fail("must serve after retry"))
@@ -78,9 +76,10 @@ class SampledAggSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         SampledAgg.ensureSample(spark, dir, "ev", "id", ppm = 300000L)
       }
-      // torn meta never serves
+      // a torn part never serves
+      val sp = SampledAgg.samplePath(dir, "ev", "id", ppm)
       val marker = new java.io.File(
-        s"${SampledAgg.samplePath(dir, "ev", "id", ppm)}/meta/_SUCCESS")
+        s"${EnsureWatermark.stampOf(sp).get.part(sp, "data")}/_SUCCESS")
       assert(marker.delete())
       assert(SampledAgg.sampleIfCurrent(spark, dir, "ev", "id", ppm).isEmpty)
     }
@@ -142,9 +141,9 @@ class SampledAggSpec extends SparkSpec {
       // counts must never add the batch twice, the deduped re-rank
       // must never keep a row twice
       SampledAgg.appendMaintainStratified(spark, dir, "ev", "id", "st", K, bdf)
-      Seq(("stale", K)).toDF("covered", "k").coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"${SampledAgg.stratSamplePath(dir, "ev", "id", "st", K)}/meta")
+      EnsureWatermark.rewriteStampForTest(
+        SampledAgg.stratSamplePath(dir, "ev", "id", "st", K))(
+        _.copy(covered = "stale"))
       SampledAgg.appendMaintainStratified(spark, dir, "ev", "id", "st", K, bdf)
       val (m2, mc2) = SampledAgg.stratifiedIfCurrent(
         spark, dir, "ev", "id", "st", K).getOrElse(fail("must serve"))
@@ -484,14 +483,14 @@ class SampledAggSpec extends SparkSpec {
         "key", "g", "value", tolerancePpm = 1000000L,
         stratifiedK = Some(100))
       assert(okSrc === "stratified", "sane counts serve from the rung")
-      // forge a ~10¹²-row stratum count carrying the LIVE covered
-      // stamp (the state a genuinely huge corpus would produce):
+      // forge a ~10¹²-row stratum count into the CURRENT commit (the
+      // state a genuinely huge corpus would produce):
       // k·mv·n = 100 · 5e5 · 1e12 = 5e19 > 2⁶³ — the long product
       // s1·n would wrap and serve garbage under a 0-ppm bound
-      val covered = IndexStore.fingerprint(dir, "t")
-      Seq((0L, 1000000000000L, covered)).toDF("stratum", "n", "covered")
+      val sp = SampledAgg.stratSamplePath(dir, "t", "key", "g", 100)
+      Seq((0L, 1000000000000L)).toDF("stratum", "n")
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"${SampledAgg.stratSamplePath(dir, "t", "key", "g", 100)}/counts")
+        .parquet(EnsureWatermark.stampOf(sp).get.part(sp, "counts"))
       val (floor, src) = SampledAgg.serveGroupSums(spark, dir, "t",
         "key", "g", "value", tolerancePpm = 1000000L,
         stratifiedK = Some(100))

@@ -235,6 +235,34 @@ class StatsCatalogSpec extends SparkSpec {
     }
   }
 
+  test("key-profile reads are memoized per build and invalidated fail-closed") {
+    withIndexRoot("graft-stats-kp-memo") {
+      val dir = tmpDir("graft-stats-kp-memo-data")
+      // key 7 is hot (30 rows), keys 100..119 are cold (1 row each)
+      ((1L to 30L).map(i => (7L, i)) ++ (100L to 119L).map(i => (i, i)))
+        .toDF("k", "v").write.mode("overwrite").parquet(s"$dir/kf.parquet")
+      StatsCatalog.ensureKeyProfile(spark, dir, "kf", "k", hotFreq = 10L)
+      def profile() = StatsCatalog.keyProfile(spark, dir, "kf", "k")
+      assert(jobsDuring(assert(profile() === Some((Seq("7"), 30L)))) > 0,
+        "the first read collects the profile")
+      // the steering rule reads it once per join side per optimization:
+      // N calls on one build pay that one collect
+      assert(jobsDuring((1 to 5).foreach(_ =>
+        assert(profile() === Some((Seq("7"), 30L))))) === 0,
+        "five reads of one build must launch no further job")
+      // a rebuild re-keys the watermark stamp: one fresh collect
+      IndexStore.removeArtifact(StatsCatalog.keyProfilePath(dir, "kf", "k"))
+      StatsCatalog.ensureKeyProfile(spark, dir, "kf", "k", hotFreq = 10L)
+      assert(jobsDuring(assert(profile() === Some((Seq("7"), 30L)))) > 0,
+        "the rebuilt profile must be collected afresh")
+      assert(jobsDuring(profile()) === 0)
+      // a broken watermark fails closed BEFORE any read
+      EnsureWatermark.invalidate(StatsCatalog.keyProfilePath(dir, "kf", "k"))
+      assert(jobsDuring(assert(profile().isEmpty)) === 0,
+        "a vetoed profile must not read the artifact")
+    }
+  }
+
   test("the profile's hot keys drive targeted salting end to end") {
     withIndexRoot("graft-stats-salt") {
       val dir = tmpDir("graft-stats-salt-data")

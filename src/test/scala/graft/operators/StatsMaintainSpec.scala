@@ -16,6 +16,12 @@ class StatsMaintainSpec extends SparkSpec {
       .toDF("id", "k", "tag", "x")
       .write.mode("overwrite").parquet(s"$dir/mt.parquet")
 
+  /** The committed part `name` of the maintained column stats. */
+  private def statsPart(dir: String, table: String, name: String): String = {
+    val p = StatsMaintain.statsPath(dir, table)
+    EnsureWatermark.stampOf(p).getOrElse(fail("no committed stamp")).part(p, name)
+  }
+
   private def batchRows =
     // ids 2000..2099 extend max; k extends ndv; a value 0.05 drops
     // the double min BELOW 1/10 — the typed-merge tripwire: "0.05" >
@@ -46,11 +52,11 @@ class StatsMaintainSpec extends SparkSpec {
       // register exactness: the maintained registers equal a full
       // rebuild's, row for row (max-merge is exact by algebra)
       val maintained = spark.read
-        .parquet(s"${StatsMaintain.maintPath(dir, "mt")}/registers")
+        .parquet(statsPart(dir, "mt", "registers"))
         .collect().map(_.toString).sorted.toSeq
       StatsMaintain.reEnsure(spark, dir, "mt")
       val rebuilt = spark.read
-        .parquet(s"${StatsMaintain.maintPath(dir, "mt")}/registers")
+        .parquet(statsPart(dir, "mt", "registers"))
         .collect().map(_.toString).sorted.toSeq
       assert(maintained === rebuilt,
         "maintenance must never degrade the sketch")
@@ -141,12 +147,12 @@ class StatsMaintainSpec extends SparkSpec {
       assert(m("x").min.get.toDouble === 0.1 && m("x").max.get.toDouble === 90.0)
       // and the whole artifact equals a full rebuild over the table
       val maintained = spark.read
-        .parquet(s"${StatsMaintain.maintPath(dir, "mt")}/summary")
-        .drop("covered").collect().map(_.toString).sorted.toSeq
+        .parquet(statsPart(dir, "mt", "summary"))
+        .collect().map(_.toString).sorted.toSeq
       StatsMaintain.reEnsure(spark, dir, "mt")
       val rebuilt = spark.read
-        .parquet(s"${StatsMaintain.maintPath(dir, "mt")}/summary")
-        .drop("covered").collect().map(_.toString).sorted.toSeq
+        .parquet(statsPart(dir, "mt", "summary"))
+        .collect().map(_.toString).sorted.toSeq
       assert(maintained === rebuilt,
         "all-NULL merge must coincide with a full rebuild")
     }
@@ -286,13 +292,11 @@ class StatsMaintainSpec extends SparkSpec {
       StatsMaintain.appendMaintainMcv(spark, dir, "zf", "k", batch)
       assert(StatsMaintain.mcvMaintIfCurrent(spark, dir, "zf", "k")
         .exists(_.head == (("7", 2100L))))
-      // crash window: the data unit (rows + covered stamp) swapped,
-      // the meta commit did not land — the retry discriminates by the
-      // data's own stamp, never re-merging the batch
-      val mp = s"${StatsMaintain.maintPath(dir, "zf")}/mcv_k"
-      Seq((preFp, 8, 4096)).toDF("covered", "k", "track_k")
-        .coalesce(1).write.mode("overwrite").parquet(s"$mp/meta")
-      StatsMaintain.clearMemosForTest()
+      // a stamp regressed to the pre-append listing over the MERGED
+      // rows — the retry must never re-merge the batch (its covered
+      // rows + |batch| ≠ |table|, so it rebuilds)
+      EnsureWatermark.rewriteStampForTest(
+        StatsMaintain.mcvMaintPath(dir, "zf", "k"))(_.copy(covered = preFp))
       assert(StatsMaintain.mcvMaintIfCurrent(spark, dir, "zf", "k").isEmpty,
         "the torn window fails closed before the retry")
       StatsMaintain.appendMaintainMcv(spark, dir, "zf", "k", batch)
@@ -320,19 +324,16 @@ class StatsMaintainSpec extends SparkSpec {
       StatsMaintain.appendMaintainKeyProfile(spark, dir, "zf", "k", batch)
       assert(StatsMaintain.keyProfileIfCurrent(spark, dir, "zf", "k") === once,
         "a double call must never re-sum the batch")
-      // the crash window: the data unit (rows + their covered stamp)
-      // swapped in, the meta commit did not land — simulated by
-      // regressing the meta to the pre-append stamp and clearing the
-      // in-process memos (a real crash loses them anyway)
-      val kp = s"${StatsMaintain.maintPath(dir, "zf")}/keyprof2_k"
-      Seq((preFp, 500L, 4096)).toDF("covered", "hot_freq", "track_k")
-        .coalesce(1).write.mode("overwrite").parquet(s"$kp/meta")
-      StatsMaintain.clearMemosForTest()
+      // a stamp regressed to the pre-append listing over the MERGED
+      // rows (the stamp is the one commit record, so this is the
+      // forged form of "merged, not recorded")
+      EnsureWatermark.rewriteStampForTest(
+        StatsMaintain.keyProfPath(dir, "zf", "k"))(_.copy(covered = preFp))
       assert(StatsMaintain.keyProfileIfCurrent(spark, dir, "zf", "k").isEmpty,
         "the torn window fails closed before the retry")
       StatsMaintain.appendMaintainKeyProfile(spark, dir, "zf", "k", batch)
       assert(StatsMaintain.keyProfileIfCurrent(spark, dir, "zf", "k") === once,
-        "the retry discriminates by the data's own stamp: counts equal the single application, never base + 2×batch")
+        "the retry must see the merged rows: counts equal the single application, never base + 2×batch")
     }
   }
 
@@ -471,8 +472,7 @@ class StatsMaintainSpec extends SparkSpec {
       StatsMaintain.ensure(spark, dir, "mt")
       assert(StatsMaintain.statsIfCurrent(spark, dir, "mt").isDefined)
       // torn summary (no _SUCCESS): fail closed
-      val marker = new java.io.File(
-        s"${StatsMaintain.maintPath(dir, "mt")}/summary/_SUCCESS")
+      val marker = new java.io.File(s"${statsPart(dir, "mt", "summary")}/_SUCCESS")
       assert(marker.delete())
       assert(StatsMaintain.statsIfCurrent(spark, dir, "mt").isEmpty)
       // ensure repairs (full rebuild)

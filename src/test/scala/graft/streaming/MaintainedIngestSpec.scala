@@ -92,7 +92,6 @@ class MaintainedIngestSpec extends SparkSpec {
       val cid2 = MaintainedIngest.contentIdOf(batch(100, 5000))
       fs.create(new org.apache.hadoop.fs.Path(
         s"$dir/ing_batches/batch_2_$cid2"), true).close()
-      StatsMaintain.clearMemosForTest()
       MaintainedIngest.processBatch(batch(100, 5000), 2L, dir, "ing",
         Some("k"), hotFreq = 100L,
         groupRollups = Seq(("k", "v")))
@@ -105,7 +104,6 @@ class MaintainedIngestSpec extends SparkSpec {
       batch(50, 9000).withColumn("batch_id", lit(3L))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id").parquet(s"$dir/ing.parquet")
-      StatsMaintain.clearMemosForTest()
       MaintainedIngest.processBatch(batch(50, 9000), 3L, dir, "ing",
         Some("k"), hotFreq = 100L,
         groupRollups = Seq(("k", "v")))
@@ -170,7 +168,6 @@ class MaintainedIngestSpec extends SparkSpec {
       fs.create(new org.apache.hadoop.fs.Path(
         s"$dir/ing_batches/batch_1_${MaintainedIngest.contentIdOf(b1b)}"),
         true).close()
-      StatsMaintain.clearMemosForTest()
       MaintainedIngest.processBatch(b1b, 1L, dir, "ing", Some("k"), hotFreq = 100L,
         groupRollups = Seq(("k", "v")))
       assert(graft.Tables(spark, dir, "ing").count() === 590L)
@@ -187,7 +184,6 @@ class MaintainedIngestSpec extends SparkSpec {
         .partitionBy("batch_id").parquet(s"$dir/ing.parquet")
       StatsMaintain.dropMaintained(dir, "ing")
       graft.operators.SampledAgg.dropGroupRollup(dir, "ing", "k", "v")
-      StatsMaintain.clearMemosForTest()
       MaintainedIngest.processBatch(b1c, 1L, dir, "ing", Some("k"), hotFreq = 100L,
         groupRollups = Seq(("k", "v")))
       assert(graft.Tables(spark, dir, "ing").count() === 540L)
