@@ -36,15 +36,11 @@ object GraftCatalog {
       "hll_daily" -> ((s, d) => {
         operators.SketchRollup.ensure(s, d)
         operators.SketchRollup.sketchPath(d) }),
-      "hist_daily" -> ((s, d) => {
-        operators.HistogramRollup.ensure(s, d)
-        operators.HistogramRollup.histPath(d) }),
+      "hist_daily" -> ((s, d) => operators.HistogramRollup.stored(s, d)),
       "file_stats" -> ((s, d) => {
         operators.MinMaxManifest.ensure(s, d)
         operators.MinMaxManifest.manifestPath(d) }),
-      "agg_daily" -> ((s, d) => {
-        operators.AggRollup.ensure(s, d)
-        operators.AggRollup.aggPath(d) }),
+      "agg_daily" -> ((s, d) => operators.AggRollup.stored(s, d)),
       "kmv_daily" -> ((s, d) => {
         operators.KmvRollup.ensure(s, d)
         operators.KmvRollup.sketchPath(d) }),

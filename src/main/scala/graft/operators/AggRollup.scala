@@ -27,10 +27,10 @@ import org.apache.spark.sql.functions._
   * hash gate IS the exactness proof.
   *
   * Lifecycle = the [[HistogramRollup]] contract verbatim, via the
-  * shared [[EnsureWatermark]]: [[ensure]] builds once and records the
-  * data-file listing; [[appendBatch]] (out-of-band data) deletes the
-  * watermark FIRST so routing fails closed; [[reEnsure]] is the
-  * repair path that rebuilds from the raw table and restores it.
+  * shared [[EnsureWatermark]]: [[ensure]] commits once;
+  * [[appendBatch]] (out-of-band data) vetoes the commit FIRST so
+  * routing fails closed; [[reEnsure]] is the repair path, a fresh
+  * commit from the raw table.
   * Partials merge by SUM (late days add; replays are NOT idempotent —
   * the appendBatch caller owns batch-id discipline). */
 object AggRollup {
@@ -48,54 +48,43 @@ object AggRollup {
       .groupBy("day", "event_type")
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("v_fp"))
 
-  /** True iff the artifact is ready AND untouched since its
-    * ensure/reEnsure — the rewrite layer's routing precondition. */
-  private[graft] def routable(path: String): Boolean =
-    EnsureWatermark.holds(path)
+  private def build(s: SparkSession, dir: String)(data: String): Unit =
+    partials(graft.Tables(s, dir, "events")).coalesce(1).write.parquet(data)
 
-  /** Build the daily (cnt, v_fp) table once. Like
-    * [[HistogramRollup.ensure]], deliberately does NOT backfill a
-    * missing watermark on an already-ready artifact — that state is
-    * indistinguishable from a crashed append's fail-closed veto; the
-    * repair path is [[reEnsure]]. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    val path = aggPath(dir)
-    if (IndexStore.artifactReady(path)) return
-    partials(graft.Tables(s, dir, "events"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
-  }
+  /** The committed table's data part, built once when absent. Like
+    * [[HistogramRollup.ensure]], a vetoed (appended-to) table is kept,
+    * not rebuilt — the repair path is [[reEnsure]]. */
+  private[graft] def stored(s: SparkSession, dir: String): String =
+    EnsureWatermark.ensured(aggPath(dir), dir, "events")(build(s, dir))
 
-  /** ROUTING REPAIR — rebuild from the raw table and restore the
-    * watermark; out-of-band appended partials are dropped by design
-    * (they are what made routing inexact). */
-  def reEnsure(s: SparkSession, dir: String): Unit = {
-    val path = aggPath(dir)
-    partials(graft.Tables(s, dir, "events"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
-  }
+  /** Build the daily (cnt, v_fp) table once. */
+  def ensure(s: SparkSession, dir: String): Unit = { stored(s, dir); () }
+
+  /** ROUTING REPAIR — a fresh commit from the raw table; out-of-band
+    * appended partials are dropped by design (they are what made
+    * routing inexact). */
+  def reEnsure(s: SparkSession, dir: String): Unit =
+    EnsureWatermark.commitData(aggPath(dir), dir, "events")(build(s, dir))
 
   /** Incremental maintenance: a batch's partials append; the
     * read-side SUM folds duplicate (day, event_type) keys. Vetoes
     * routing FIRST (fail-closed — the appended batch is not in
     * events.parquet, so the rollup stops being the raw aggregate). */
   def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    require(IndexStore.artifactReady(aggPath(dir)),
-      "agg rollup must be built before appending")
-    EnsureWatermark.invalidate(aggPath(dir))
+    val path = aggPath(dir)
+    val st = EnsureWatermark.veto(path)
+    require(st.isDefined, "agg rollup must be built before appending")
     partials(batch)
-      .coalesce(1).write.mode("append").parquet(aggPath(dir))
+      .coalesce(1).write.mode("append").parquet(st.get.part(path, "data"))
   }
 
   /** Direct read face (the routed rewrite builds the same shape):
     * per-event_type (n, v_fp) over [lo, hi) from the rollup only. */
   def merged(s: SparkSession, dir: String, lo: String,
       hi: String): DataFrame = {
-    ensure(s, dir)
     IndexStore.readAs(s,
         "day TIMESTAMP, event_type STRING, cnt BIGINT, v_fp BIGINT",
-        aggPath(dir))
+        stored(s, dir))
       .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
         col("day") < lit(MinMaxManifest.utc(hi)))
       .groupBy(col("event_type"))

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *
   * Lifecycle = the catalog contract: artifact keyed by the raw
   * table's [[IndexStore.fingerprint]] (a mutated table re-keys the
-  * path), [[EnsureWatermark]] stamped on build. NULLs are not
+  * path), committed through [[EnsureWatermark]]. NULLs are not
   * dictionary members (their code is NULL through the left join —
   * SQL comparison semantics already treat NULL as unordered).
   * Whether a column is WORTH encoding is the stats catalog's call —
@@ -66,20 +66,22 @@ object Dictionary {
       .select(col("value"), (col("offset") + col("rn") - 1L).as("code"))
   }
 
+  /** `<table>.<column>`'s committed dictionary part, built once per
+    * table lifetime. */
+  private def stored(s: SparkSession, dir: String, table: String,
+      column: String, parts: Int): String =
+    EnsureWatermark.ensured(dictPath(dir, table, column), dir, table)(
+      buildCodes(graft.Tables(s, dir, table), column, parts)
+        .repartition(1).write.parquet(_))
+
   /** Build `<table>.<column>`'s dictionary once per table lifetime. */
   def ensure(s: SparkSession, dir: String, table: String, column: String,
-      parts: Int = 32): Unit = {
-    val path = dictPath(dir, table, column)
-    if (IndexStore.artifactReady(path)) return
-    buildCodes(graft.Tables(s, dir, table), column, parts)
-      .repartition(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
-  }
+      parts: Int = 32): Unit = { stored(s, dir, table, column, parts); () }
 
   /** The persisted (value, code) frame. */
   def dict(s: SparkSession, dir: String, table: String,
       column: String): DataFrame = {
-    ensure(s, dir, table, column)
+    val data = stored(s, dir, table, column, 32)
     // value type = the source column's own type; code is the writer's
     // LONG rank — the explicit schema skips the inference job
     s.read.schema(org.apache.spark.sql.types.StructType(Seq(
@@ -87,7 +89,7 @@ object Dictionary {
           graft.Tables(s, dir, table).schema(column).dataType),
         org.apache.spark.sql.types.StructField("code",
           org.apache.spark.sql.types.LongType))))
-      .parquet(dictPath(dir, table, column))
+      .parquet(data)
   }
 
   /** Replace `column` with its dictionary code (as `codeCol`). LEFT

@@ -1,78 +1,67 @@
 package graft.operators
 
-/** The ENSURE-ONLY routing watermark shared by every rollup that the
-  * optimizer rewrite layer ([[graft.plans.RollupRoutingRule]]) may
-  * substitute for a raw aggregate: `ensure`/`reEnsure` record the
-  * exact data-file listing they wrote; any mutator that can make the
-  * rollup a SUPERSET of the raw aggregate (an out-of-band
-  * appendBatch) deletes the manifest FIRST, so a crash between the
-  * delete and the append fails CLOSED (routing off), never open. The
-  * rewrite routes only while [[holds]] — artifact ready AND the
-  * listing still byte-matches — so an append, a torn write, or any
-  * out-of-band mutation all veto routing instead of silently breaking
-  * its exactness proof (the r8 advice's medium finding: the
-  * fingerprint in the artifact path tracks only the RAW table and
-  * cannot see rollup-side mutation).
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+
+/** The one commit-and-serve protocol of every stamped artifact: the
+  * O(batch)-MAINTAINED families (StatsMaintain's column stats, key
+  * profiles, MCV lists and column groups; SampledAgg's uniform and
+  * stratified samples, group rollups and group histograms) cover a
+  * live source listing; the FINGERPRINT-KEYED ones
+  * (`<root>/<fingerprint>/<name>`: HistogramRollup, AggRollup,
+  * TopKRollup, Dictionary, EntityIndex, StatsCatalog's stats, key
+  * profiles, column groups and MCV lists) cover their path's
+  * fingerprint.
   *
-  * PLAN-TIME COST (r12 advice): optimizer rules call [[holds]] /
-  * [[stampIfHolds]] once per candidate node, so the check must stay a
-  * METADATA operation — one directory listing per call (fresh every
-  * time: a stale listing would serve a mutated artifact, fail-open).
-  * The recorded-manifest FILE read is memoized keyed on its
-  * (mtime, length) from that same listing, so repeated checks of an
-  * unchanged artifact never re-open the file; the listing itself is
-  * never cached.
-  *
-  * COMMIT STAMPS (the O(batch)-MAINTAINED families — StatsMaintain's
-  * column stats, key profiles, MCV lists and column groups;
-  * SampledAgg's uniform and stratified samples, group rollups and
-  * group histograms): those artifacts cover a source LISTING that
-  * moves under appends, so their path cannot be fingerprint-keyed.
-  * They share one commit-and-serve protocol instead:
-  *
-  *  - [[commit]] writes the family's parts into a FRESH version
-  *    directory, then ONE small stamp file LAST (covered listing
-  *    fingerprint, covered row count, the family's baked knobs, the
-  *    version it names), then retires every other child — superseded
-  *    versions, a crashed commit's orphan, any older layout;
-  *  - [[current]] serves only while the stamp parses, every named
-  *    part is intact (`_SUCCESS`) and covered == the live listing — a
-  *    listing plus a small file read, never a Spark job. A missing,
-  *    torn or unparsable stamp reads as ABSENT, so an artifact from
-  *    any older layout rebuilds in place;
-  *  - [[maintain]] is the append half: already current → no-op;
-  *    absent or torn → rebuild; covered rows + |batch| ≠ |table|
-  *    (an out-of-band delete or replacement) → rebuild; otherwise
-  *    the family merges the batch into the STAMPED version and
-  *    commits a new one. The stamped version is never written in
-  *    place, so a crash after the data landed but before the stamp
-  *    leaves the old stamp naming the old data: the retry merges the
-  *    batch exactly once.
-  *
-  * Single-maintainer scope: two concurrent commits to one artifact
-  * would retire each other's versions. */
+  *  - [[commit]] writes the parts into a FRESH version `v_<seq>_<uuid>`,
+  *    then lands ONE stamp `_GRAFT_STAMP.<seq>` LAST (covered
+  *    fingerprint and row count, baked knobs, the version, each part's
+  *    data-file listing) by a rename that fails when the name exists:
+  *    of two commits that read the same latest stamp exactly one lands,
+  *    and the loser deletes its own version. The winner retires what
+  *    its stamp no longer names — older stamps, versions of older
+  *    sequence numbers, older layouts — never a version of its own
+  *    sequence or later (a commit still in flight).
+  *  - [[current]] serves only while the latest stamp parses, covers
+  *    the live listing (maintained) or the path's fingerprint (keyed),
+  *    and every named part is intact: `_SUCCESS` present and the
+  *    data-file listing the recorded one, so an out-of-band file
+  *    vetoes serving. A missing, torn or unparsable stamp reads as
+  *    ABSENT, so any older layout rebuilds in place. FS metadata only:
+  *    one listing of the artifact and one per part, the stamp read
+  *    memoized on its (name, mtime, length).
+  *  - [[veto]] comes before any in-place mutation (the rollups' and
+  *    the entity store's `appendBatch`, the entity store's vacuum): a
+  *    stamp marking the same version VETOED lands first, so a crash
+  *    mid-mutation fails closed — [[intact]] for the maintained
+  *    readers, never current again until a fresh commit.
+  *  - [[maintain]] is the maintained families' append half: current →
+  *    no-op; absent or torn → rebuild; covered rows + |batch| ≠ |table|
+  *    → rebuild; else the family merges the batch into the STAMPED
+  *    version and commits a new one, so a crash before the new stamp
+  *    leaves the old stamp naming the old data and the retry merges
+  *    once. Merges assume a table's appends are serialized with their
+  *    maintenance. */
 private[graft] object EnsureWatermark {
 
-  private val ManifestFile = "_GRAFT_ENSURE_MANIFEST"
+  private val StampPrefix = "_GRAFT_STAMP."
+  private val StampEnd = "end"
+  private val Vetoed = "vetoed"
 
-  /** (manifest mtime, manifest length) → contents, per path — a
-    * rewritten manifest changes both fields in the fresh listing, so
-    * the cache can never serve a superseded recording. */
-  private val recordedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, String)]()
+  /** The single-part layout of the fingerprint-keyed families. */
+  val Data: Seq[String] = Seq("data")
 
-  /** RECURSIVE data-file listing: a partition-directory artifact
-    * (the entity store's `bucket=` layout) keeps its data files in
-    * subdirectories, and a top-level-only listing would record the
-    * empty string — making the watermark vacuously true under any
-    * bucket-file mutation (r13 review finding). Relative paths keep
-    * flat artifacts' stamps byte-identical to the old format; the
-    * walk costs one extra listStatus per subdirectory — still a
-    * metadata operation. */
-  private def dataListing(fs: org.apache.hadoop.fs.FileSystem,
-      sts: Array[org.apache.hadoop.fs.FileStatus]): String = {
-    def walk(prefix: String,
-        arr: Array[org.apache.hadoop.fs.FileStatus]): Seq[String] =
+  /** One commit: covered fingerprint and rows, the version holding the
+    * parts, the family's baked knobs, each part's data-file listing. */
+  final case class Stamp(covered: String, rows: Long, version: String,
+      knobs: Map[String, Long], listing: Map[String, String]) {
+    def part(path: String, name: String): String = s"$path/$version/$name"
+    def vetoed: Boolean = covered == Vetoed
+  }
+
+  /** RECURSIVE data-file listing of one part (relative names and
+    * lengths; the entity store keeps its files in `bucket=` dirs). */
+  private def dataListing(fs: FileSystem, sts: Array[FileStatus]): String = {
+    def walk(prefix: String, arr: Array[FileStatus]): Seq[String] =
       arr.toIndexedSeq.flatMap { st =>
         if (st.isFile && st.getPath.getName.endsWith(".parquet"))
           Seq(s"$prefix${st.getPath.getName}:${st.getLen}")
@@ -80,63 +69,205 @@ private[graft] object EnsureWatermark {
           walk(s"$prefix${st.getPath.getName}/", fs.listStatus(st.getPath))
         else Seq.empty
       }
-    walk("", sts).sorted.mkString("\n")
+    walk("", sts).sorted.mkString(",")
   }
 
-  /** Record the current data-file listing as the routed build. */
-  def write(path: String): Unit = {
-    val (fs, p) = IndexStore.fsOf(path)
-    val listing = dataListing(fs, fs.listStatus(p))
-    val out = fs.create(new org.apache.hadoop.fs.Path(p, ManifestFile), true)
-    try out.write(listing.getBytes("UTF-8")) finally out.close()
+  private def seqOf(name: String): Option[Long] =
+    if (!name.startsWith(StampPrefix)) None
+    else name.stripPrefix(StampPrefix).toLongOption
+
+  private val VersionName = """v_(\d+)_.+""".r
+
+  /** The artifact's children — empty when it does not exist. */
+  private def children(fs: FileSystem, p: Path): Array[FileStatus] =
+    try fs.listStatus(p)
+    catch { case _: java.io.FileNotFoundException => Array.empty }
+
+  /** The latest stamp file among `sts`, with its sequence number. */
+  private def latest(sts: Array[FileStatus]): Option[(FileStatus, Long)] =
+    sts.flatMap(st => seqOf(st.getPath.getName).map(st -> _))
+      .maxByOption(_._2)
+
+  private def render(st: Stamp): String =
+    (Seq(s"covered=${st.covered}", s"rows=${st.rows}",
+        s"version=${st.version}") ++
+      st.knobs.toSeq.sorted.map { case (k, v) => s"knob.$k=$v" } ++
+      st.listing.toSeq.sorted.map { case (k, v) => s"part.$k=$v" } :+
+      StampEnd).mkString("\n")
+
+  private def parse(text: String): Option[Stamp] = {
+    val lines = text.split("\n").toSeq
+    if (lines.lastOption.forall(_ != StampEnd)) return None
+    val kv = lines.init.map(_.split("=", 2)).collect {
+      case Array(k, v) => k -> v
+    }.toMap
+    def prefixed(pre: String) =
+      kv.collect { case (k, v) if k.startsWith(pre) => k.stripPrefix(pre) -> v }
+    scala.util.Try(Stamp(kv("covered"), kv("rows").toLong, kv("version"),
+      prefixed("knob.").map { case (k, v) => k -> v.toLong },
+      prefixed("part."))).toOption
   }
 
-  /** Veto routing BEFORE mutating the table (call first, fail-closed). */
-  def invalidate(path: String): Unit = {
-    val (fs, p) = IndexStore.fsOf(path)
-    fs.delete(new org.apache.hadoop.fs.Path(p, ManifestFile), false)
-    ()
+  /** (stamp name, mtime, length) → parsed stamp, per artifact path: a
+    * new commit lands under a new name, so the cache can never serve
+    * a superseded stamp. */
+  private val stampCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long, Option[Stamp])]()
+
+  private def read(fs: FileSystem, path: String, f: FileStatus): Option[Stamp] = {
+    val key = (f.getPath.getName, f.getModificationTime, f.getLen)
+    val hit = stampCache.get(path)
+    if (hit != null && (hit._1, hit._2, hit._3) == key) hit._4
+    else {
+      val parsed =
+        try {
+          val in = fs.open(f.getPath)
+          try {
+            val bs = new java.io.ByteArrayOutputStream()
+            org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 4096, false)
+            parse(new String(bs.toByteArray, "UTF-8"))
+          } finally in.close()
+        } catch { case _: java.io.IOException => None }
+      stampCache.put(path, (key._1, key._2, key._3, parsed))
+      parsed
+    }
   }
 
-  /** True iff the artifact is ready AND is exactly what the last
-    * ensure/reEnsure built — the rewrite layer's routing
-    * precondition. */
-  def holds(path: String): Boolean = stampIfHolds(path).isDefined
-
-  /** The current data-file listing when [[holds]] — None otherwise.
-    * The returned stamp identifies the exact build, so callers may
-    * key caches of EXPENSIVE derived reads (a stats parquet collect,
-    * a schema) on it: a reEnsure writes new files → new stamp → the
-    * stale entry can never serve. One fresh directory listing per
-    * call; the recorded-manifest file read is memoized (see the
-    * class scaladoc). */
-  def stampIfHolds(path: String): Option[String] = {
+  /** The latest committed stamp of `path` — None when missing, torn
+    * (no terminating line) or unparsable. One listing of the artifact
+    * plus a memoized small-file read. */
+  def stampOf(path: String): Option[Stamp] = {
     val (fs, p) = IndexStore.fsOf(path)
-    val sts =
-      try fs.listStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    if (!sts.exists(st => st.isFile && st.getPath.getName == "_SUCCESS"))
-      return None
-    val mf = sts.find(st => st.isFile && st.getPath.getName == ManifestFile)
-      .getOrElse(return None)
-    val key = (mf.getModificationTime, mf.getLen)
-    val cached = recordedCache.get(path)
-    val recorded =
-      if (cached != null && (cached._1, cached._2) == key) cached._3
-      else {
-        val in =
-          try fs.open(mf.getPath)
-          catch { case _: java.io.FileNotFoundException => return None }
-        val bytes = try {
-          val bs = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 4096, false)
-          new String(bs.toByteArray, "UTF-8")
-        } finally in.close()
-        recordedCache.put(path, (key._1, key._2, bytes))
-        bytes
+    latest(children(fs, p)).flatMap { case (f, _) => read(fs, path, f) }
+  }
+
+  /** The stamp when every named part of its version is intact: its
+    * `_SUCCESS` present and, unless vetoed, its data-file listing the
+    * recorded one — one listing per part. */
+  def intact(path: String, parts: Seq[String]): Option[Stamp] =
+    stampOf(path).filter(partsIntact(path, parts, _))
+
+  private def partsIntact(path: String, parts: Seq[String], st: Stamp): Boolean = {
+    val (fs, _) = IndexStore.fsOf(path)
+    parts.forall { n =>
+      val sts = children(fs, new Path(st.part(path, n)))
+      sts.exists(f => f.isFile && f.getPath.getName == "_SUCCESS") &&
+        (st.vetoed || st.listing.get(n).contains(dataListing(fs, sts)))
+    }
+  }
+
+  private def serving(path: String, parts: Seq[String])(
+      covers: String => Boolean): Option[Stamp] =
+    stampOf(path).filter(st => covers(st.covered) && partsIntact(path, parts, st))
+
+  /** The serving precondition of a MAINTAINED artifact: an intact
+    * stamp covering exactly the LIVE listing of `dir/table`. */
+  def current(path: String, parts: Seq[String], dir: String,
+      table: String): Option[Stamp] =
+    serving(path, parts)(_ == IndexStore.fingerprint(dir, table))
+
+  /** The serving precondition of a FINGERPRINT-KEYED artifact
+    * (`<root>/<fingerprint>/<name>`): an intact stamp covering the
+    * fingerprint its path was built from — no second source listing. */
+  def current(path: String): Option[Stamp] =
+    serving(path, Data)(_ == new Path(path).getParent.getName)
+
+  /** A fresh commit of a keyed artifact's single `data` part. */
+  def commitData(path: String, dir: String, table: String)(
+      write: String => Unit): Unit =
+    commit(path, dir, table, 0L)(v => write(s"$v/data"))
+
+  /** The intact `data` part of a keyed artifact, committed through
+    * `write` first when absent or torn — the maintained readers' face
+    * (a vetoed artifact still serves here; [[current]] is the routing
+    * precondition). */
+  def ensured(path: String, dir: String, table: String)(
+      write: String => Unit): String =
+    intact(path, Data).getOrElse {
+      commitData(path, dir, table)(write)
+      intact(path, Data).getOrElse(
+        sys.error(s"$path: no intact commit after its build"))
+    }.part(path, "data")
+
+  /** Land `st` as stamp `seq`: staged inside its version, renamed
+    * into place by a rename that fails when the name exists
+    * (FileContext's, not FileSystem's). False when another commit
+    * landed that sequence number first. */
+  private def publish(fs: FileSystem, p: Path, seq: Long, st: Stamp): Boolean = {
+    val staged = new Path(p, s"${st.version}/_stamp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(staged, true)
+    try out.write(render(st).getBytes("UTF-8")) finally out.close()
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+    try { fc.rename(staged, new Path(p, s"$StampPrefix$seq")); true }
+    catch {
+      case _: java.io.IOException => fs.delete(staged, false); false
+    }
+  }
+
+  /** Retire what stamp `seq` naming `version` no longer names: older
+    * stamps, versions of older sequence numbers, older layouts. */
+  private def retire(fs: FileSystem, p: Path, seq: Long, version: String): Unit =
+    children(fs, p).map(_.getPath).filter { c =>
+      val n = c.getName
+      seqOf(n) match {
+        case Some(k) => k < seq
+        case None => n match {
+          case VersionName(k) => n != version && k.toLong < seq
+          case _ => !n.startsWith(".")
+        }
       }
-    val live = dataListing(fs, sts)
-    if (recorded == live) Some(live) else None
+    }.foreach(fs.delete(_, true))
+
+  /** Land `st` as the next stamp and retire what it supersedes. */
+  private def land(fs: FileSystem, p: Path, seq: Long, st: Stamp): Boolean =
+    publish(fs, p, seq, st) && { retire(fs, p, seq, st.version); true }
+
+  /** Commit one state of the artifact at `path`: `write` receives a
+    * fresh version directory and writes the family's parts under it;
+    * the stamp (covering the live listing of `dir/table`, `rows` of
+    * it) lands LAST. A commit that loses the race to another commit
+    * discards its version and leaves the winner standing. */
+  def commit(path: String, dir: String, table: String, rows: Long,
+      knobs: Map[String, Long] = Map.empty)(write: String => Unit): Unit = {
+    val covered = IndexStore.fingerprint(dir, table)
+    val (fs, p) = IndexStore.fsOf(path)
+    val seq = latest(children(fs, p)).fold(1L)(_._2 + 1L)
+    val version = s"v_${seq}_${java.util.UUID.randomUUID()}"
+    write(s"$path/$version")
+    val listing = fs.listStatus(new Path(p, version)).filter(_.isDirectory)
+      .map(d => d.getPath.getName -> dataListing(fs, fs.listStatus(d.getPath)))
+      .toMap
+    if (!land(fs, p, seq, Stamp(covered, rows, version, knobs, listing))) {
+      fs.delete(new Path(p, version), true)
+      ()
+    }
+  }
+
+  /** Veto serving BEFORE an in-place mutation of the committed version
+    * (see the class scaladoc). Returns the intact stamp whose version
+    * the caller may now mutate — None when there is no intact commit
+    * to mutate. */
+  def veto(path: String): Option[Stamp] = {
+    val (fs, p) = IndexStore.fsOf(path)
+    intact(path, Data).map { st =>
+      if (!st.vetoed) {
+        val seq = latest(children(fs, p)).fold(1L)(_._2 + 1L)
+        require(land(fs, p, seq, st.copy(covered = Vetoed)),
+          s"$path: a concurrent commit landed during the veto")
+      }
+      st
+    }
+  }
+
+  /** Test seam: rewrite `path`'s latest stamp through `f` — how specs
+    * forge a stale, superseded or crash-window commit record. */
+  private[graft] def rewriteStampForTest(path: String)(f: Stamp => Stamp): Unit = {
+    val (fs, p) = IndexStore.fsOf(path)
+    for ((file, _) <- latest(children(fs, p)); st <- read(fs, path, file)) {
+      val out = fs.create(file.getPath, true)
+      try out.write(render(f(st)).getBytes("UTF-8")) finally out.close()
+      stampCache.remove(path)
+    }
   }
 
   // ------------------------------------------------------------------
@@ -148,10 +279,10 @@ private[graft] object EnsureWatermark {
 
   /** The plan-time read memo every stamped artifact shares: the
     * value `load`ed for `path` is served again while `stamp` — a
-    * watermark listing or a commit version, both re-derived from FS
-    * metadata by the caller on every call — is unchanged. Every
-    * build or commit changes the stamp, so a superseded entry can
-    * never serve and nothing ever needs clearing. */
+    * commit version, re-derived from FS metadata by the caller on
+    * every call — is unchanged. Every commit lands a new version, so
+    * a superseded entry can never serve and nothing ever needs
+    * clearing. */
   def memo[T](path: String, stamp: String)(load: => T): T = {
     val hit = memoCache.get(path)
     if (hit != null && hit._1 == stamp) hit._2.asInstanceOf[T]
@@ -160,87 +291,6 @@ private[graft] object EnsureWatermark {
       memoCache.put(path, (stamp, v))
       v
     }
-  }
-
-  // ------------------------------------------------------------------
-  // Commit stamps of the O(batch)-maintained artifacts
-  // ------------------------------------------------------------------
-
-  private val StampFile = "_GRAFT_STAMP"
-  private val StampEnd = "end"
-
-  /** One commit of a maintained artifact: the source listing it
-    * covers, that listing's row count, the version directory holding
-    * the committed parts, and the family's baked knobs. */
-  final case class Stamp(covered: String, rows: Long, version: String,
-      knobs: Map[String, Long]) {
-    def part(path: String, name: String): String = s"$path/$version/$name"
-  }
-
-  /** The committed stamp of `path` — None when missing, torn (no
-    * terminating line) or unparsable. A plain file read. */
-  def stampOf(path: String): Option[Stamp] = {
-    val (fs, p) = IndexStore.fsOf(path)
-    val text =
-      try {
-        val in = fs.open(new org.apache.hadoop.fs.Path(p, StampFile))
-        try {
-          val bs = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bs, 4096, false)
-          new String(bs.toByteArray, "UTF-8")
-        } finally in.close()
-      } catch { case _: java.io.IOException => return None }
-    val lines = text.split("\n").toSeq
-    if (lines.lastOption.forall(_ != StampEnd)) return None
-    val kv = lines.init.map(_.split("=", 2)).collect {
-      case Array(k, v) => k -> v
-    }.toMap
-    scala.util.Try(Stamp(kv("covered"), kv("rows").toLong, kv("version"),
-      kv.collect { case (k, v) if k.startsWith("knob.") =>
-        k.stripPrefix("knob.") -> v.toLong })).toOption
-  }
-
-  /** The stamp when every named part of its version is intact. */
-  def intact(path: String, parts: Seq[String]): Option[Stamp] =
-    stampOf(path).filter(st =>
-      parts.forall(n => IndexStore.artifactReady(st.part(path, n))))
-
-  /** The serving precondition: an intact stamp covering exactly the
-    * LIVE listing of `dir/table` — FS metadata only, no Spark job. */
-  def current(path: String, parts: Seq[String], dir: String,
-      table: String): Option[Stamp] =
-    intact(path, parts).filter(_.covered == IndexStore.fingerprint(dir, table))
-
-  private def writeStamp(path: String, st: Stamp): Unit = {
-    val (fs, p) = IndexStore.fsOf(path)
-    val body = (Seq(s"covered=${st.covered}", s"rows=${st.rows}",
-        s"version=${st.version}") ++
-      st.knobs.toSeq.sorted.map { case (k, v) => s"knob.$k=$v" } :+
-      StampEnd).mkString("\n")
-    val out = fs.create(new org.apache.hadoop.fs.Path(p, StampFile), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Test seam: rewrite `path`'s stamp through `f` — how specs forge
-    * a stale, superseded or crash-window commit record. */
-  private[graft] def rewriteStampForTest(path: String)(f: Stamp => Stamp): Unit =
-    stampOf(path).foreach(st => writeStamp(path, f(st)))
-
-  /** Commit one state of the artifact at `path`: `write` receives a
-    * fresh version directory and writes the family's parts under it;
-    * the stamp (covering the live listing of `dir/table`, `rows` of
-    * it) lands LAST; then every other child of `path` is retired. */
-  def commit(path: String, dir: String, table: String, rows: Long,
-      knobs: Map[String, Long] = Map.empty)(write: String => Unit): Unit = {
-    val covered = IndexStore.fingerprint(dir, table)
-    val version = s"v_${java.util.UUID.randomUUID()}"
-    write(s"$path/$version")
-    writeStamp(path, Stamp(covered, rows, version, knobs))
-    val (fs, p) = IndexStore.fsOf(path)
-    fs.listStatus(p).map(_.getPath)
-      .filterNot(c => c.getName == version || c.getName == StampFile ||
-        c.getName.startsWith("."))
-      .foreach(fs.delete(_, true))
   }
 
   /** The append protocol every maintained family shares (see the

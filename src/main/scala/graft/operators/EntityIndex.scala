@@ -33,10 +33,10 @@ import org.apache.spark.sql.functions._
   * [[GraphRank]]'s bucket count.
   *
   * Lifecycle = the [[AggRollup]]/[[EnsureWatermark]] contract
-  * verbatim: [[ensure]] builds once per source fingerprint;
-  * [[appendBatch]] invalidates the watermark FIRST (fail-closed)
-  * then appends partials; [[serve]] takes the index path only while
-  * the watermark holds and otherwise falls back to the raw scan —
+  * verbatim: [[ensure]] commits once per source fingerprint;
+  * [[appendBatch]] vetoes the commit FIRST (fail-closed) then
+  * appends partials; [[serve]] takes the index path only while the
+  * commit is current and otherwise falls back to the raw scan —
   * both paths exact, so the q73 oracle (the raw aggregate in
   * DuckDB) gates the index path byte-for-byte. */
 object EntityIndex {
@@ -47,11 +47,8 @@ object EntityIndex {
     * layout, not semantics, so no result depends on it. */
   val Buckets = 16
 
-  /** `_v2`: the v1 layout predates the recursive watermark listing —
-    * its recorded manifest (empty: no top-level parquet in a
-    * partitioned store) can never match the recursive live listing,
-    * so a warm host's v1 artifact must be unreachable, not repaired
-    * in place (the SchemaEvolution.FixtureVersion discipline). */
+  /** The store's path; a store of any older layout under it reads as
+    * absent and rebuilds in place. */
   def indexPath(dir: String): String =
     s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/entity_user_v2"
 
@@ -69,27 +66,30 @@ object EntityIndex {
       .groupBy("bucket", "user_id", "day")
       .agg(count(lit(1)).as("n"), sum(col("v")).as("v_fp"))
 
-  /** Build once per source fingerprint: one shuffle of the corpus
-    * down to (users × days) rows, written as one file per bucket
-    * directory. Does NOT backfill a missing watermark (that state is
-    * a crashed append's veto); [[reEnsure]] is the repair path. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    val path = indexPath(dir)
-    if (IndexStore.artifactReady(path)) return
-    partials(graft.Tables(s, dir, "events"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
-  }
+  /** Commit the store: one shuffle of the corpus down to
+    * (users × days) rows, written as one file per bucket directory. */
+  private def build(s: SparkSession, dir: String)(data: String): Unit =
+    partials(graft.Tables(s, dir, "events")).repartition(col("bucket"))
+      .write.partitionBy("bucket").parquet(data)
 
-  /** Repair: rebuild from the raw table, restore the watermark;
-    * out-of-band appended partials drop by design. */
-  def reEnsure(s: SparkSession, dir: String): Unit = {
+  /** The committed store's data part, built once per source
+    * fingerprint; an appended-to (vetoed) store is kept — the repair
+    * path is [[reEnsure]]. */
+  private def stored(s: SparkSession, dir: String): String =
+    EnsureWatermark.ensured(indexPath(dir), dir, "events")(build(s, dir))
+
+  def ensure(s: SparkSession, dir: String): Unit = { stored(s, dir); () }
+
+  /** Repair: a fresh commit from the raw table; out-of-band appended
+    * partials drop by design. */
+  def reEnsure(s: SparkSession, dir: String): Unit =
+    EnsureWatermark.commitData(indexPath(dir), dir, "events")(build(s, dir))
+
+  /** The store's data part while its commit is current — the index
+    * path's precondition. */
+  private def servable(dir: String): Option[String] = {
     val path = indexPath(dir)
-    partials(graft.Tables(s, dir, "events"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
+    EnsureWatermark.current(path).map(_.part(path, "data"))
   }
 
   /** Incremental maintenance: O(batch) partials append into the
@@ -97,12 +97,12 @@ object EntityIndex {
     * Serving from the INDEX is vetoed first (the batch is not in
     * events.parquet, so index ≠ raw until [[reEnsure]]). */
   def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    require(IndexStore.artifactReady(indexPath(dir)),
-      "entity index must be built before appending")
-    EnsureWatermark.invalidate(indexPath(dir))
+    val path = indexPath(dir)
+    val st = EnsureWatermark.veto(path)
+    require(st.isDefined, "entity index must be built before appending")
     partials(batch)
       .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("append").parquet(indexPath(dir))
+      .write.partitionBy("bucket").mode("append").parquet(st.get.part(path, "data"))
   }
 
   /** WINDOWED profile serve — the day grain's payoff the class
@@ -115,10 +115,9 @@ object EntityIndex {
     require(users.nonEmpty, "empty lookup set")
     val loTs = lit(MinMaxManifest.utc(lo))
     val hiTs = lit(MinMaxManifest.utc(hi))
-    val path = indexPath(dir)
-    if (EnsureWatermark.holds(path)) {
+    servable(dir).map { data =>
       val buckets = users.map(bucketOf).distinct
-      val df = IndexStore.readAs(s, "user_id BIGINT, day TIMESTAMP, n BIGINT, v_fp BIGINT, bucket BIGINT", path)
+      val df = IndexStore.readAs(s, "user_id BIGINT, day TIMESTAMP, n BIGINT, v_fp BIGINT, bucket BIGINT", data)
         .where(col("bucket").isin(buckets: _*) &&
           col("user_id").isin(users: _*) &&
           col("day") >= loTs && col("day") < hiTs)
@@ -127,7 +126,7 @@ object EntityIndex {
           countDistinct(col("day")).as("days"))
         .orderBy(col("user_id"))
       (df, true)
-    } else {
+    }.getOrElse {
       val df = graft.Tables(s, dir, "events")
         .where(col("user_id").isin(users: _*) &&
           MinMaxManifest.utcDay(col("ts")) >= loTs &&
@@ -166,9 +165,8 @@ object EntityIndex {
   def serveWithStream(s: SparkSession, dir: String,
       users: Seq[Long]): DataFrame = {
     require(users.nonEmpty, "empty lookup set")
-    ensure(s, dir)
     val buckets = users.map(bucketOf).distinct
-    val base = IndexStore.readAs(s, "user_id BIGINT, day TIMESTAMP, n BIGINT, v_fp BIGINT, bucket BIGINT", indexPath(dir))
+    val base = IndexStore.readAs(s, "user_id BIGINT, day TIMESTAMP, n BIGINT, v_fp BIGINT, bucket BIGINT", stored(s, dir))
       .where(col("bucket").isin(buckets: _*) &&
         col("user_id").isin(users: _*))
       .select("user_id", "day", "n", "v_fp")
@@ -266,6 +264,13 @@ object EntityIndex {
       pmod(col("user_id"), lit(Buckets.toLong)).as("bucket"))
       .distinct().collect().map(_.getLong(0))
     if (hit.isEmpty) return
+    // veto index serving BEFORE any bucket moves; the rewritten
+    // version re-commits at the end (a vacuum is the owner's own
+    // commit, not an accidental mutation)
+    val path = indexPath(dir)
+    ensure(s, dir)
+    val version = EnsureWatermark.veto(path).get.version
+    val data = s"$path/$version/data"
     // STAGE the survivors of the touched buckets (a parquet overwrite
     // cannot read the path it replaces), then swap bucket-by-bucket:
     // staged partitions move in via dynamic overwrite, fully-purged
@@ -274,8 +279,8 @@ object EntityIndex {
     // so a crash anywhere re-runs to completion with [[servePurged]]
     // exact throughout (before the clear the anti-join still filters;
     // after, it is a no-op).
-    val staging = indexPath(dir) + ".vacuum"
-    s.read.parquet(indexPath(dir))
+    val staging = path + ".vacuum"
+    s.read.parquet(data)
       .where(col("bucket").isin(hit.toSeq: _*))
       .join(purged, Seq("user_id"), "left_anti")
       .select(col("user_id"), col("day"), col("n"), col("v_fp"), col("bucket"))
@@ -290,10 +295,10 @@ object EntityIndex {
       s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       if (alive.nonEmpty)
         s.read.parquet(staging)
-          .write.partitionBy("bucket").mode("overwrite").parquet(indexPath(dir))
+          .write.partitionBy("bucket").mode("overwrite").parquet(data)
     } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
     hit.filterNot(alive).foreach { b =>
-      val (dfs, p) = IndexStore.fsOf(s"${indexPath(dir)}/bucket=$b")
+      val (dfs, p) = IndexStore.fsOf(s"$data/bucket=$b")
       dfs.delete(p, true)
     }
     // the STREAM partials carry purged users too (r13 review's top
@@ -359,10 +364,13 @@ object EntityIndex {
         ()
       }
     }
-    // the artifact mutated by design: re-stamp so serving continues
-    // against the now-purged store (the watermark guards ACCIDENTAL
-    // mutation; a vacuum is the owner's own commit)
-    EnsureWatermark.write(indexPath(dir))
+    // re-commit the rewritten version (moved in by one rename) so
+    // serving continues against the now-purged store
+    EnsureWatermark.commit(path, dir, "events", 0L) { v =>
+      fs.rename(new org.apache.hadoop.fs.Path(s"$path/$version"),
+        new org.apache.hadoop.fs.Path(v))
+      ()
+    }
     fs.delete(stagingP, true)
     // clear LAST — idempotent replay point
     val (tfs, tp) = IndexStore.fsOf(purgePath(dir))
@@ -371,17 +379,16 @@ object EntityIndex {
   }
 
   /** The per-user profile for `users`: (n, v_fp, active days).
-    * Index path while the watermark holds — bucket partition pruning
+    * Index path while the commit is current — bucket partition pruning
     * + user filter, corpus never touched; raw-scan fallback
     * otherwise (exact either way, fail-closed like every routing
     * serve). Returns the frame and which path ran, for plan pinning. */
   def serve(s: SparkSession, dir: String,
       users: Seq[Long]): (DataFrame, Boolean) = {
     require(users.nonEmpty, "empty lookup set")
-    val path = indexPath(dir)
-    if (EnsureWatermark.holds(path)) {
+    servable(dir).map { data =>
       val buckets = users.map(bucketOf).distinct
-      val df = s.read.parquet(path)
+      val df = s.read.parquet(data)
         .where(col("bucket").isin(buckets: _*) &&
           col("user_id").isin(users: _*))
         .groupBy(col("user_id"))
@@ -389,7 +396,7 @@ object EntityIndex {
           countDistinct(col("day")).as("days"))
         .orderBy(col("user_id"))
       (df, true)
-    } else {
+    }.getOrElse {
       val df = graft.Tables(s, dir, "events")
         .where(col("user_id").isin(users: _*))
         .select(col("user_id"), MinMaxManifest.utcDay(col("ts")).as("day"),

@@ -56,47 +56,32 @@ object HistogramRollup {
       .groupBy("day", "event_type", "bin")
       .agg(count(lit(1)).as("cnt"))
 
-  /** True iff the artifact is ready AND is exactly what [[ensure]]
-    * built — the rewrite layer's routing precondition (the
-    * [[EnsureWatermark]] discipline, shared with [[AggRollup]]). */
-  private[graft] def routable(path: String): Boolean =
-    EnsureWatermark.holds(path)
+  private def build(s: SparkSession, dir: String)(data: String): Unit =
+    binCounts(graft.Tables(s, dir, "events")).coalesce(1).write.parquet(data)
 
-  /** Build the per-(day, event_type, bin) count table once.
-    *
-    * Deliberately does NOT backfill a missing ensure-manifest on an
-    * already-ready artifact: from here a manifest-less rollup is
-    * indistinguishable from one that [[appendBatch]] legitimately
-    * de-routed (the append deletes the manifest FIRST, so a crash
-    * right after leaves exactly this state with the table possibly a
-    * superset of the raw aggregate) — writing a manifest would turn
-    * fail-closed into fail-open. The repair path is [[reEnsure]]. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    val path = histPath(dir)
-    if (IndexStore.artifactReady(path)) return
-    binCounts(graft.Tables(s, dir, "events"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
-  }
+  /** The committed table's data part, built once when absent or torn.
+    * Deliberately keeps a VETOED table — one [[appendBatch]] maintained
+    * (or crashed mid-append): a rebuild would drop the appended bins,
+    * re-blessing it would turn fail-closed into fail-open. The repair
+    * path is [[reEnsure]]. */
+  private[graft] def stored(s: SparkSession, dir: String): String =
+    EnsureWatermark.ensured(histPath(dir), dir, "events")(build(s, dir))
 
-  /** ROUTING REPAIR — rebuild the rollup from the raw table and
-    * restore the ensure-manifest watermark, so [[routable]] (and with
-    * it q42's optimizer rewrite) holds again after the states that
-    * permanently veto it: an [[appendBatch]] of out-of-band data, a
-    * crash between the append's manifest delete and its write, or a
-    * rollup built before the watermark existed. The rebuild OVERWRITES
-    * the base table with exactly the raw aggregate — any partials
-    * appended from outside events.parquet are dropped by design (they
-    * are what made routing inexact; re-append them after if the
-    * serving surface still wants them, accepting de-routing again).
-    * Stream-delta and CDC-delta side tables are untouched: they are
-    * read only by the maintained readers, never by the routed path. */
-  def reEnsure(s: SparkSession, dir: String): Unit = {
-    val path = histPath(dir)
-    binCounts(graft.Tables(s, dir, "events"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
-  }
+  /** Build the per-(day, event_type, bin) count table once. */
+  def ensure(s: SparkSession, dir: String): Unit = { stored(s, dir); () }
+
+  /** ROUTING REPAIR — a fresh commit of the rollup from the raw table,
+    * so q42's optimizer rewrite serves again after the states that
+    * veto it: an [[appendBatch]] of out-of-band data, a crash between
+    * the append's veto and its write, or a rollup of an older layout.
+    * Any partials appended from outside events.parquet are dropped by
+    * design (they are what made routing inexact; re-append them after
+    * if the serving surface still wants them, accepting de-routing
+    * again). Stream-delta and CDC-delta side tables are untouched:
+    * they are read only by the maintained readers, never by the
+    * routed path. */
+  def reEnsure(s: SparkSession, dir: String): Unit =
+    EnsureWatermark.commitData(histPath(dir), dir, "events")(build(s, dir))
 
   /** INCREMENTAL maintenance: a micro-batch appends its own bin
     * counts; the read-side SUM folds duplicates of any (day, group,
@@ -107,15 +92,15 @@ object HistogramRollup {
     * callers should use [[processStreamBatch]] instead, which makes
     * replays idempotent by batch-id scoping. */
   def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    require(IndexStore.artifactReady(histPath(dir)),
-      "histogram table must be built before appending")
     // veto plan routing FIRST: once any batch outside events.parquet
     // lands, the rollup is no longer the raw aggregate, and a crash
     // between the two steps must fail closed (routing off), never
     // open
-    EnsureWatermark.invalidate(histPath(dir))
+    val path = histPath(dir)
+    val st = EnsureWatermark.veto(path)
+    require(st.isDefined, "histogram table must be built before appending")
     binCounts(batch)
-      .coalesce(1).write.mode("append").parquet(histPath(dir))
+      .coalesce(1).write.mode("append").parquet(st.get.part(path, "data"))
   }
 
   /** STREAMING maintenance — the exactly-once face of [[appendBatch]]
@@ -162,8 +147,7 @@ object HistogramRollup {
   /** SUM-merge the daily histograms over [lo, hi). */
   def mergedBins(s: SparkSession, dir: String, lo: String,
       hi: String): DataFrame = {
-    ensure(s, dir)
-    IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, bin BIGINT, cnt BIGINT", histPath(dir))
+    IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, bin BIGINT, cnt BIGINT", stored(s, dir))
       .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
         col("day") < lit(MinMaxManifest.utc(hi)))
       .groupBy("event_type", "bin")
@@ -254,7 +238,6 @@ object HistogramRollup {
     * maximal drift. */
   def drift(s: SparkSession, dir: String, aLo: String, aHi: String,
       bLo: String, bHi: String): DataFrame = {
-    ensure(s, dir)
     def win(lo: String, hi: String) =
       col("day") >= lit(MinMaxManifest.utc(lo)) &&
         col("day") < lit(MinMaxManifest.utc(hi))
@@ -263,7 +246,7 @@ object HistogramRollup {
     // ONE rollup read: per-(group, bin) window masses via conditional
     // sums (a day in both windows — callers may overlap — counts in
     // both), bins outside both windows pruned at the scan
-    val bins = IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, bin BIGINT, cnt BIGINT", histPath(dir))
+    val bins = IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, bin BIGINT, cnt BIGINT", stored(s, dir))
       .where(inA || inB)
       .groupBy("event_type", "bin")
       .agg(sum(when(inA, col("cnt")).otherwise(0L)).as("ca"),

@@ -470,32 +470,34 @@ object SampledAgg {
         sum(v * v).as("__s2"), max(abs(v)).as("__mv"))
   }
 
-  /** None on an empty frame (null max) — the ladder falls through
-    * instead of NPEing (r15 self-review). */
-  private def worstBoundOf(ing: DataFrame,
-      bound: org.apache.spark.sql.Column): Option[Long] =
-    Option(ing.agg(max(bound)).head().get(0)).map(_.asInstanceOf[Long])
-
-  /** The ENFORCED overflow envelope shared by both faces (r15 review
-    * #2 + r16 advice): k²·mv² bounds every product in the bound
-    * formula; `withScaleN` additionally bounds the STRATIFIED sum
-    * rung's scale-up product (|Σv|·n ≤ k·mv·n) — the AVG faces
-    * divide, never multiply, so they pass withScaleN = false. */
-  private def boundEnvelope(ing: DataFrame,
-      withScaleN: Boolean = false): Boolean = {
-    val aggs = Seq(max(col("__k")), max(col("__mv"))) ++
+  /** One rung's decision in ONE aggregate job: the ENFORCED overflow
+    * envelope shared by both faces (r15 review #2 + r16 advice: k²·mv²
+    * bounds every product in the bound formula; `withScaleN`
+    * additionally bounds the STRATIFIED sum rung's scale-up product
+    * |Σv|·n ≤ k·mv·n — the AVG faces divide, never multiply, so they
+    * pass withScaleN = false) holds AND the worst group `bound` is
+    * within `tolerancePpm`. The bound is evaluated only on groups
+    * inside their own envelope (k·mv ≤ ⌊√(2⁶³−1)⌋), so a rung
+    * outside it falls down the ladder instead of overflowing; an
+    * empty frame (null maxima) falls through too (r15 self-review). */
+  private def rungServes(ing: DataFrame, bound: org.apache.spark.sql.Column,
+      tolerancePpm: Long, withScaleN: Boolean = false): Boolean = {
+    val inEnvelope =
+      col("__k").cast("double") * col("__mv").cast("double") <= lit(3037000499.0)
+    val aggs = Seq(max(col("__k")), max(col("__mv")),
+      max(when(inEnvelope, bound))) ++
       (if (withScaleN) Seq(max(col("__n"))) else Nil)
     val r = ing.agg(aggs.head, aggs.tail: _*).head()
-    (Option(r.get(0)), Option(r.get(1))) match {
-      case (Some(k0), Some(mv0)) =>
+    (Option(r.get(0)), Option(r.get(1)), Option(r.get(2))) match {
+      case (Some(k0), Some(mv0), Some(worst)) =>
         val k = BigInt(k0.asInstanceOf[Long])
         val mv = BigInt(mv0.asInstanceOf[Long])
         val boundOk = k * k * mv * mv < BigInt(Long.MaxValue)
-        val scaleOk = !withScaleN || Option(r.get(2)).exists { n0 =>
+        val scaleOk = !withScaleN || Option(r.get(3)).exists { n0 =>
           k * mv * BigInt(n0.asInstanceOf[Long]) < BigInt(Long.MaxValue)
         }
-        boundOk && scaleOk
-      case _ => false // empty frame: nothing to serve from this rung
+        boundOk && scaleOk && worst.asInstanceOf[Long] <= tolerancePpm
+      case _ => false
     }
   }
 
@@ -520,13 +522,12 @@ object SampledAgg {
         lit(0L).as("rel_err_ppm"), lit("rollup").as("source")), "rollup")
     }
     // 1. cheapest uniform sample whose worst group bound meets it
-    //    (shared [[sumIngredients]]/[[boundEnvelope]] — r16 review #8)
+    //    (shared [[sumIngredients]]/[[rungServes]] — r16 review #8)
     ppms.sorted.foreach { ppm =>
       sampleIfCurrent(s, dir, table, keyCol, ppm).foreach { sample =>
         val ing = sumIngredients(sample, groupCol, valueCol)
         val b = sumBound(col("__k"), col("__s1"), col("__s2"))
-        if (boundEnvelope(ing) &&
-            worstBoundOf(ing, b).exists(_ <= tolerancePpm)) {
+        if (rungServes(ing, b, tolerancePpm)) {
           val source = s"sample_$ppm"
           return (ing.select(col(groupCol),
             (col("__s1") * scaleFactor(ppm)).as("sum_est"),
@@ -545,8 +546,7 @@ object SampledAgg {
               col("n").as("__n")), Seq(groupCol))
           val b = when(col("__k") === col("__n"), lit(0L))
             .otherwise(sumBound(col("__k"), col("__s1"), col("__s2")))
-          if (boundEnvelope(ing, withScaleN = true) &&
-              worstBoundOf(ing, b).exists(_ <= tolerancePpm))
+          if (rungServes(ing, b, tolerancePpm, withScaleN = true))
             return (ing.select(col(groupCol),
               expr("(__s1 * __n) div __k").as("sum_est"),
               b.as("rel_err_ppm"), lit("stratified").as("source")),
@@ -588,14 +588,13 @@ object SampledAgg {
         lit(0L).as("rel_err_ppm"), lit("rollup").as("source")), "rollup")
     }
     // 1. cheapest uniform sample whose worst group bound meets it
-    //    (shared [[sumIngredients]]/[[boundEnvelope]] — r16 review #8;
+    //    (shared [[sumIngredients]]/[[rungServes]] — r16 review #8;
     //    the AVG estimate divides, so withScaleN stays false)
     ppms.sorted.foreach { ppm =>
       sampleIfCurrent(s, dir, table, keyCol, ppm).foreach { sample =>
         val ing = sumIngredients(sample, groupCol, valueCol)
         val b = sumBound(col("__k"), col("__s1"), col("__s2"))
-        if (boundEnvelope(ing) &&
-            worstBoundOf(ing, b).exists(_ <= tolerancePpm)) {
+        if (rungServes(ing, b, tolerancePpm)) {
           val source = s"sample_$ppm"
           return (ing.select(col(groupCol),
             expr("__s1 div __k").as("avg_est"),
@@ -613,8 +612,7 @@ object SampledAgg {
               col("n").as("__n")), Seq(groupCol))
           val b = when(col("__k") === col("__n"), lit(0L))
             .otherwise(sumBound(col("__k"), col("__s1"), col("__s2")))
-          if (boundEnvelope(ing) &&
-              worstBoundOf(ing, b).exists(_ <= tolerancePpm))
+          if (rungServes(ing, b, tolerancePpm))
             return (ing.select(col(groupCol),
               expr("__s1 div __k").as("avg_est"),
               b.as("rel_err_ppm"), lit("stratified").as("source")),
@@ -648,8 +646,8 @@ object SampledAgg {
     * DAY-ALIGNED window within the caller's tolerance. Returns
     * (frame, source): columns (event_type, q_e4, rel_err_ppm,
     * source), source ∈ histogram | exact. The histogram rung serves
-    * only while [[HistogramRollup.routable]] holds (artifact current
-    * vs the live events listing — the fail-closed contract). */
+    * only while the histogram rollup's commit is current (never
+    * appended to — the fail-closed contract). */
   def serveQuantile(s: SparkSession, dir: String, lo: String, hi: String,
       p: Int, tolerancePpm: Long): (DataFrame, String) = {
     require(p >= 1 && p <= 99, s"percentile in [1, 99], got $p")
@@ -667,7 +665,7 @@ object SampledAgg {
     val HR = HistogramRollup
     // 1. the histogram rung: disclosed bound = one bin width,
     //    relative to the estimate — integer-exact, replayable
-    if (HR.routable(HR.histPath(dir))) {
+    if (EnsureWatermark.current(HR.histPath(dir)).isDefined) {
       val est = HR.percentiles(HR.mergedBins(s, dir, lo, hi), Seq(p))
         .select(col("event_type"), col(s"p${p}_e4").as("q_e4"))
       val overflowE4 = HR.NumBins.toLong * HR.BinWidthE4

@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   * artifact path is keyed by [[IndexStore.fingerprint]] of the RAW
   * table's file listing (a mutated table yields a different path →
   * artifact absent → no stale serve), and the shared
-  * [[EnsureWatermark]] guards artifact-side mutation, so
+  * [[EnsureWatermark]] commit guards artifact-side mutation, so
   * [[uniqueNonNull]] fails CLOSED — rewrite off, never a wrong
   * answer — whenever either side moved. */
 object StatsCatalog {
@@ -121,14 +121,34 @@ object StatsCatalog {
     }.toSeq
   }
 
+  /** Commit `df` as the stats artifact at `path` (every stats
+    * artifact is one small parquet). */
+  private def commitData(path: String, dir: String, table: String)(
+      df: DataFrame): Unit =
+    EnsureWatermark.commitData(path, dir, table)(df.coalesce(1).write.parquet(_))
+
+  /** MEMOIZED artifact read (r12 advice #1: the plan-time metadata
+    * reads inside optimizer rules were unmemoized Spark jobs — one
+    * `spark.read.parquet().collect()` per candidate join per
+    * optimization): `load` of the current commit's data part, run
+    * once per commit through [[EnsureWatermark.memo]]; the currency
+    * probe itself is FS metadata, recomputed every call. None — and
+    * no read — when the artifact is absent, torn, stale or vetoed,
+    * so proof-path callers ([[uniqueNonNull]]) fail closed. */
+  private def served[T](path: String)(load: String => T): Option[T] =
+    EnsureWatermark.current(path).map(st =>
+      EnsureWatermark.memo(path, st.version)(load(st.part(path, "data"))))
+
   private def writeStats(s: SparkSession, dir: String, table: String,
       exact: Boolean): Unit = {
-    val path = statsPath(dir, table)
     import s.implicits._
-    profile(graft.Tables(s, dir, table), exact)
-      .toDF().coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
+    commitData(statsPath(dir, table), dir, table)(
+      profile(graft.Tables(s, dir, table), exact).toDF())
   }
+
+  private def currentStats(s: SparkSession, dir: String,
+      table: String): Option[Map[String, ColStats]] =
+    served(statsPath(dir, table))(collectStats(s, _))
 
   /** ANALYZE once per (table fingerprint, lifetime); exact NDV by
     * default — see the class scaladoc for the Expand-cost trade.
@@ -138,48 +158,43 @@ object StatsCatalog {
     * table's lifetime and join elimination silently off). The mode
     * check is served by the memoized read, so it costs one job per
     * artifact build, not one per call. */
-  def ensure(s: SparkSession, dir: String, table: String): Unit = {
-    val path = statsPath(dir, table)
-    if (!IndexStore.artifactReady(path)) writeStats(s, dir, table, exact = true)
-    else if (!readStats(s, path).forall(_._2.exact))
+  def ensure(s: SparkSession, dir: String, table: String): Unit =
+    if (!currentStats(s, dir, table).exists(_.values.forall(_.exact)))
       writeStats(s, dir, table, exact = true)
-  }
 
   /** The always-on profile path: HLL++ NDV, one plain pass, no
     * Expand. Advisory-grade only — [[uniqueNonNull]] refuses it. */
   def ensureApprox(s: SparkSession, dir: String, table: String): Unit =
-    if (!IndexStore.artifactReady(statsPath(dir, table)))
+    if (EnsureWatermark.current(statsPath(dir, table)).isEmpty)
       writeStats(s, dir, table, exact = false)
 
-  /** Repair/upgrade path: rebuild (exact) and restore the watermark. */
+  /** Repair/upgrade path: a fresh exact commit. */
   def reEnsure(s: SparkSession, dir: String, table: String): Unit =
     writeStats(s, dir, table, exact = true)
+
+  /** Parsed stats by column name (column-count-sized collect,
+    * served through the stamp-keyed memo). */
+  def stats(s: SparkSession, dir: String, table: String): Map[String, ColStats] = {
+    ensure(s, dir, table)
+    currentStats(s, dir, table).get
+  }
 
   /** The persisted stats frame (column, n, nulls, ndv, min, max,
     * exact) — the q62 serving face. */
   def statsDf(s: SparkSession, dir: String, table: String): DataFrame = {
     ensure(s, dir, table)
-    IndexStore.readAs(s, StatsDdl, statsPath(dir, table))
-  }
-
-  /** Parsed stats by column name (column-count-sized collect,
-    * served through the stamp-keyed memo when the watermark holds). */
-  def stats(s: SparkSession, dir: String, table: String): Map[String, ColStats] = {
-    ensure(s, dir, table)
-    readStats(s, statsPath(dir, table))
+    val path = statsPath(dir, table)
+    IndexStore.readAs(s, StatsDdl, EnsureWatermark.current(path).get.part(path, "data"))
   }
 
   /** Non-building read face for PLAN-TIME consumers (the Selinger
-    * estimator): the persisted stats when the artifact exists, None
-    * otherwise — never launches an ANALYZE (and never triggers
+    * estimator): the persisted stats when the artifact is current,
+    * None otherwise — never launches an ANALYZE (and never triggers
     * [[ensure]]'s approx→exact upgrade, which is a build-path
     * decision). Served through the stamp-keyed memo. */
   def statsIfReady(s: SparkSession, dir: String,
-      table: String): Option[Map[String, ColStats]] = {
-    val path = statsPath(dir, table)
-    if (!IndexStore.artifactReady(path)) None
-    else Some(readStats(s, path))
-  }
+      table: String): Option[Map[String, ColStats]] =
+    currentStats(s, dir, table)
 
   // fixed artifact schemas (writers above) — see IndexStore.readAs
   private val StatsDdl =
@@ -202,47 +217,22 @@ object StatsCatalog {
     }.toMap
   }
 
-  /** MEMOIZED artifact read (r12 advice #1: the plan-time metadata
-    * reads inside optimizer rules were unmemoized Spark jobs — one
-    * `spark.read.parquet().collect()` per candidate join per
-    * optimization). Keyed on the watermark's BUILD STAMP (the exact
-    * data-file listing, recomputed from FS metadata every call — the
-    * cheap part) through [[EnsureWatermark.memo]], so the expensive
-    * collect runs once per artifact BUILD; a broken watermark (stamp
-    * absent) falls through to a direct uncached read, because
-    * build-path callers (ensure's upgrade check) still need the rows
-    * while proof-path callers ([[uniqueNonNull]]) have already failed
-    * closed. */
-  private def readStats(s: SparkSession, path: String): Map[String, ColStats] =
-    EnsureWatermark.stampIfHolds(path) match {
-      case None => collectStats(s, path)
-      case Some(stamp) => memoStats(s, path, stamp)
-    }
-
-  private def memoStats(s: SparkSession, path: String,
-      stamp: String): Map[String, ColStats] =
-    EnsureWatermark.memo(path, stamp)(collectStats(s, path))
-
   /** PROOF face: true iff `column`'s non-null values are pairwise
     * distinct, proven by EXACT-mode stats that are still current —
     * artifact fingerprint matches the raw table's listing (a mutated
-    * table re-keys the path) AND the ensure watermark holds (nothing
+    * table re-keys the path) AND the commit is intact (nothing
     * touched the artifact). Fails closed on any doubt: absent stats,
-    * approx mode, stale watermark all return false, so the join-
-    * elimination rewrite leaves the plan untouched rather than
+    * approx mode, a vetoed or torn commit all return false, so the
+    * join-elimination rewrite leaves the plan untouched rather than
     * risking a wrong cardinality. Never builds stats itself — an
     * optimizer rule must not launch jobs; the stats collect is
     * served by the stamp-keyed memo, so N optimizations of the same
     * table pay ONE job (spec-pinned), each still paying the
-    * fail-closed watermark listing. */
+    * fail-closed stamp probe. */
   def uniqueNonNull(s: SparkSession, dir: String, table: String,
-      column: String): Boolean = {
-    val path = statsPath(dir, table)
-    EnsureWatermark.stampIfHolds(path).exists { stamp =>
-      memoStats(s, path, stamp).get(column)
-        .exists(st => st.exact && st.uniqueNonNull)
-    }
-  }
+      column: String): Boolean =
+    currentStats(s, dir, table).exists(_.get(column)
+      .exists(st => st.exact && st.uniqueNonNull))
 
   /** Raw on-disk footprint of `<dir>/<table>.parquet` — the broadcast
     * decision's input (compressed bytes; the planner's own
@@ -379,42 +369,36 @@ object StatsCatalog {
     * metadata, not a copy of the column), which is exactly the salt
     * set [[SkewJoin.saltedJoinHot]] consumes: only profiled keys
     * salt, only their dim rows replicate. Same lifecycle as every
-    * stats artifact: fingerprint-keyed, watermark-stamped. */
+    * stats artifact: fingerprint-keyed, stamp-committed. */
   def keyProfilePath(dir: String, table: String, column: String): String =
     s"${IndexStore.root}/${IndexStore.fingerprint(dir, table)}/stats_${table}_key_$column"
 
   def ensureKeyProfile(s: SparkSession, dir: String, table: String,
       column: String, hotFreq: Long = 1000L, maxHot: Int = 1024): Unit = {
     val path = keyProfilePath(dir, table, column)
-    if (IndexStore.artifactReady(path)) return
-    graft.Tables(s, dir, table)
-      .where(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("key"))
-      .agg(count(lit(1)).as("freq"))
-      .where(col("freq") >= hotFreq)
-      .orderBy(col("freq").desc, col("key"))
-      .limit(maxHot)
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
+    if (EnsureWatermark.current(path).isEmpty)
+      commitData(path, dir, table)(graft.Tables(s, dir, table)
+        .where(col(column).isNotNull)
+        .groupBy(col(column).cast(StringType).as("key"))
+        .agg(count(lit(1)).as("freq"))
+        .where(col("freq") >= hotFreq)
+        .orderBy(col("freq").desc, col("key"))
+        .limit(maxHot))
   }
 
   /** (hot keys ranked by frequency, max frequency) — None when no
     * profile was ensured. An EMPTY profile is meaningful: no key
     * reaches the hot threshold, so max_freq is bounded by it.
-    * Stamp-memoized like [[readStats]]: the steering rule reads it at
-    * optimize time, once per join side. */
+    * Stamp-memoized like [[statsIfReady]]: the steering rule reads it
+    * at optimize time, once per join side. */
   def keyProfile(s: SparkSession, dir: String, table: String,
-      column: String): Option[(Seq[String], Long)] = {
-    val path = keyProfilePath(dir, table, column)
-    EnsureWatermark.stampIfHolds(path).map { stamp =>
-      EnsureWatermark.memo(path, stamp) {
-        val rows = IndexStore.readAs(s, "key STRING, freq BIGINT", path)
-          .orderBy(col("freq").desc, col("key")).collect()
-        (rows.map(_.getString(0)).toSeq,
-          rows.headOption.map(_.getLong(1)).getOrElse(0L))
-      }
+      column: String): Option[(Seq[String], Long)] =
+    served(keyProfilePath(dir, table, column)) { data =>
+      val rows = IndexStore.readAs(s, "key STRING, freq BIGINT", data)
+        .orderBy(col("freq").desc, col("key")).collect()
+      (rows.map(_.getString(0)).toSeq,
+        rows.headOption.map(_.getLong(1)).getOrElse(0L))
     }
-  }
 
   // ------------------------------------------------------------------
   // COLUMN-GROUP statistics (D87) — multi-column NDV + functional
@@ -439,37 +423,33 @@ object StatsCatalog {
   /** ANALYZE one column group (exact, one distinct pass over the
     * k-tuple — a single struct hash map, not the k-wide Expand the
     * batched single-column pass avoids). Fingerprint-keyed +
-    * watermarked like every stats artifact. */
+    * stamp-committed like every stats artifact. */
   def ensureColumnGroup(s: SparkSession, dir: String, table: String,
       columns: Seq[String]): Unit = {
     require(columns.size >= 2, "a column group needs at least 2 columns")
     val cols = columns.sorted
     val path = groupStatsPath(dir, table, cols)
-    if (IndexStore.artifactReady(path)) return
+    if (EnsureWatermark.current(path).isDefined) return
     import s.implicits._
     val df = graft.Tables(s, dir, table)
     val r = df.agg(count(lit(1)).as("n"),
       count_distinct(struct(cols.map(col): _*)).as("ndv")).head()
-    Seq((cols.mkString(","), r.getLong(0), r.getLong(1), true))
-      .toDF("columns", "n", "ndv", "exact")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
+    commitData(path, dir, table)(
+      Seq((cols.mkString(","), r.getLong(0), r.getLong(1), true))
+        .toDF("columns", "n", "ndv", "exact"))
   }
 
   /** Non-building read face: the group's stats when the artifact is
     * current, None otherwise — never launches an ANALYZE.
-    * Stamp-memoized like [[readStats]]. */
+    * Stamp-memoized like [[statsIfReady]]. */
   def columnGroupIfReady(s: SparkSession, dir: String, table: String,
       columns: Seq[String]): Option[GroupStats] = {
     val cols = columns.sorted
-    val path = groupStatsPath(dir, table, cols)
-    EnsureWatermark.stampIfHolds(path).map { stamp =>
-      EnsureWatermark.memo(path, stamp) {
-        val r = IndexStore.readAs(s,
-          "columns STRING, n BIGINT, ndv BIGINT, exact BOOLEAN", path).head()
-        GroupStats(cols, r.getAs[Long]("n"), r.getAs[Long]("ndv"),
-          r.getAs[Boolean]("exact"))
-      }
+    served(groupStatsPath(dir, table, cols)) { data =>
+      val r = IndexStore.readAs(s,
+        "columns STRING, n BIGINT, ndv BIGINT, exact BOOLEAN", data).head()
+      GroupStats(cols, r.getAs[Long]("n"), r.getAs[Long]("ndv"),
+        r.getAs[Boolean]("exact"))
     }
   }
 
@@ -486,7 +466,7 @@ object StatsCatalog {
   // REMAINDER uniformly over the remaining ndv−k values. One groupBy
   // pass per ensure; the artifact is k rows — metadata, not a copy
   // of the column. Same lifecycle as every stats artifact:
-  // fingerprint-keyed, watermark-stamped, stamp-memoized reads,
+  // fingerprint-keyed, stamp-committed, stamp-memoized reads,
   // fail-closed to the uniform formula when absent or stale.
   // ------------------------------------------------------------------
 
@@ -503,24 +483,22 @@ object StatsCatalog {
   def ensureMcv(s: SparkSession, dir: String, table: String,
       column: String, k: Int = 32): Unit = {
     val path = mcvPath(dir, table, column)
-    if (IndexStore.artifactReady(path)) return
-    graft.Tables(s, dir, table)
-      .where(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("value"))
-      .agg(count(lit(1)).as("freq"))
-      .orderBy(col("freq").desc, col("value"))
-      .limit(k)
-      .coalesce(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
+    if (EnsureWatermark.current(path).isEmpty)
+      commitData(path, dir, table)(graft.Tables(s, dir, table)
+        .where(col(column).isNotNull)
+        .groupBy(col(column).cast(StringType).as("value"))
+        .agg(count(lit(1)).as("freq"))
+        .orderBy(col("freq").desc, col("value"))
+        .limit(k))
   }
 
-  /** Cheap MCV-TIER WATERMARK for one table (r16, the learned-tier
-    * memo key): the stamps of both tiers' artifacts — the exact MCV
-    * lists' watermark listings (they live under the table's
-    * fingerprint dir, so a table mutation re-keys automatically) and
-    * the maintained lists' commit versions. Any build, maintenance,
-    * or retirement of either tier changes it — one listing per tier
-    * root plus one small read per artifact, no jobs. */
+  /** Cheap MCV-TIER STAMP for one table (r16, the learned-tier memo
+    * key): the commit versions of both tiers' artifacts — the exact
+    * MCV lists (they live under the table's fingerprint dir, so a
+    * table mutation re-keys automatically) and the maintained lists.
+    * Any build, maintenance, or retirement of either tier changes it
+    * — one listing per tier root plus FS metadata per artifact, no
+    * jobs. */
   def mcvTierStamp(dir: String, table: String): String = {
     def tier(root: String, prefix: String)(stamp: String => String): String = {
       val (fs, p) = IndexStore.fsOf(root)
@@ -531,7 +509,8 @@ object StatsCatalog {
     }
     val exact = tier(
       s"${IndexStore.root}/${IndexStore.fingerprint(dir, table)}",
-      s"stats_${table}_mcv_")(EnsureWatermark.stampIfHolds(_).getOrElse("torn"))
+      s"stats_${table}_mcv_")(EnsureWatermark.current(_)
+        .fold("torn")(_.version))
     val maint = tier(StatsMaintain.maintPath(dir, table), "mcv_")(
       EnsureWatermark.stampOf(_).fold("absent")(_.version))
     s"$exact;$maint"
@@ -540,18 +519,14 @@ object StatsCatalog {
   /** Non-building read face: the (value, freq) list ranked
     * (freq DESC, value ASC) when the artifact is current, None
     * otherwise — never launches an ANALYZE. Stamp-memoized like
-    * [[readStats]]. */
+    * [[statsIfReady]]. */
   def mcvIfReady(s: SparkSession, dir: String, table: String,
-      column: String): Option[Seq[(String, Long)]] = {
-    val path = mcvPath(dir, table, column)
-    EnsureWatermark.stampIfHolds(path).map { stamp =>
-      EnsureWatermark.memo(path, stamp) {
-        IndexStore.readAs(s, "value STRING, freq BIGINT", path)
-          .orderBy(col("freq").desc, col("value")).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq
-      }
+      column: String): Option[Seq[(String, Long)]] =
+    served(mcvPath(dir, table, column)) { data =>
+      IndexStore.readAs(s, "value STRING, freq BIGINT", data)
+        .orderBy(col("freq").desc, col("value")).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
     }
-  }
 
   /** FD PROOF face: Some(true) iff `a → b` — every value of `a`
     * co-occurs with exactly one value of `b` — proven by EXACT,

@@ -48,8 +48,8 @@ import org.apache.spark.sql.functions._
   * counts are unknown inside a truncated top, so deletes repair by
   * rebuild, never by patch.
   *
-  * ROUTING: [[ensure]]/[[reEnsure]] stamp the shared
-  * [[EnsureWatermark]]; [[appendBatch]] invalidates it FIRST
+  * ROUTING: [[ensure]]/[[reEnsure]] commit through the shared
+  * [[EnsureWatermark]]; [[appendBatch]] vetoes the commit FIRST
   * (fail-closed, the discipline every routed rollup observes), and
   * [[routable]] additionally requires ZERO committed stream
   * segments — both legs carry data that is NOT in the raw table, so
@@ -99,64 +99,67 @@ object TopKRollup {
         col("user_id"), col("c"), coalesce(col("tail"), lit(0L)).as("tail"))
   }
 
-  /** Build the daily summary table once per corpus lifetime
-    * (segment 0). `repartition(1)`, NOT `coalesce(1)`: coalesce
+  /** Commit the daily summary of the CURRENT raw table as a single
+    * segment 0. `repartition(1)`, NOT `coalesce(1)`: coalesce
     * collapses the whole final stage — including the corpus-
     * cardinality row_number window — into one task; the shuffle
     * boundary keeps the window stage parallel and single-files only
     * the ≤(B+1)-rows-per-cell summary. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    val path = topkPath(dir)
-    if (IndexStore.artifactReady(path)) return
+  private def build(s: SparkSession, dir: String)(data: String): Unit =
     summarize(graft.Tables(s, dir, "events"), 0L)
-      .repartition(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
-  }
+      .repartition(1).write.parquet(data)
 
-  /** ROUTING REPAIR + BOUND RE-TIGHTENING — rebuild the summary as a
-    * single segment-0 build of the CURRENT raw table and restore the
-    * routing watermark. Appended and streamed segments are DELETED,
-    * not merged: their per-day tops were truncated independently, so
-    * a rebuild from the raw table (which by now holds their rows, or
-    * holds the post-delete truth) is strictly tighter — bit-identical
-    * to a fresh single build (spec-pinned). This is the delete-repair
-    * path the class scaladoc promises: truncated tops are not
+  /** The committed summary's data part, built once per corpus
+    * lifetime; an appended-to (vetoed) summary is kept. */
+  private def stored(s: SparkSession, dir: String): String =
+    EnsureWatermark.ensured(topkPath(dir), dir, "events")(build(s, dir))
+
+  def ensure(s: SparkSession, dir: String): Unit = { stored(s, dir); () }
+
+  /** ROUTING REPAIR + BOUND RE-TIGHTENING — a fresh commit of the
+    * summary as a single segment-0 build of the CURRENT raw table.
+    * Appended and streamed segments are DELETED, not merged: their
+    * per-day tops were truncated independently, so a rebuild from the
+    * raw table (which by now holds their rows, or holds the
+    * post-delete truth) is strictly tighter — bit-identical to a
+    * fresh single build (spec-pinned). This is the delete-repair path
+    * the class scaladoc promises: truncated tops are not
     * subtractable, so CDC deletes repair by reEnsure. */
   def reEnsure(s: SparkSession, dir: String): Unit = {
-    val path = topkPath(dir)
-    val (fs, _) = IndexStore.fsOf(path)
-    fs.delete(new org.apache.hadoop.fs.Path(streamPath(dir)), true)
-    summarize(graft.Tables(s, dir, "events"), 0L)
-      .repartition(1).write.mode("overwrite").parquet(path)
-    EnsureWatermark.write(path)
+    IndexStore.removeArtifact(streamPath(dir))
+    EnsureWatermark.commitData(topkPath(dir), dir, "events")(build(s, dir))
   }
 
-  /** True iff the summary is exactly ensure()/reEnsure()'s build of
-    * the raw table — the optimizer rewrite's precondition: watermark
-    * intact AND no committed stream segments (either would make the
-    * summary a superset of the raw aggregate). */
-  private[graft] def routable(dir: String): Boolean =
-    EnsureWatermark.holds(topkPath(dir)) &&
-      IndexStore.readyBatches(streamPath(dir)).isEmpty
+  /** The summary's data part when it is exactly a build of the raw
+    * table — the optimizer rewrite's precondition: current (never
+    * appended to) AND no committed stream segments (either would make
+    * the summary a superset of the raw aggregate). */
+  private[graft] def routable(dir: String): Option[String] = {
+    val path = topkPath(dir)
+    EnsureWatermark.current(path)
+      .filter(_ => IndexStore.readyBatches(s"$path$StreamSuffix").isEmpty)
+      .map(_.part(path, "data"))
+  }
 
   /** Append a batch as a NEW SEGMENT (caller supplies a unique
     * POSITIVE batchId — negative segment ids belong to the streaming
     * leg by construction, so a colliding (day, seg, type, tail) cell
     * can never dedupe a tail ceiling across legs): O(batch) work,
     * summary never rewritten, bounds stay sound and widen by at most
-    * the batch's own tails (see scaladoc). Invalidates the routing
-    * watermark FIRST — a crash mid-append leaves routing OFF, never
-    * serving a torn superset. */
+    * the batch's own tails (see scaladoc). Vetoes routing FIRST — a
+    * crash mid-append leaves routing OFF, never serving a torn
+    * superset. */
   def appendBatch(s: SparkSession, dir: String, batch: DataFrame,
       batchId: Long): Unit = {
-    require(IndexStore.artifactReady(topkPath(dir)),
-      s"top-k summary at ${topkPath(dir)} must be built before appending")
     require(batchId > 0L,
       "appendBatch segment ids are positive (0 = ensure build, " +
         "negative = streaming leg)")
-    EnsureWatermark.invalidate(topkPath(dir))
+    val path = topkPath(dir)
+    val st = EnsureWatermark.veto(path)
+    require(st.isDefined,
+      s"top-k summary at $path must be built before appending")
     summarize(batch, batchId)
-      .repartition(1).write.mode("append").parquet(topkPath(dir))
+      .repartition(1).write.mode("append").parquet(st.get.part(path, "data"))
   }
 
   /** Batch-id-scoped streaming leg — the exactly-once discipline the
@@ -168,7 +171,8 @@ object TopKRollup {
     * subtractable from a truncated top (a dropped user's kept counts
     * are unknown), so the CDC-delete repair path is a rebuild, not a
     * patch. */
-  def streamPath(dir: String): String = topkPath(dir) + "_stream"
+  def streamPath(dir: String): String = topkPath(dir) + StreamSuffix
+  private val StreamSuffix = "_stream"
 
   def processStreamBatch(s: SparkSession, dir: String, batch: DataFrame,
       batchId: Long): Unit = {
@@ -205,7 +209,7 @@ object TopKRollup {
     * summary — never the corpus. */
   def exactTopK(s: SparkSession, dir: String, loMicros: Long,
       hiMicros: Long, k: Int): Option[Seq[(Long, Long)]] = {
-    if (!routable(dir)) return None
+    val data = routable(dir).getOrElse(return None)
     if (k <= 0) return Some(Seq.empty)
     val lo = java.sql.Timestamp.from(
       java.time.Instant.EPOCH.plusMillis(loMicros / 1000L))
@@ -219,7 +223,7 @@ object TopKRollup {
     // and the rule runs during OPTIMIZATION, where job latency is
     // serial with everything else (guide §5: the driver should do
     // almost no work — and few jobs)
-    val rows = IndexStore.readAs(s, CellsDdl, topkPath(dir))
+    val rows = IndexStore.readAs(s, CellsDdl, data)
       .where(col("day") >= lit(lo) && col("day") < lit(hi))
       .collect()
     // global (cross-type) bounds: one tail ceiling per cell; a user
@@ -264,9 +268,8 @@ object TopKRollup {
     * its replay overwrites it). */
   def heavyHitters(s: SparkSession, dir: String, lo: String, hi: String,
       topN: Int = 5): DataFrame = {
-    ensure(s, dir)
+    val baseCells = IndexStore.readAs(s, CellsDdl, stored(s, dir))
     val ready = IndexStore.readyBatches(streamPath(dir))
-    val baseCells = IndexStore.readAs(s, CellsDdl, topkPath(dir))
     val allCells =
       if (ready.isEmpty) baseCells
       else baseCells.unionByName(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StringType
 
-import graft.operators.{Dictionary, EnsureWatermark, IndexStore}
+import graft.operators.{Dictionary, EnsureWatermark}
 
 /** DICTIONARY-ENCODED AGGREGATION as a Catalyst optimizer rule — the
   * D50 routing discipline applied to D79's order-preserving
@@ -38,8 +38,8 @@ import graft.operators.{Dictionary, EnsureWatermark, IndexStore}
   * under the original exprIds, so parents never see the substitution.
   * Staleness fails closed twice over: a mutated table re-keys the
   * fingerprint path (artifact absent) and an artifact-side mutation
-  * breaks the [[EnsureWatermark]] — either way the plan passes
-  * through untouched.
+  * leaves the [[EnsureWatermark]] commit no longer current — either
+  * way the plan passes through untouched.
   *
   * Matched shape (narrow, exactness first):
   *
@@ -53,8 +53,8 @@ import graft.operators.{Dictionary, EnsureWatermark, IndexStore}
   * kilobyte rollup read beats any encoded scan, so this rule must
   * not shadow [[RollupRoutingRule]] in the shared fixed-point batch.
   *
-  * Plan-time cost: a candidate pays one fingerprint walk + watermark
-  * listing (FS metadata, the [[JoinEliminationRule]] class of check);
+  * Plan-time cost: a candidate pays one fingerprint walk + stamp
+  * probe (FS metadata, the [[JoinEliminationRule]] class of check);
   * the dictionary read is built only on actual fire, once per routed
   * aggregate. */
 class DictionaryRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -107,10 +107,9 @@ class DictionaryRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
           aggExprs.exists(_.isInstanceOf[Alias]) &&
           !aggExprs.filter(_.isInstanceOf[Alias]).forall(rollupServable) =>
       sourceOf(child, g).flatMap { case (dir, table) =>
-        val dictPath = Dictionary.dictPath(dir, table, g.name)
-        if (!IndexStore.artifactReady(dictPath) ||
-            !EnsureWatermark.holds(dictPath)) None
-        else {
+        val path = Dictionary.dictPath(dir, table, g.name)
+        EnsureWatermark.current(path).map { st =>
+          val dictPath = st.part(path, "data")
           // fixed dict schema (value = the grouping column's own
           // type, code = the writer's LONG rank): skips the
           // schema-inference job a bare read.parquet launches at
@@ -148,7 +147,7 @@ class DictionaryRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
               Alias(decValue, a.name)(exprId = a.exprId)
             case al: Alias => al.toAttribute
           }
-          Some(Project(projected, decoded))
+          Project(projected, decoded)
         }
       }.getOrElse(agg)
   }

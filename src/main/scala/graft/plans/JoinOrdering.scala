@@ -218,7 +218,8 @@ class TransparentJoinOrderingRule(spark: SparkSession)
     // (the q90 flip fires exactly as before). FS-metadata cost only.
     val stampKey = sides.flatten.map { case (_, d, t) =>
       graft.operators.EnsureWatermark
-        .stampIfHolds(StatsCatalog.statsPath(d, t))
+        .current(StatsCatalog.statsPath(d, t))
+        .map(_.version)
         // a maintained-evidence leaf keys on its LIVE listing and the
         // maintained stats' commit version: every maintenance moves
         // one of them, so the memo re-keys exactly when the

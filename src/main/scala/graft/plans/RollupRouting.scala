@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{coalesce, col, date_trunc, lit, sum}
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.{AggRollup, HistogramRollup, TopKRollup}
+import graft.operators.{AggRollup, EnsureWatermark, HistogramRollup, TopKRollup}
 
 /** MATERIALIZED-VIEW ROUTING as a Catalyst optimizer rule — the
   * query-rewrite layer every rollup store ships (Druid's datasource
@@ -48,9 +48,9 @@ import graft.operators.{AggRollup, HistogramRollup, TopKRollup}
   *     (spec-pinned pass-through).
   *
   * Each rollup routes only while its [[graft.operators
-  * .EnsureWatermark]] holds — the artifact must still be exactly its
-  * ensure()'s build; an out-of-band appendBatch deletes the watermark
-  * FIRST, so the rewrite vetoes itself fail-closed. Non-matching
+  * .EnsureWatermark]] commit is current — the artifact must still be
+  * exactly its ensure()'s build; an out-of-band appendBatch vetoes the
+  * commit FIRST, so the rewrite vetoes itself fail-closed. Non-matching
   * plans (extra predicates, other aggregates, non-aligned bounds,
   * computed columns, missing artifact) pass through untouched —
   * false-negative-safe, never false-positive. RollupRoutingSpec
@@ -194,6 +194,20 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
+  /** The data part of the rollup serving `dir` — AggRollup's when
+    * the aggregate wants `sum(floor(value))`, HistogramRollup's
+    * otherwise — while its commit is current: the artifact is still
+    * exactly its ensure()'s build. The append legs maintain these
+    * tables with batches that are NOT in events.parquet, and the
+    * path's fingerprint tracks only the raw table, so after such an
+    * append (which vetoes the commit) the rewrite would no longer be
+    * exact and must veto itself (r8 advice, medium). */
+  private def routedData(dir: String, wantsSum: Boolean): Option[String] = {
+    val path =
+      if (wantsSum) AggRollup.aggPath(dir) else HistogramRollup.histPath(dir)
+    EnsureWatermark.current(path).map(_.part(path, "data"))
+  }
+
   /** The exact substitute over a rollup table: per-group partial sums
     * over the same UTC-instant window (kilobytes of rollup IO for any
     * corpus size), optimized so the caller can splice its subtree.
@@ -317,18 +331,11 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (!kinds.forall(_.isDefined)) return None
     matchSource(child).flatMap { case (dir, lo, hi) =>
       val wantsSum = kinds.contains(Some(MSumFp))
-      val path =
-        if (wantsSum) AggRollup.aggPath(dir)
-        else HistogramRollup.histPath(dir)
-      val ok =
-        if (wantsSum) AggRollup.routable(path)
-        else HistogramRollup.routable(path)
-      if (!ok) None
-      else {
+      routedData(dir, wantsSum).map { data =>
         val measures =
           coalesce(sum(col("cnt")), lit(0L)).as("n") +:
             (if (wantsSum) Seq(sum(col("v_fp")).as("v")) else Nil)
-        val sub = rollupAgg(path, rollupDdl(wantsSum), lo, hi, None,
+        val sub = rollupAgg(data, rollupDdl(wantsSum), lo, hi, None,
           measures, global = true)
         val newN = sub.output.head
         val newV = if (wantsSum) sub.output(1) else newN
@@ -339,7 +346,7 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
             Alias(newV, al.name)(exprId = al.exprId)
           case (other, _) => other
         }
-        Some(Project(projected, sub))
+        Project(projected, sub)
       }
     }
   }
@@ -399,25 +406,11 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       else source.flatMap(matchSource).flatMap {
         case (dir, lo, hi) =>
           val wantsSum = kinds.contains(Some(MSumFp))
-          val path =
-            if (wantsSum) AggRollup.aggPath(dir)
-            else HistogramRollup.histPath(dir)
-          // routable = artifact ready AND still exactly ensure()'s
-          // build (ensure-manifest watermark intact + listing match):
-          // the append legs maintain these tables with batches that
-          // are NOT in events.parquet, and the path's fingerprint
-          // tracks only the raw table — after such an append the
-          // rewrite would no longer be exact, so it must veto itself
-          // (r8 advice, medium)
-          val ok =
-            if (wantsSum) AggRollup.routable(path)
-            else HistogramRollup.routable(path)
-          if (!ok) None
-          else {
+          routedData(dir, wantsSum).map { data =>
             val measures =
               coalesce(sum(col("cnt")), lit(0L)).as("n") +:
                 (if (wantsSum) Seq(sum(col("v_fp")).as("v")) else Nil)
-            val sub = rollupAgg(path, rollupDdl(wantsSum), lo, hi,
+            val sub = rollupAgg(data, rollupDdl(wantsSum), lo, hi,
               grain, measures)
             // sub.output = (event_type[, day], n[, v]); map each
             // original entry to its substitute, preserving the
@@ -446,7 +439,7 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
                 Alias(newV, al.name)(exprId = al.exprId)
               case (other, _) => other
             }
-            Some(Project(projected, sub))
+            Project(projected, sub)
           }
       }
       routed.getOrElse(agg)

@@ -113,17 +113,19 @@ object MaintainedIngest {
     // turn the maintenance guards' "covered == live" into a
     // double-merge. One partition-pruned scan, paid only on the
     // no-marker path (r15 self-review round 2).
-    var tableExisted = true
-    val existingSame =
-      try {
-        // the read itself throws on a first-ever batch (no table yet)
+    // a first-ever batch finds no table: ask the listing, not a read
+    // (reading a missing path logs a stack trace every batch); a table
+    // directory that cannot be read (a torn first write) counts as none
+    var tableExisted = fs.exists(new org.apache.hadoop.fs.Path(tablePath(dir, table)))
+    val existingSame = tableExisted &&
+      (try {
         val existing = s.read.parquet(tablePath(dir, table))
           .where(col("batch_id") === batchId)
           .select(batch.columns.map(col).toIndexedSeq: _*)
         contentIdOf(existing) == contentId
       } catch {
         case scala.util.control.NonFatal(_) => tableExisted = false; false
-      }
+      })
     if (!existingSame)
       withId.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -42,7 +42,7 @@ class EntityIndexSpec extends SparkSpec {
       assert(opened <= users.map(EntityIndex.bucketOf).distinct.size,
         s"$opened files opened for ${users.size} users")
       // exactness: the raw-scan fallback is the oracle here
-      EnsureWatermark.invalidate(EntityIndex.indexPath(sf))
+      EnsureWatermark.veto(EntityIndex.indexPath(sf))
       val (raw, viaIndex2) = EntityIndex.serve(spark, sf, users)
       assert(!viaIndex2, "broken watermark -> fail-closed raw scan")
       assert(raw.inputFiles.exists(_.contains("events.parquet")))
@@ -70,7 +70,9 @@ class EntityIndexSpec extends SparkSpec {
       assert(!viaIndex, "appended out-of-band data must veto the index path")
       // ...but the STORE itself folded: a direct read sums across the
       // duplicate (user, day) partial rows
-      val stored = spark.read.parquet(EntityIndex.indexPath(sf))
+      val path = EntityIndex.indexPath(sf)
+      val stored = spark.read.parquet(
+          EnsureWatermark.stampOf(path).get.part(path, "data"))
         .where($"user_id" === 3L)
         .agg(sum($"n")).head().getLong(0)
       assert(stored === before + 5, s"stored=$stored before=$before")
@@ -131,12 +133,13 @@ class EntityIndexSpec extends SparkSpec {
         .select($"user_id").as[Long].collect().sorted
         === Array(1L, 3L, 7L, 11L, 14L))
       // raw-scan fallback path filters too
-      EnsureWatermark.invalidate(EntityIndex.indexPath(sf))
+      val built = EnsureWatermark.stampOf(EntityIndex.indexPath(sf)).get
+      EnsureWatermark.veto(EntityIndex.indexPath(sf))
       val (raw, via2) = EntityIndex.servePurged(spark, sf, users)
       assert(!via2)
       assert(raw.select($"user_id").as[Long].collect().sorted
         === Array(1L, 7L, 14L))
-      EnsureWatermark.write(EntityIndex.indexPath(sf))
+      EnsureWatermark.rewriteStampForTest(EntityIndex.indexPath(sf))(_ => built)
       // replaying the SAME tag is idempotent; a new tag accumulates
       EntityIndex.purgeUsers(spark, sf, Seq(3L, 11L), tag = "t1")
       assert(EntityIndex.purgedKeys(spark, sf).count() === 2L)
@@ -161,7 +164,8 @@ class EntityIndexSpec extends SparkSpec {
       EntityIndex.ensure(spark, sf)
       val root = EntityIndex.indexPath(sf)
       def filesOf(bucket: Long): Set[(String, Long)] = {
-        val d = new java.io.File(s"$root/bucket=$bucket")
+        val data = EnsureWatermark.stampOf(root).get.part(root, "data")
+        val d = new java.io.File(s"$data/bucket=$bucket")
         if (!d.isDirectory) Set.empty
         else d.listFiles().filter(_.getName.endsWith(".parquet"))
           .map(f => (f.getName, f.length)).toSet
@@ -197,13 +201,14 @@ class EntityIndexSpec extends SparkSpec {
       val (idx, via) = EntityIndex.serveWindow(spark, sf, users, lo, hi)
       assert(via)
       val got = idx.collect().map(_.toString).sorted
-      EnsureWatermark.invalidate(EntityIndex.indexPath(sf))
+      val built = EnsureWatermark.stampOf(EntityIndex.indexPath(sf)).get
+      EnsureWatermark.veto(EntityIndex.indexPath(sf))
       val (raw, via2) = EntityIndex.serveWindow(spark, sf, users, lo, hi)
       assert(!via2, "broken watermark -> raw-scan fallback")
       assert(raw.collect().map(_.toString).sorted.sameElements(got),
         "windowed index serve must equal the raw windowed aggregate")
       // the window genuinely restricts: fewer active days than lifetime
-      EnsureWatermark.write(EntityIndex.indexPath(sf))
+      EnsureWatermark.rewriteStampForTest(EntityIndex.indexPath(sf))(_ => built)
       val lifetime = EntityIndex.serve(spark, sf, Seq(3L))._1
         .select($"days").as[Long].head()
       val windowed = EntityIndex.serveWindow(spark, sf, Seq(3L), lo, hi)._1

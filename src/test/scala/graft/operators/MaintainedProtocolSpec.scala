@@ -4,14 +4,21 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The commit-and-serve protocol the eight O(batch)-maintained
-  * families share ([[EnsureWatermark.commit]] /
-  * [[EnsureWatermark.maintain]]), checked family by family over one
-  * table: (a) a current artifact's probe launches no Spark job; (b) a
-  * stale covered fingerprint and a torn part both read as absent;
-  * (c) a retry after "data committed, stamp not" merges the batch
-  * once; (d) an artifact in the stamp-less older layout (`meta/`,
-  * `data/stamp/`) reads as absent and rebuilds in place. */
+/** The commit-and-serve protocol every stamped artifact shares
+  * ([[EnsureWatermark.commit]] / [[EnsureWatermark.maintain]] /
+  * [[EnsureWatermark.veto]]), checked family by family. The eight
+  * O(batch)-maintained families, over one table: (a) a current
+  * artifact's probe launches no Spark job; (b) a stale covered
+  * fingerprint and a torn part both read as absent; (c) a retry after
+  * "data committed, stamp not" merges the batch once; (d) an artifact
+  * in the stamp-less older layout (`meta/`, `data/stamp/`) reads as
+  * absent and rebuilds in place. The fingerprint-keyed families, over
+  * one events table: (a) and (b), an out-of-band file in a committed
+  * version reads as absent, an artifact in the older ensure-manifest
+  * layout reads as absent and rebuilds in place, and an in-place
+  * mutator vetoes serving before it writes. And (e): two builders
+  * committing one fingerprint converge on one whole version while a
+  * reader only ever reads whole versions. */
 class MaintainedProtocolSpec extends SparkSpec {
   import spark.implicits._
 
@@ -155,4 +162,204 @@ class MaintainedProtocolSpec extends SparkSpec {
       }
     }
   }
+
+  // ------------------------------------------------------------------
+  // (e) concurrent builders
+  // ------------------------------------------------------------------
+
+  test("two builders of one fingerprint converge on one whole version while a reader reads") {
+    withIndexRoot("graft-protocol-race") {
+      val dir = tmpDir("graft-protocol-race-data")
+      rowsOf(1L, 3000L).write.mode("overwrite").parquet(s"$dir/$T.parquet")
+      val path = s"${IndexStore.root}/race"
+      def current() = EnsureWatermark.current(path, Seq("data"), dir, T)
+      def write(v: String): Unit =
+        rowsOf(1L, 3000L).coalesce(1).write.parquet(s"$v/data")
+      import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+      val bWritten = new CountDownLatch(1)
+      val aCommitted = new CountDownLatch(1)
+      val problems = new ConcurrentLinkedQueue[String]()
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def thread(body: => Unit): Thread = {
+        val t = new Thread(() =>
+          try body catch { case e: Throwable => problems.add(e.toString); () })
+        t.start()
+        t
+      }
+      // the reader: once a version served, every later probe serves a
+      // whole version too
+      var served = false
+      val reader = thread {
+        while (!done.get()) current() match {
+          case Some(st) =>
+            served = true
+            val n = spark.read.parquet(st.part(path, "data")).count()
+            if (n != 3000L) problems.add(s"a reader saw $n rows")
+          case None =>
+            if (served) problems.add("a served artifact read as absent")
+        }
+      }
+      // A's version is written and waits for B's; B's waits for A's
+      // commit — the interleaving in which A's commit lands while B's
+      // version is complete but not yet stamped
+      val a = thread {
+        EnsureWatermark.commit(path, dir, T, 3000L) { v =>
+          write(v)
+          assert(bWritten.await(120, TimeUnit.SECONDS))
+        }
+        aCommitted.countDown()
+      }
+      val b = thread {
+        EnsureWatermark.commit(path, dir, T, 3000L) { v =>
+          write(v)
+          bWritten.countDown()
+          assert(aCommitted.await(120, TimeUnit.SECONDS))
+        }
+      }
+      a.join(); b.join()
+      done.set(true); reader.join()
+      assert(problems.isEmpty, problems.toArray.mkString("; "))
+      val st = current().getOrElse(fail("the converged artifact must serve"))
+      assert(spark.read.parquet(st.part(path, "data")).count() === 3000L)
+      assert(versions(path).size === 1, "the losing version is retired")
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // The fingerprint-keyed families
+  // ------------------------------------------------------------------
+
+  /** One keyed family: its artifact path, build, serving probe, and —
+    * for the families maintained in place — its append mutator. */
+  private case class Keyed(name: String, path: String => String,
+      ensure: String => Unit, probe: String => Option[Any],
+      mutate: Option[(String, DataFrame) => Unit] = None)
+
+  private val Ev = "events"
+
+  private val keyedFamilies = Seq(
+    Keyed("histogram rollup", HistogramRollup.histPath,
+      HistogramRollup.ensure(spark, _),
+      d => EnsureWatermark.current(HistogramRollup.histPath(d)),
+      Some(HistogramRollup.appendBatch(spark, _, _))),
+    Keyed("agg rollup", AggRollup.aggPath, AggRollup.ensure(spark, _),
+      d => EnsureWatermark.current(AggRollup.aggPath(d)),
+      Some(AggRollup.appendBatch(spark, _, _))),
+    Keyed("top-k rollup", TopKRollup.topkPath, TopKRollup.ensure(spark, _),
+      TopKRollup.routable, Some(TopKRollup.appendBatch(spark, _, _, 1L))),
+    Keyed("entity index", EntityIndex.indexPath, EntityIndex.ensure(spark, _),
+      d => Some(EntityIndex.serveWindow(spark, d, Seq(1L),
+        "2024-03-01 00:00:00", "2024-03-04 00:00:00")).filter(_._2),
+      Some(EntityIndex.appendBatch(spark, _, _))),
+    Keyed("dictionary", Dictionary.dictPath(_, Ev, "event_type"),
+      Dictionary.ensure(spark, _, Ev, "event_type"),
+      d => EnsureWatermark.current(Dictionary.dictPath(d, Ev, "event_type"))),
+    Keyed("catalog stats", StatsCatalog.statsPath(_, Ev),
+      StatsCatalog.ensure(spark, _, Ev), StatsCatalog.statsIfReady(spark, _, Ev)),
+    Keyed("catalog key profile", StatsCatalog.keyProfilePath(_, Ev, "user_id"),
+      StatsCatalog.ensureKeyProfile(spark, _, Ev, "user_id", hotFreq = 2L),
+      StatsCatalog.keyProfile(spark, _, Ev, "user_id")),
+    Keyed("catalog column group",
+      StatsCatalog.groupStatsPath(_, Ev, Seq("event_type", "user_id")),
+      StatsCatalog.ensureColumnGroup(spark, _, Ev, Seq("event_type", "user_id")),
+      StatsCatalog.columnGroupIfReady(spark, _, Ev, Seq("event_type", "user_id"))),
+    Keyed("catalog MCV list", StatsCatalog.mcvPath(_, Ev, "event_type"),
+      StatsCatalog.ensureMcv(spark, _, Ev, "event_type"),
+      StatsCatalog.mcvIfReady(spark, _, Ev, "event_type")))
+
+  private def events: DataFrame =
+    (0L until 600L).map { i =>
+      (i, java.sql.Timestamp.valueOf(s"2024-03-0${1 + i % 3} ${10 + i % 12}:00:00"),
+        i % 17, Seq("view", "click", "buy")((i % 3).toInt), (i % 23).toDouble)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value")
+
+  private def parquetFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) parquetFiles(f)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    }
+
+  keyedFamilies.foreach { f =>
+    test(s"${f.name}: job-free current probe, fail-closed stale, torn and out-of-band reads, manifest-layout rebuild, veto before an in-place write") {
+      withIndexRoot("graft-protocol-keyed") {
+        val dir = tmpDir("graft-protocol-keyed-data")
+        events.write.mode("overwrite").parquet(s"$dir/$Ev.parquet")
+        f.ensure(dir)
+        val path = f.path(dir)
+
+        // (a) every probe after the first is FS metadata only
+        assert(f.probe(dir).isDefined, "a fresh build must serve")
+        assert(jobsDuring(assert(f.probe(dir).isDefined)) === 0,
+          "a current artifact's probe must launch no Spark job")
+
+        // (b) a stale stamp and a torn part read as absent
+        val built = EnsureWatermark.stampOf(path).getOrElse(fail("no stamp"))
+        EnsureWatermark.rewriteStampForTest(path)(_.copy(covered = "stale"))
+        assert(f.probe(dir).isEmpty, "a stale stamp must not serve")
+        EnsureWatermark.rewriteStampForTest(path)(_ => built)
+        assert(f.probe(dir).isDefined)
+        val data = new java.io.File(built.part(path, "data"))
+        assert(new java.io.File(data, "_SUCCESS").delete())
+        assert(f.probe(dir).isEmpty, "a torn part must not serve")
+        f.ensure(dir)
+        assert(f.probe(dir).isDefined, "ensure must rebuild a torn artifact")
+
+        // an out-of-band file dropped into the committed version
+        val committed = EnsureWatermark.stampOf(path).get
+        val victim = parquetFiles(new java.io.File(committed.part(path, "data"))).head
+        java.nio.file.Files.copy(victim.toPath,
+          victim.toPath.resolveSibling(s"oob-${victim.getName}"))
+        assert(f.probe(dir).isEmpty, "an out-of-band file must veto serving")
+        f.ensure(dir)
+        assert(f.probe(dir).isDefined, "ensure must rebuild it")
+
+        // the older ensure-manifest layout: data files, _SUCCESS and a
+        // manifest directly under the artifact path
+        IndexStore.removeArtifact(path)
+        events.coalesce(1).write.parquet(path)
+        val listing = parquetFiles(new java.io.File(path))
+          .map(p => s"${p.getName}:${p.length}").mkString("\n")
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(path, "_GRAFT_ENSURE_MANIFEST"), listing)
+        assert(f.probe(dir).isEmpty, "a manifest-layout artifact reads as absent")
+        f.ensure(dir)
+        assert(f.probe(dir).isDefined, "ensure rebuilds it in place")
+        val left = new java.io.File(path).list().toSeq
+        assert(left.forall(n => n.startsWith("v_") || n.startsWith("_GRAFT_STAMP.") ||
+            n.startsWith(".")), s"the older layout's files are retired: $left")
+
+        // an in-place mutator vetoes serving before it writes: the
+        // batch's own rows check, as the write evaluates them, that
+        // the veto is already on disk
+        f.mutate match {
+          case Some(mutate) =>
+            val p = path
+            val onValue = udf { (v: Double) =>
+              require(MaintainedProtocolSpec.vetoedOnDisk(p), "written before the veto"); v }
+            val onUser = udf { (u: Long) =>
+              require(MaintainedProtocolSpec.vetoedOnDisk(p), "written before the veto"); u }
+            mutate(dir, graft.Tables(spark, dir, Ev)
+              .withColumn("value", onValue(col("value")))
+              .withColumn("user_id", onUser(col("user_id"))))
+            assert(f.probe(dir).isEmpty, "an appended artifact must not serve")
+            assert(EnsureWatermark.intact(path, EnsureWatermark.Data).isDefined,
+              "an appended artifact stays intact for its maintained readers")
+          case None =>
+            EnsureWatermark.veto(path)
+            assert(f.probe(dir).isEmpty, "a vetoed artifact must not serve")
+        }
+      }
+    }
+  }
+}
+
+object MaintainedProtocolSpec {
+
+  /** Whether the latest stamp of the local artifact at `path`, read
+    * straight off the disk, is a veto — checkable from inside a task. */
+  def vetoedOnDisk(path: String): Boolean =
+    Option(new java.io.File(path).listFiles()).toSeq.flatten
+      .filter(_.getName.matches("""_GRAFT_STAMP\.\d+"""))
+      .maxByOption(_.getName.stripPrefix("_GRAFT_STAMP.").toLong)
+      .exists(f => java.nio.file.Files.readString(f.toPath).contains("covered=vetoed"))
 }

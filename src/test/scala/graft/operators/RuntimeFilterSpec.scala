@@ -55,7 +55,7 @@ class RuntimeFilterSpec extends SparkSpec {
       // that view registers
       graft.GraftCatalog.registerRollups(spark, sf, layers = Seq("hll_daily"))
       assert(spark.catalog.tableExists("hll_daily"))
-      assert(!IndexStore.artifactReady(HistogramRollup.histPath(sf)),
+      assert(EnsureWatermark.stampOf(HistogramRollup.histPath(sf)).isEmpty,
         "an unchosen layer must not pay its build scan")
       assert(!spark.catalog.tableExists("hist_daily"),
         "an unchosen layer must not register")

@@ -245,6 +245,24 @@ class SampledAggSpec extends SparkSpec {
     }
   }
 
+  test("q95's serve ladder decides each rung in one job") {
+    withIndexRoot("graft-aqp-q95-jobs") {
+      val dir = tmpDir("graft-aqp-q95-data")
+      (0L until 20000L).map(i => (i, new java.sql.Timestamp(1704067200000L + i * 60000L),
+          i % 50, "view", (i * 37 % 100).toDouble))
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      def run(): Unit = graft.queries.RelationalQueries.q95ToleranceSums
+        .fn(spark, dir).write.format("noop").mode("overwrite").save()
+      run() // builds the fixture and its sample
+      // two sample rungs decide per run — the loose leg's serves, the
+      // tight leg's fails its bound; each is one aggregate query (a run
+      // took 17 jobs when the envelope and the worst bound were two)
+      val jobs = jobsDuring(run())
+      assert(jobs <= 11, s"q95 ran $jobs jobs")
+    }
+  }
+
   test("group rollup: error-0 rung dominates the ladder, maintains additively at O(batch), fails closed stale") {
     withIndexRoot("graft-aqp-roll") {
       val dir = tmpDir("graft-aqp-roll-data")

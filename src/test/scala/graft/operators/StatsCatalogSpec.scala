@@ -52,7 +52,7 @@ class StatsCatalogSpec extends SparkSpec {
       // absent stats: no proof, no build (an optimizer rule must not
       // launch jobs)
       assert(!StatsCatalog.uniqueNonNull(spark, dir, "dim", "k"))
-      assert(!IndexStore.artifactReady(StatsCatalog.statsPath(dir, "dim")))
+      assert(EnsureWatermark.stampOf(StatsCatalog.statsPath(dir, "dim")).isEmpty)
       // approx stats exist and even happen to be numerically right —
       // still refused: only exact mode licenses a rewrite
       StatsCatalog.ensureApprox(spark, dir, "dim")
@@ -62,7 +62,7 @@ class StatsCatalogSpec extends SparkSpec {
       assert(StatsCatalog.uniqueNonNull(spark, dir, "dim", "k"))
       assert(!StatsCatalog.uniqueNonNull(spark, dir, "dim", "grp"))
       // artifact-side mutation vetoes the proof until reEnsure
-      EnsureWatermark.invalidate(StatsCatalog.statsPath(dir, "dim"))
+      EnsureWatermark.veto(StatsCatalog.statsPath(dir, "dim"))
       assert(!StatsCatalog.uniqueNonNull(spark, dir, "dim", "k"))
       StatsCatalog.reEnsure(spark, dir, "dim")
       assert(StatsCatalog.uniqueNonNull(spark, dir, "dim", "k"))
@@ -104,7 +104,7 @@ class StatsCatalogSpec extends SparkSpec {
         "un-ANALYZEd tables contribute no skew signal")
       assert(!StatsCatalog.dictionaryShaped(spark, dir, "fact", "k"),
         "the screen must not launch an ANALYZE")
-      assert(!IndexStore.artifactReady(StatsCatalog.statsPath(dir, "fact")),
+      assert(EnsureWatermark.stampOf(StatsCatalog.statsPath(dir, "fact")).isEmpty,
         "no advice call may have built stats")
       Seq("fact", "dim").foreach(StatsCatalog.ensure(spark, dir, _))
       // the smaller side fits the budget -> broadcast it
@@ -220,7 +220,7 @@ class StatsCatalogSpec extends SparkSpec {
       assert(StatsCatalog.statsArtifactReads.get() === r0 + 1,
         "five proof calls must collect the stats artifact exactly once")
       // a broken watermark fails closed BEFORE any read
-      EnsureWatermark.invalidate(StatsCatalog.statsPath(dir, "dim"))
+      EnsureWatermark.veto(StatsCatalog.statsPath(dir, "dim"))
       assert(!StatsCatalog.uniqueNonNull(spark, dir, "dim", "k"))
       assert(StatsCatalog.statsArtifactReads.get() === r0 + 1,
         "a vetoed proof must not read the artifact")
@@ -257,7 +257,7 @@ class StatsCatalogSpec extends SparkSpec {
         "the rebuilt profile must be collected afresh")
       assert(jobsDuring(profile()) === 0)
       // a broken watermark fails closed BEFORE any read
-      EnsureWatermark.invalidate(StatsCatalog.keyProfilePath(dir, "kf", "k"))
+      EnsureWatermark.veto(StatsCatalog.keyProfilePath(dir, "kf", "k"))
       assert(jobsDuring(assert(profile().isEmpty)) === 0,
         "a vetoed profile must not read the artifact")
     }
@@ -334,7 +334,7 @@ class StatsCatalogSpec extends SparkSpec {
       assert(CE.estimateRows(spark, shape3, useColumnGroups = true) ===
         Some(BigInt(75)))
       // a stale watermark refuses the group (and the FD) fail-closed
-      EnsureWatermark.invalidate(
+      EnsureWatermark.veto(
         StatsCatalog.groupStatsPath(dir, "corr", Seq("a", "b")))
       assert(StatsCatalog.columnGroupIfReady(spark, dir, "corr",
         Seq("a", "b")).isEmpty)

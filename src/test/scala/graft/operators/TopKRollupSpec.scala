@@ -128,12 +128,12 @@ class TopKRollupSpec extends SparkSpec {
       TopKRollup.ensure(spark, dir)
       val single = TopKRollup.heavyHitters(spark, dir, lo, hi, topN = 10)
         .collect().map(_.toString).sorted.toSeq
-      assert(TopKRollup.routable(dir), "a fresh ensure must be routable")
+      assert(TopKRollup.routable(dir).isDefined, "a fresh ensure must be routable")
       val extra = fixture.take(200)
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       TopKRollup.appendBatch(spark, dir, extra, batchId = 3L)
       TopKRollup.processStreamBatch(spark, dir, extra, batchId = 1L)
-      assert(!TopKRollup.routable(dir),
+      assert(TopKRollup.routable(dir).isEmpty,
         "appends and stream segments must veto routing fail-closed")
       val widened = TopKRollup.heavyHitters(spark, dir, lo, hi, topN = 10)
         .collect().map(_.toString).sorted.toSeq
@@ -144,7 +144,7 @@ class TopKRollupSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
       assert(repaired === single,
         "reEnsure must re-tighten to the single-build bounds bit-for-bit")
-      assert(TopKRollup.routable(dir), "reEnsure must restore routing")
+      assert(TopKRollup.routable(dir).isDefined, "reEnsure must restore routing")
     }
   }
 

@@ -67,7 +67,7 @@ class DictionaryRoutingSpec extends SparkSpec {
         assert(!groupKeys(rollupShape).contains("code"),
           "count-only shapes must stay for the kilobyte rollup serve")
         // artifact-side mutation breaks the watermark: untouched again
-        EnsureWatermark.invalidate(
+        EnsureWatermark.veto(
           Dictionary.dictPath(sf, "events", "event_type"))
         assert(!groupKeys(shape()).contains("code"))
       }

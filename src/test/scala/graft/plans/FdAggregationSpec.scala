@@ -160,7 +160,7 @@ class FdAggregationSpec extends SparkSpec {
         // proven, then the artifact goes stale -> fail-closed again
         StatsCatalog.ensureColumnGroup(spark, dir, "fd", Seq("k", "name"))
         assert(groupSizes(nameShape) === Seq(1))
-        EnsureWatermark.invalidate(
+        EnsureWatermark.veto(
           StatsCatalog.groupStatsPath(dir, "fd", Seq("k", "name")))
         assert(groupSizes(nameShape) === Seq(2), "stale artifact -> no rewrite")
       }

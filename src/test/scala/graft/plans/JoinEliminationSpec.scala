@@ -85,7 +85,7 @@ class JoinEliminationSpec extends SparkSpec {
       assert(joins(fanout).nonEmpty)
       assert(fanout.count() === 7L, "duplicate mk=1 genuinely fans out")
       // (d) stale stats watermark -> stays, fail-closed
-      EnsureWatermark.invalidate(StatsCatalog.statsPath(dir, "dim"))
+      EnsureWatermark.veto(StatsCatalog.statsPath(dir, "dim"))
       assert(joins(leftJoined(dir).select($"seg", $"v")).nonEmpty)
       StatsCatalog.reEnsure(spark, dir, "dim")
       assert(joins(leftJoined(dir).select($"seg", $"v")).isEmpty)

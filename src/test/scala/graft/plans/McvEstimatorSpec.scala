@@ -92,7 +92,7 @@ class McvEstimatorSpec extends SparkSpec {
       assert(est(filteredJoin, mcv = true) === viaMcvOff,
         "filtered side -> uniform join formula")
       // stale artifact (watermark invalidated) -> uniform again
-      EnsureWatermark.invalidate(StatsCatalog.mcvPath(dir, "zfact", "k"))
+      EnsureWatermark.veto(StatsCatalog.mcvPath(dir, "zfact", "k"))
       assert(est(hot, mcv = true) === est(hot, mcv = false),
         "stale artifact -> uniform")
     }
