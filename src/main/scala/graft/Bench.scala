@@ -82,51 +82,14 @@ object Bench {
       spark.catalog.clearCache()
       (name, times.minOption, times)
     }
-    // per-query noise = slowest/fastest successful rep — the r12
-    // tripwire's raw material: genuine GC noise shows ONE outlier rep
-    // (high noise, trustworthy min); a degraded container shows all
-    // reps agreeing at an inflated level (low noise, suspect min),
-    // which only a prior-round comparison (below) can catch
+    // per-query noise = slowest/fastest successful rep: genuine GC
+    // noise shows ONE outlier rep (high noise, trustworthy min); a
+    // degraded host shows all reps agreeing at an inflated level (low
+    // noise, suspect min), which only a same-host re-run can catch
     val noise = results.collect { case (_, Some(mn), ts) if mn > 0 =>
       ts.max / mn }
     val p90Noise = if (noise.isEmpty) 0.0 else
       noise.sorted.apply(((noise.size - 1) * 9) / 10)
-    // drift tripwire vs the prior round's driver artifact (BENCH_r*.json
-    // beside the repo): median ratio over common query ids >1.5× means
-    // the environment moved, not the code — the board must re-measure
-    // before citing this run (the check the r12 artifact would have
-    // failed). Regex-parse the flat {"id":sec} map; no JSON lib needed.
-    val drift: Option[(String, Double)] = {
-      // the artifact dir is overridable and a missing dir yields a
-      // null listFiles — guard both, or a checkout outside /root/repo
-      // NPEs AFTER the whole timed run (r13 review)
-      val artifactDir = sys.env.getOrElse("SPARK_GRAFT_ROUND_DIR", "/root/repo")
-      val prior = Option(new java.io.File(artifactDir).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-        .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
-        .lastOption
-      prior.flatMap { f =>
-        val txt = scala.util.Try(
-          java.nio.file.Files.readString(f.toPath)).getOrElse("")
-        // the driver's artifact embeds the stdout JSON inside a "tail"
-        // string with ESCAPED quotes — accept both raw and \"-escaped
-        val m = """\\?"(q\d+|[tdcvm]\d+)\\?":([0-9.]+)""".r
-          .findAllMatchIn(txt).map(x => x.group(1) -> x.group(2).toDouble)
-          .toMap
-        val ratios = results.collect {
-          case (name, Some(mn), _) if m.getOrElse(idOf(name), 0.0) > 0.05 && mn > 0.05 =>
-            mn / m(idOf(name))
-        }.sorted
-        // a SPARK_GRAFT_ONLY subset is too noisy to arbitrate an
-        // environment question — only full runs qualify
-        if (ratios.size < 50) None
-        else Some((f.getName, ratios(ratios.size / 2)))
-      }
-    }
-    drift.filter(_._2 > 1.5).foreach { case (f, r) =>
-      System.err.println(f"[bench] DRIFT TRIPWIRE: median common-query ratio $r%.2f vs $f exceeds 1.5 — environment suspect, re-measure before citing this run")
-    }
     // The driver captures only the LAST ~2000 chars of stdout and
     // parses the JSON line out of that tail; 74+ full query names push
     // the line past the window and the head gets truncated (observed:
@@ -153,10 +116,8 @@ object Bench {
     val fullReps = results.map { case (k, _, ts) =>
       "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val driftJson = drift.map { case (f, r) =>
-      f""","drift_vs":"$f","drift_median_ratio":$r%.3f""" }.getOrElse("")
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$fullQs,"failed":$fullFailed,"reps":$fullReps,"noise_p90":$p90Noise%.3f$driftJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$fullQs,"failed":$fullFailed,"reps":$fullReps,"noise_p90":$p90Noise%.3f,"sf":"$sfDir"}"""
     // Default the full-fidelity dump AWAY from the repo root: a
     // sf0.001 smoke or SPARK_GRAFT_ONLY subset run must never clobber
     // the round-final sf0.1 artifact (that exact hygiene failure
@@ -170,7 +131,7 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"noise_p90":$p90Noise%.3f$driftJson,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"noise_p90":$p90Noise%.3f,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

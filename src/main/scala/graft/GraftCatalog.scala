@@ -30,26 +30,17 @@ object GraftCatalog {
 
   /** Every registrable rollup layer: view name → (ensure, artifact
     * path). A Map so [[registerRollups]]'s layer list fails loud on
-    * a typo instead of silently registering nothing. */
+    * a typo instead of silently registering nothing. Each daily
+    * rollup's view is its leaf, bound to its committed data part. */
   private val RollupEnsures: Map[String, (SparkSession, String) => String] =
-    Map(
-      "hll_daily" -> ((s, d) => {
-        operators.SketchRollup.ensure(s, d)
-        operators.SketchRollup.sketchPath(d) }),
-      "hist_daily" -> ((s, d) => operators.HistogramRollup.stored(s, d)),
-      "file_stats" -> ((s, d) => {
+    Seq(operators.SketchRollup.rollup, operators.HistogramRollup.rollup,
+        operators.AggRollup.rollup, operators.KmvRollup.rollup,
+        operators.DecayedFeatures.rollup, operators.CmsRollup.rollup)
+      .map(r => r.leaf -> ((s: SparkSession, d: String) => r.stored(s, d)))
+      .toMap +
+      ("file_stats" -> ((s, d) => {
         operators.MinMaxManifest.ensure(s, d)
-        operators.MinMaxManifest.manifestPath(d) }),
-      "agg_daily" -> ((s, d) => operators.AggRollup.stored(s, d)),
-      "kmv_daily" -> ((s, d) => {
-        operators.KmvRollup.ensure(s, d)
-        operators.KmvRollup.sketchPath(d) }),
-      "feat_daily" -> ((s, d) => {
-        operators.DecayedFeatures.ensure(s, d)
-        operators.DecayedFeatures.dailyPath(d) }),
-      "cms_daily" -> ((s, d) => {
-        operators.CmsRollup.ensure(s, d)
-        operators.CmsRollup.cmsPath(d) }))
+        operators.MinMaxManifest.manifestPath(d) }))
 
   /** The full layer list, in registration order. */
   val RollupLayers: Seq[String] = Seq("hll_daily", "hist_daily",
@@ -58,9 +49,9 @@ object GraftCatalog {
   /** (session identity, view name) → the artifact path AND file
     * listing its view was registered over — the warm-registration
     * zero-jobs guard. The LISTING matters (r16 review #2): the
-    * streaming/CDC appendBatch faces add files at the SAME
-    * fingerprint-keyed path, so a path-only guard would pin a
-    * permanently stale view over an appended rollup. */
+    * appendBatch faces add files to the SAME committed data part, so
+    * a path-only guard would pin a permanently stale view over an
+    * appended rollup. */
   private val registeredViews =
     new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
 

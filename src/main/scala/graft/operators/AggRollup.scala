@@ -26,17 +26,13 @@ import org.apache.spark.sql.functions._
   * both engines, so the q47 oracle replays the raw aggregate and the
   * hash gate IS the exactness proof.
   *
-  * Lifecycle = the [[HistogramRollup]] contract verbatim, via the
-  * shared [[EnsureWatermark]]: [[ensure]] commits once;
+  * Lifecycle = the shared [[DailyRollup]]: [[ensure]] commits once;
   * [[appendBatch]] (out-of-band data) vetoes the commit FIRST so
   * routing fails closed; [[reEnsure]] is the repair path, a fresh
   * commit from the raw table.
   * Partials merge by SUM (late days add; replays are NOT idempotent —
   * the appendBatch caller owns batch-id discipline). */
 object AggRollup {
-
-  def aggPath(dir: String): String =
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/agg_daily"
 
   /** The per-batch (day, event_type) → (cnt, v_fp) projection shared
     * by the build and the append leg. `v_fp` is NULL for a cell whose
@@ -48,47 +44,33 @@ object AggRollup {
       .groupBy("day", "event_type")
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("v_fp"))
 
-  private def build(s: SparkSession, dir: String)(data: String): Unit =
-    partials(graft.Tables(s, dir, "events")).coalesce(1).write.parquet(data)
+  private[graft] val rollup = new DailyRollup("agg_daily",
+    "day TIMESTAMP, event_type STRING, cnt BIGINT, v_fp BIGINT")(partials)
 
-  /** The committed table's data part, built once when absent. Like
-    * [[HistogramRollup.ensure]], a vetoed (appended-to) table is kept,
-    * not rebuilt — the repair path is [[reEnsure]]. */
-  private[graft] def stored(s: SparkSession, dir: String): String =
-    EnsureWatermark.ensured(aggPath(dir), dir, "events")(build(s, dir))
+  def aggPath(dir: String): String = rollup.path(dir)
 
-  /** Build the daily (cnt, v_fp) table once. */
-  def ensure(s: SparkSession, dir: String): Unit = { stored(s, dir); () }
+  /** Build the daily (cnt, v_fp) table once; an appended-to (vetoed)
+    * table is kept — the repair path is [[reEnsure]]. */
+  def ensure(s: SparkSession, dir: String): Unit = rollup.ensure(s, dir)
 
   /** ROUTING REPAIR — a fresh commit from the raw table; out-of-band
     * appended partials are dropped by design (they are what made
     * routing inexact). */
-  def reEnsure(s: SparkSession, dir: String): Unit =
-    EnsureWatermark.commitData(aggPath(dir), dir, "events")(build(s, dir))
+  def reEnsure(s: SparkSession, dir: String): Unit = rollup.reEnsure(s, dir)
 
   /** Incremental maintenance: a batch's partials append; the
     * read-side SUM folds duplicate (day, event_type) keys. Vetoes
     * routing FIRST (fail-closed — the appended batch is not in
     * events.parquet, so the rollup stops being the raw aggregate). */
-  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    val path = aggPath(dir)
-    val st = EnsureWatermark.veto(path)
-    require(st.isDefined, "agg rollup must be built before appending")
-    partials(batch)
-      .coalesce(1).write.mode("append").parquet(st.get.part(path, "data"))
-  }
+  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit =
+    rollup.append(s, dir, partials(batch))
 
   /** Direct read face (the routed rewrite builds the same shape):
     * per-event_type (n, v_fp) over [lo, hi) from the rollup only. */
   def merged(s: SparkSession, dir: String, lo: String,
-      hi: String): DataFrame = {
-    IndexStore.readAs(s,
-        "day TIMESTAMP, event_type STRING, cnt BIGINT, v_fp BIGINT",
-        stored(s, dir))
-      .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-        col("day") < lit(MinMaxManifest.utc(hi)))
+      hi: String): DataFrame =
+    rollup.window(s, dir, lo, hi)
       .groupBy(col("event_type"))
       .agg(coalesce(sum(col("cnt")), lit(0L)).as("n"),
         sum(col("v_fp")).as("v_fp"))
-  }
 }

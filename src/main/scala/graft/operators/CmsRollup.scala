@@ -46,9 +46,6 @@ object CmsRollup {
   val Depth = 4
   val Width = 1024L
 
-  def cmsPath(dir: String): String =
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/cms_daily"
-
   /** The (r, b) bucket pairs of one key column — an array to EXPLODE,
     * so the batch is scanned once for all Depth rows. */
   private def rbOf(key: Column): Column =
@@ -65,104 +62,69 @@ object CmsRollup {
       .groupBy("day", "r", "b")
       .agg(count(lit(1)).as("c"))
 
+  private[graft] val rollup = new DailyRollup("cms_daily",
+    "day TIMESTAMP, r INT, b BIGINT, c BIGINT")(counters)
+
+  def cmsPath(dir: String): String = rollup.path(dir)
+
   /** Build the daily counter table once per corpus lifetime. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    val path = cmsPath(dir)
-    if (IndexStore.artifactReady(path)) return
-    counters(graft.Tables(s, dir, "events"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+  def ensure(s: SparkSession, dir: String): Unit = rollup.ensure(s, dir)
 
   /** Late-day / incremental maintenance: a batch's counters append;
     * the read-side SUM folds duplicate (day, r, b) keys. NOT
     * replay-idempotent (counts add) — exactly-once per batch is the
     * caller's contract, the [[HistogramRollup.appendBatch]]
-    * discipline (batch-id-scope the write if the source replays). */
-  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    require(IndexStore.artifactReady(cmsPath(dir)),
-      "cms table must be built before appending")
-    counters(batch)
-      .coalesce(1).write.mode("append").parquet(cmsPath(dir))
-  }
+    * discipline (use [[processStreamBatch]] if the source replays).
+    * Vetoes the commit first, like every in-place append. */
+  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit =
+    rollup.append(s, dir, counters(batch))
 
   /** STREAMING maintenance — the exactly-once face of [[appendBatch]]
     * (the [[HistogramRollup.processStreamBatch]] discipline shared by
     * all three sum-merge rollups): each micro-batch's grid lands in
-    * its OWN `batch=b<id>` partition, overwrite scoped to that
-    * partition, so a checkpoint-replayed batch overwrites itself
-    * instead of double-counting. [[mergedCountersMaintained]] folds
-    * only COMMITTED batches in. */
-  def streamPath(dir: String): String = cmsPath(dir) + "_stream"
-
+    * its OWN batch-id-scoped side batch, so a checkpoint-replayed
+    * batch overwrites itself instead of double-counting.
+    * [[mergedCountersMaintained]] folds only COMMITTED batches in. */
   def processStreamBatch(s: SparkSession, dir: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    ensure(s, dir)
-    counters(batch).coalesce(1).write.mode("overwrite")
-      .parquet(s"${streamPath(dir)}/batch=b$batchId")
-  }
+      batchId: Long): Unit =
+    rollup.stream(s, dir, counters(batch), batchId)
 
   /** CDC DELETE maintenance — sum-merge is invertible, so a delete
-    * batch retracts as NEGATIVE counters in its own `batch=<tag>`
-    * partition (replaying a tag overwrites itself — idempotent;
+    * batch retracts as NEGATIVE counters in its own tag-scoped side
+    * batch (replaying a tag overwrites itself — idempotent;
     * sequential tags accumulate; the base table is never mutated).
     * Net counters stay ≥ 0 when deletes are a subset of prior
     * inserts — the CDC contract. */
-  def cdcDeltaPath(dir: String): String = cmsPath(dir) + "_cdc_deltas"
-
   def applyDeletes(s: SparkSession, dir: String, deleted: DataFrame,
-      batchTag: String = "batch0"): Unit = {
-    ensure(s, dir)
-    counters(deleted)
-      .select(col("day"), col("r"), col("b"), (-col("c")).as("c"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${cdcDeltaPath(dir)}/batch=$batchTag")
-  }
+      batchTag: String = "batch0"): Unit =
+    rollup.retract(s, dir, counters(deleted)
+      .select(col("day"), col("r"), col("b"), (-col("c")).as("c")), batchTag)
 
   /** SUM-merge the daily grids over [lo, hi): the merged Depth×Width
     * counter grid (≤ Depth·Width rows however wide the window). */
   def mergedCounters(s: SparkSession, dir: String, lo: String,
-      hi: String): DataFrame = {
-    ensure(s, dir)
-    IndexStore.readAs(s, "day TIMESTAMP, r INT, b BIGINT, c BIGINT",
-        cmsPath(dir))
-      .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-        col("day") < lit(MinMaxManifest.utc(hi)))
-      .groupBy(col("r"), col("b"))
-      .agg(sum(col("c")).as("c"))
-  }
+      hi: String): DataFrame =
+    sumCounters(rollup.window(s, dir, lo, hi))
 
-  /** Merged counters with committed CDC retractions folded in (the
-    * [[IndexStore.readyBatches]] rule — a torn delta batch
-    * contributes nothing until its replay completes it). */
+  private def sumCounters(rows: DataFrame): DataFrame =
+    rows.groupBy(col("r"), col("b")).agg(sum(col("c")).as("c"))
+
+  /** Merged counters with committed CDC retractions folded in (a torn
+    * delta batch contributes nothing until its replay completes it —
+    * [[DailyRollup.read]]). */
   def mergedCountersWithDeltas(s: SparkSession, dir: String, lo: String,
       hi: String): DataFrame =
-    foldBatches(s, dir, lo, hi, Seq(cdcDeltaPath(dir)))
+    foldBatches(s, dir, lo, hi, Seq(DailyRollup.Cdc))
 
   /** Merged counters with BOTH committed stream batches and CDC
     * retractions folded in — the fully-maintained read. */
   def mergedCountersMaintained(s: SparkSession, dir: String, lo: String,
       hi: String): DataFrame =
-    foldBatches(s, dir, lo, hi, Seq(streamPath(dir), cdcDeltaPath(dir)))
+    foldBatches(s, dir, lo, hi, Seq(DailyRollup.Stream, DailyRollup.Cdc))
 
   private def foldBatches(s: SparkSession, dir: String, lo: String,
-      hi: String, roots: Seq[String]): DataFrame = {
-    val base = mergedCounters(s, dir, lo, hi)
-    val extra = roots.flatMap(root =>
-      IndexStore.readyBatches(root).map(t => s"$root/$t"))
-    if (extra.isEmpty) base
-    else {
-      val deltas = s.read.schema(org.apache.spark.sql.types.StructType
-          .fromDDL("day TIMESTAMP, r INT, b BIGINT, c BIGINT"))
-        .parquet(extra: _*)
-        .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-          col("day") < lit(MinMaxManifest.utc(hi)))
-        .select("r", "b", "c")
-      base.select("r", "b", "c").unionAll(deltas)
-        .groupBy("r", "b")
-        .agg(sum(col("c")).as("c"))
-        .where(col("c") =!= 0)
-    }
-  }
+      hi: String, sides: Seq[DailyRollup.Side]): DataFrame =
+    sumCounters(rollup.window(s, dir, lo, hi, sides)).where(col("c") =!= 0)
 
   /** Point-frequency estimates for a probe frame (one `user_id`
     * column) against a merged grid: f̂ = min over the Depth rows of

@@ -38,9 +38,6 @@ object DecayedFeatures {
     * frame is group-sized at every SF. */
   val Cohorts = 16L
 
-  def dailyPath(dir: String): String =
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/feat_daily"
-
   /** The per-batch (day, event_type, cohort) → (n, v_fp) projection
     * shared by the build, the append leg, and CDC retractions. */
   private def partials(batch: DataFrame): DataFrame =
@@ -52,13 +49,14 @@ object DecayedFeatures {
       .groupBy("day", "event_type", "cohort")
       .agg(count(lit(1)).as("n"), sum(col("v")).as("v_fp"))
 
+  private[graft] val rollup = new DailyRollup("feat_daily",
+    "day TIMESTAMP, event_type STRING, cohort BIGINT, n BIGINT, v_fp BIGINT")(
+    partials)
+
+  def dailyPath(dir: String): String = rollup.path(dir)
+
   /** Build the daily partial-sum table once per corpus lifetime. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    val path = dailyPath(dir)
-    if (IndexStore.artifactReady(path)) return
-    partials(graft.Tables(s, dir, "events"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+  def ensure(s: SparkSession, dir: String): Unit = rollup.ensure(s, dir)
 
   /** Late-data / incremental maintenance: a batch's partials append;
     * the read-side SUM folds duplicate (day, type, cohort) keys.
@@ -66,48 +64,33 @@ object DecayedFeatures {
     * are for single-shot backfills; streaming callers use
     * [[processStreamBatch]], whose batch-id-scoped overwrite makes
     * checkpoint replays idempotent (the exact
-    * [[HistogramRollup.processStreamBatch]] discipline). */
-  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    require(IndexStore.artifactReady(dailyPath(dir)),
-      "daily feature table must be built before appending")
-    partials(batch)
-      .coalesce(1).write.mode("append").parquet(dailyPath(dir))
-  }
+    * [[HistogramRollup.processStreamBatch]] discipline). Vetoes the
+    * commit first, like every in-place append. */
+  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit =
+    rollup.append(s, dir, partials(batch))
 
   /** STREAMING maintenance — the exactly-once face of [[appendBatch]]:
-    * each micro-batch's partials land in their OWN `batch=b<id>`
-    * partition of a stream-delta table, overwrite scoped to that
-    * partition, so a checkpoint-replayed batch overwrites itself
+    * each micro-batch's partials land in their OWN batch-id-scoped
+    * side batch, so a checkpoint-replayed batch overwrites itself
     * instead of double-counting. [[featuresMaintained]] folds only
-    * COMMITTED batch partitions in. */
-  def streamPath(dir: String): String = dailyPath(dir) + "_stream"
-
+    * COMMITTED batches in. */
   def processStreamBatch(s: SparkSession, dir: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    ensure(s, dir)
-    partials(batch).coalesce(1).write.mode("overwrite")
-      .parquet(s"${streamPath(dir)}/batch=b$batchId")
-  }
+      batchId: Long): Unit =
+    rollup.stream(s, dir, partials(batch), batchId)
 
   /** CDC DELETE maintenance — the invertibility of the sum-merge
     * algebra (the D42 discipline at partial grain): a delete batch
-    * retracts as NEGATIVE partials in its own `batch=<tag>` partition
-    * of a delta table (replaying a tag overwrites itself — idempotent;
-    * sequential tags accumulate). The base table is never mutated;
+    * retracts as NEGATIVE partials in its own tag-scoped side batch
+    * (replaying a tag overwrites itself — idempotent; sequential tags
+    * accumulate). The base table is never mutated;
     * [[featuresMaintained]] folds committed retractions in, and the
     * net per-cell mass stays ≥ 0 when deletes are a subset of prior
     * inserts (the CDC contract). */
-  def cdcDeltaPath(dir: String): String = dailyPath(dir) + "_cdc_deltas"
-
   def applyDeletes(s: SparkSession, dir: String, deleted: DataFrame,
-      batchTag: String = "batch0"): Unit = {
-    ensure(s, dir)
-    partials(deleted)
+      batchTag: String = "batch0"): Unit =
+    rollup.retract(s, dir, partials(deleted)
       .select(col("day"), col("event_type"), col("cohort"),
-        (-col("n")).as("n"), (-col("v_fp")).as("v_fp"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${cdcDeltaPath(dir)}/batch=$batchTag")
-  }
+        (-col("n")).as("n"), (-col("v_fp")).as("v_fp")), batchTag)
 
   /** Horizon guard: the integer-exactness proof needs 2^(h−age) exact
     * in the double `pow` BOTH engines evaluate before the BIGINT cast
@@ -143,28 +126,16 @@ object DecayedFeatures {
     * touches ONLY the daily table, plan-pinned scan-free. */
   def features(s: SparkSession, dir: String, asOf: String, h: Int): DataFrame = {
     requireHorizon(h)
-    ensure(s, dir)
-    fold(IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, cohort BIGINT, n BIGINT, v_fp BIGINT", dailyPath(dir)), asOf, h)
+    fold(rollup.read(s, dir), asOf, h)
   }
 
   /** The maintained read: base partials plus every COMMITTED stream
-    * batch and CDC retraction folded in (the [[IndexStore
-    * .readyBatches]] rule — a batch torn mid-write contributes
-    * nothing until its replay overwrites it). */
+    * batch and CDC retraction folded in ([[DailyRollup.read]] — a
+    * batch torn mid-write contributes nothing until its replay
+    * overwrites it). */
   def featuresMaintained(s: SparkSession, dir: String, asOf: String,
       h: Int): DataFrame = {
     requireHorizon(h)
-    ensure(s, dir)
-    val cols = Seq("day", "event_type", "cohort", "n", "v_fp").map(col)
-    val base = IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, cohort BIGINT, n BIGINT, v_fp BIGINT", dailyPath(dir)).select(cols: _*)
-    val extra = Seq(streamPath(dir), cdcDeltaPath(dir)).flatMap { root =>
-      IndexStore.readyBatches(root).map(t => s"$root/$t")
-    }
-    val daily = if (extra.isEmpty) base
-      else base.unionAll(s.read.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "day TIMESTAMP, event_type STRING, cohort BIGINT, n BIGINT, v_fp BIGINT"))
-        .parquet(extra: _*).select(cols: _*))
-    fold(daily, asOf, h)
+    fold(rollup.read(s, dir, Seq(DailyRollup.Stream, DailyRollup.Cdc)), asOf, h)
   }
 }

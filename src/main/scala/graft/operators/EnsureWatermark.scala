@@ -7,10 +7,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * profiles, MCV lists and column groups; SampledAgg's uniform and
   * stratified samples, group rollups and group histograms) cover a
   * live source listing; the FINGERPRINT-KEYED ones
-  * (`<root>/<fingerprint>/<name>`: HistogramRollup, AggRollup,
-  * TopKRollup, Dictionary, EntityIndex, StatsCatalog's stats, key
-  * profiles, column groups and MCV lists) cover their path's
-  * fingerprint.
+  * (`<root>/<fingerprint>/<name>`: the seven [[DailyRollup]]s,
+  * Dictionary, EntityIndex, StatsCatalog's stats, key profiles,
+  * column groups and MCV lists) cover their path's fingerprint.
   *
   *  - [[commit]] writes the parts into a FRESH version `v_<seq>_<uuid>`,
   *    then lands ONE stamp `_GRAFT_STAMP.<seq>` LAST (covered

@@ -37,9 +37,6 @@ object HistogramRollup {
   val BinWidth = 5.0
   val NumBins = 100 // [0, 500) in 5.0-wide bins + one overflow bin
 
-  def histPath(dir: String): String =
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/hist_daily"
-
   /** Clamped both ways: negatives land in bin 0, values ≥
     * NumBins·BinWidth in the overflow bin (review catch — an
     * unclamped negative bin would violate the table invariant). */
@@ -56,19 +53,17 @@ object HistogramRollup {
       .groupBy("day", "event_type", "bin")
       .agg(count(lit(1)).as("cnt"))
 
-  private def build(s: SparkSession, dir: String)(data: String): Unit =
-    binCounts(graft.Tables(s, dir, "events")).coalesce(1).write.parquet(data)
+  private[graft] val rollup = new DailyRollup("hist_daily",
+    "day TIMESTAMP, event_type STRING, bin BIGINT, cnt BIGINT")(binCounts)
 
-  /** The committed table's data part, built once when absent or torn.
-    * Deliberately keeps a VETOED table — one [[appendBatch]] maintained
-    * (or crashed mid-append): a rebuild would drop the appended bins,
-    * re-blessing it would turn fail-closed into fail-open. The repair
-    * path is [[reEnsure]]. */
-  private[graft] def stored(s: SparkSession, dir: String): String =
-    EnsureWatermark.ensured(histPath(dir), dir, "events")(build(s, dir))
+  def histPath(dir: String): String = rollup.path(dir)
 
-  /** Build the per-(day, event_type, bin) count table once. */
-  def ensure(s: SparkSession, dir: String): Unit = { stored(s, dir); () }
+  /** Build the per-(day, event_type, bin) count table once. Keeps a
+    * VETOED table — one [[appendBatch]] maintained (or crashed
+    * mid-append): a rebuild would drop the appended bins, re-blessing
+    * it would turn fail-closed into fail-open. The repair path is
+    * [[reEnsure]]. */
+  def ensure(s: SparkSession, dir: String): Unit = rollup.ensure(s, dir)
 
   /** ROUTING REPAIR — a fresh commit of the rollup from the raw table,
     * so q42's optimizer rewrite serves again after the states that
@@ -80,79 +75,47 @@ object HistogramRollup {
     * again). Stream-delta and CDC-delta side tables are untouched:
     * they are read only by the maintained readers, never by the
     * routed path. */
-  def reEnsure(s: SparkSession, dir: String): Unit =
-    EnsureWatermark.commitData(histPath(dir), dir, "events")(build(s, dir))
+  def reEnsure(s: SparkSession, dir: String): Unit = rollup.reEnsure(s, dir)
 
   /** INCREMENTAL maintenance: a micro-batch appends its own bin
     * counts; the read-side SUM folds duplicates of any (day, group,
     * bin) key, so late days and intra-day micro-batches both just
     * add. NOT replay-idempotent (counts add — see the object
     * scaladoc's exactly-once contract; the spec pins the
-    * double-count on purpose so the contract is visible). Streaming
-    * callers should use [[processStreamBatch]] instead, which makes
-    * replays idempotent by batch-id scoping. */
-  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    // veto plan routing FIRST: once any batch outside events.parquet
-    // lands, the rollup is no longer the raw aggregate, and a crash
-    // between the two steps must fail closed (routing off), never
-    // open
-    val path = histPath(dir)
-    val st = EnsureWatermark.veto(path)
-    require(st.isDefined, "histogram table must be built before appending")
-    binCounts(batch)
-      .coalesce(1).write.mode("append").parquet(st.get.part(path, "data"))
-  }
+    * double-count on purpose so the contract is visible). Vetoes plan
+    * routing FIRST: once any batch outside events.parquet lands, the
+    * rollup is no longer the raw aggregate. Streaming callers should
+    * use [[processStreamBatch]] instead, which makes replays
+    * idempotent by batch-id scoping. */
+  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit =
+    rollup.append(s, dir, binCounts(batch))
 
   /** STREAMING maintenance — the exactly-once face of [[appendBatch]]
     * the object scaladoc's foreachBatch contract promises, now
     * asserted (StreamingSpec): each micro-batch's bin counts land in
-    * their OWN `batch=b<id>` partition of a stream-delta table,
-    * overwrite scoped to that partition — a checkpoint-replayed batch
-    * (restart between the sink write and the commit) OVERWRITES
-    * itself instead of double-counting, which is exactly the
-    * batch-id discipline Structured Streaming's foreachBatch docs
-    * prescribe for non-idempotent sinks. [[SketchRollup.appendBatch]]
-    * needs no such scoping (max-merge is idempotent); the two ride
-    * the same sink. */
-  def streamBinsPath(dir: String): String = histPath(dir) + "_stream"
-
+    * their OWN batch-id-scoped side batch ([[DailyRollup.stream]]) —
+    * a checkpoint-replayed batch (restart between the sink write and
+    * the commit) OVERWRITES itself instead of double-counting.
+    * [[SketchRollup.appendBatch]] needs no such scoping (max-merge is
+    * idempotent); the two ride the same sink. */
   def processStreamBatch(s: SparkSession, dir: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    ensure(s, dir)
-    binCounts(batch).coalesce(1).write.mode("overwrite")
-      .parquet(s"${streamBinsPath(dir)}/batch=b$batchId")
-  }
+      batchId: Long): Unit =
+    rollup.stream(s, dir, binCounts(batch), batchId)
 
-  /** Merged bins with the streamed batches folded in — reads ONLY
-    * committed `batch=` partitions (the [[IndexStore.readyBatches]]
-    * rule), so a batch torn mid-write contributes nothing until its
-    * replay overwrites it. */
+  /** Merged bins with the streamed batches folded in — committed side
+    * batches only ([[DailyRollup.read]]), so a batch torn mid-write
+    * contributes nothing until its replay overwrites it. */
   def mergedBinsWithStream(s: SparkSession, dir: String, lo: String,
-      hi: String): DataFrame = {
-    val base = mergedBins(s, dir, lo, hi)
-    val ready = IndexStore.readyBatches(streamBinsPath(dir))
-    if (ready.isEmpty) base
-    else {
-      val streamed = s.read
-        .parquet(ready.map(t => s"${streamBinsPath(dir)}/$t"): _*)
-        .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-          col("day") < lit(MinMaxManifest.utc(hi)))
-        .select("event_type", "bin", "cnt")
-      base.union(streamed)
-        .groupBy("event_type", "bin")
-        .agg(sum("cnt").as("cnt"))
-    }
-  }
+      hi: String): DataFrame =
+    sumBins(rollup.window(s, dir, lo, hi, Seq(DailyRollup.Stream)))
 
   /** SUM-merge the daily histograms over [lo, hi). */
   def mergedBins(s: SparkSession, dir: String, lo: String,
-      hi: String): DataFrame = {
-    IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, bin BIGINT, cnt BIGINT", stored(s, dir))
-      .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-        col("day") < lit(MinMaxManifest.utc(hi)))
-      .groupBy("event_type", "bin")
-      .agg(sum("cnt").as("cnt"))
-  }
+      hi: String): DataFrame =
+    sumBins(rollup.window(s, dir, lo, hi))
+
+  private def sumBins(rows: DataFrame): DataFrame =
+    rows.groupBy("event_type", "bin").agg(sum("cnt").as("cnt"))
 
   /** CDC DELETE maintenance — the property that separates the two
     * sketch algebras: SUM-merge is INVERTIBLE, so a delete batch
@@ -161,48 +124,27 @@ object HistogramRollup {
     * while [[SketchRollup]]'s max-merge provably cannot delete (a
     * register's max carries no memory of who set it — its delete
     * story is rebuild-under-fingerprint, D22's retrain path). Each
-    * delete BATCH retracts into its own `batch=<tag>` partition of
-    * the delta table — overwrite scoped to that partition, so
-    * replaying a batch is idempotent while SEQUENTIAL batches
-    * accumulate (a review catch: a table-wide overwrite silently
-    * discarded every earlier batch's retractions); the base rollup
-    * (q36's surface) is never mutated. [[mergedBinsWithDeltas]]
-    * folds every batch in for maintained readers. */
-  def cdcDeltaPath(dir: String): String = histPath(dir) + "_cdc_deltas"
-
+    * delete BATCH retracts into its own tag-scoped side batch
+    * ([[DailyRollup.retract]]), so replaying a batch is idempotent
+    * while SEQUENTIAL batches accumulate (a review catch: a
+    * table-wide overwrite silently discarded every earlier batch's
+    * retractions); the base rollup (q36's surface) is never mutated.
+    * [[mergedBinsWithDeltas]] folds every batch in for maintained
+    * readers. */
   def applyDeletes(s: SparkSession, dir: String, deleted: DataFrame,
-      batchTag: String = "batch0"): Unit = {
-    ensure(s, dir)
-    binCounts(deleted)
-      .select(col("day"), col("event_type"), col("bin"), (-col("cnt")).as("cnt"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${cdcDeltaPath(dir)}/batch=$batchTag")
-  }
+      batchTag: String = "batch0"): Unit =
+    rollup.retract(s, dir, binCounts(deleted)
+      .select(col("day"), col("event_type"), col("bin"), (-col("cnt")).as("cnt")),
+      batchTag)
 
-  /** Merged bins with the CDC retractions folded in (net counts ≥ 0
-    * when deletes are a subset of prior inserts — the CDC contract). */
+  /** Merged bins with the committed CDC retractions folded in — a
+    * delta batch torn mid-commit contributes nothing until its replay
+    * completes it, never a partial retraction (net counts ≥ 0 when
+    * deletes are a subset of prior inserts — the CDC contract). */
   def mergedBinsWithDeltas(s: SparkSession, dir: String, lo: String,
-      hi: String): DataFrame = {
-    val base = mergedBins(s, dir, lo, hi)
-    // read ONLY the committed batch partitions (each carries its own
-    // _SUCCESS) — a delta batch torn mid-commit must contribute
-    // nothing until its replay completes it, not a partial retraction
-    // (the r7 advice: gating on "≥1 ready batch" then reading the
-    // whole root surfaced exactly such partials)
-    val ready = IndexStore.readyBatches(cdcDeltaPath(dir))
-    if (ready.isEmpty) base
-    else {
-      val deltas = s.read
-        .parquet(ready.map(t => s"${cdcDeltaPath(dir)}/$t"): _*)
-        .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-          col("day") < lit(MinMaxManifest.utc(hi)))
-        .select("event_type", "bin", "cnt")
-      base.union(deltas)
-        .groupBy("event_type", "bin")
-        .agg(sum("cnt").as("cnt"))
-        .where(col("cnt") > 0)
-    }
-  }
+      hi: String): DataFrame =
+    sumBins(rollup.window(s, dir, lo, hi, Seq(DailyRollup.Cdc)))
+      .where(col("cnt") > 0)
 
   /** DISTRIBUTION-DRIFT MONITOR — the second question the daily
     * histogram answers scan-free (percentiles are q36's): did the
@@ -246,7 +188,7 @@ object HistogramRollup {
     // ONE rollup read: per-(group, bin) window masses via conditional
     // sums (a day in both windows — callers may overlap — counts in
     // both), bins outside both windows pruned at the scan
-    val bins = IndexStore.readAs(s, "day TIMESTAMP, event_type STRING, bin BIGINT, cnt BIGINT", stored(s, dir))
+    val bins = rollup.read(s, dir)
       .where(inA || inB)
       .groupBy("event_type", "bin")
       .agg(sum(when(inA, col("cnt")).otherwise(0L)).as("ca"),

@@ -183,9 +183,9 @@ object IndexStore {
     * for artifacts whose layout cannot evolve under a reader's feet;
     * the DDL must change in lockstep with the writer. */
   private[graft] def readAs(s: SparkSession, ddl: String,
-      path: String): org.apache.spark.sql.DataFrame =
+      paths: String*): org.apache.spark.sql.DataFrame =
     s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .parquet(path)
+      .parquet(paths: _*)
 
   /** Canonical FULL qualified URI (scheme ‖ authority ‖ path) — the
     * ONE rendering both path registries (RollupRouting,

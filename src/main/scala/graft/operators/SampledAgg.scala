@@ -665,7 +665,7 @@ object SampledAgg {
     val HR = HistogramRollup
     // 1. the histogram rung: disclosed bound = one bin width,
     //    relative to the estimate — integer-exact, replayable
-    if (EnsureWatermark.current(HR.histPath(dir)).isDefined) {
+    if (HR.rollup.current(dir).isDefined) {
       val est = HR.percentiles(HR.mergedBins(s, dir, lo, hi), Seq(p))
         .select(col("event_type"), col(s"p${p}_e4").as("q_e4"))
       val overflowE4 = HR.NumBins.toLong * HR.BinWidthE4

@@ -45,45 +45,17 @@ object SketchRollup {
   val MaxRho = 52 // 60-bit hash − 9 register bits → 51 payload bits + 1
   val Salt = "hll"
 
-  def sketchPath(dir: String): String =
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/hll_daily"
-
   /** rho over the 51-bit payload: leading zeros + 1, via exact
     * integer/string ops shared by both engines. */
   private def rho(payload: org.apache.spark.sql.Column) =
     when(payload === 0L, lit(MaxRho))
       .otherwise(lit(MaxRho) - length(bin(payload)))
 
-  /** Build the daily register table once per corpus lifetime:
-    * (day, event_type, reg, rho) with rho = max over the day's users.
-    * ~m rows per (day, group) — kilobytes per day at ANY corpus
-    * size; the build is one hash-agg scan, the same shuffle the
-    * day's exact rollup would need anyway. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    val path = sketchPath(dir)
-    if (IndexStore.artifactReady(path)) return
-    val ev = graft.Tables(s, dir, "events")
-    val h = graft.functions.DetHash.hash60(col("user_id"), Salt)
-    ev.select(
-        MinMaxManifest.utcDay(col("ts")).as("day"),
-        col("event_type"),
-        h.bitwiseAND(lit(511L)).as("reg"),
-        rho(shiftright(h, P)).as("rho"))
-      .groupBy(col("day"), col("event_type"), col("reg"))
-      .agg(max(col("rho")).as("rho"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** INCREMENTAL maintenance — the streaming-ingest leg: a
-    * micro-batch appends its own (day, group, reg, rho) rows; the
-    * read-side MAX-merge folds duplicates of any key, so appends
-    * never rewrite stored rows AND replaying a batch is harmless
-    * (max is idempotent — the property that lets this sink run
-    * at-least-once, unlike [[HistogramRollup.appendBatch]]'s
-    * exactly-once contract). O(batch) work, one tiny file. */
-  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit = {
-    require(IndexStore.artifactReady(sketchPath(dir)),
-      "sketch table must be built before appending")
+  /** Per-batch (day, event_type, reg, rho) rows with rho = max over
+    * the batch's users — ~m rows per (day, group), kilobytes per day
+    * at ANY corpus size; the build is one hash-agg scan, the same
+    * shuffle the day's exact rollup would need anyway. */
+  private def registers(batch: DataFrame): DataFrame = {
     val h = graft.functions.DetHash.hash60(col("user_id"), Salt)
     batch.select(
         MinMaxManifest.utcDay(col("ts")).as("day"),
@@ -92,25 +64,35 @@ object SketchRollup {
         rho(shiftright(h, P)).as("rho"))
       .groupBy(col("day"), col("event_type"), col("reg"))
       .agg(max(col("rho")).as("rho"))
-      .coalesce(1).write.mode("append").parquet(sketchPath(dir))
   }
+
+  private[graft] val rollup = new DailyRollup("hll_daily",
+    "day TIMESTAMP, event_type STRING, reg BIGINT, rho INT")(registers)
+
+  def sketchPath(dir: String): String = rollup.path(dir)
+
+  /** Build the daily register table once per corpus lifetime. */
+  def ensure(s: SparkSession, dir: String): Unit = rollup.ensure(s, dir)
+
+  /** INCREMENTAL maintenance — the streaming-ingest leg: a
+    * micro-batch appends its own (day, group, reg, rho) rows; the
+    * read-side MAX-merge folds duplicates of any key, so appends
+    * never rewrite stored rows AND replaying a batch is harmless
+    * (max is idempotent — the property that lets this sink run
+    * at-least-once, unlike [[HistogramRollup.appendBatch]]'s
+    * exactly-once contract). O(batch) work, one tiny file; vetoes the
+    * commit first, like every in-place append. */
+  def appendBatch(s: SparkSession, dir: String, batch: DataFrame): Unit =
+    rollup.append(s, dir, registers(batch))
 
   /** Register-wise MAX merge of the daily sketches in [lo, hi) —
     * the associative op that makes the rollup answer any window. */
   def mergedRegisters(s: SparkSession, dir: String, lo: String,
-      hi: String): DataFrame = {
-    ensure(s, dir)
-    IndexStore.readAs(s,
-        "day TIMESTAMP, event_type STRING, reg BIGINT, rho INT",
-        sketchPath(dir))
-      .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-        col("day") < lit(MinMaxManifest.utc(hi)))
+      hi: String): DataFrame =
+    rollup.window(s, dir, lo, hi)
       .groupBy(col("event_type"), col("reg"))
       .agg(max(col("rho")).as("rho"))
-  }
 
-  /** HLL estimate per event_type from merged registers. Returns
-    * (event_type, regs_hit, est_users). */
   /** SCALAR rendering of the register→estimate formula — the ONE
     * place the α/linear-counting algebra lives for driver-side
     * consumers (r14 review: three hand-copies risked silent
@@ -130,6 +112,8 @@ object SketchRollup {
     math.round(est)
   }
 
+  /** HLL estimate per event_type from merged registers. Returns
+    * (event_type, regs_hit, est_users). */
   def estimate(merged: DataFrame): DataFrame = {
     val twoPow52 = 4503599627370496L // 2^52
     merged

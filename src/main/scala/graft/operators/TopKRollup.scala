@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * rebuild, never by patch.
   *
   * ROUTING: [[ensure]]/[[reEnsure]] commit through the shared
-  * [[EnsureWatermark]]; [[appendBatch]] vetoes the commit FIRST
+  * [[DailyRollup]]; [[appendBatch]] vetoes the commit FIRST
   * (fail-closed, the discipline every routed rollup observes), and
   * [[routable]] additionally requires ZERO committed stream
   * segments — both legs carry data that is NOT in the raw table, so
@@ -63,16 +63,6 @@ object TopKRollup {
   /** Kept users per cell. 64 keeps a cell ≤ 65 rows while bounding
     * the absent-user ceiling at the 65th count. */
   val B = 64
-
-  def topkPath(dir: String): String =
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/topk_daily"
-
-  /** The summary's fixed schema — passed to every serve-path read so
-    * the reader never pays a footer-inference job (the r17 rule:
-    * artifact schemas are code facts, not file facts). */
-  private val CellsDdl =
-    "day TIMESTAMP, seg BIGINT, event_type STRING, user_id BIGINT, " +
-      "c BIGINT, tail BIGINT"
 
   /** Per-batch summary rows (day, seg, event_type, user_id, c, tail):
     * top-B users per cell by (count DESC, user) with the first
@@ -99,22 +89,28 @@ object TopKRollup {
         col("user_id"), col("c"), coalesce(col("tail"), lit(0L)).as("tail"))
   }
 
-  /** Commit the daily summary of the CURRENT raw table as a single
-    * segment 0. `repartition(1)`, NOT `coalesce(1)`: coalesce
-    * collapses the whole final stage — including the corpus-
+  /** One batch's summary as segment `seg`, single-filed.
+    * `repartition(1)`, NOT the shared writer's `coalesce(1)` alone:
+    * coalesce collapses the whole final stage — including the corpus-
     * cardinality row_number window — into one task; the shuffle
     * boundary keeps the window stage parallel and single-files only
     * the ≤(B+1)-rows-per-cell summary. */
-  private def build(s: SparkSession, dir: String)(data: String): Unit =
-    summarize(graft.Tables(s, dir, "events"), 0L)
-      .repartition(1).write.parquet(data)
+  private def segment(batch: DataFrame, seg: Long): DataFrame =
+    summarize(batch, seg).repartition(1)
 
-  /** The committed summary's data part, built once per corpus
-    * lifetime; an appended-to (vetoed) summary is kept. */
-  private def stored(s: SparkSession, dir: String): String =
-    EnsureWatermark.ensured(topkPath(dir), dir, "events")(build(s, dir))
+  /** The summary of the CURRENT raw table is the single segment 0. The
+    * summary's fixed schema is passed to every serve-path read, so the
+    * reader never pays a footer-inference job (the r17 rule: artifact
+    * schemas are code facts, not file facts). */
+  private[graft] val rollup = new DailyRollup("topk_daily",
+    "day TIMESTAMP, seg BIGINT, event_type STRING, user_id BIGINT, " +
+      "c BIGINT, tail BIGINT")(segment(_, 0L))
 
-  def ensure(s: SparkSession, dir: String): Unit = { stored(s, dir); () }
+  def topkPath(dir: String): String = rollup.path(dir)
+
+  /** Built once per corpus lifetime; an appended-to (vetoed) summary
+    * is kept. */
+  def ensure(s: SparkSession, dir: String): Unit = rollup.ensure(s, dir)
 
   /** ROUTING REPAIR + BOUND RE-TIGHTENING — a fresh commit of the
     * summary as a single segment-0 build of the CURRENT raw table.
@@ -126,20 +122,16 @@ object TopKRollup {
     * the class scaladoc promises: truncated tops are not
     * subtractable, so CDC deletes repair by reEnsure. */
   def reEnsure(s: SparkSession, dir: String): Unit = {
-    IndexStore.removeArtifact(streamPath(dir))
-    EnsureWatermark.commitData(topkPath(dir), dir, "events")(build(s, dir))
+    rollup.removeSide(dir, DailyRollup.Stream)
+    rollup.reEnsure(s, dir)
   }
 
   /** The summary's data part when it is exactly a build of the raw
     * table — the optimizer rewrite's precondition: current (never
     * appended to) AND no committed stream segments (either would make
     * the summary a superset of the raw aggregate). */
-  private[graft] def routable(dir: String): Option[String] = {
-    val path = topkPath(dir)
-    EnsureWatermark.current(path)
-      .filter(_ => IndexStore.readyBatches(s"$path$StreamSuffix").isEmpty)
-      .map(_.part(path, "data"))
-  }
+  private[graft] def routable(dir: String): Option[String] =
+    rollup.current(dir).filter(_ => rollup.ready(dir, DailyRollup.Stream).isEmpty)
 
   /** Append a batch as a NEW SEGMENT (caller supplies a unique
     * POSITIVE batchId — negative segment ids belong to the streaming
@@ -154,35 +146,23 @@ object TopKRollup {
     require(batchId > 0L,
       "appendBatch segment ids are positive (0 = ensure build, " +
         "negative = streaming leg)")
-    val path = topkPath(dir)
-    val st = EnsureWatermark.veto(path)
-    require(st.isDefined,
-      s"top-k summary at $path must be built before appending")
-    summarize(batch, batchId)
-      .repartition(1).write.mode("append").parquet(st.get.part(path, "data"))
+    rollup.append(s, dir, segment(batch, batchId))
   }
 
   /** Batch-id-scoped streaming leg — the exactly-once discipline the
     * sum-merge rollups established ([[HistogramRollup
     * .processStreamBatch]]): each micro-batch's summary lands as its
-    * own `batch=b<id>` partition (a replayed batch OVERWRITES itself,
-    * never double-counts) and serves as one more additive SEGMENT —
-    * the bound algebra needs nothing else. Deletes are NOT
-    * subtractable from a truncated top (a dropped user's kept counts
-    * are unknown), so the CDC-delete repair path is a rebuild, not a
-    * patch. */
-  def streamPath(dir: String): String = topkPath(dir) + StreamSuffix
-  private val StreamSuffix = "_stream"
-
+    * own side batch (a replayed batch OVERWRITES itself, never
+    * double-counts) and serves as one more additive SEGMENT — the
+    * bound algebra needs nothing else. NEGATIVE segment ids: disjoint
+    * from appendBatch's positive ones by construction, so a (day,
+    * seg, type, tail) cell can never collide across the two legs and
+    * silently dedupe a tail ceiling. Deletes are NOT subtractable
+    * from a truncated top (a dropped user's kept counts are unknown),
+    * so the CDC-delete repair path is a rebuild, not a patch. */
   def processStreamBatch(s: SparkSession, dir: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    ensure(s, dir)
-    // NEGATIVE segment ids: disjoint from appendBatch's positive ones
-    // by construction, so a (day, seg, type, tail) cell can never
-    // collide across the two legs and silently dedupe a tail ceiling
-    summarize(batch, -(batchId + 1L)).repartition(1).write.mode("overwrite")
-      .parquet(s"${streamPath(dir)}/batch=b$batchId")
-  }
+      batchId: Long): Unit =
+    rollup.stream(s, dir, segment(batch, -(batchId + 1L)), batchId)
 
   /** PROVABLY-EXACT global top-k over [lo, hi) (micros, UTC-midnight
     * aligned), or None — the serving face of the optimizer rewrite
@@ -223,7 +203,7 @@ object TopKRollup {
     // and the rule runs during OPTIMIZATION, where job latency is
     // serial with everything else (guide §5: the driver should do
     // almost no work — and few jobs)
-    val rows = IndexStore.readAs(s, CellsDdl, data)
+    val rows = IndexStore.readAs(s, rollup.ddl, data)
       .where(col("day") >= lit(lo) && col("day") < lit(hi))
       .collect()
     // global (cross-type) bounds: one tail ceiling per cell; a user
@@ -263,22 +243,11 @@ object TopKRollup {
     * user kept by ≥ 1 cell, with the sound bounds
     * (event_type, user_id, lb, ub), ranked (lb DESC, user) and cut
     * to `topN` per type. Touches only the summary table (plus any
-    * committed stream-batch segments — the [[IndexStore
-    * .readyBatches]] rule: a torn batch contributes nothing until
-    * its replay overwrites it). */
+    * committed stream-batch segments — [[DailyRollup.read]]: a torn
+    * batch contributes nothing until its replay overwrites it). */
   def heavyHitters(s: SparkSession, dir: String, lo: String, hi: String,
       topN: Int = 5): DataFrame = {
-    val baseCells = IndexStore.readAs(s, CellsDdl, stored(s, dir))
-    val ready = IndexStore.readyBatches(streamPath(dir))
-    val allCells =
-      if (ready.isEmpty) baseCells
-      else baseCells.unionByName(
-        s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(CellsDdl))
-          .parquet(ready.map(t => s"${streamPath(dir)}/$t"): _*)
-          .select("day", "seg", "event_type", "user_id", "c", "tail"))
-    val cells = allCells
-      .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
-        col("day") < lit(MinMaxManifest.utc(hi)))
+    val cells = rollup.window(s, dir, lo, hi, Seq(DailyRollup.Stream))
     // one tail ceiling per (day, seg, type) cell; total per type
     val totalTail = cells.select("day", "seg", "event_type", "tail")
       .distinct()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{coalesce, col, date_trunc, lit, sum}
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.{AggRollup, EnsureWatermark, HistogramRollup, TopKRollup}
+import graft.operators.{AggRollup, HistogramRollup, TopKRollup}
 
 /** MATERIALIZED-VIEW ROUTING as a Catalyst optimizer rule — the
   * query-rewrite layer every rollup store ships (Druid's datasource
@@ -202,11 +202,8 @@ class RollupRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * path's fingerprint tracks only the raw table, so after such an
     * append (which vetoes the commit) the rewrite would no longer be
     * exact and must veto itself (r8 advice, medium). */
-  private def routedData(dir: String, wantsSum: Boolean): Option[String] = {
-    val path =
-      if (wantsSum) AggRollup.aggPath(dir) else HistogramRollup.histPath(dir)
-    EnsureWatermark.current(path).map(_.part(path, "data"))
-  }
+  private def routedData(dir: String, wantsSum: Boolean): Option[String] =
+    (if (wantsSum) AggRollup.rollup else HistogramRollup.rollup).current(dir)
 
   /** The exact substitute over a rollup table: per-group partial sums
     * over the same UTC-instant window (kilobytes of rollup IO for any

@@ -79,7 +79,7 @@ class HistogramRollupSpec extends SparkSpec {
   test("late-day bins ADD in: merging a split history equals the whole") {
     withIndexRoot("graft-hist-spec") {
       HR.ensure(spark, sf)
-      val all = spark.read.parquet(HR.stored(spark, sf))
+      val all = spark.read.parquet(HR.rollup.stored(spark, sf))
         .where(col("day") >= lit(MinMaxManifest.utc(lo)) &&
           col("day") < lit(MinMaxManifest.utc(hi)))
       val mid = MinMaxManifest.utc("2024-01-15 00:00:00")
@@ -183,7 +183,7 @@ class HistogramRollupSpec extends SparkSpec {
   test("the persisted table is bounded by days × groups × bins") {
     withIndexRoot("graft-hist-spec") {
       HR.ensure(spark, sf)
-      val t = spark.read.parquet(HR.stored(spark, sf))
+      val t = spark.read.parquet(HR.rollup.stored(spark, sf))
       val days = t.select("day").distinct().count()
       val types = t.select("event_type").distinct().count()
       assert(t.count() <= days * types * (HR.NumBins + 1))

@@ -247,6 +247,19 @@ class MaintainedProtocolSpec extends SparkSpec {
       Some(AggRollup.appendBatch(spark, _, _))),
     Keyed("top-k rollup", TopKRollup.topkPath, TopKRollup.ensure(spark, _),
       TopKRollup.routable, Some(TopKRollup.appendBatch(spark, _, _, 1L))),
+    Keyed("hll rollup", SketchRollup.sketchPath, SketchRollup.ensure(spark, _),
+      d => EnsureWatermark.current(SketchRollup.sketchPath(d)),
+      Some(SketchRollup.appendBatch(spark, _, _))),
+    Keyed("kmv rollup", KmvRollup.sketchPath, KmvRollup.ensure(spark, _),
+      d => EnsureWatermark.current(KmvRollup.sketchPath(d)),
+      Some(KmvRollup.appendBatch(spark, _, _))),
+    Keyed("cms rollup", CmsRollup.cmsPath, CmsRollup.ensure(spark, _),
+      d => EnsureWatermark.current(CmsRollup.cmsPath(d)),
+      Some(CmsRollup.appendBatch(spark, _, _))),
+    Keyed("decayed-feature rollup", DecayedFeatures.dailyPath,
+      DecayedFeatures.ensure(spark, _),
+      d => EnsureWatermark.current(DecayedFeatures.dailyPath(d)),
+      Some(DecayedFeatures.appendBatch(spark, _, _))),
     Keyed("entity index", EntityIndex.indexPath, EntityIndex.ensure(spark, _),
       d => Some(EntityIndex.serveWindow(spark, d, Seq(1L),
         "2024-03-01 00:00:00", "2024-03-04 00:00:00")).filter(_._2),

@@ -100,7 +100,7 @@ class SketchRollupSpec extends SparkSpec {
   test("the persisted daily table is register-bounded, never row-scaled") {
     withIndexRoot("graft-hll-spec") {
       SR.ensure(spark, sf)
-      val t = spark.read.parquet(SR.sketchPath(sf))
+      val t = spark.read.parquet(SR.rollup.stored(spark, sf))
       val days = t.select("day").distinct().count()
       val types = t.select("event_type").distinct().count()
       assert(t.count() <= days * types * SR.M,
