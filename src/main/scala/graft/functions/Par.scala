@@ -27,8 +27,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * partition-count probe builds the plan's RDD, which for a plan with
   * exchanges under AQE would materialize upstream stages — so widen
   * first inspects the logical plan and becomes a NO-OP when any
-  * shuffle-inducing operator is present (public callers like
-  * IndexStore.appendBands can then take arbitrary frames safely).
+  * shuffle-inducing operator is present (so callers can hand it
+  * arbitrary frames safely).
   */
 object Par {
   /** True when the plan contains an operator that plans an exchange

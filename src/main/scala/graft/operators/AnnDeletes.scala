@@ -14,14 +14,15 @@ import org.apache.spark.sql.functions._
   * CANDIDATE/REFINE boundary — a tombstoned vector can never be
   * RETURNED, whatever index files still physically hold its codes.
   *
-  * Physical purge rides the index lifecycle that already exists: the
-  * next quantizer retrain ([[RetrainTrigger]] on recall decay, or
-  * any corpus-fingerprint change) rebuilds every artifact from the
-  * post-delete corpus, at which point the tombstones' work is done —
-  * the same two-phase story as [[DeletionVectors.vacuum]], with the
-  * rebuild standing in for the file rewrite. Until then the cost is
-  * one deleted-row-sized anti-join per query (size-based broadcast,
-  * like every tombstone table here). */
+  * Physical purge rides the index lifecycle that already exists: a
+  * retrain rebuilds only under a new corpus fingerprint (the
+  * post-delete corpus rewritten; [[RetrainTrigger]] on recall decay
+  * ensures that fingerprint's artifacts), at which point the
+  * tombstones' work is done — the same two-phase story as
+  * [[DeletionVectors.vacuum]], with the rebuild standing in for the
+  * file rewrite. Until then the cost is one deleted-row-sized
+  * anti-join per query (size-based broadcast, like every tombstone
+  * table here). */
 object AnnDeletes {
 
   def tombstonePath(dir: String): String =

@@ -113,10 +113,9 @@ object MinMaxManifest {
       .coalesce(1).write.mode("overwrite").parquet(snapshotsPath(dir, table))
   }
 
-  /** INCREMENTAL manifest maintenance — the streaming-ingest leg (the
-    * [[IndexStore.appendToIndex]] discipline applied to scan
-    * planning): a micro-batch appends its rows into the layout, and
-    * the manifest gains rows for ONLY the files that batch created —
+  /** INCREMENTAL manifest maintenance — the streaming-ingest leg,
+    * O(batch) work applied to scan planning: a micro-batch appends
+    * its rows into the layout, and the manifest gains rows for ONLY the files that batch created —
     * identified by a metadata-only listing diff, then stat'd with one
     * O(batch) scan of just those files. Per-file stats are immutable
     * once written (the Iceberg manifest property), so old manifest

@@ -5,19 +5,18 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
 
-/** Quantizer-drift response — the operational loop that closes the
-  * [[IndexStore]] append story (r6 ask #8).
+/** Quantizer-drift response — the operational loop of the
+  * [[IndexStore]] train-once lifecycle.
   *
-  * [[IndexStore.appendToIndex]] encodes new batches under FROZEN
-  * quantizers: bit-correct by contract, but quantizer QUALITY drifts
-  * if the batch distribution shifts (documented at the append path) —
-  * new-region vectors smear across cells trained on the old region,
-  * probes stop covering true neighbors, and recall decays silently.
-  * v13 measures that recall continuously; this tool wires the
-  * measurement to the response: recall under the DEPLOYED pivot
-  * artifact < τ ⇒ retrain fresh artifacts under the corpus's CURRENT
-  * fingerprint (the cadence the scaladoc promises: "append daily,
-  * retrain on a schedule" — made recall-driven instead of blind).
+  * A deployment that keeps serving the pivots it trained while the
+  * corpus grows keeps correct assignments, but quantizer QUALITY
+  * drifts if the new rows' distribution shifts — new-region vectors
+  * smear across cells trained on the old region, probes stop
+  * covering true neighbors, and recall decays silently. v13 measures
+  * that recall continuously; this tool wires the measurement to the
+  * response: recall under the DEPLOYED pivot artifact < τ ⇒ build
+  * the artifacts of the corpus's CURRENT fingerprint (retraining
+  * made recall-driven instead of a blind schedule).
   *
   * Cost shape: the recall probe is v13's — one exact pass over the
   * corpus for the bounded query set (Q·N map-side cosines, top-k
@@ -32,23 +31,21 @@ import graft.functions.VectorOps
   */
 object RetrainTrigger {
 
-  /** The deployed pivot artifact, loaded by explicit path (after a
-    * corpus append the CURRENT fingerprint no longer points at it —
-    * that is exactly the drifted state this tool exists to judge). */
-  def loadPivots(s: SparkSession, path: String): Array[Array[Double]] = {
-    import s.implicits._
-    IndexStore.readAs(s, "pivot_id BIGINT, pv ARRAY<DOUBLE>", path)
-      .select($"pivot_id", $"pv")
-      .as[(Long, Array[Double])].collect().sortBy(_._1).map(_._2)
-  }
+  /** The deployed pivot artifact, loaded by explicit path as its
+    * committed part (after a corpus append the CURRENT fingerprint no
+    * longer points at it — that is exactly the drifted state this tool
+    * exists to judge). */
+  def loadPivots(s: SparkSession, path: String): Array[Array[Double]] =
+    IndexStore.readPivots(s, EnsureWatermark.current(path)
+      .getOrElse(sys.error(s"no committed pivot artifact at $path"))
+      .part(path, "data"))
 
   /** recall@k of the nprobe=2 IVF candidate stage UNDER THE GIVEN
     * pivots, against exact cosine ground truth over the corpus at
     * `dir` as it stands now. Assignment runs inline under `pivots` —
-    * by the [[IndexStore.appendToIndex]] frozen-quantizer contract
-    * this is bit-identical to what the appended index serves, so the
-    * number measured is the deployed index's recall without touching
-    * it. */
+    * the same [[VectorOps.nearest2Pivots]] map an index built under
+    * them runs, so the number measured is the deployed pivots' recall
+    * over today's corpus without building anything. */
   def recallUnderPivots(s: SparkSession, dir: String,
       pivots: Array[Array[Double]], queryIds: Seq[Long],
       k: Int = 10): Double = {
@@ -89,11 +86,13 @@ object RetrainTrigger {
   }
 
   /** The guard: measure recall of the deployed pivots over the current
-    * corpus; below `tau`, retrain pivots AND the flat index under the
-    * corpus's current fingerprint and report the recovered recall.
-    * Returns (oldRecall, retrained, newRecall — = oldRecall when no
-    * retrain fired). Idempotent: artifacts for the current fingerprint
-    * build once, a re-check after retraining loads them. */
+    * corpus; below `tau`, ensure pivots AND the flat index under the
+    * corpus's current fingerprint and report their recall. Returns
+    * (oldRecall, retrained, newRecall — = oldRecall when no retrain
+    * fired). Builds are deterministic and every index artifact is
+    * keyed by its source fingerprint, so the current fingerprint's
+    * committed artifacts ARE the retrain: they build once, and a
+    * re-check loads them. */
   def check(s: SparkSession, dir: String, deployedPivotPath: String,
       iters: Int, tau: Double, queryIds: Seq[Long],
       k: Int = 10): (Double, Boolean, Double) = {
@@ -101,18 +100,7 @@ object RetrainTrigger {
       loadPivots(s, deployedPivotPath), queryIds, k)
     if (oldRecall >= tau) (oldRecall, false, oldRecall)
     else {
-      // FORCE the rebuild: when the deployed path IS the current
-      // fingerprint's (the scheduled-monitoring shape), the
-      // load-if-present builders would silently hand back the decayed
-      // artifacts and report retrained=true without rebuilding
-      // anything (review catch). Deleting first is safe — every build
-      // is deterministic from the source table. Retraining sees the
-      // corpus AS THE SOURCE TABLE STANDS: an operator whose appends
-      // went only through appendToIndex must fold them into the table
-      // (the standard batches-land-in-the-table lifecycle) for the
-      // fresh quantizers to learn the drifted region.
-      IndexStore.removeArtifact(IndexStore.ivfPivotPath(dir))
-      IndexStore.removeArtifact(IndexStore.ivfFlatPath(dir, iters))
+      // retraining sees the corpus AS THE SOURCE TABLE STANDS
       val fresh = IndexStore.ivfPivots(s, dir, iters)
       IndexStore.ivfFlat(s, dir, iters) // materialize the assignment too
       (oldRecall, true, recallUnderPivots(s, dir, fresh, queryIds, k))
@@ -121,10 +109,7 @@ object RetrainTrigger {
 
   /** CLI: `runMain graft.operators.RetrainTrigger <dir> <tau>` —
     * checks the CURRENT-fingerprint pivot artifact against τ (the
-    * scheduled-monitoring shape: same-fingerprint recall can still
-    * decay through [[IndexStore.appendToIndex]], whose batches extend
-    * the index without touching the source fingerprint). Prints one
-    * JSON line. */
+    * scheduled-monitoring shape). Prints one JSON line. */
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val tau = args.lift(1).map(_.toDouble).getOrElse(0.6)

@@ -32,10 +32,10 @@ import graft.functions.DetHash
   * At 100 TB: one hash-partition exchange + local sorts, every stage
   * map-side beyond it; NumShards scales to O(corpus/shard-budget)
   * (here 8 for a 500-doc gate corpus). Appending a new batch lands
-  * new files in existing shard dirs (same blind-append contract as
-  * [[IndexStore.appendToIndex]]); within-shard order then holds per
-  * file, not across files — the trainer's reader interleaves, which
-  * is itself a shuffle, so the contract degrades gracefully. */
+  * new files in existing shard dirs (a blind append, like any file
+  * sink); within-shard order then holds per file, not across files
+  * — the trainer's reader interleaves, which is itself a shuffle, so
+  * the contract degrades gracefully. */
 object ShardExport {
 
   val NumShards = 8

@@ -228,9 +228,9 @@ object CurationQueries {
     * countDistincts into the wide aggregate, which multiplies the
     * full scan through a shared Expand. (At 100 TB
     * `approx_count_distinct` folds distincts back into the single
-    * pass — same call shape, the trade the taxi views make via
-    * `approxTaxis`.) Typed min/max columns avoid cross-engine string
-    * formatting of numerics. */
+    * pass — same call shape, the trade the streaming rollup makes.)
+    * Typed min/max columns avoid cross-engine string formatting of
+    * numerics. */
   val c04Profile: GraftQuery = GraftQuery(
     "c04_profile",
     (s, dir) => {

@@ -316,8 +316,7 @@ object MultimodalQueries {
       // all four join consumers below read 8 B/image. Corrupt
       // payloads are excluded inside aHashTable — see its scaladoc.
       val words = graft.operators.IndexStore.cachedTable(s,
-        graft.operators.IndexStore.derivedTablePath(
-          dir, "documents", "ahash_words_v1"), parts = 2,
+        dir, "documents", "ahash_words_v1", parts = 2,
         ddl = "doc_id BIGINT, w0 INT, w1 INT, w2 INT, w3 INT") {
         Multimodal.aHashTable(media)
       }
@@ -422,8 +421,7 @@ object MultimodalQueries {
       // persisted per-corpus artifact, same lifecycle as m06's hash
       // table: the WAV encode+decode pass runs once per corpus
       val sig = graft.operators.IndexStore.cachedTable(s,
-        graft.operators.IndexStore.derivedTablePath(
-          dir, "documents", "energy_sigs_v1"), parts = 2,
+        dir, "documents", "energy_sigs_v1", parts = 2,
         ddl = "doc_id BIGINT, e0 BIGINT, e1 BIGINT, e2 BIGINT, e3 BIGINT, " +
           "e4 BIGINT, e5 BIGINT, e6 BIGINT, e7 BIGINT") {
         Multimodal.energyTable(media)

@@ -74,16 +74,9 @@ object TransformJob {
     col(s"${side}_community_area"), col(s"${side}_community_area_name"),
     col(s"${side}_centroid_latitude"), col(s"${side}_centroid_longitude"))
 
-  /** A3/A5 — company × day × area aggregate. `approxTaxis` swaps the
-    * exact `countDistinct(taxi_id)` (2-phase agg with an Expand plan)
-    * for `approx_count_distinct` (mergeable HLL sketch, no Expand) —
-    * the 100-TB option for the distinct measure (SURVEY.md §2.4). */
-  def companyAreaView(enriched: DataFrame, side: String,
-      approxTaxis: Boolean = false): DataFrame = {
-    val taxis =
-      if (approxTaxis) approx_count_distinct("taxi_id").as("taxis")
-      else countDistinct("taxi_id").as("taxis")
-    val measures = measuresL1 :+ taxis
+  /** A3/A5 — company × day × area aggregate. */
+  def companyAreaView(enriched: DataFrame, side: String): DataFrame = {
+    val measures = measuresL1 :+ countDistinct("taxi_id").as("taxis")
     enriched.groupBy(l1Keys(side): _*).agg(measures.head, measures.tail: _*)
   }
 
@@ -119,28 +112,6 @@ object TransformJob {
         sum("trip_total").as("trip_totals"),
         count("trip_id").as("trips"),
         countDistinct("taxi_id").as("taxis"))
-
-  /** The PRODUCTION fix for the A4 quirk at 100 TB: the company-level
-    * view carries a mergeable HLL sketch of taxi_id
-    * (`hll_sketch_agg`), and every re-aggregation level unions the
-    * sketches (`hll_union_agg` → `hll_sketch_estimate`) — distinct
-    * counts that re-aggregate correctly with ONE scan of the base
-    * table and no Expand plan, at ±~2% accuracy. Returns
-    * (companyView-with-sketch, dayView-with-estimated-taxis). */
-  def sketchViews(enriched: DataFrame, side: String): (DataFrame, DataFrame) = {
-    val ms = measuresL1 :+ expr("hll_sketch_agg(taxi_id)").as("taxis_sketch")
-    val l1 = enriched.groupBy(l1Keys(side): _*).agg(ms.head, ms.tail: _*)
-    val l2 = l1.groupBy(l2Keys(side): _*).agg(
-      sum("fares").as("fares"),
-      sum("tips").as("tips"),
-      sum("tolls").as("tolls"),
-      sum("extras").as("extras"),
-      sum("trip_totals").as("trip_totals"),
-      sum("trips").as("trips"),
-      expr("hll_sketch_estimate(hll_union_agg(taxis_sketch))").as("taxis"))
-    (l1.withColumn("taxis", expr("hll_sketch_estimate(taxis_sketch)"))
-      .drop("taxis_sketch"), l2)
-  }
 
   /** ONE-PASS alternative to the chained A3→A4 pair: ROLLUP over the
     * company dimension produces the company-level rows (grouping=0)

@@ -25,7 +25,7 @@ class IndexStoreSpec extends SparkSpec {
   test("ivf pivots: warm load returns the identical trained array") {
     withRoot { _ =>
       val cold = IndexStore.ivfPivots(spark, sf, IvfIters)
-      assert(new java.io.File(IndexStore.ivfPivotPath(sf), "_SUCCESS").isFile,
+      assert(EnsureWatermark.current(IndexStore.ivfPivotPath(sf)).isDefined,
         "cold training must persist the artifact")
       val warm = IndexStore.ivfPivots(spark, sf, IvfIters)
       assert(cold.length === warm.length)
@@ -38,13 +38,13 @@ class IndexStoreSpec extends SparkSpec {
   test("ivf pivots: the warm path really loads (tampered artifact is served)") {
     withRoot { _ =>
       IndexStore.ivfPivots(spark, sf, IvfIters)
-      // overwrite the artifact with a recognizable fake; a loader that
+      // commit a recognizable fake over the artifact; a loader that
       // silently retrained would return the real pivots instead
       val s2 = spark
       import s2.implicits._
       val fake = Seq((0L, Array.fill(64)(1.5)), (1L, Array.fill(64)(-2.5)))
-      spark.createDataset(fake).toDF("pivot_id", "pv")
-        .coalesce(1).write.mode("overwrite").parquet(IndexStore.ivfPivotPath(sf))
+      EnsureWatermark.commitData(IndexStore.ivfPivotPath(sf), sf, "embeddings")(
+        spark.createDataset(fake).toDF("pivot_id", "pv").coalesce(1).write.parquet(_))
       val got = IndexStore.ivfPivots(spark, sf, IvfIters)
       assert(got.length === 2)
       assert(got(0).forall(_ === 1.5) && got(1).forall(_ === -2.5),
@@ -76,150 +76,12 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
-  test("appendToIndex: incremental batch composes bit-identically with a full re-encode") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      // build the index for the standing corpus
-      IndexStore.ivfadcIndex(spark, sf, IvfIters, 16, 4, 32)
-      val idxPath = IndexStore.ivfadcIndexPath(sf, IvfIters, 16, 4, 32)
-      val filesPerBucket = new java.io.File(idxPath).listFiles()
-        .filter(_.getName.startsWith("bucket="))
-        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-        .toMap
-      // day 2: 40 NEW vectors (re-keyed corpus vectors — same
-      // distribution, ids above the range)
-      val batch = graft.Tables(spark, sf, "embeddings")
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-        .as[(Long, Array[Double])]
-        .filter(_._1 < 40).map { case (id, v) => (id + 1000000000L, v) }
-      IndexStore.appendToIndex(spark, sf, batch, IvfIters, 16, 4, 32)
-
-      // composed index == one-shot encode of the same union under the
-      // SAME frozen artifacts
-      val composed = IndexStore.ivfadcIndex(spark, sf, IvfIters, 16, 4, 32)
-        .select($"vec_id", $"bucket", $"codes".cast("array<int>"))
-        .as[(Long, Long, Array[Int])].collect()
-        .map(r => (r._1, r._2, r._3.toSeq)).sortBy(_._1)
-      val full = IndexStore.encodeWith(spark, sf,
-        graft.Tables(spark, sf, "embeddings")
-          .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-          .as[(Long, Array[Double])].unionAll(batch), IvfIters, 16, 4, 32)
-        .as[(Long, Long, Array[Int])].collect()
-        .map(r => (r._1, r._2, r._3.toSeq)).sortBy(_._1)
-      assert(composed.toSeq === full.toSeq,
-        "frozen-quantizer append must equal the full re-encode")
-
-      // O(batch) write surface: only the buckets the batch landed in
-      // gained files
-      val touched = composed.filter(_._1 >= 1000000000L).map(_._2).toSet
-      new java.io.File(idxPath).listFiles()
-        .filter(_.getName.startsWith("bucket=")).foreach { d =>
-          val b = d.getName.stripPrefix("bucket=").toLong
-          val n = d.listFiles().count(_.getName.endsWith(".parquet"))
-          if (!touched.contains(b))
-            assert(n === filesPerBucket(d.getName),
-              s"untouched bucket $b must gain no files")
-        }
-    }
-  }
-
-  test("compactIndex: folds appended bucket runs into one file, results bit-identical") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      IndexStore.ivfadcIndex(spark, sf, IvfIters, 16, 4, 32)
-      val idxPath = IndexStore.ivfadcIndexPath(sf, IvfIters, 16, 4, 32)
-      def batch(off: Long) = graft.Tables(spark, sf, "embeddings")
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-        .as[(Long, Array[Double])]
-        .filter(_._1 < 30).map { case (id, v) => (id + off, v) }
-      IndexStore.appendToIndex(spark, sf, batch(2000000000L), IvfIters, 16, 4, 32)
-      IndexStore.appendToIndex(spark, sf, batch(3000000000L), IvfIters, 16, 4, 32)
-      def bucketFiles() = new java.io.File(idxPath).listFiles()
-        .filter(_.getName.startsWith("bucket="))
-        .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(_.getName).sorted.toSeq).toMap
-      val before = bucketFiles()
-      val multi = before.filter(_._2.size > 1)
-      assert(multi.nonEmpty, "the appends must fragment some buckets")
-      val rows = spark.read.parquet(idxPath)
-        .collect().map(_.toString).sorted.toSeq
-      val packed = IndexStore.compactIndex(spark, sf, IvfIters, 16, 4, 32)
-      assert(packed === multi.size,
-        "exactly the fragmented buckets must be rewritten")
-      val after = bucketFiles()
-      after.foreach { case (b, fsAfter) =>
-        if (multi.contains(b))
-          assert(fsAfter.size === 1, s"$b must fold into one file")
-        else
-          assert(fsAfter === before(b), s"untouched $b must keep its files")
-      }
-      assert(spark.read.parquet(idxPath)
-        .collect().map(_.toString).sorted.toSeq === rows,
-        "compaction must not change a single indexed row")
-      // idempotent: a second run finds nothing to do
-      assert(IndexStore.compactIndex(spark, sf, IvfIters, 16, 4, 32) === 0)
-    }
-  }
-
-  test("compactIndex: staging lives outside the root and the swap crash window self-repairs") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      IndexStore.ivfadcIndex(spark, sf, IvfIters, 16, 4, 32)
-      val idxPath = IndexStore.ivfadcIndexPath(sf, IvfIters, 16, 4, 32)
-      val batch = graft.Tables(spark, sf, "embeddings")
-        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-        .as[(Long, Array[Double])]
-        .filter(_._1 < 30).map { case (id, v) => (id + 2000000000L, v) }
-      IndexStore.appendToIndex(spark, sf, batch, IvfIters, 16, 4, 32)
-      val rows = spark.read.parquet(idxPath)
-        .collect().map(_.toString).sorted.toSeq
-      // simulate the one crash window: a run died between swap-out and
-      // swap-in — the bucket is parked in the SIBLING staging dir (the
-      // r9 advice: staging inside the root was parsed by partition
-      // discovery as a bucket value and NULLed out of probe results)
-      val root = new java.io.File(idxPath)
-      val victim = root.listFiles()
-        .filter(_.getName.startsWith("bucket=")).head
-      val staging = new java.io.File(idxPath + ".compacting")
-      staging.mkdirs()
-      val parked = new java.io.File(staging, "old." + victim.getName)
-      assert(victim.renameTo(parked), "test setup: park the bucket")
-      // reads BETWEEN repair runs never see a phantom NULL bucket: the
-      // staging dir is invisible to the index root's discovery
-      val midCrash = spark.read.parquet(idxPath)
-        .where($"bucket".isNull).count()
-      assert(midCrash === 0L, "staging must never surface as a NULL bucket")
-      // the next compaction run repairs FIRST: the parked bucket is
-      // restored, staging cleared, and the index is byte-complete
-      IndexStore.compactIndex(spark, sf, IvfIters, 16, 4, 32)
-      assert(!staging.exists(), "repair must clear the staging dir")
-      assert(spark.read.parquet(idxPath)
-        .collect().map(_.toString).sorted.toSeq === rows,
-        "crash repair must restore every row of the parked bucket")
-    }
-  }
-
-  test("appendToIndex refuses to append before the index exists") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val batch = Seq((1L, Array.fill(64)(0.5))).toDS()
-      val e = intercept[IllegalArgumentException] {
-        IndexStore.appendToIndex(spark, sf, batch, IvfIters, 16, 4, 32)
-      }
-      assert(e.getMessage.contains("must be built before appending"))
-    }
-  }
-
   test("minhash band index: cold build and warm load serve identical signatures") {
     withRoot { _ =>
       val cold = IndexStore.minhashBands(spark, sf, 13, 5)
         .collect().map(_.toString).sorted
-      assert(new java.io.File(IndexStore.minhashBandsPath(sf, 13, 5),
-        "_SUCCESS").isFile, "cold build must persist the artifact")
+      assert(EnsureWatermark.current(IndexStore.minhashBandsPath(sf, 13, 5)).isDefined,
+        "cold build must persist the artifact")
       val warm = IndexStore.minhashBands(spark, sf, 13, 5)
         .collect().map(_.toString).sorted
       assert(cold.toSeq === warm.toSeq)
@@ -227,8 +89,8 @@ class IndexStoreSpec extends SparkSpec {
       // the warm path really loads: tamper and observe
       val s2 = spark
       import s2.implicits._
-      Seq((42L, 0, 7L)).toDF("doc_id", "band", "sig")
-        .write.mode("overwrite").parquet(IndexStore.minhashBandsPath(sf, 13, 5))
+      EnsureWatermark.commitData(IndexStore.minhashBandsPath(sf, 13, 5), sf,
+        "documents")(Seq((42L, 0, 7L)).toDF("doc_id", "band", "sig").write.parquet(_))
       assert(IndexStore.minhashBands(spark, sf, 13, 5).count() === 1L,
         "warm call must serve the persisted artifact, not re-sketch")
     }
@@ -248,17 +110,17 @@ class IndexStoreSpec extends SparkSpec {
       val cold = IndexStore.ivfFlat(spark, sf, IvfIters)
         .collect().map(_.toString).sorted
       assert(cold.nonEmpty)
-      assert(new java.io.File(IndexStore.ivfFlatPath(sf, IvfIters),
-        "_SUCCESS").isFile, "cold build must persist the artifact")
+      assert(EnsureWatermark.current(IndexStore.ivfFlatPath(sf, IvfIters)).isDefined,
+        "cold build must persist the artifact")
       val warm = IndexStore.ivfFlat(spark, sf, IvfIters)
         .collect().map(_.toString).sorted
       assert(cold.toSeq === warm.toSeq, "warm read must equal the cold build")
       // tamper: a loader that silently re-assigned would return N rows
       val s2 = spark
       import s2.implicits._
-      Seq((42L, 0L, 1L, 0.5, Array(1.0, 2.0)))
-        .toDF("vec_id", "cell1", "cell2", "simc", "v")
-        .write.mode("overwrite").parquet(IndexStore.ivfFlatPath(sf, IvfIters))
+      EnsureWatermark.commitData(IndexStore.ivfFlatPath(sf, IvfIters), sf,
+          "embeddings")(Seq((42L, 0L, 1L, 0.5, Array(1.0, 2.0)))
+        .toDF("vec_id", "cell1", "cell2", "simc", "v").write.parquet(_))
       assert(IndexStore.ivfFlat(spark, sf, IvfIters).count() === 1L,
         "warm call must serve the persisted artifact, not re-assign")
     }
@@ -297,7 +159,8 @@ class IndexStoreSpec extends SparkSpec {
     withRoot { _ =>
       import org.apache.spark.sql.functions._
       IndexStore.bm25Postings(spark, sf) // build
-      val ranges = spark.read.parquet(IndexStore.bm25PostingsPath(sf))
+      val path = IndexStore.bm25PostingsPath(sf)
+      val ranges = spark.read.parquet(EnsureWatermark.current(path).get.part(path, "data"))
         .groupBy(input_file_name().as("f"))
         .agg(min("term").as("lo"), max("term").as("hi"))
         .collect().map(r => (r.getString(1), r.getString(2)))
@@ -309,168 +172,6 @@ class IndexStoreSpec extends SparkSpec {
             s"file term ranges must not interleave: [$hi1] vs [$lo2]")
         case _ =>
       }
-    }
-  }
-
-  test("bm25Append: appended batches compose bit-identically with a full rebuild") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val base = (0L until 40L).map(i => (i, s"alpha beta gamma doc$i"))
-      val batch = (40L until 60L).map(i => (i, s"beta delta doc$i extra words"))
-      def mkDir(rows: Seq[(Long, String)]): String = {
-        val d = tmpDir("bm25-append")
-        rows.toDF("doc_id", "text")
-          .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-        d
-      }
-      val dirA = mkDir(base)          // base corpus, then append
-      val dirB = mkDir(base ++ batch) // the equivalent full corpus
-      IndexStore.bm25Postings(spark, dirA)
-      IndexStore.bm25Append(spark, dirA, batch.toDF("doc_id", "text"))
-      val (pA, sA) = IndexStore.bm25Postings(spark, dirA)
-      val (pB, sB) = IndexStore.bm25Postings(spark, dirB)
-      assert(pA.collect().map(_.toString).sorted.toSeq ===
-        pB.collect().map(_.toString).sorted.toSeq,
-        "appended posting multiset must equal the full rebuild's")
-      assert(sA.collect().map(_.toString).toSeq ===
-        sB.collect().map(_.toString).toSeq,
-        "folded stats must equal the full rebuild's")
-    }
-  }
-
-  test("bm25: a torn stats job rederives from postings — appended batches survive") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val d = tmpDir("bm25-torn-stats")
-      (0L until 30L).map(i => (i, s"alpha beta doc$i")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-      IndexStore.bm25Postings(spark, d)
-      val batch = (30L until 45L).map(i => (i, s"gamma delta doc$i"))
-      IndexStore.bm25Append(spark, d, batch.toDF("doc_id", "text"))
-      val (p0, s0) = IndexStore.bm25Postings(spark, d)
-      val postingsBefore = p0.collect().map(_.toString).sorted.toSeq
-      val statsBefore = s0.as[(Long, Long)].head()
-      assert(statsBefore._1 === 45L, "stats partials must sum to the full corpus")
-      // the crash: the BASE batch's stats dir loses its marker (torn job)
-      assert(new java.io.File(
-        s"${IndexStore.bm25StatsPath(d)}/batch=base", "_SUCCESS").delete())
-      val (p1, s1) = IndexStore.bm25Postings(spark, d)
-      assert(p1.collect().map(_.toString).sorted.toSeq === postingsBefore,
-        "recovery must NOT rebuild postings — appended batches would be lost")
-      // every doc here has ≥1 token, so the rederived stats are exact
-      assert(s1.as[(Long, Long)].head() === statsBefore,
-        "stats rederived from postings must equal the pre-crash sums")
-    }
-  }
-
-  test("bm25Append: a crash between the postings and stats writes loses nothing") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val base = (0L until 40L).map(i => (i, s"alpha beta gamma doc$i"))
-      val b1 = (40L until 55L).map(i => (i, s"beta delta doc$i"))
-      val b2 = (55L until 70L).map(i => (i, s"gamma epsilon doc$i"))
-      def mkDir(rows: Seq[(Long, String)], name: String): String = {
-        val d = tmpDir(name)
-        rows.toDF("doc_id", "text")
-          .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-        d
-      }
-      val dirA = mkDir(base, "bm25-crash-a")
-      val dirB = mkDir(base ++ b1 ++ b2, "bm25-crash-b")
-      IndexStore.bm25Postings(spark, dirA)
-      IndexStore.bm25Append(spark, dirA, b1.toDF("doc_id", "text"), "b1")
-      IndexStore.bm25Append(spark, dirA, b2.toDF("doc_id", "text"), "b2")
-      // the crash window: batch b2's postings committed, its stats
-      // write never ran — simulate by erasing b2's stats dir outright
-      val s2dir = new java.io.File(s"${IndexStore.bm25StatsPath(dirA)}/batch=b2")
-      s2dir.listFiles().foreach(_.delete()); assert(s2dir.delete())
-      // recovery: the served index must carry ALL appended batches
-      // with N/Σdl EXACTLY matching the served postings — bit-equal to
-      // a fresh build over the full corpus
-      val (pA, sA) = IndexStore.bm25Postings(spark, dirA)
-      val (pB, sB) = IndexStore.bm25Postings(spark, dirB)
-      assert(pA.collect().map(_.toString).sorted.toSeq ===
-        pB.collect().map(_.toString).sorted.toSeq,
-        "every appended batch's postings must survive the crash")
-      assert(sA.as[(Long, Long)].head() === sB.as[(Long, Long)].head(),
-        "recovered N/Σdl must equal the full rebuild's — not stale by the torn batch")
-      // and the query surface agrees: warm t18-style scores are
-      // identical over both indexes
-      def scores(dir: String) = graft.queries.TextQueries
-        .bm25Scores(spark, dir).collect().map(_.toString).sorted.toSeq
-      assert(scores(dirA) === scores(dirB),
-        "BM25 scores after crash recovery must equal the full rebuild's")
-    }
-  }
-
-  test("bm25 reads never write: missing stats derive in memory, storage untouched") {
-    // the r8 advice: bm25Recover ran on every read, so read paths
-    // performed writes — racing concurrent readers on the same stats
-    // dir and failing outright on read-only storage. Reads now derive
-    // a missing batch's (n, sdl) in memory; durable repair stays on
-    // the write paths.
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val d = tmpDir("bm25-readonly")
-      (0L until 30L).map(i => (i, s"alpha beta doc$i")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-      IndexStore.bm25Postings(spark, d)
-      IndexStore.bm25Append(spark, d, (30L until 45L)
-        .map(i => (i, s"gamma delta doc$i")).toDF("doc_id", "text"), "b1")
-      val before = IndexStore.bm25Stats(spark, d).as[(Long, Long)].head()
-      // the crash window: b1's stats dir never landed
-      val sdir = new java.io.File(s"${IndexStore.bm25StatsPath(d)}/batch=b1")
-      sdir.listFiles().foreach(_.delete()); assert(sdir.delete())
-      // repeated reads serve EXACT stats...
-      (1 to 2).foreach { _ =>
-        assert(IndexStore.bm25Stats(spark, d).as[(Long, Long)].head() === before,
-          "read-side derivation must restore exact N/sdl")
-      }
-      // ...and never re-create the stats dir (reads are read-only)
-      assert(!sdir.exists(),
-        "a read must not durably repair the stats artifact")
-      // the WRITE path repairs durably: the next append heals b1
-      IndexStore.bm25Append(spark, d, (45L until 50L)
-        .map(i => (i, s"zeta doc$i")).toDF("doc_id", "text"), "b2")
-      assert(sdir.exists() && new java.io.File(sdir, "_SUCCESS").exists(),
-        "the append path must run durable stats repair")
-    }
-  }
-
-  test("bm25Append auto-tag never reuses a torn batch's replay slot") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val d = tmpDir("bm25-tag")
-      (0L until 20L).map(i => (i, s"alpha doc$i")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-      IndexStore.bm25Postings(spark, d)
-      // a torn append: postings dir exists WITHOUT _SUCCESS (crash
-      // mid-write). Under ready-count numbering the next auto append
-      // would also be b0001 — overwriting the crashed batch's replay
-      // slot with different data (the r8 advice).
-      val torn = new java.io.File(s"${IndexStore.bm25PostingsPath(d)}/batch=b0001")
-      assert(torn.mkdirs())
-      java.nio.file.Files.write(torn.toPath.resolve("part-00000.parquet"),
-        Array[Byte](1, 2, 3))
-      IndexStore.bm25Append(spark, d, (20L until 25L)
-        .map(i => (i, s"beta doc$i")).toDF("doc_id", "text"))
-      val p = IndexStore.bm25PostingsPath(d)
-      assert(new java.io.File(s"$p/batch=b0002/_SUCCESS").exists(),
-        "the auto tag must skip past the torn slot")
-      assert(!new java.io.File(torn, "_SUCCESS").exists() &&
-        torn.toPath.resolve("part-00000.parquet").toFile.exists(),
-        "the torn batch must keep its slot for replay")
-      // replaying the crashed batch under ITS tag completes it
-      IndexStore.bm25Append(spark, d, (25L until 28L)
-        .map(i => (i, s"gamma doc$i")).toDF("doc_id", "text"), "b0001")
-      assert(new java.io.File(torn, "_SUCCESS").exists())
-      assert(IndexStore.bm25Stats(spark, d).as[(Long, Long)].head()._1 === 28L,
-        "all three batches must serve after the replay")
     }
   }
 
@@ -501,130 +202,6 @@ class IndexStoreSpec extends SparkSpec {
       assert(seen.asScala.nonEmpty, "the build must have run jobs")
       assert(seen.asScala.forall(_ == orig),
         s"caller conf was mutated mid-build: ${seen.asScala.toSet}")
-    }
-  }
-
-  test("bm25Compact: restores file count after appends, results bit-identical, no retokenize") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val d = tmpDir("bm25-compact")
-      (0L until 40L).map(i => (i, s"alpha beta gamma doc$i")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-      IndexStore.bm25Postings(spark, d)
-      def postFiles(): Int = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(IndexStore.bm25PostingsPath(d)))
-          .count(_.getName.endsWith(".parquet"))
-      }
-      val builtFiles = postFiles()
-      (0 until 3).foreach { b =>
-        IndexStore.bm25Append(spark, d,
-          (100L + b * 10 until 110L + b * 10).map(i => (i, s"beta delta doc$i"))
-            .toDF("doc_id", "text"))
-      }
-      assert(postFiles() > builtFiles, "appends must have multiplied posting files")
-      val (pBefore, sBefore) = IndexStore.bm25Postings(spark, d)
-      val postingsBefore = pBefore.collect().map(_.toString).sorted.toSeq
-      val statsBefore = sBefore.as[(Long, Long)].head()
-      // the documents table must NOT be read: compaction rewrites only
-      // the index — detect any scan of it via a listener on file reads
-      val docsPath = s"$d/documents.parquet"
-      val scannedDocs = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(fn: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
-          val ps = qe.optimizedPlan.collect {
-            case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-              l.relation match {
-                case fsr: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                  fsr.location.rootPaths.map(_.toString)
-                case _ => Seq.empty
-              }
-          }.flatten
-          if (ps.exists(_.contains(docsPath))) scannedDocs.set(true)
-        }
-        override def onFailure(fn: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        IndexStore.bm25Compact(spark, d)
-        Thread.sleep(300) // let the listener bus drain
-      } finally spark.listenerManager.unregister(listener)
-      assert(!scannedDocs.get(), "compaction must never retokenize the documents table")
-      assert(postFiles() <= builtFiles,
-        s"compaction must restore the built file count (${postFiles()} vs $builtFiles)")
-      val (pAfter, sAfter) = IndexStore.bm25Postings(spark, d)
-      assert(pAfter.collect().map(_.toString).sorted.toSeq === postingsBefore,
-        "compacted posting multiset must be bit-identical")
-      assert(sAfter.as[(Long, Long)].head() === statsBefore,
-        "compacted stats must be bit-identical")
-      // the range layout is restored: files cover disjoint term ranges
-      import org.apache.spark.sql.functions._
-      val ranges = spark.read.parquet(IndexStore.bm25PostingsPath(d))
-        .groupBy(input_file_name().as("f"))
-        .agg(min("term").as("lo"), max("term").as("hi"))
-        .collect().map(r => (r.getString(1), r.getString(2))).sortBy(_._1)
-      ranges.sliding(2).foreach {
-        case Array((_, hi1), (lo2, _)) =>
-          assert(hi1 <= lo2, s"compacted file ranges must not interleave: [$hi1] vs [$lo2]")
-        case _ =>
-      }
-    }
-  }
-
-  test("appendBands: appended batches compose bit-identically with a full rebuild") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val base = (0L until 30L).map(i => (i, s"alpha beta gamma doc$i common words"))
-      val batch = (30L until 45L).map(i => (i, s"beta delta doc$i other words"))
-      def mkDir(rows: Seq[(Long, String)], name: String): String = {
-        val d = tmpDir(name)
-        rows.toDF("doc_id", "text")
-          .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-        d
-      }
-      val dirA = mkDir(base, "bands-append-a")
-      val dirB = mkDir(base ++ batch, "bands-append-b")
-      IndexStore.minhashBands(spark, dirA, 4, 3) // build
-      IndexStore.appendBands(spark, dirA,
-        batch.toDF("doc_id", "text"), 4, 3)
-      val a = IndexStore.minhashBands(spark, dirA, 4, 3)
-        .collect().map(_.toString).sorted.toSeq
-      val b = IndexStore.minhashBands(spark, dirB, 4, 3)
-        .collect().map(_.toString).sorted.toSeq
-      assert(a === b,
-        "appended signature multiset must equal the full rebuild's")
-    }
-  }
-
-  test("appendBands refuses to append before the index exists") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val d = tmpDir("bands-no-idx")
-      Seq((1L, "a b c")).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/documents.parquet")
-      intercept[IllegalArgumentException] {
-        IndexStore.appendBands(spark, d, Seq((2L, "d e")).toDF("doc_id", "text"), 4, 3)
-      }
-    }
-  }
-
-  test("bm25Append refuses to append before the index exists") {
-    withRoot { _ =>
-      val s2 = spark
-      import s2.implicits._
-      val d = tmpDir("bm25-append-no-idx")
-      Seq((1L, "a b c")).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/documents.parquet")
-      intercept[IllegalArgumentException] {
-        IndexStore.bm25Append(spark, d, Seq((2L, "d e")).toDF("doc_id", "text"))
-      }
     }
   }
 

@@ -230,12 +230,16 @@ class MaintainedProtocolSpec extends SparkSpec {
   // ------------------------------------------------------------------
 
   /** One keyed family: its artifact path, build, serving probe, and —
-    * for the families maintained in place — its append mutator. */
+    * for the families maintained in place — its append mutator. A
+    * family keyed on a table other than events names it as `source`,
+    * copied from the sf0.001 fixture into the test's data dir. */
   private case class Keyed(name: String, path: String => String,
       ensure: String => Unit, probe: String => Option[Any],
-      mutate: Option[(String, DataFrame) => Unit] = None)
+      mutate: Option[(String, DataFrame) => Unit] = None,
+      source: Option[String] = None)
 
   private val Ev = "events"
+  private val Sf = "/root/testdata/sf0.001"
 
   private val keyedFamilies = Seq(
     Keyed("histogram rollup", HistogramRollup.histPath,
@@ -278,7 +282,20 @@ class MaintainedProtocolSpec extends SparkSpec {
       StatsCatalog.columnGroupIfReady(spark, _, Ev, Seq("event_type", "user_id"))),
     Keyed("catalog MCV list", StatsCatalog.mcvPath(_, Ev, "event_type"),
       StatsCatalog.ensureMcv(spark, _, Ev, "event_type"),
-      StatsCatalog.mcvIfReady(spark, _, Ev, "event_type")))
+      StatsCatalog.mcvIfReady(spark, _, Ev, "event_type")),
+    Keyed("ivf pivots", IndexStore.ivfPivotPath, IndexStore.ivfPivots(spark, _, 2),
+      d => EnsureWatermark.current(IndexStore.ivfPivotPath(d)),
+      source = Some("embeddings")),
+    Keyed("ivf-flat index", IndexStore.ivfFlatPath(_, 2), IndexStore.ivfFlat(spark, _, 2),
+      d => EnsureWatermark.current(IndexStore.ivfFlatPath(d, 2)),
+      source = Some("embeddings")),
+    Keyed("minhash bands", IndexStore.minhashBandsPath(_, 13, 5),
+      IndexStore.minhashBands(spark, _, 13, 5),
+      d => EnsureWatermark.current(IndexStore.minhashBandsPath(d, 13, 5)),
+      source = Some("documents")),
+    Keyed("bm25 postings", IndexStore.bm25PostingsPath, IndexStore.bm25Postings(spark, _),
+      d => EnsureWatermark.current(IndexStore.bm25PostingsPath(d)),
+      source = Some("documents")))
 
   private def events: DataFrame =
     (0L until 600L).map { i =>
@@ -297,6 +314,8 @@ class MaintainedProtocolSpec extends SparkSpec {
       withIndexRoot("graft-protocol-keyed") {
         val dir = tmpDir("graft-protocol-keyed-data")
         events.write.mode("overwrite").parquet(s"$dir/$Ev.parquet")
+        f.source.foreach(t => copyTree(java.nio.file.Paths.get(s"$Sf/$t.parquet"),
+          java.nio.file.Paths.get(s"$dir/$t.parquet")))
         f.ensure(dir)
         val path = f.path(dir)
 

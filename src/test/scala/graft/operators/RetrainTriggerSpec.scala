@@ -5,9 +5,8 @@ import graft.SparkSpec
 /** The quantizer-drift guard: a distribution-shifted append batch must
   * drop the deployed index's recall below τ, the trigger must fire and
   * rebuild artifacts under the corpus's new fingerprint, and the fresh
-  * quantizer must recover the recall — the operational loop the
-  * frozen-quantizer append contract defers to "retrain on a
-  * schedule". */
+  * quantizer must recover the recall — the operational loop of the
+  * train-once index lifecycle. */
 class RetrainTriggerSpec extends SparkSpec {
 
   private def withRoot[A](body: => A): A = {
@@ -67,8 +66,7 @@ class RetrainTriggerSpec extends SparkSpec {
       IndexStore.ivfPivots(spark, d, 2)
       val deployedPath = IndexStore.ivfPivotPath(d)
       // drift: the batch lands in the corpus (fingerprint moves on) but
-      // the serving index keeps extending the OLD artifact (the
-      // appendToIndex cadence)
+      // the deployment keeps serving the OLD artifact
       spark.createDataset(driftBatch).toDF("vec_id", "embedding")
         .coalesce(1).write.mode("append").parquet(s"$d/embeddings.parquet")
       val queries = (1000L until 1005L).toSeq
@@ -89,9 +87,9 @@ class RetrainTriggerSpec extends SparkSpec {
       assert(newRecall > oldRecall,
         f"retraining must recover recall: $oldRecall%.3f -> $newRecall%.3f")
       // fresh artifacts really exist under the corpus's NEW fingerprint
-      assert(IndexStore.artifactReady(IndexStore.ivfPivotPath(d)),
+      assert(EnsureWatermark.current(IndexStore.ivfPivotPath(d)).isDefined,
         "retrain must persist pivots under the current fingerprint")
-      assert(IndexStore.artifactReady(IndexStore.ivfFlatPath(d, 2)),
+      assert(EnsureWatermark.current(IndexStore.ivfFlatPath(d, 2)).isDefined,
         "retrain must rebuild the flat index too")
       // a re-check against the fresh deployment is quiet
       val (r2, fired2, _) = RetrainTrigger.check(spark, d,

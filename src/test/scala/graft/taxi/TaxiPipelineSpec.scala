@@ -132,25 +132,6 @@ class TaxiPipelineSpec extends SparkSpec {
     assert(cmp.where($"fares" =!= $"fares2" || $"trips" =!= $"trips2").count() === 0)
   }
 
-  test("sketch views: mergeable HLL distinct re-aggregates correctly") {
-    val areas = TransformJob.readAreas(spark, areasCsv)
-    val enriched = TransformJob.enrich(
-      TransformJob.prepare(spark.read.parquet(s"$dir/trips_parquet")), areas)
-    val (l1, l2) = TransformJob.sketchViews(enriched, "pickup")
-    // at fixture scale HLL is exact: area 10 on 2021-03-05 has 1 taxi
-    val r1 = l1.where($"pickup_community_area" === 10
-      && $"trip_start_date" === to_timestamp(lit("2021-03-05 00:00:00"))).head()
-    assert(r1.getAs[Long]("taxis") === 1L)
-    // day level: merged across companies — area 10 pickups on 04-03
-    // (t7 taxiD) and the multi-company day 03-06 area 20/99 all exact
-    val exact = enriched
-      .groupBy($"trip_start_date", $"pickup_community_area")
-      .agg(countDistinct($"taxi_id").as("exact_taxis"))
-    val joined = l2.join(exact, Seq("trip_start_date", "pickup_community_area"))
-    assert(joined.where($"taxis" =!= $"exact_taxis").count() === 0,
-      "HLL estimate must be exact at fixture cardinalities")
-  }
-
   test("areas master: filter → dropDuplicates → join → single CSV (P9/A2/J3/S10)") {
     val commCsv = Fixture.write(s"$dir/in/comm.csv", Fixture.commAreasCsv)
     AreasMasterJob.run(spark, tripsCsv, commCsv, s"$dir/areas_out")
