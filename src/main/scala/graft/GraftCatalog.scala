@@ -40,7 +40,8 @@ object GraftCatalog {
       .toMap +
       ("file_stats" -> ((s, d) => {
         operators.MinMaxManifest.ensure(s, d)
-        operators.MinMaxManifest.manifestPath(d) }))
+        val mp = operators.MinMaxManifest.manifestPath(d)
+        operators.EnsureWatermark.current(mp).get.part(mp, "data") }))
 
   /** The full layer list, in registration order. */
   val RollupLayers: Seq[String] = Seq("hll_daily", "hist_daily",

@@ -36,29 +36,19 @@ object BloomFileIndex {
   val MBits = 1 << 17
   private val Salts = (0 until K).map(i => s"bloom$i")
 
-  /** The index is keyed on the LAYOUT's current file set, not just
+  /** The index is keyed on the layout's committed version, not just
     * the source table: the layout legitimately changes under
-    * [[MinMaxManifest.appendBatch]]/[[MinMaxManifest.compact]], and
-    * an index built against the old file set would false-negative
-    * appended rows and name renamed-away paths (review catch — a
-    * source-only fingerprint can't see layout mutations). A changed
-    * layout therefore resolves to a fresh path and rebuilds. */
-  private def layoutFp(s: SparkSession, dir: String): String = {
+    * [[MinMaxManifest.appendBatch]] and its rewrites, and an index
+    * built against an older file set would false-negative appended
+    * rows and name deleted paths (review catch — a source-only
+    * fingerprint can't see layout mutations). Every commit lands a new
+    * version, so a changed layout resolves to a fresh path and
+    * rebuilds. */
+  private def indexPath(s: SparkSession, dir: String): String = {
     MinMaxManifest.ensure(s, dir)
-    val (fs, p) = IndexStore.fsOf(MinMaxManifest.layoutPath(dir))
-    val desc = fs.listStatus(p)
-      .filter(st => st.getPath.getName.startsWith("part-") &&
-        st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(desc.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    val version = EnsureWatermark.current(MinMaxManifest.manifestPath(dir)).get.version
+    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/bloom_event_id_$version"
   }
-
-  def indexPath(s: SparkSession, dir: String): String =
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/" +
-      s"bloom_event_id_${layoutFp(s, dir)}"
 
   /** The k bit positions of a value (hash60 mod m per salt). */
   private def bitsOf(v: Column): Seq[Column] =
@@ -69,22 +59,21 @@ object BloomFileIndex {
     Salts.map(s =>
       (graft.functions.HashSketch.hash60Jvm(v.toString, s) % MBits).toInt)
 
-  /** Build the per-file bit table over the time-clustered layout's
-    * event_id column (one scan; distinct collapses to ≤ min(n·k, m)
-    * rows per file), bit-sorted so probe reads prune row groups.
-    * Returns the (layout-fingerprinted) index path it ensured. */
-  def ensure(s: SparkSession, dir: String): String = {
-    val path = indexPath(s, dir)
-    if (IndexStore.artifactReady(path)) return path
-    val layout = s.read.parquet(MinMaxManifest.layoutPath(dir))
-    layout.select(input_file_name().as("path"), col("event_id"))
-      .select(col("path"), explode(array(bitsOf(col("event_id")): _*)).as("bit"))
-      .distinct()
-      .repartitionByRange(4, col("bit"))
-      .sortWithinPartitions("bit", "path")
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+  /** Build the per-file bit table over the committed files of the
+    * time-clustered layout's event_id column (one scan; distinct
+    * collapses to ≤ min(n·k, m) rows per file), bit-sorted so probe
+    * reads prune row groups, committed through [[EnsureWatermark]].
+    * Returns the committed index part it ensured. */
+  def ensure(s: SparkSession, dir: String): String =
+    EnsureWatermark.ensured(indexPath(s, dir), dir, "events") { out =>
+      MinMaxManifest.scan(s, dir)
+        .select(input_file_name().as("path"), col("event_id"))
+        .select(col("path"), explode(array(bitsOf(col("event_id")): _*)).as("bit"))
+        .distinct()
+        .repartitionByRange(4, col("bit"))
+        .sortWithinPartitions("bit", "path")
+        .write.parquet(out)
+    }
 
   /** Files that may contain `id`: the k probe bits are computed
     * driver-side (k tiny integers), and a file qualifies iff ALL k
@@ -151,13 +140,7 @@ object BloomFileIndex {
       .where(col("k") === col("need"))
       .select("path").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    // layout rows are the events table's own schema (skips inference)
-    val evSchema = graft.Tables(s, dir, "events").schema
-    if (files.isEmpty)
-      s.read.schema(evSchema)
-        .parquet(MinMaxManifest.layoutPath(dir)).where(lit(false))
-    else
-      s.read.schema(evSchema).parquet(files: _*)
-        .where(col("event_id").isin(ids.map(java.lang.Long.valueOf): _*))
+    MinMaxManifest.read(s, dir, files)
+      .where(col("event_id").isin(ids.map(java.lang.Long.valueOf): _*))
   }
 }

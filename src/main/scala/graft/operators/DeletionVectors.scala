@@ -35,20 +35,18 @@ import org.apache.spark.sql.functions._
   *
   * VACUUM materializes the tombstones: rewrite ONLY the files that
   * contain deleted rows (position paths name them directly; equality
-  * keys find theirs with one skinny key-column scan), then atomically
-  * retire the old files and the consumed tombstones. The commit is a
-  * REDO JOURNAL: survivors are staged into a sibling directory, the
-  * journal (old-file list) is written with its _SUCCESS marker as the
-  * commit point, and then olds are dropped, staged files move in, and
-  * tombstones clear — every post-journal step is idempotent, so a
-  * crash anywhere re-runs to completion on the next [[recover]] (a
-  * crash BEFORE the journal just orphans the staging dir, which
-  * recover removes; the live layout + tombstones stay authoritative
-  * throughout). The stats manifest self-heals through
-  * [[MinMaxManifest]]'s listing diff (old rows dropped, new files
-  * stat'd in), and the snapshot log is explicitly EXPIRED — erased
-  * rows must not remain reachable via time travel, the same reason
-  * Iceberg's GDPR story is rewrite-data-files + expire-snapshots.
+  * keys find theirs with one skinny key-column scan) through
+  * [[MinMaxManifest]]'s one rewrite commit — the survivors of the
+  * touched files replace them, and the same commit expires time-travel
+  * history (snapshot ids reset to 0): erased rows must not remain
+  * reachable via time travel, the same reason Iceberg's GDPR story is
+  * rewrite-data-files + expire-snapshots. The consumed tombstones
+  * clear after the stamp lands; a JOURNAL naming the touched files,
+  * written before the rewrite, is the redo record for that step: a
+  * crash after the stamp leaves none of the journal's files committed,
+  * and [[recover]] clears the tombstones; a crash before it leaves
+  * them committed, and recover drops the journal — the committed
+  * layout + tombstones stay authoritative throughout.
   *
   * Equality-tombstone scope follows the table-format rule: tombstones
   * apply to data present when the delete was recorded; vacuum folds
@@ -69,7 +67,6 @@ object DeletionVectors {
   def posDeletesPath(dir: String): String = artifact(dir, s"${Table}_pos_deletes")
   def eqDeletesPath(dir: String): String = artifact(dir, s"${Table}_eq_deletes")
   private def journalPath(dir: String): String = artifact(dir, s"${Table}_vacuum_journal")
-  private def stagingPath(dir: String): String = layoutPath(dir) + ".vacuum"
 
   private def ready(p: String): Boolean = IndexStore.artifactReady(p)
 
@@ -89,21 +86,37 @@ object DeletionVectors {
     * masks a delete that still has work to do. */
   def posDeletesRecorded(dir: String): Boolean = ready(posDeletesPath(dir))
 
-  /** Build the layout (manifest + snapshot-0 log included) if absent. */
+  /** Build the layout if it has no current commit. Position tombstones
+    * name the files of the layout they were recorded against, so a
+    * (re)build starts from no tombstones of either kind: a rebuilt
+    * layout with the old tombstones would silently un-delete rows
+    * while [[posDeletesRecorded]] still reported them recorded. */
   def ensure(s: SparkSession, dir: String): Unit = {
     recover(s, dir)
-    if (!ready(layoutPath(dir)))
+    if (!MinMaxManifest.built(dir, Table)) {
+      clearTombstones(dir)
       MinMaxManifest.ensureFrom(s, dir, graft.Tables(s, dir, "events"), Table)
+    }
   }
 
-  /** The layout scan with its physical row coordinates exposed —
-    * `_metadata` is generated by the scan node itself, so this adds
-    * two cheap per-row values, never a data column. */
+  private def clearTombstones(dir: String): Unit =
+    Seq(posDeletesPath(dir), eqDeletesPath(dir)).foreach(IndexStore.removeArtifact)
+
+  /** The committed files' scan with their physical row coordinates
+    * exposed — `_metadata` is generated by the scan node itself, so
+    * this adds two cheap per-row values, never a data column. */
+  private def coords(s: SparkSession, dir: String, files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      MinMaxManifest.read(s, dir, Nil)
+        .withColumn("_path", lit(null).cast("string"))
+        .withColumn("_pos", lit(null).cast("long"))
+    else
+      MinMaxManifest.read(s, dir, files)
+        .withColumn("_path", col("_metadata.file_path"))
+        .withColumn("_pos", col("_metadata.row_index"))
+
   private def coords(s: SparkSession, dir: String): DataFrame =
-    s.read.schema(graft.Tables(s, dir, "events").schema)
-      .parquet(layoutPath(dir))
-      .withColumn("_path", col("_metadata.file_path"))
-      .withColumn("_pos", col("_metadata.row_index"))
+    coords(s, dir, MinMaxManifest.entries(s, dir, Table).map(_.path))
 
   private def posDeletes(s: SparkSession, dir: String): DataFrame =
     if (ready(posDeletesPath(dir)))
@@ -185,110 +198,63 @@ object DeletionVectors {
       touchedFiles: Int, totalFiles: Int, rowsRemoved: Long)
 
   /** VACUUM: materialize all tombstones into the file layout,
-    * rewriting ONLY the touched files. See the object scaladoc for
-    * the redo-journal commit protocol and the snapshot-expiry
-    * rationale. `onJournaledForTest` is the spec's crash-injection
-    * seam (throw there to simulate dying right after the commit
-    * point). */
+    * rewriting ONLY the touched files. See the object scaladoc for the
+    * commit, the journal and the snapshot-expiry rationale.
+    * `onJournaledForTest` is the spec's crash-injection seam (throw
+    * there to simulate dying right after the commit point). */
   def vacuum(s: SparkSession, dir: String,
       onJournaledForTest: () => Unit = () => ()): VacuumStats = {
     ensure(s, dir)
-    val lp = layoutPath(dir)
-    val (fs, _) = IndexStore.fsOf(lp)
-    import org.apache.hadoop.fs.Path
-    val total = fs.listStatus(new Path(lp))
-      .count(st => st.getPath.getName.startsWith("part-") &&
-        st.getPath.getName.endsWith(".parquet"))
+    val cur = MinMaxManifest.committed(s, dir, Table).get
     val pd = posDeletes(s, dir)
     val ed = eqDeletes(s, dir).select(col("user_id")).distinct()
     // touched files: position paths directly, plus the files holding
     // equality-deleted keys (one skinny (key, path) column scan — the
     // only way to locate them, and still O(corpus keys read, deleted
-    // rows shuffled))
+    // rows shuffled)), kept to the committed ones
     val posTouched = pd.select(col("path")).distinct()
     val eqTouched = coords(s, dir)
       .select(col("user_id"), col("_path").as("path"))
       .join(ed, Seq("user_id"), "left_semi")
       .select(col("path")).distinct()
-    val touched = posTouched.union(eqTouched).distinct()
-      .collect().map(_.getString(0)).sorted // bounded: ≤ file count
+    val touchedKeys = posTouched.union(eqTouched).distinct()
+      .collect().map(r => MinMaxManifest.pathKey(r.getString(0))).toSet
+    val touched = cur.entries.filter(e => touchedKeys(MinMaxManifest.pathKey(e.path)))
     if (touched.isEmpty) {
       // tombstones that hit nothing (e.g. keys never present) still
       // clear — they are consumed by this vacuum
-      IndexStore.removeArtifact(posDeletesPath(dir))
-      IndexStore.removeArtifact(eqDeletesPath(dir))
-      return VacuumStats(0, total, 0L)
+      clearTombstones(dir)
+      return VacuumStats(0, cur.entries.size, 0L)
     }
-    // stage survivors of ONLY the touched files
-    val staged = stagingPath(dir)
-    IndexStore.removeArtifact(staged)
-    val touchedScan = s.read.parquet(
-      touched.toIndexedSeq.map(p => new Path(p).toUri.getPath): _*)
-      .withColumn("_path", col("_metadata.file_path"))
-      .withColumn("_pos", col("_metadata.row_index"))
+    val touchedScan = coords(s, dir, touched.map(_.path))
     val survivors = touchedScan
       .join(pd, touchedScan("_path") === pd("path") &&
         touchedScan("_pos") === pd("row_index"), "left_anti")
       .join(ed, Seq("user_id"), "left_anti")
       .drop("_path", "_pos")
-    val before = touchedScan.count()
-    survivors
-      .repartitionByRange(math.max(1, touched.length), col("ts"))
-      .sortWithinPartitions(col("ts"))
-      .write.mode("overwrite").parquet(staged)
-    val after = s.read.parquet(staged).count()
-    // COMMIT POINT: the journal names the files to retire; its
-    // _SUCCESS marker makes the vacuum redo-able from here
     import s.implicits._
-    s.createDataset(touched.toIndexedSeq).toDF("old_path")
-      .coalesce(1).write.mode("overwrite").parquet(journalPath(dir))
+    touched.map(_.path).toDF("old_path").coalesce(1).write.mode("overwrite")
+      .parquet(journalPath(dir))
+    val after = MinMaxManifest.rewrite(s, dir, Table, cur, touched.map(_.path).toSet,
+      survivors.repartitionByRange(touched.length, col("ts"))
+        .sortWithinPartitions(col("ts")), "vacuum").map(_.rows).sum
     onJournaledForTest()
-    commit(s, dir)
-    VacuumStats(touched.length, total, before - after)
-  }
-
-  /** Idempotent redo of a journaled vacuum: retire olds, move staged
-    * files in, clear consumed tombstones, expire snapshots, drop the
-    * journal last. Every step skips work already done, so replaying
-    * after a crash at ANY point completes the same commit. */
-  private def commit(s: SparkSession, dir: String): Unit = {
-    val lp = layoutPath(dir)
-    val staged = stagingPath(dir)
-    val (fs, lpp) = IndexStore.fsOf(lp)
-    import org.apache.hadoop.fs.Path
-    val olds = s.read.parquet(journalPath(dir))
-      .collect().map(_.getString(0))
-    olds.foreach { p =>
-      val hp = new Path(new Path(p).toUri.getPath)
-      if (fs.exists(hp)) { fs.delete(hp, false); () }
-    }
-    val stagedPath = new Path(staged)
-    if (fs.exists(stagedPath)) {
-      fs.listStatus(stagedPath)
-        .filter(st => st.getPath.getName.startsWith("part-") &&
-          st.getPath.getName.endsWith(".parquet"))
-        .foreach { st =>
-          val dest = new Path(lpp, st.getPath.getName)
-          if (!fs.exists(dest))
-            require(fs.rename(st.getPath, dest), s"vacuum move of ${st.getPath} failed")
-        }
-      IndexStore.removeArtifact(staged)
-    }
-    IndexStore.removeArtifact(posDeletesPath(dir))
-    IndexStore.removeArtifact(eqDeletesPath(dir))
-    // GDPR: purged rows must not survive in history — expire the
-    // snapshot log; the next as-of read rebuilds snapshot 0 from the
-    // (self-healed) post-vacuum manifest
-    IndexStore.removeArtifact(MinMaxManifest.snapshotsPath(dir, Table))
-    IndexStore.removeArtifact(journalPath(dir))
+    recover(s, dir)
+    VacuumStats(touched.length, cur.entries.size, touched.map(_.rows).sum - after)
   }
 
   /** Crash repair, run before every mutating/reading entry point: a
-    * journaled-but-incomplete vacuum is redone to completion; an
-    * unjournaled staging dir (crash before the commit point) is
-    * discarded — the live layout + tombstones never stopped being
-    * authoritative. */
+    * journaled vacuum whose files are no longer committed landed, so
+    * its consumed tombstones clear; one whose files are still
+    * committed never landed, and the tombstones stay authoritative.
+    * Either way the journal goes last. */
   def recover(s: SparkSession, dir: String): Unit =
-    if (ready(journalPath(dir))) commit(s, dir)
-    else IndexStore.removeArtifact(stagingPath(dir))
+    if (ready(journalPath(dir))) {
+      val committed = MinMaxManifest.committed(s, dir, Table)
+        .fold(Set.empty[String])(_.entries.map(e => MinMaxManifest.pathKey(e.path)).toSet)
+      if (!s.read.parquet(journalPath(dir)).collect()
+          .exists(r => committed(MinMaxManifest.pathKey(r.getString(0)))))
+        clearTombstones(dir)
+      IndexStore.removeArtifact(journalPath(dir))
+    }
 }

@@ -16,7 +16,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    fingerprint and row count, baked knobs, the version, each part's
   *    data-file listing) by a rename that fails when the name exists:
   *    of two commits that read the same latest stamp exactly one lands,
-  *    and the loser deletes its own version. The winner retires what
+  *    and the loser deletes its own version; a stamp landing on a
+  *    sequence a later stamp already superseded (and retired)
+  *    withdraws itself and loses too. The winner retires what
   *    its stamp no longer names — older stamps, versions of older
   *    sequence numbers, older layouts — never a version of its own
   *    sequence or later (a commit still in flight).
@@ -217,28 +219,49 @@ private[graft] object EnsureWatermark {
       }
     }.foreach(fs.delete(_, true))
 
-  /** Land `st` as the next stamp and retire what it supersedes. */
+  /** Whether a stamp above `seq` exists. */
+  private def superseded(fs: FileSystem, p: Path, seq: Long): Boolean =
+    latest(children(fs, p)).exists(_._2 > seq)
+
+  /** Land `st` as stamp `seq` and retire what it supersedes. A stamp
+    * above `seq` means `seq` was landed and retired since the caller
+    * read its base: the publish then withdraws its own stamp and
+    * loses, so no commit lands on a superseded base. */
   private def land(fs: FileSystem, p: Path, seq: Long, st: Stamp): Boolean =
-    publish(fs, p, seq, st) && { retire(fs, p, seq, st.version); true }
+    publish(fs, p, seq, st) && {
+      if (superseded(fs, p, seq)) {
+        fs.delete(new Path(p, s"$StampPrefix$seq"), false)
+        false
+      } else { retire(fs, p, seq, st.version); true }
+    }
 
   /** Commit one state of the artifact at `path`: `write` receives a
     * fresh version directory and writes the family's parts under it;
     * the stamp (covering the live listing of `dir/table`, `rows` of
-    * it) lands LAST. A commit that loses the race to another commit
-    * discards its version and leaves the winner standing. */
+    * it) lands LAST, at the sequence after the stamp `on` the caller
+    * built its state from — by default the latest one when the commit
+    * starts. A commit that loses the race to another commit discards
+    * its version, leaves the winner standing and returns false. */
   def commit(path: String, dir: String, table: String, rows: Long,
-      knobs: Map[String, Long] = Map.empty)(write: String => Unit): Unit = {
+      knobs: Map[String, Long] = Map.empty, on: Option[Stamp] = None)(
+      write: String => Unit): Boolean = {
     val covered = IndexStore.fingerprint(dir, table)
     val (fs, p) = IndexStore.fsOf(path)
-    val seq = latest(children(fs, p)).fold(1L)(_._2 + 1L)
+    val seq = 1L + on.fold(latest(children(fs, p)).fold(0L)(_._2))(
+      _.version match { case VersionName(k) => k.toLong })
     val version = s"v_${seq}_${java.util.UUID.randomUUID()}"
-    write(s"$path/$version")
-    val listing = fs.listStatus(new Path(p, version)).filter(_.isDirectory)
-      .map(d => d.getPath.getName -> dataListing(fs, fs.listStatus(d.getPath)))
-      .toMap
-    if (!land(fs, p, seq, Stamp(covered, rows, version, knobs, listing))) {
+    // a commit landing `seq` or later retires this version while it is
+    // written: the failed write is then a lost race
+    val listing =
+      try {
+        write(s"$path/$version")
+        Some(fs.listStatus(new Path(p, version)).filter(_.isDirectory)
+          .map(d => d.getPath.getName -> dataListing(fs, fs.listStatus(d.getPath)))
+          .toMap)
+      } catch { case _: Exception if superseded(fs, p, seq - 1L) => None }
+    listing.exists(l => land(fs, p, seq, Stamp(covered, rows, version, knobs, l))) || {
       fs.delete(new Path(p, version), true)
-      ()
+      false
     }
   }
 

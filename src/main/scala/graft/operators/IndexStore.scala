@@ -170,8 +170,8 @@ object IndexStore {
   }
 
   /** The `_SUCCESS` readiness rule of the persisted layouts not
-    * committed through [[EnsureWatermark]] (MinMaxManifest,
-    * ShardExport, ResultCache, …). */
+    * committed through [[EnsureWatermark]] (ShardExport, ResultCache,
+    * …). */
   private[graft] def artifactReady(path: String): Boolean = {
     val (fs, p) = fsOf(path)
     val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")

@@ -1,36 +1,33 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** WRITE-AUDIT-PUBLISH — the ingestion gate every table format
   * recommends (Iceberg's WAP / Delta's staged-commit pattern, the
   * public idea): a batch lands in a STAGING area outside the table,
   * the data-quality suite ([[ConstraintCheck]]) audits it there, and
   * only a passing batch is PUBLISHED into the versioned layout
-  * ([[MinMaxManifest]] manifest + snapshot log). A failing batch
+  * (a [[MinMaxManifest]] table commit). A failing batch
   * never becomes visible to any reader — including time travel —
   * and leaves a rejection record instead of rows.
   *
-  * Why staging must live OUTSIDE the layout directory: the manifest
-  * layer deliberately self-heals unmanifested files back in
-  * (torn-append repair) and the snapshot layer logs them under a
-  * repair snapshot — exactly the right behavior for a crashed
-  * APPEND, and exactly wrong for an unaudited batch. Quarantine is
-  * physical separation, not a flag.
+  * Why the gate holds: a batch becomes visible only by landing in a
+  * commit of the layout, and an unaudited batch is never part of a
+  * commit — it is staged outside the layout and only a passing audit
+  * hands it to the append. Quarantine is physical separation, not a
+  * flag.
   *
   * Publish here re-drives [[MinMaxManifest.appendBatch]] over the
   * audited staged rows — one O(batch) copy that buys the append
-  * path's existing crash discipline (data → manifest → snapshot with
-  * self-healing at each seam). A production format publishes the
-  * staged FILES by metadata swap instead; the flow and its
-  * guarantees are the same.
+  * path's commit discipline (the batch lands in one commit or not at
+  * all). A production format publishes the staged FILES by metadata
+  * swap instead; the flow and its guarantees are the same.
   *
   * Crash story: staging is overwrite-mode and recorded nowhere, so a
   * crash before the publish decision leaves only an orphan staging
   * dir — [[recover]] discards it (the [[DeletionVectors]] rule: the
   * live table never stopped being authoritative). A crash during
-  * publish is appendBatch's own healed territory. */
+  * publish is decided by the publish intent (see [[intentPath]]). */
 object WriteAuditPublish {
 
   val Table = "events_wap"
@@ -41,25 +38,20 @@ object WriteAuditPublish {
   def auditLogPath(dir: String): String = artifact(dir, s"${Table}_audit_log")
 
   /** The publish INTENT journal — written after a PASSING audit and
-    * before the data append, carrying the layout's pre-publish file
-    * listing. A crash inside the publish window is then decidable on
-    * recovery: new files since the listing ⇒ the append's job commit
-    * landed (finish the bookkeeping); no new files ⇒ it didn't (redo
-    * the append from the retained staging). Without this journal a
-    * crash between the data append and the snapshot-log write made
-    * the rerun re-publish the batch — permanent duplicate rows the
-    * manifest's self-healing then adopted (review catch). */
+    * before the data append, carrying the table's pre-publish committed
+    * max snapshot id. A crash inside the publish window is then
+    * decidable on recovery: a larger committed max ⇒ the append's
+    * commit landed (finish the bookkeeping); no larger max ⇒ it didn't
+    * (redo the append from the retained staging). Without this journal
+    * a crash between the data append and the cleanup made the rerun
+    * re-publish the batch — permanent duplicate rows (review catch). */
   private def intentPath(dir: String): String =
     artifact(dir, s"${Table}_publish_intent")
 
   private def ready(p: String): Boolean = IndexStore.artifactReady(p)
 
-  private def layoutParts(dir: String): Set[String] = {
-    val (fs, p) = IndexStore.fsOf(MinMaxManifest.layoutPath(dir, Table))
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
-  }
+  private def maxSnap(s: SparkSession, dir: String): Long =
+    MinMaxManifest.entries(s, dir, Table).map(_.snap).maxOption.getOrElse(0L)
 
   private def logVerdict(s: SparkSession, dir: String,
       rows: Seq[(String, String, Double, Long)], batchTag: String,
@@ -82,10 +74,9 @@ object WriteAuditPublish {
       IndexStore.removeArtifact(stagingPath(dir))
       return
     }
-    val rec = s.read.parquet(intent).collect()
-    val tag = rec.head.getString(0)
-    val before = rec.map(_.getString(1)).toSet - ""
-    val landed = (layoutParts(dir) -- before).nonEmpty
+    val rec = s.read.parquet(intent).head()
+    val tag = rec.getString(0)
+    val landed = maxSnap(s, dir) > rec.getLong(1)
     if (!landed && ready(stagingPath(dir)))
       MinMaxManifest.appendBatch(s, dir,
         s.read.parquet(stagingPath(dir)), table = Table)
@@ -97,8 +88,7 @@ object WriteAuditPublish {
 
   /** Whether the WAP table's base layout exists (the registered
     * query's build guard — readiness rules are package-private). */
-  def tableReady(dir: String): Boolean =
-    ready(MinMaxManifest.layoutPath(dir, Table))
+  def tableReady(dir: String): Boolean = MinMaxManifest.built(dir, Table)
 
   /** Stage → audit → publish-or-reject. Returns the audit report
     * with a `published` verdict column; the report is also appended
@@ -120,9 +110,7 @@ object WriteAuditPublish {
     val pass = rows.forall(_._4 == 1L)
     if (pass) {
       import s.implicits._
-      val before = layoutParts(dir)
-      s.createDataset((before + "").toIndexedSeq.map(p => (batchTag, p)))
-        .toDF("batch", "path")
+      Seq((batchTag, maxSnap(s, dir))).toDF("batch", "max_snap")
         .coalesce(1).write.mode("overwrite").parquet(intentPath(dir))
       onIntentForTest()
       MinMaxManifest.appendBatch(s, dir, staged, table = Table)

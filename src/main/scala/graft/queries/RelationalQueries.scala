@@ -1123,7 +1123,7 @@ object RelationalQueries {
     // catch). Unbounded sentinels keep the query about SNAPSHOT
     // membership; the stats-prune composition has its own window
     // tests in MinMaxManifestSpec.
-    // asOfMany: ONE manifest heal + log read for all three snapshots
+    // asOfMany: ONE committed-entries read for all three snapshots
     // (r17 — the per-snapshot metadata jobs were 3× redundant).
     // (r16: Par.widen here was measured and REJECTED — 1.36 s →
     // 2.08 min-of-4: the events_tt layout is multi-file, so the
@@ -1511,7 +1511,7 @@ object RelationalQueries {
     * and publishes as the next snapshot; a BAD batch (user_id nulled
     * on every third row — a broken upstream extractor) stages, FAILS
     * completeness, and is rejected without ever touching the
-    * manifest, the snapshot log, or any reader's view. The
+    * table's commit or any reader's view. The
     * registered read aggregates the published table: its hash
     * matching the oracle (raw events BEFORE the bad batch's window)
     * IS the proof the gate held — one leaked bad-batch row breaks
@@ -1543,9 +1543,7 @@ object RelationalQueries {
     // batch — a permanent duplicate the operator-level exactly-once
     // cannot see (the r7 advice's medium finding)
     W.recover(s, dir)
-    val maxSnap = graft.operators.IndexStore.readAs(s,
-        "snap_id BIGINT, path STRING", M.snapshotsPath(dir, W.Table))
-      .agg(max("snap_id")).head().getLong(0)
+    val maxSnap = M.entries(s, dir, W.Table).map(_.snap).max
     if (maxSnap < 1L) {
       val suite = Seq(
         CC.Constraint("complete", "user_id", CC.completeness("user_id"), _ >= 1.0),
@@ -1562,8 +1560,7 @@ object RelationalQueries {
             when($"event_id" % 3 === 0, lit(null)).otherwise($"user_id")),
         suite, "bad")
     }
-    s.read.schema(Tables(s, dir, "events").schema)
-      .parquet(M.layoutPath(dir, W.Table))
+    M.scan(s, dir, W.Table)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         countDistinct($"user_id").as("users"),
@@ -1939,11 +1936,10 @@ object RelationalQueries {
     * housekeeping op every streaming-ingested lake table needs —
     * micro-batch appends leave a long small-file tail, and OPTIMIZE
     * bin-packs ONLY the undersized files into time-adjacent
-    * target-size files while right-sized files move by metadata
-    * rename (zero data IO — cost ∝ small-file mass, which at 100 TB
-    * is the difference between housekeeping and a full rewrite;
-    * [[graft.operators.MinMaxManifest.compact]] remains the
-    * full-recluster sibling). The fixture builds a dedicated layout
+    * target-size files while right-sized files stay where they are,
+    * still named by the commit (zero data IO — cost ∝ small-file
+    * mass, which at 100 TB is the difference between housekeeping and
+    * a full rewrite). The fixture builds a dedicated layout
     * from the first half of events, appends one single-file batch
     * per remaining day (the fragmentation), optimizes, then answers
     * a pruned window aggregate THROUGH the optimized layout. The
@@ -1954,7 +1950,7 @@ object RelationalQueries {
     * MinMaxManifestSpec's job. */
   val q46Optimize: GraftQuery = q(
     "q46_optimize_compaction",
-    "small-file OPTIMIZE: bin-pack the micro-batch tail, rename the rest, prune after",
+    "small-file OPTIMIZE: bin-pack the micro-batch tail, keep the rest in place, prune after",
     """SELECT event_type, count(*) AS n,
       |       CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS v_fp,
       |       count(DISTINCT user_id) AS users
@@ -1967,7 +1963,7 @@ object RelationalQueries {
     import s.implicits._
     val M = graft.operators.MinMaxManifest
     val T = "events_opt"
-    if (!graft.operators.IndexStore.artifactReady(M.layoutPath(dir, T))) {
+    if (!M.built(dir, T)) {
       val ev = Tables(s, dir, "events")
       M.ensureFrom(s, dir,
         ev.where($"ts" < lit(M.utc("2024-01-15 00:00:00"))), T)
@@ -2129,16 +2125,16 @@ object RelationalQueries {
   /** q50 — ZERO-COPY SHALLOW CLONE
     * ([[graft.operators.MinMaxManifest.cloneTable]]): the lakehouse
     * branching primitive (Delta SHALLOW CLONE's public shape) — a new
-    * table whose manifest and snapshot log reference the source's
+    * table whose committed entries reference the source's
     * data files by path, O(files) metadata at ANY source size, zero
     * data IO. The two tables then diverge at file granularity: the
     * fixture clones a 19-day layout and appends a 6-day batch to the
     * CLONE only; the query answers the same windowed aggregate
     * through BOTH tables. The oracle replays each side from raw
     * events — a clone that lost a shared file, leaked the append
-    * into the source, or healed away an external reference breaks
+    * into the source, or dropped an external reference breaks
     * the hash. Mechanics (metadata-only clone, source untouched
-    * byte-for-byte, heal keeps shared rows, compaction refusal,
+    * byte-for-byte, compaction refusal,
     * snapshot-0 history) are MinMaxManifestSpec's job. */
   val q50ShallowClone: GraftQuery = q(
     "q50_shallow_clone",
@@ -2163,9 +2159,9 @@ object RelationalQueries {
     val (src, dst) = ("events_cl_src", "events_cl_dst")
     val ev = Tables(s, dir, "events")
     val (t20, t26) = (M.utc("2024-01-20 00:00:00"), M.utc("2024-01-26 00:00:00"))
-    if (!graft.operators.IndexStore.artifactReady(M.layoutPath(dir, src)))
+    if (!M.built(dir, src))
       M.ensureFrom(s, dir, ev.where($"ts" < lit(t20)), src)
-    if (!graft.operators.IndexStore.artifactReady(M.layoutPath(dir, dst))) {
+    if (!M.built(dir, dst)) {
       M.cloneTable(s, dir, src, dst)
       M.appendBatch(s, dir,
         ev.where($"ts" >= lit(t20) && $"ts" < lit(t26)), table = dst)
@@ -2952,14 +2948,14 @@ object RelationalQueries {
   /** q65 — OVERLAP-TARGETED RECLUSTERING ([[graft.operators
     * .MinMaxManifest.reclusterOverlap]], D80): the incremental-
     * clustering maintenance pass (Delta liquid clustering's public
-    * shape) completing the layout family along its third axis —
-    * compact() rewrites everything, compactSmall() rewrites by SIZE,
-    * this rewrites by RANGE OVERLAP, at O(overlap mass). The fixture
+    * shape) completing the layout family along its second axis —
+    * compactSmall() rewrites by SIZE, this rewrites by RANGE
+    * OVERLAP, at O(overlap mass). The fixture
     * is the late-data reality: the base layout is built with two
     * interior day-slices MISSING, which then arrive as appends whose
     * file ranges sit inside older files' spans — after recluster,
     * all files are pairwise range-disjoint again (spec-pinned, with
-    * untouched files kept by metadata rename) and the pruned read
+    * untouched files kept in place) and the pruned read
     * serves the query. Base ∪ late slices = exactly the raw table,
     * so the oracle is the PLAIN aggregate over events — the hash
     * gate proves the rewrite moved every row to the right place and
@@ -2979,7 +2975,7 @@ object RelationalQueries {
     import s.implicits._
     val M = graft.operators.MinMaxManifest
     val T = "events_rc"
-    if (!graft.operators.IndexStore.artifactReady(M.layoutPath(dir, T))) {
+    if (!M.built(dir, T)) {
       val ev = Tables(s, dir, "events")
       val s1 = ($"ts" >= lit(M.utc("2024-01-08 00:00:00")) &&
         $"ts" < lit(M.utc("2024-01-10 00:00:00")))

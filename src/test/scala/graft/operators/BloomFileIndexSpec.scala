@@ -113,7 +113,7 @@ class BloomFileIndexSpec extends SparkSpec {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       // per-ACTUAL-file bound (range partitions are uneven): rows in
       // that file × K, capped by the bit-space size
-      val layout = spark.read.parquet(MinMaxManifest.layoutPath(sf))
+      val layout = MinMaxManifest.scan(spark, sf)
         .groupBy(input_file_name().as("path")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       bitRows.foreach { case (p, c) =>

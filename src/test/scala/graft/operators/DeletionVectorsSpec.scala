@@ -4,10 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The deletion-vector contract: merge-on-read equals the raw-table
-  * filter, tombstone recording is result-idempotent, and vacuum
-  * rewrites ONLY touched files behind a redo journal that survives a
-  * crash at (and before) the commit point — with snapshot history
-  * expired so purged rows are unreachable via time travel. */
+  * filter, tombstone recording is result-idempotent, a rebuilt layout
+  * never un-deletes rows, and vacuum rewrites ONLY touched files in
+  * one commit whose journal survives a crash at (and before) the
+  * commit point — with snapshot history expired so purged rows are
+  * unreachable via time travel. */
 class DeletionVectorsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -18,12 +19,13 @@ class DeletionVectorsSpec extends SparkSpec {
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
 
-  private def layoutFiles(): Set[String] = {
-    val lp = DV.layoutPath(sf)
-    val (fs, p) = IndexStore.fsOf(lp)
-    fs.listStatus(p).map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
-  }
+  /** The committed files' names. */
+  private def layoutFiles(): Set[String] =
+    MinMaxManifest.entries(spark, sf, DV.Table)
+      .map(e => new org.apache.hadoop.fs.Path(e.path).getName).toSet
+
+  /** The committed layout's rows. */
+  private def layout = MinMaxManifest.scan(spark, sf, DV.Table)
 
   test("merge-on-read equals the raw-table filter for both delete kinds") {
     withIndexRoot("graft-dv-spec") {
@@ -79,7 +81,7 @@ class DeletionVectorsSpec extends SparkSpec {
       val expected = events.where(
         !(col("ts") >= lit(MinMaxManifest.utc("2024-01-05 00:00:00")) &&
           col("ts") < lit(MinMaxManifest.utc("2024-01-06 00:00:00"))))
-      assert(ids(spark.read.parquet(DV.layoutPath(sf))) === ids(expected))
+      assert(ids(layout) === ids(expected))
       assert(ids(DV.readMerged(spark, sf)) === ids(expected))
     }
   }
@@ -94,32 +96,51 @@ class DeletionVectorsSpec extends SparkSpec {
           onJournaledForTest = () => throw new RuntimeException("crash"))
       }
       assert(boom.getMessage === "crash")
-      // the journal is the commit point: recovery (run by any entry
-      // point) must complete the same vacuum — olds retired, staged
-      // files in, tombstones cleared, journal gone
+      // the rewrite's stamp is the commit point: recovery (run by any
+      // entry point) must complete the same vacuum — the landed commit
+      // already replaced the olds; tombstones cleared, journal gone
       val expected = events.where(col("user_id") =!= 3)
       assert(ids(DV.readMerged(spark, sf)) === ids(expected))
-      assert(ids(spark.read.parquet(DV.layoutPath(sf))) === ids(expected),
+      assert(ids(layout) === ids(expected),
         "redo must have materialized the delete into the layout")
       assert(!IndexStore.artifactReady(DV.posDeletesPath(sf)))
       assert(!IndexStore.artifactReady(DV.eqDeletesPath(sf)))
     }
   }
 
-  test("a crash before the journal discards staging; tombstones stay authoritative") {
+  test("a crash before the commit point drops the journal; tombstones stay authoritative") {
     withIndexRoot("graft-dv-spec") {
+      import spark.implicits._
       DV.ensure(spark, sf)
       DV.deleteKeys(spark, sf,
         events.select(col("user_id")).where(col("user_id") === 5))
-      // simulate a vacuum that died mid-stage: an orphan staging dir
-      val staged = DV.layoutPath(sf) + ".vacuum"
-      events.limit(3).write.mode("overwrite").parquet(staged)
+      // the state a vacuum that died before its stamp leaves: the
+      // journal names files the layout still commits
+      val journal = s"${IndexStore.root}/${IndexStore.fingerprint(sf, "events")}/" +
+        s"${DV.Table}_vacuum_journal"
+      MinMaxManifest.entries(spark, sf, DV.Table).take(2).map(_.path)
+        .toDF("old_path").coalesce(1).write.parquet(journal)
       DV.recover(spark, sf)
-      val (fs, sp) = IndexStore.fsOf(staged)
-      assert(!fs.exists(sp), "unjournaled staging must be discarded")
-      // nothing was committed: the tombstone still filters at read
+      assert(!IndexStore.artifactReady(journal), "recover must drop the journal")
+      assert(DV.eqDeletesRecorded(sf), "the tombstones of an unlanded vacuum stay")
       assert(ids(DV.readMerged(spark, sf)) ===
         ids(events.where(col("user_id") =!= 5)))
+    }
+  }
+
+  test("a rebuilt layout never un-deletes rows: q32 re-records its tombstones") {
+    withIndexRoot("graft-dv-rebuild") {
+      val q32 = graft.QueryRegistry.asMap("q32_deletion_vectors")
+      def run() = q32(spark, sf).collect().map(_.toString).toSeq
+      val first = run()
+      // lose the layout (its position tombstones keep naming its files)
+      Seq(MinMaxManifest.manifestPath(sf, DV.Table), DV.layoutPath(sf))
+        .foreach(IndexStore.removeArtifact)
+      assert(run() === first,
+        "a rebuilt layout must not resurrect position-deleted rows")
+      assert(ids(DV.readMerged(spark, sf)) === ids(events.where(
+        !(col("user_id") % 97 === 0) &&
+          !(col("event_type") === "click" && col("value") < 5.0))))
     }
   }
 
@@ -133,8 +154,7 @@ class DeletionVectorsSpec extends SparkSpec {
         "1970-01-01 00:00:00", "2200-01-01 00:00:00", DV.Table)
       assert(asOf0.where(col("user_id") === 7).count() === 0L,
         "snapshot 0 after vacuum must be the purged state")
-      val sp = MinMaxManifest.snapshotsPath(sf, DV.Table)
-      val maxSnap = spark.read.parquet(sp).agg(max("snap_id")).head().getLong(0)
+      val maxSnap = MinMaxManifest.entries(spark, sf, DV.Table).map(_.snap).max
       assert(maxSnap === 0L, "history must restart at the purged snapshot")
     }
   }
@@ -145,8 +165,8 @@ class DeletionVectorsSpec extends SparkSpec {
       DV.deleteWhere(spark, sf, col("event_type") === "view")
       DV.vacuum(spark, sf)
       val (lo, hi) = ("2024-01-10 00:00:00", "2024-01-13 00:00:00")
-      // the manifest self-heals through the listing diff (old rows
-      // dropped, replacement files stat'd in) on this read
+      // the vacuum's commit names the replacement files with their
+      // own stats
       val (pruned, kept, total) =
         MinMaxManifest.prunedEvents(spark, sf, lo, hi, DV.Table)
       assert(kept < total, "pruning must still skip files after vacuum")

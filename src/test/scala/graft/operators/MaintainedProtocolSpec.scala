@@ -225,6 +225,57 @@ class MaintainedProtocolSpec extends SparkSpec {
     }
   }
 
+  /** A commit of `rows` rows at a fresh artifact path, on stamp `on`
+    * (None: the latest); `after` runs once its part is written. */
+  private def casCommit(path: String, dir: String, rows: Long,
+      on: Option[EnsureWatermark.Stamp] = None)(after: => Unit = ()): Boolean =
+    EnsureWatermark.commit(path, dir, T, rows, on = on) { v =>
+      rowsOf(1L, rows).coalesce(1).write.parquet(s"$v/data")
+      after
+    }
+
+  private def stamps(path: String): Seq[String] =
+    Option(new java.io.File(path).list()).toSeq.flatten
+      .filter(_.startsWith("_GRAFT_STAMP.")).sorted
+
+  test("a commit on a stamp two later commits superseded loses; the latest keeps serving") {
+    withIndexRoot("graft-protocol-cas") {
+      val dir = tmpDir("graft-protocol-cas-data")
+      rowsOf(1L, 3000L).write.mode("overwrite").parquet(s"$dir/$T.parquet")
+      val path = s"${IndexStore.root}/cas"
+      assert(casCommit(path, dir, 1000L)())
+      val base = EnsureWatermark.stampOf(path)
+      // stamps 2 and 3 land; landing 3 retires stamp 2, so the name
+      // the stale commit would take is free again
+      assert(casCommit(path, dir, 2000L)() && casCommit(path, dir, 3000L)())
+      assert(!casCommit(path, dir, 500L, base)(),
+        "a commit on a superseded stamp must report its loss")
+      val st = EnsureWatermark.current(path, Seq("data"), dir, T)
+        .getOrElse(fail("the latest commit must keep serving"))
+      assert(st.rows === 3000L)
+      assert(stamps(path) === Seq("_GRAFT_STAMP.3") && versions(path).size === 1,
+        "the loser withdraws its stamp and deletes its version")
+    }
+  }
+
+  test("a commit whose version a later commit retires mid-write loses instead of failing") {
+    withIndexRoot("graft-protocol-cas-write") {
+      val dir = tmpDir("graft-protocol-cas-write-data")
+      rowsOf(1L, 3000L).write.mode("overwrite").parquet(s"$dir/$T.parquet")
+      val path = s"${IndexStore.root}/cas"
+      assert(casCommit(path, dir, 1000L)())
+      val base = EnsureWatermark.stampOf(path)
+      // while the stale commit writes, stamps 2 and 3 land: landing 3
+      // retires the stale commit's version (of sequence 2) under it
+      assert(!casCommit(path, dir, 500L, base) {
+        assert(casCommit(path, dir, 2000L)() && casCommit(path, dir, 3000L)())
+      }, "a commit whose version was retired under it must report its loss")
+      assert(EnsureWatermark.current(path, Seq("data"), dir, T).map(_.rows)
+        === Some(3000L))
+      assert(stamps(path) === Seq("_GRAFT_STAMP.3") && versions(path).size === 1)
+    }
+  }
+
   // ------------------------------------------------------------------
   // The fingerprint-keyed families
   // ------------------------------------------------------------------
@@ -295,7 +346,10 @@ class MaintainedProtocolSpec extends SparkSpec {
       source = Some("documents")),
     Keyed("bm25 postings", IndexStore.bm25PostingsPath, IndexStore.bm25Postings(spark, _),
       d => EnsureWatermark.current(IndexStore.bm25PostingsPath(d)),
-      source = Some("documents")))
+      source = Some("documents")),
+    Keyed("min/max manifest", MinMaxManifest.manifestPath(_),
+      MinMaxManifest.ensure(spark, _),
+      d => EnsureWatermark.current(MinMaxManifest.manifestPath(d))))
 
   private def events: DataFrame =
     (0L until 600L).map { i =>

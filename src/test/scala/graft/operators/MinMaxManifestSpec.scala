@@ -20,14 +20,20 @@ class MinMaxManifestSpec extends SparkSpec {
     finally sys.props.remove("graft.index.dir")
   }
 
+  private def entries(table: String = "events_by_ts") =
+    MinMaxManifest.entries(spark, sf, table)
+
+  /** The committed files against the parquet files on disk under the
+    * layout (these tests leave no uncommitted or empty files). */
+  private def namesLayoutFiles(table: String = "events_by_ts"): Boolean =
+    entries(table).map(e => MinMaxManifest.pathKey(e.path)).sorted ===
+      parquetFiles(MinMaxManifest.layoutPath(sf, table)).map(_._1).sorted
+
   test("manifest has one row per layout file, covering every row") {
     withRoot {
       MinMaxManifest.ensure(spark, sf)
-      val files = spark.read.parquet(MinMaxManifest.layoutPath(sf))
-        .select(input_file_name()).distinct().count()
-      val manifest = spark.read.parquet(MinMaxManifest.manifestPath(sf))
-      assert(manifest.count() === files)
-      val total = manifest.agg(sum("rows")).head().getLong(0)
+      assert(namesLayoutFiles(), "one entry per layout file, no more, no fewer")
+      val total = entries().map(_.rows).sum
       assert(total === graft.Tables(spark, sf, "events").count(),
         "manifest row counts must cover the whole table")
     }
@@ -58,7 +64,7 @@ class MinMaxManifestSpec extends SparkSpec {
     withRoot {
       import spark.implicits._
       MinMaxManifest.ensure(spark, sf)
-      val baseManifest = spark.read.parquet(MinMaxManifest.manifestPath(sf)).count()
+      val baseManifest = entries().size
       // two "micro-batches" beyond the base table's time range, the
       // streaming foreachBatch shape (batch_id idempotence is the
       // caller's contract, as in StreamingDedup)
@@ -69,12 +75,9 @@ class MinMaxManifestSpec extends SparkSpec {
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       MinMaxManifest.appendBatch(spark, sf, batch(1, 40))
       MinMaxManifest.appendBatch(spark, sf, batch(2, 40))
-      val manifest = spark.read.parquet(MinMaxManifest.manifestPath(sf))
-      val files = spark.read.parquet(MinMaxManifest.layoutPath(sf))
-        .select(input_file_name()).distinct().count()
-      assert(manifest.count() === files,
+      assert(namesLayoutFiles(),
         "manifest must track every layout file after appends")
-      assert(manifest.count() > baseManifest, "appends must add manifest rows")
+      assert(entries().size > baseManifest, "appends must add manifest rows")
       // prune a window that covers ONLY the appended days
       val (pruned, kept, total) = MinMaxManifest.prunedEvents(
         spark, sf, "2024-02-01 00:00:00", "2024-02-03 00:00:00")
@@ -90,27 +93,54 @@ class MinMaxManifestSpec extends SparkSpec {
     }
   }
 
-  test("a torn append (data files without manifest rows) heals on the next read") {
+  test("a torn append (data files without a commit) stays invisible; a retried appendBatch lands it once") {
     withRoot {
       import spark.implicits._
       MinMaxManifest.ensure(spark, sf)
-      // simulate the crash window: data lands in the layout but the
-      // manifest append never ran (bypass appendBatch's second write)
-      Seq((999999L, java.sql.Timestamp.valueOf("2024-03-01 12:00:00"),
+      val before = entries()
+      val batch = Seq((999999L, java.sql.Timestamp.valueOf("2024-03-01 12:00:00"),
         9L, "torn", 2.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append")
-        .parquet(MinMaxManifest.layoutPath(sf))
-      val (pruned, kept, _) = MinMaxManifest.prunedEvents(
+      // the crash window: the batch's files land in a fresh directory
+      // of the layout, and the commit naming them never does
+      batch.coalesce(1).write
+        .parquet(s"${MinMaxManifest.layoutPath(sf)}/c_torn")
+      def window() = MinMaxManifest.prunedEvents(
         spark, sf, "2024-03-01 00:00:00", "2024-03-02 00:00:00")
-      assert(kept >= 1, "the healed manifest must surface the torn file")
-      assert(pruned.count() === 1L,
-        "rows from a torn append must become visible after healing")
-      // and the manifest now records the file durably
-      val m = spark.read.parquet(MinMaxManifest.manifestPath(sf))
-      val files = spark.read.parquet(MinMaxManifest.layoutPath(sf))
-        .select(input_file_name()).distinct().count()
-      assert(m.count() === files)
+      val (torn, kept, _) = window()
+      assert(kept === 0 && torn.count() === 0L,
+        "files no commit names must stay invisible")
+      assert(entries() === before, "a read must not adopt uncommitted files")
+      // the retry lands the batch exactly once
+      MinMaxManifest.appendBatch(spark, sf, batch)
+      assert(window()._1.count() === 1L,
+        "the retried append must land its batch once, never twice")
+      assert(entries().size === before.size + 1)
+    }
+  }
+
+  test("a rebuild retires the replaced files and an older layout's leftovers once it lands, nothing in flight") {
+    withRoot {
+      import spark.implicits._
+      val M = MinMaxManifest
+      val lp = M.layoutPath(sf)
+      // an older stamp-less layout: top-level part files and a snapshot log
+      graft.Tables(spark, sf, "events").limit(10).write.parquet(lp)
+      Seq((0L, "x")).toDF("snap_id", "path").write.parquet(s"${lp}_snapshots")
+      assert(!M.built(sf), "a stamp-less layout reads as absent")
+      M.ensure(spark, sf)
+      assert(namesLayoutFiles(), "the older layout's files are retired")
+      assert(!new java.io.File(s"${lp}_snapshots").exists)
+      val first = entries().map(_.path).toSet
+      // a directory no commit names yet — an in-flight mutation's
+      Seq(1L).toDF("x").write.parquet(s"$lp/c_inflight")
+      val inflight = parquetFiles(s"$lp/c_inflight")
+      assert(M.ensureFrom(spark, sf, graft.Tables(spark, sf, "events")))
+      assert(entries().map(_.path).toSet.intersect(first).isEmpty)
+      assert(first.forall(p => !new java.io.File(M.pathKey(p)).exists),
+        "the replaced state's files are retired")
+      assert(parquetFiles(s"$lp/c_inflight") === inflight,
+        "a rebuild never touches files no commit has named yet")
     }
   }
 
@@ -121,37 +151,6 @@ class MinMaxManifestSpec extends SparkSpec {
       assert(kept === 0 && total > 0)
       assert(pruned.count() === 0L,
         "an out-of-range window is an empty result, matching the full scan")
-    }
-  }
-
-  test("compact: appended batches fold back into the base file count, no rows lost") {
-    withRoot {
-      import spark.implicits._
-      MinMaxManifest.ensure(spark, sf)
-      def batch(day: Int) = (0 until 30).map { i =>
-        (200000L + day * 1000 + i,
-          java.sql.Timestamp.valueOf(f"2024-02-$day%02d 09:00:${i % 60}%02d"),
-          3L, "compacted", 1.0, "{}")
-      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      MinMaxManifest.appendBatch(spark, sf, batch(10))
-      MinMaxManifest.appendBatch(spark, sf, batch(11))
-      val beforeRows = spark.read.parquet(MinMaxManifest.layoutPath(sf)).count()
-      val beforeFiles = spark.read.parquet(MinMaxManifest.manifestPath(sf)).count()
-      MinMaxManifest.compact(spark, sf)
-      val layout = spark.read.parquet(MinMaxManifest.layoutPath(sf))
-      assert(layout.count() === beforeRows,
-        "compaction must preserve every row, including appended batches")
-      val manifest = spark.read.parquet(MinMaxManifest.manifestPath(sf))
-      assert(manifest.count() === MinMaxManifest.NumFiles.toLong,
-        "compaction must restore the target file count")
-      assert(manifest.count() < beforeFiles,
-        "compaction should reduce the appended file count")
-      // manifest paths are live (post-swap), and pruning still works:
-      // the appended 2024-02 rows are found through the fresh layout
-      val (pruned, kept, total) = MinMaxManifest.prunedEvents(
-        spark, sf, "2024-02-10 00:00:00", "2024-02-12 00:00:00")
-      assert(pruned.count() === 60L)
-      assert(kept < total.toInt, "compacted layout must still skip files")
     }
   }
 
@@ -167,30 +166,27 @@ class MinMaxManifestSpec extends SparkSpec {
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       (10 to 17).foreach(d =>
         MinMaxManifest.appendBatch(spark, sf, batch(d), batchFiles = 1))
-      val lp = MinMaxManifest.layoutPath(sf)
-      val beforeRows = spark.read.parquet(lp).count()
-      val manifestBefore = spark.read.parquet(MinMaxManifest.manifestPath(sf))
-        .select("path", "rows").as[(String, Long)].collect().toMap
+      def rows() = MinMaxManifest.scan(spark, sf).count()
+      val beforeRows = rows()
+      val manifestBefore = entries().map(e => e.path -> e.rows).toMap
       val beforeFiles = manifestBefore.size
       // target sized so the BASE files (a 16-way split of the table)
       // count as right-sized and the 8 micro-batch files as small
-      val sizes = new java.io.File(lp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.length).sorted
+      val sizes = entries().map(e => new java.io.File(MinMaxManifest.pathKey(e.path)).length)
+        .sorted
       // the layout is bimodal: 8 tiny micro-batch files + 16 base
       // files. target/2 sits just above the largest micro file, so
       // exactly the micro tail counts as small and bins hold ~2 files
       val target = sizes(7) * 2 + 2
       val bins = MinMaxManifest.compactSmall(spark, sf, targetBytes = target)
       assert(bins >= 1, "the micro-batch tail must pack into at least one bin")
-      val layout = spark.read.parquet(lp)
-      assert(layout.count() === beforeRows, "optimize must preserve every row")
-      val manifestAfter = spark.read.parquet(MinMaxManifest.manifestPath(sf))
-        .select("path", "rows").as[(String, Long)].collect().toMap
+      assert(rows() === beforeRows, "optimize must preserve every row")
+      val manifestAfter = entries().map(e => e.path -> e.rows).toMap
       assert(manifestAfter.size < beforeFiles,
         s"optimize must reduce file count (${manifestAfter.size} vs $beforeFiles)")
       // right-sized files are untouched: same path, same manifest row
       val keptBoth = manifestBefore.keySet.intersect(manifestAfter.keySet)
-      assert(keptBoth.nonEmpty, "some right-sized files must survive by rename")
+      assert(keptBoth.nonEmpty, "some right-sized files must survive untouched")
       keptBoth.foreach(p =>
         assert(manifestBefore(p) === manifestAfter(p),
           s"kept file $p must keep its manifest stats"))
@@ -202,7 +198,7 @@ class MinMaxManifestSpec extends SparkSpec {
       // idempotent: a second optimize finds nothing worth packing at
       // the same target (the packed bins are now right-sized or lone)
       val again = MinMaxManifest.compactSmall(spark, sf, targetBytes = target)
-      assert(spark.read.parquet(lp).count() === beforeRows)
+      assert(rows() === beforeRows)
       assert(again <= bins)
     }
   }
@@ -218,16 +214,43 @@ class MinMaxManifestSpec extends SparkSpec {
       (1 to 4).foreach(d =>
         MinMaxManifest.appendBatch(spark, sf, batch(400000L + d, d),
           batchFiles = 1))
-      val beforeRows = spark.read.parquet(MinMaxManifest.layoutPath(sf)).count()
+      val beforeRows = MinMaxManifest.scan(spark, sf).count()
       val racing = () => MinMaxManifest.appendBatch(spark, sf,
         batch(499999L, 20), batchFiles = 1)
-      intercept[IllegalStateException] {
+      val e = intercept[IllegalStateException] {
         MinMaxManifest.compactSmall(spark, sf,
           targetBytes = Long.MaxValue / 4, onStagedForTest = racing)
       }
+      assert(e.getMessage.contains("concurrent write detected"))
       // nothing lost: the old layout (incl. the racing batch) is live
-      assert(spark.read.parquet(MinMaxManifest.layoutPath(sf)).count()
-        === beforeRows + 1)
+      assert(MinMaxManifest.scan(spark, sf).count() === beforeRows + 1)
+    }
+  }
+
+  test("compactSmall loses to two commits that land while it writes, deleting nothing live") {
+    withRoot {
+      import spark.implicits._
+      MinMaxManifest.ensure(spark, sf)
+      def batch(id: Long, day: Int) = Seq(
+        (id, java.sql.Timestamp.valueOf(f"2024-02-$day%02d 09:00:00"),
+          3L, "opt", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      (1 to 4).foreach(d =>
+        MinMaxManifest.appendBatch(spark, sf, batch(410000L + d, d),
+          batchFiles = 1))
+      val beforeRows = MinMaxManifest.scan(spark, sf).count()
+      // the second racing commit retires the first one's stamp, so the
+      // sequence the compaction would land on is free again
+      val racing = () => Seq(20, 21).foreach(d => MinMaxManifest.appendBatch(
+        spark, sf, batch(419900L + d, d), batchFiles = 1))
+      val e = intercept[IllegalStateException] {
+        MinMaxManifest.compactSmall(spark, sf,
+          targetBytes = Long.MaxValue / 4, onStagedForTest = racing)
+      }
+      assert(e.getMessage.contains("concurrent write detected"))
+      assert(MinMaxManifest.scan(spark, sf).count() === beforeRows + 2,
+        "every committed file must still be readable")
+      assert(namesLayoutFiles(), "the losing compaction leaves no files behind")
     }
   }
 
@@ -271,36 +294,6 @@ class MinMaxManifestSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         MinMaxManifest.appendBatch(spark, sf, b)
       }
-    }
-  }
-
-  test("compact fails loudly on a concurrent append, losing nothing") {
-    withRoot {
-      import spark.implicits._
-      MinMaxManifest.ensure(spark, sf)
-      def batch(id: Long, day: Int) = Seq(
-        (id, java.sql.Timestamp.valueOf(f"2024-05-$day%02d 12:00:00"),
-          5L, "race", 1.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      MinMaxManifest.appendBatch(spark, sf, batch(700000L, 1))
-      val rowsBefore = spark.read.parquet(MinMaxManifest.layoutPath(sf)).count()
-      // a batch lands AFTER the rewrite read its input, BEFORE the
-      // swap — exactly the window the r6 advice flagged as silent loss
-      val e = intercept[IllegalStateException] {
-        MinMaxManifest.compact(spark, sf, onStagedForTest =
-          () => MinMaxManifest.appendBatch(spark, sf, batch(700001L, 2)))
-      }
-      assert(e.getMessage.contains("concurrent write detected"))
-      // NOTHING lost: base + both batches all present, old layout live
-      val layout = spark.read.parquet(MinMaxManifest.layoutPath(sf))
-      assert(layout.count() === rowsBefore + 1,
-        "the aborted compaction must leave base rows and BOTH batches intact")
-      assert(layout.where(col("event_id") === 700001L).count() === 1L,
-        "the racing batch's rows must survive the aborted compaction")
-      // quiesced re-run succeeds and folds everything in
-      MinMaxManifest.compact(spark, sf)
-      assert(spark.read.parquet(MinMaxManifest.layoutPath(sf)).count()
-        === rowsBefore + 1)
     }
   }
 
@@ -381,59 +374,6 @@ class MinMaxManifestSpec extends SparkSpec {
     }
   }
 
-  test("time travel: a statted-but-unlogged file heals into a repair snapshot") {
-    withRoot {
-      import spark.implicits._
-      val M = MinMaxManifest
-      val ev = graft.Tables(spark, sf, "events")
-      M.ensureHistory(spark, sf, "torn", ev, Seq.empty)
-      val before = M.asOfEvents(spark, sf, 0L, fullLo, fullHi, "torn")._1.count()
-      // simulate appendBatch crashing after the DATA write: the file
-      // exists in the layout but neither manifest nor log knows it
-      Seq((888888L, java.sql.Timestamp.valueOf("2024-02-15 12:00:00"),
-        2L, "torn", 1.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(M.layoutPath(sf, "torn"))
-      // snapshot 0 is immutable through the repair...
-      val snap0 = M.asOfEvents(spark, sf, 0L, fullLo, fullHi, "torn")._1
-      assert(snap0.where(col("event_id") === 888888L).count() === 0L)
-      assert(snap0.count() === before)
-      // ...and the healed file is readable under the repair snapshot
-      val repaired = M.asOfEvents(spark, sf, 1L, fullLo, fullHi, "torn")._1
-      assert(repaired.where(col("event_id") === 888888L).count() === 1L)
-    }
-  }
-
-  test("time travel: a compaction that crashed before its log reset heals, never reads empty") {
-    withRoot {
-      import spark.implicits._
-      val M = MinMaxManifest
-      M.ensure(spark, sf)
-      val batch = (0 until 10).map { i =>
-        (400000L + i, java.sql.Timestamp.valueOf(f"2024-02-25 10:00:${i % 60}%02d"),
-          6L, "crash", 1.0, "{}")
-      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      M.appendBatch(spark, sf, batch)
-      val totalRows = spark.read.parquet(M.layoutPath(sf)).count()
-      // capture the pre-compaction log, compact, then put the OLD log
-      // back — exactly the state a crash between compact()'s swaps and
-      // its log reset leaves: every logged path now names a dead file
-      val oldLog = spark.read.parquet(M.snapshotsPath(sf)).collect()
-      M.compact(spark, sf)
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(oldLog.toIndexedSeq, 1),
-          spark.read.parquet(M.snapshotsPath(sf)).schema)
-        .coalesce(1).write.mode("overwrite").parquet(M.snapshotsPath(sf))
-      // the dead references must complete the crashed expiry (log
-      // reset to snapshot 0 = live manifest), NOT silently read empty
-      val (asOf0, kept, _) = M.asOfEvents(spark, sf, 0L, fullLo, fullHi)
-      assert(kept > 0, "historical read must not silently turn empty")
-      assert(asOf0.count() === totalRows)
-      assert(spark.read.parquet(M.snapshotsPath(sf))
-        .agg(max("snap_id")).head().getLong(0) === 0L)
-    }
-  }
-
   test("time travel: compaction expires history and restarts the log at snapshot 0") {
     withRoot {
       import spark.implicits._
@@ -444,12 +384,12 @@ class MinMaxManifestSpec extends SparkSpec {
           5L, "exp", 2.0, "{}")
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       M.appendBatch(spark, sf, batch)
-      val totalRows = spark.read.parquet(M.layoutPath(sf)).count()
-      M.compact(spark, sf)
-      val log = spark.read.parquet(M.snapshotsPath(sf))
-      assert(log.agg(max("snap_id")).head().getLong(0) === 0L,
+      M.appendBatch(spark, sf, batch.withColumn("event_id", col("event_id") + 100))
+      val totalRows = M.scan(spark, sf).count()
+      assert(entries().map(_.snap).max === 2L)
+      assert(M.compactSmall(spark, sf, targetBytes = Long.MaxValue / 4) === 1)
+      assert(entries().map(_.snap).max === 0L,
         "compaction must restart the snapshot log")
-      assert(log.count() === M.NumFiles.toLong)
       val (asOf0, _, _) = M.asOfEvents(spark, sf, 0L, fullLo, fullHi)
       assert(asOf0.count() === totalRows,
         "post-compaction snapshot 0 is the full compacted contents")
@@ -465,9 +405,8 @@ class MinMaxManifestSpec extends SparkSpec {
       M.ensureFrom(spark, sf, ev, src)
       M.cloneTable(spark, sf, src, dst)
       // METADATA-ONLY: the clone's own layout dir holds no data files
-      val dstFiles = new java.io.File(M.layoutPath(sf, dst)).listFiles()
-        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      assert(dstFiles === 0, "a fresh clone must own zero data files")
+      assert(parquetFiles(M.layoutPath(sf, dst)).isEmpty,
+        "a fresh clone must own zero data files")
       // the clone serves the source's rows exactly (shared files)
       val (srcR, _, _) = M.prunedEvents(spark, sf, fullLo, fullHi, src)
       val (dstR, _, _) = M.prunedEvents(spark, sf, fullLo, fullHi, dst)
@@ -479,16 +418,14 @@ class MinMaxManifestSpec extends SparkSpec {
         (400000L + i, java.sql.Timestamp.valueOf(f"2024-02-25 09:00:${i % 60}%02d"),
           9L, "branch", 3.0, "{}")
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      val srcListing = new java.io.File(M.layoutPath(sf, src)).listFiles()
-        .map(f => f.getName -> f.length()).sortBy(_._1).toSeq
+      val srcListing = parquetFiles(M.layoutPath(sf, src))
       M.appendBatch(spark, sf, batch, table = dst)
       // the source is untouched byte-for-byte and serves the same rows
-      assert(new java.io.File(M.layoutPath(sf, src)).listFiles()
-        .map(f => f.getName -> f.length()).sortBy(_._1).toSeq === srcListing,
+      assert(parquetFiles(M.layoutPath(sf, src)) === srcListing,
         "appending to the clone must never touch the source's files")
       val (srcR2, _, _) = M.prunedEvents(spark, sf, fullLo, fullHi, src)
       assert(srcR2.collect().map(_.toString).sorted.toSeq === srcRows)
-      // the clone = source + batch, through a heal-exercising read
+      // the clone = source + batch
       val (dstR2, _, _) = M.prunedEvents(spark, sf, fullLo, fullHi, dst)
       assert(dstR2.count() === srcRows.size + 25L,
         "the clone must serve shared files PLUS its own appends")
@@ -512,20 +449,84 @@ class MinMaxManifestSpec extends SparkSpec {
     }
   }
 
-  test("compact() refuses a shallow clone under the default table name (r10 advice)") {
+  /** Every file under `root` (recursively) with its length and content
+    * digest — empty when `root` does not exist. */
+  private def tree(root: String): Seq[(String, Long, String)] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten.sortBy(_.getName)
+      .flatMap { f =>
+        if (f.isDirectory) tree(f.getPath)
+        else Seq((f.getPath, f.length, java.security.MessageDigest.getInstance("MD5")
+          .digest(java.nio.file.Files.readAllBytes(f.toPath))
+          .map("%02x".format(_)).mkString))
+      }
+
+  private def parquetFiles(root: String): Seq[(String, Long, String)] =
+    tree(root).filter(_._1.endsWith(".parquet"))
+
+  /** `n` threads append one batch each to one built layout at once. */
+  private def concurrentAppends(n: Int): Unit = withRoot {
+    import spark.implicits._
+    MinMaxManifest.ensure(spark, sf)
+    val baseRows = MinMaxManifest.scan(spark, sf).count()
+    def batch(t: Int) = (0 until 50).map { i =>
+      (600000L + t * 1000 + i,
+        java.sql.Timestamp.valueOf(f"2024-02-${10 + t}%02d 08:00:${i % 60}%02d"),
+        4L, "race", 1.0, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to n).map { t =>
+      val th = new Thread(() =>
+        try {
+          start.await()
+          MinMaxManifest.appendBatch(spark, sf, batch(t), batchFiles = 1)
+        } catch { case e: Throwable => failures.add(e); () })
+      th.start()
+      th
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toArray.mkString("; "))
+    val all = MinMaxManifest.scan(spark, sf)
+    assert(all.count() === baseRows + 50L * n, "every appended row is read exactly once")
+    assert(all.where($"event_type" === "race").select("event_id").distinct().count() === 50L * n)
+    val paths = entries().map(_.path)
+    assert(paths.distinct.size === paths.size, "the entries name each file once")
+    assert(namesLayoutFiles(), "every batch file is committed")
+    assert(entries().map(_.snap).sorted.takeRight(n) === (1L to n.toLong),
+      "each append is its own snapshot")
+  }
+
+  test("two concurrent appends land every row once and name every file once") {
+    concurrentAppends(2)
+  }
+
+  test("three concurrent appends land every row once and name every file once") {
+    concurrentAppends(3)
+  }
+
+  test("warm pruned and as-of reads launch no Spark job and write nothing") {
     withRoot {
       val M = MinMaxManifest
-      // clone INTO the default table name: compact(spark, dir) would
-      // rebuild the manifest from the layout listing alone and
-      // silently drop every shared-file row — the guard must refuse
       val ev = graft.Tables(spark, sf, "events")
-      M.ensureFrom(spark, sf, ev, "events_cl_src")
-      M.cloneTable(spark, sf, "events_cl_src", "events_by_ts")
-      val e = intercept[IllegalArgumentException] {
-        M.compact(spark, sf)
+      val b1 = M.utc("2024-01-11 00:00:00")
+      def history(): Unit =
+        M.ensureHistory(spark, sf, "tt", ev.where(col("ts") < lit(b1)),
+          Seq(ev.where(col("ts") >= lit(b1))))
+      def reads() = {
+        history()
+        Seq(M.prunedEvents(spark, sf, lo, hi)._1) ++
+          M.asOfMany(spark, sf, Seq(0L, 1L), fullLo, fullHi, "tt").map(_._1)
       }
-      assert(e.getMessage.contains("shallow clone"),
-        s"compact() on a shallow clone must refuse loudly: ${e.getMessage}")
+      val cold = reads().map(_.count())
+      val dirs = Seq(M.layoutPath(sf), M.manifestPath(sf),
+        M.layoutPath(sf, "tt"), M.manifestPath(sf, "tt"))
+      val before = dirs.map(tree)
+      var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+      assert(jobsDuring { frames = reads() } === 0,
+        "a warm read plans from the memoized commit, with no Spark job")
+      assert(frames.map(_.count()) === cold)
+      assert(dirs.map(tree) === before, "reads must leave the table byte-identical")
     }
   }
 }

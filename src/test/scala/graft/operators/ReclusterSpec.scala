@@ -24,17 +24,15 @@ class ReclusterSpec extends SparkSpec {
   }
 
   private def manifestRanges(): Seq[(java.sql.Timestamp, java.sql.Timestamp)] =
-    spark.read.parquet(MinMaxManifest.manifestPath(sf, T))
-      .select("min_ts", "max_ts").collect()
-      .map(r => (r.getTimestamp(0), r.getTimestamp(1)))
-      .sortBy(_._1.getTime).toSeq
+    MinMaxManifest.entries(spark, sf, T).map(e => (e.minTs, e.maxTs))
+      .sortBy(_._1.getTime)
 
-  private def listNames(): Set[String] = {
-    val lp = MinMaxManifest.layoutPath(sf, T)
-    val (fs, p) = IndexStore.fsOf(lp)
-    fs.listStatus(p).map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
-  }
+  /** The committed files (scheme-independent paths). */
+  private def listNames(): Set[String] =
+    MinMaxManifest.entries(spark, sf, T)
+      .map(e => MinMaxManifest.pathKey(e.path)).toSet
+
+  private def layoutRows(): Long = MinMaxManifest.scan(spark, sf, T).count()
 
   private def assertDisjoint(): Unit = {
     val rs = manifestRanges()
@@ -51,8 +49,7 @@ class ReclusterSpec extends SparkSpec {
     withIndexRoot("graft-recluster") {
       lateDataLayout()
       val before = listNames()
-      val rowsBefore = spark.read
-        .parquet(MinMaxManifest.layoutPath(sf, T)).count()
+      val rowsBefore = layoutRows()
       val (_, keptBefore, _) = MinMaxManifest.prunedEvents(spark, sf,
         "2024-01-10 00:00:00", "2024-01-11 00:00:00", T)
       assert(keptBefore >= 2,
@@ -61,13 +58,13 @@ class ReclusterSpec extends SparkSpec {
       assert(groups >= 1, "at least one overlap component rewritten")
       assertDisjoint()
       // content preserved row-for-row (count + checksum)
-      val layout = spark.read.parquet(MinMaxManifest.layoutPath(sf, T))
+      val layout = MinMaxManifest.scan(spark, sf, T)
       assert(layout.count() === rowsBefore)
       val ck = graft.Tables(spark, sf, "events")
         .agg(sum($"event_id")).head().getLong(0)
       assert(layout.agg(sum($"event_id")).head().getLong(0) === ck,
         "base-minus-slice plus late slice must equal the raw table")
-      // untouched files move by metadata rename: same names survive
+      // untouched files stay in place: same names survive
       val after = listNames()
       assert((before & after).nonEmpty, "isolated files keep their names")
       assert(before !== after, "overlapping files were rewritten")
@@ -139,8 +136,7 @@ class ReclusterSpec extends SparkSpec {
   test("a concurrent append aborts the recluster losslessly") {
     withIndexRoot("graft-recluster-race") {
       lateDataLayout()
-      val rowsBefore = spark.read
-        .parquet(MinMaxManifest.layoutPath(sf, T)).count()
+      val rowsBefore = layoutRows()
       val racing = () => MinMaxManifest.appendBatch(spark, sf,
         Seq((900001L, java.sql.Timestamp.valueOf("2024-02-20 09:00:00"),
           3L, "late", 1.0, "{}"))
@@ -151,8 +147,7 @@ class ReclusterSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("concurrent write detected"))
       // nothing lost: old layout plus the racing batch row
-      assert(spark.read.parquet(MinMaxManifest.layoutPath(sf, T)).count()
-        === rowsBefore + 1)
+      assert(layoutRows() === rowsBefore + 1)
     }
   }
 }

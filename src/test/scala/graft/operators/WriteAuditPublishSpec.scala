@@ -25,14 +25,17 @@ class WriteAuditPublishSpec extends SparkSpec {
   private def setupBase(): Unit =
     M.ensureFrom(spark, sf, ev.where(col("ts") < lit(b1)), W.Table)
 
+  /** The published table's committed row count. */
+  private def published(): Long = M.scan(spark, sf, W.Table).count()
+
   test("a clean batch publishes; a dirty batch is rejected and invisible") {
     withIndexRoot("graft-wap-spec") {
       setupBase()
-      val baseCount = spark.read.parquet(M.layoutPath(sf, W.Table)).count()
+      val baseCount = published()
       val good = ev.where(col("ts") >= lit(b1) && col("ts") < lit(b2))
       val r1 = W.stageAndPublish(spark, sf, good, suite, "good").head()
       assert(r1.getAs[Long]("published") === 1L, "clean batch must publish")
-      val afterGood = spark.read.parquet(M.layoutPath(sf, W.Table)).count()
+      val afterGood = published()
       assert(afterGood === baseCount + good.count())
       val bad = ev.where(col("ts") >= lit(b2))
         .withColumn("user_id",
@@ -40,14 +43,11 @@ class WriteAuditPublishSpec extends SparkSpec {
       val r2 = W.stageAndPublish(spark, sf, bad, suite, "bad").head()
       assert(r2.getAs[Long]("published") === 0L, "dirty batch must be rejected")
       // invisible to the latest read...
-      assert(spark.read.parquet(M.layoutPath(sf, W.Table)).count() === afterGood)
+      assert(published() === afterGood)
       // ...to the manifest...
-      val manifestRows = spark.read.parquet(M.manifestPath(sf, W.Table))
-        .agg(sum("rows")).head().getLong(0)
-      assert(manifestRows === afterGood)
+      assert(M.entries(spark, sf, W.Table).map(_.rows).sum === afterGood)
       // ...and to time travel at EVERY snapshot
-      val maxSnap = spark.read.parquet(M.snapshotsPath(sf, W.Table))
-        .agg(max("snap_id")).head().getLong(0)
+      val maxSnap = M.entries(spark, sf, W.Table).map(_.snap).max
       assert(maxSnap === 1L, "rejection must not mint a snapshot")
       val (asOf1, _, _) = M.asOfEvents(spark, sf, 1L,
         "1970-01-01 00:00:00", "2200-01-01 00:00:00", W.Table)
@@ -70,8 +70,7 @@ class WriteAuditPublishSpec extends SparkSpec {
       val (fs, p) = IndexStore.fsOf(W.stagingPath(sf))
       assert(!fs.exists(p))
       // and the table is untouched
-      assert(spark.read.parquet(M.layoutPath(sf, W.Table)).count() ===
-        ev.where(col("ts") < lit(b1)).count())
+      assert(published() === ev.where(col("ts") < lit(b1)).count())
     }
   }
 
@@ -86,35 +85,28 @@ class WriteAuditPublishSpec extends SparkSpec {
       assert(boom.getMessage === "crash")
       W.recover(spark, sf)
       val base = ev.where(col("ts") < lit(b1)).count()
-      assert(spark.read.parquet(M.layoutPath(sf, W.Table)).count() ===
-        base + good.count(), "recovery must complete the publish exactly once")
+      assert(published() === base + good.count(),
+        "recovery must complete the publish exactly once")
       // and a SECOND recovery (or the next flow's entry recover) is a no-op
       W.recover(spark, sf)
-      assert(spark.read.parquet(M.layoutPath(sf, W.Table)).count() ===
-        base + good.count(), "recovery must be idempotent")
+      assert(published() === base + good.count(), "recovery must be idempotent")
     }
   }
 
   test("crash after the data landed, before cleanup: recovery does NOT re-publish") {
     withIndexRoot("graft-wap-spec") {
       setupBase()
-      import spark.implicits._
-      val beforeParts = spark.read.parquet(M.layoutPath(sf, W.Table))
-        .select(org.apache.spark.sql.functions.input_file_name()).distinct()
-        .collect().map(r => new org.apache.hadoop.fs.Path(r.getString(0))
-          .getName).toSet
       val good = ev.where(col("ts") >= lit(b1) && col("ts") < lit(b2))
       W.stageAndPublish(spark, sf, good, suite, "g2")
-      val published = spark.read.parquet(M.layoutPath(sf, W.Table)).count()
+      val landed = published()
       // reconstruct the crash state: intent (with the PRE-publish
-      // listing) and staging both still present
-      spark.createDataset((beforeParts + "").toIndexedSeq.map(p => ("g2", p)))
-        .toDF("batch", "path")
+      // committed max snapshot id) and staging both still present
+      Seq(("g2", 0L)).toDF("batch", "max_snap")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"${IndexStore.root}/${graft.operators.IndexStore.fingerprint(sf, "events")}/${W.Table}_publish_intent")
       good.write.mode("overwrite").parquet(W.stagingPath(sf))
       W.recover(spark, sf)
-      assert(spark.read.parquet(M.layoutPath(sf, W.Table)).count() === published,
+      assert(published() === landed,
         "recovery must detect the landed publish and not duplicate it")
     }
   }
