@@ -28,8 +28,14 @@ object QueryRegistry {
       queries.MultimodalQueries.all ++
       queries.CurationQueries.all
 
+  /** The serve path: each query's frame with its root ORDER BY marked
+    * for the one-partition sort of kilobyte results
+    * ([[graft.plans.SmallSort]]). */
   def asMap: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+    all.map { q =>
+      q.name -> ((s: SparkSession, dir: String) =>
+        graft.plans.SmallSort.served(s, q.fn(s, dir)))
+    }.toMap
 
   def oracles: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap

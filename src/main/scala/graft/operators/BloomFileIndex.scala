@@ -43,12 +43,17 @@ object BloomFileIndex {
     * rows and name deleted paths (review catch — a source-only
     * fingerprint can't see layout mutations). Every commit lands a new
     * version, so a changed layout resolves to a fresh path and
-    * rebuilds. */
+    * rebuilds; the build then retires the indexes of older versions
+    * ([[ensure]]). */
   private def indexPath(s: SparkSession, dir: String): String = {
     MinMaxManifest.ensure(s, dir)
-    val version = EnsureWatermark.current(MinMaxManifest.manifestPath(dir)).get.version
-    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/bloom_event_id_$version"
+    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/${indexName(dir).get}"
   }
+
+  /** The index directory name the manifest's current version keys. */
+  private def indexName(dir: String): Option[String] =
+    EnsureWatermark.current(MinMaxManifest.manifestPath(dir))
+      .map(st => s"bloom_event_id_${st.version}")
 
   /** The k bit positions of a value (hash60 mod m per salt). */
   private def bitsOf(v: Column): Seq[Column] =
@@ -63,9 +68,15 @@ object BloomFileIndex {
     * time-clustered layout's event_id column (one scan; distinct
     * collapses to ≤ min(n·k, m) rows per file), bit-sorted so probe
     * reads prune row groups, committed through [[EnsureWatermark]].
-    * Returns the committed index part it ensured. */
-  def ensure(s: SparkSession, dir: String): String =
-    EnsureWatermark.ensured(indexPath(s, dir), dir, "events") { out =>
+    * Once a build's stamp lands, it deletes every sibling index that
+    * neither it nor the manifest's current version names: a reader
+    * still holding an older version's path finds it absent and
+    * rebuilds it. Returns the committed index part it ensured. */
+  def ensure(s: SparkSession, dir: String): String = {
+    val path = indexPath(s, dir)
+    var built = false
+    val part = EnsureWatermark.ensured(path, dir, "events") { out =>
+      built = true
       MinMaxManifest.scan(s, dir)
         .select(input_file_name().as("path"), col("event_id"))
         .select(col("path"), explode(array(bitsOf(col("event_id")): _*)).as("bit"))
@@ -74,6 +85,15 @@ object BloomFileIndex {
         .sortWithinPartitions("bit", "path")
         .write.parquet(out)
     }
+    if (built) {
+      val (fs, p) = IndexStore.fsOf(path)
+      val live = Set(p.getName) ++ indexName(dir)
+      fs.listStatus(p.getParent).map(_.getPath)
+        .filter(c => c.getName.startsWith("bloom_event_id_") && !live(c.getName))
+        .foreach(fs.delete(_, true))
+    }
+    part
+  }
 
   /** Files that may contain `id`: the k probe bits are computed
     * driver-side (k tiny integers), and a file qualifies iff ALL k

@@ -248,6 +248,27 @@ object ResultCache {
     else Some(md5(plan.canonicalized.toString + "\u0000" + stamp))
   }
 
+  /** The schema the entry at `path` was written with, as Spark
+    * recorded it in its part file's footer — one listing and one
+    * footer read, no Spark job. None when the entry has no part file
+    * or its footer carries no readable Spark schema. */
+  private[graft] def entrySchema(path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    val (fs, p) = IndexStore.fsOf(path)
+    fs.listStatus(p).find(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      finally reader.close()
+    }.flatMap { json =>
+      scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(json)).toOption
+        .collect { case t: org.apache.spark.sql.types.StructType => t }
+    }
+  }
+
   /** true when any leaf already reads a result-cache entry — the
     * recursion guard for the transparent tier (a substituted plan
     * must never re-key, and a cache read must never publish). */

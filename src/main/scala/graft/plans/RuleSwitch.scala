@@ -3,10 +3,12 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** The one way to turn a graft rule on: every rule rides the
-  * session's `experimental.extraOptimizations`, and this is the only
-  * code that assigns it.
+  * session's `experimental.extraOptimizations`, the one planning
+  * strategy ([[SmallSort]]) its `experimental.extraStrategies`, and
+  * this is the only code that assigns either.
   *
   * Every graft rule is exactness-preserving by construction (each
   * rule's scaladoc carries its proof; a registered query hash-gates
@@ -34,6 +36,19 @@ object RuleSwitch {
         val (steer, rest) = cur.partition(steering)
         rest ++ (rule +: steer)
       case _ => cur :+ rule
+    }
+  }
+
+  /** Install `strategy` on `s`'s planner, idempotent per strategy
+    * class and atomic: of any number of concurrent installs exactly one
+    * instance lands. Strategies stay for the session's lifetime —
+    * [[scoped]] restores rules, not strategies — so each one must
+    * leave every plan it was not written for untouched. */
+  def install(s: SparkSession, strategy: SparkStrategy): Unit = {
+    val ex = s.experimental
+    ex.synchronized {
+      if (!ex.extraStrategies.exists(_.getClass == strategy.getClass))
+        ex.extraStrategies = ex.extraStrategies :+ strategy
     }
   }
 

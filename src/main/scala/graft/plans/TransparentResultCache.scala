@@ -42,11 +42,14 @@ import graft.operators.{IndexStore, ResultCache}
   *     (the substituted plan's own optimization is a fixed point)
   *     and never publishes;
   *   - a schema mismatch between plan output and entry (names,
-  *     types, arity) vetoes the substitution;
-  *   - keying costs one canonicalization + one FS listing per
-  *     optimization — the EnsureWatermark class of plan-time cost —
-  *     and NO jobs (the entry read is schema inference only; rows
-  *     load when the query executes).
+  *     types, arity) vetoes the substitution; the entry's schema is
+  *     the one its writer recorded in its part file's footer, and an
+  *     entry without one vetoes too;
+  *   - keying costs one canonicalization, one FS listing and one
+  *     footer read per optimization — the EnsureWatermark class of
+  *     plan-time cost — and NO jobs: the entry is read with the
+  *     plan's own schema, so nothing infers one, and rows load when
+  *     the query executes.
   *
   * Scope note, stated like `through`'s: the key is the plan form the
   * optimizer hands user rules. If a later optimizer batch reshapes
@@ -61,17 +64,21 @@ class TransparentResultCacheRule(spark: SparkSession)
     if (ResultCache.readsCache(plan)) return plan
     ResultCache.keyOf(plan) match {
       case Some(key) if IndexStore.artifactReady(ResultCache.cachePath(key)) =>
-        val rel = spark.read.parquet(ResultCache.cachePath(key))
-          .queryExecution.analyzed
-        val compatible = rel.output.size == plan.output.size &&
-          rel.output.zip(plan.output).forall { case (c, o) =>
-            c.name == o.name && c.dataType == o.dataType
-          }
+        val path = ResultCache.cachePath(key)
+        val compatible = ResultCache.entrySchema(path).exists { entry =>
+          entry.size == plan.output.size &&
+            entry.zip(plan.output).forall { case (c, o) =>
+              c.name == o.name && c.dataType == o.dataType
+            }
+        }
         if (!compatible) plan
-        else Project(
-          rel.output.zip(plan.output).map { case (c, o) =>
+        else {
+          val rel = spark.read.schema(plan.schema).parquet(path)
+            .queryExecution.analyzed
+          Project(rel.output.zip(plan.output).map { case (c, o) =>
             Alias(c, o.name)(exprId = o.exprId)
           }, rel)
+        }
       case _ => plan
     }
   }

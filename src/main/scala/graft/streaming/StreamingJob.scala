@@ -43,12 +43,16 @@ object StreamingJob {
       .selectExpr("CAST(value AS STRING) AS value")
 
   /** F5 + P10 — parse the JSON payload with the explicit schema and
-    * the 12-hour timestamp format, then flatten `parsed.*`. */
+    * the 12-hour timestamp format into one row of its fields per line.
+    * The parse is a `Generate` (`inline` of a one-element array), which
+    * filters cannot cross: flattening `from_json(...).*` in a
+    * projection let the enrich joins' inferred `isnotnull(area)`
+    * filters push through it, and each row then evaluated `from_json`
+    * three times. A null or malformed line still yields one row of
+    * nulls, as the flattened struct did. */
   def parse(jsonLines: DataFrame): DataFrame =
-    jsonLines
-      .select(from_json(col("value"), Schemas.kafkaJsonTrips,
-        Map("timestampFormat" -> Schemas.TripTimestampFormat)).as("parsed_value"))
-      .select(col("parsed_value.*"))
+    jsonLines.select(inline(array(from_json(col("value"), Schemas.kafkaJsonTrips,
+      Map("timestampFormat" -> Schemas.TripTimestampFormat)))))
 
   /** P2 — the SHARED cleaning projection (same code as batch P1). */
   def clean(parsed: DataFrame): DataFrame = Cleaning.clean(parsed)

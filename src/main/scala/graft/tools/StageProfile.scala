@@ -1,15 +1,17 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 
 /** Stage-level profile of ONE registered query at a given SF — the
   * guide-§1 empirical loop without the Spark UI (headless sandbox):
   * run the query to the noop sink (after a warm-up rep so codegen/JIT
   * and artifact ensure() costs stay out of the reading) and print
-  * every stage's wall duration, summed executor run time, task count,
-  * and shuffle/input volumes, slowest first. The "which exchange is
-  * the money" question PlanMetrics answers in bytes, this answers in
-  * seconds.
+  * the rep's job count (its job floor: on a driver-bound query each
+  * job costs about as much as the work) and every stage's wall
+  * duration, summed executor run time, task count, and shuffle/input
+  * volumes, slowest first. The "which exchange is the money" question
+  * PlanMetrics answers in bytes, this answers in seconds.
   *
   *   runMain graft.tools.StageProfile <sfDir> <queryName> [reps]
   */
@@ -24,9 +26,12 @@ object StageProfile {
     case class Row(id: Int, wallMs: Long, execMs: Long, tasks: Int,
       inMB: Double, srMB: Double, swMB: Double, site: String)
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     // @volatile: read from the async listener-bus thread, written here
     @volatile var recording = false
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (recording) { jobs.incrementAndGet(); () }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         if (!recording) return
         val i = e.stageInfo
@@ -51,6 +56,7 @@ object StageProfile {
       // flag, so they cannot bleed into this rep's profile
       Thread.sleep(500)
       rows.clear()
+      jobs.set(0)
       recording = true
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
@@ -65,7 +71,7 @@ object StageProfile {
       spark.catalog.clearCache()
       import scala.jdk.CollectionConverters._
       val rs = rows.asScala.toSeq.sortBy(-_.wallMs)
-      println(f"== $name rep $r: $sec%.2f s, ${rs.size} stages ==")
+      println(f"== $name rep $r: $sec%.2f s, ${jobs.get} jobs, ${rs.size} stages ==")
       println(f"${"stage"}%5s ${"wall_ms"}%8s ${"exec_ms"}%8s ${"tasks"}%5s " +
         f"${"in_MB"}%8s ${"shR_MB"}%8s ${"shW_MB"}%8s  site")
       rs.take(25).foreach { x =>

@@ -21,15 +21,23 @@ trait SparkSpec extends AnyFunSuite {
     * test's plans. */
   override def withFixture(test: NoArgTest): Outcome =
     graft.plans.RuleSwitch.scoped(spark, Nil)(super.withFixture(test))
-  /** Spark jobs launched while `body` runs — the listener bus is
-    * asynchronous, so poll until the count is stable. */
-  def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs launched while `body` runs. */
+  def jobsDuring(body: => Unit): Int =
+    eventsDuring(_.isInstanceOf[org.apache.spark.scheduler.SparkListenerJobStart])(body)
+
+  /** Spark tasks launched while `body` runs. */
+  def tasksDuring(body: => Unit): Int =
+    eventsDuring(_.isInstanceOf[org.apache.spark.scheduler.SparkListenerTaskStart])(body)
+
+  /** Listener events `counted` accepts while `body` runs — the
+    * listener bus is asynchronous, so poll until the count is stable. */
+  private def eventsDuring(
+      counted: org.apache.spark.scheduler.SparkListenerEvent => Boolean)(
+      body: => Unit): Int = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
+    val l = new org.apache.spark.SparkFirehoseListener {
+      override def onEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        if (counted(e)) { n.incrementAndGet(); () }
     }
     spark.sparkContext.addSparkListener(l)
     try {

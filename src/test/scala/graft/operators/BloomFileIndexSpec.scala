@@ -106,6 +106,24 @@ class BloomFileIndexSpec extends SparkSpec {
     }
   }
 
+  test("a rebuilt index retires the superseded one: one bloom directory remains") {
+    withIndexRoot("graft-bloom-spec") {
+      import spark.implicits._
+      val p1 = B.ensure(spark, sf)
+      val batch = Seq((7777778L,
+        java.sql.Timestamp.valueOf("2024-02-03 02:00:00"), 7L, "append", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      MinMaxManifest.appendBatch(spark, sf, batch)
+      val p2 = B.ensure(spark, sf)
+      def blooms = new java.io.File(p2).getParentFile.getParentFile.getParentFile
+        .listFiles().map(_.getName).filter(_.startsWith("bloom_event_id_")).toSeq
+      assert(blooms === Seq(new java.io.File(p2).getParentFile.getParentFile.getName),
+        s"expected only the current index beside $p1's retired one: $blooms")
+      assert(!new java.io.File(p1).exists())
+      assert(B.lookup(spark, sf, 7777778L).count() === 1L)
+    }
+  }
+
   test("index size is bounded by min(n*k, m) rows per file") {
     withIndexRoot("graft-bloom-spec") {
       val idx = spark.read.parquet(B.ensure(spark, sf))

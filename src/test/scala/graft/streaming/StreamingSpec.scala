@@ -545,4 +545,34 @@ class StreamingSpec extends SparkSpec {
         "top-k stream maintenance must land each batch exactly once")
     }
   }
+
+  test("the enrich leg parses each feed line once; parsed rows equal a plain from_json") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    val areas = TransformJob.readAreas(spark, areasCsv)
+    // the leg's transforms over a file of feed lines, as a batch frame
+    // (the optimizer rewrites the stream's micro-batches the same way)
+    val feed = Fixture.write(s"$dir/feed_once.json", Fixture.kafkaJsonLines.mkString("\n"))
+    val enriched = StreamingJob.enrich(StreamingJob.narrow(StreamingJob.clean(
+      StreamingJob.parse(spark.read.text(feed)))), areas)
+    assert(enriched.count() === 1L)
+    val parses = enriched.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    }.sum
+    // the joins' inferred isnotnull(area) filters must stay above the
+    // parse, not copy from_json into a Filter below it
+    assert(parses === 1, s"from_json evaluated $parses times:\n" +
+      enriched.queryExecution.optimizedPlan)
+    // malformed, truncated and null lines parse exactly as the
+    // flattened from_json struct does
+    val lines = (Fixture.kafkaJsonLines ++ Seq("not json", """{"trip_id":"t9",""", null))
+      .toDF("value")
+    val plain = lines.select(from_json($"value", graft.taxi.Schemas.kafkaJsonTrips,
+      Map("timestampFormat" -> graft.taxi.Schemas.TripTimestampFormat)).as("p"))
+      .select($"p.*")
+    val parsed = StreamingJob.parse(lines)
+    assert(parsed.schema === plain.schema)
+    assert(parsed.collect().map(_.toString).toSeq.sorted ===
+      plain.collect().map(_.toString).toSeq.sorted)
+    assert(parsed.count() === 5L)
+  }
 }
