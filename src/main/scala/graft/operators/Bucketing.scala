@@ -56,27 +56,4 @@ object Bucketing {
     if (s.catalog.tableExists(table)) s.table(table)
     else writeBucketed(df, key, buckets, table, path)
   }
-
-  /** Append a batch to an existing bucketed table — the daily-ingest
-    * leg of the layout story. Spark validates the (key, buckets) spec
-    * against the catalog and hashes the new rows into the SAME bucket
-    * files' numbering, so the bucket contract — and therefore the
-    * zero-EXCHANGE join — survives any number of appends. What does
-    * degrade: each append adds one file per bucket, and with >1 file
-    * per bucket Spark no longer trusts `sortBy` metadata, so the merge
-    * join re-sorts each bucket locally (a per-partition sort, NOT a
-    * shuffle). Periodic compaction — re-running [[writeBucketed]] over
-    * the accumulated table — restores the one-file-per-bucket shape;
-    * BucketedJoinSpec pins both halves of this contract. */
-  def appendBucketed(df: DataFrame, key: String, buckets: Int,
-      table: String): DataFrame = {
-    val s = df.sparkSession
-    df.repartition(buckets, col(key))
-      .write.format("parquet")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .mode("append")
-      .saveAsTable(table)
-    s.table(table)
-  }
 }

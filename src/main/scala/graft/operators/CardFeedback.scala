@@ -54,18 +54,18 @@ object CardFeedback {
   /** Cheap store WATERMARK (r16, the learned-tier memo key): a hash
     * of every file path + length under the store — one recursive FS
     * listing (a flat LIST on object stores), no jobs. Any new
-    * observation, re-record, or retention sweep changes it, so an
+    * observation or retention sweep changes it, so an
     * ordering memo keyed on it serves exactly while the learning
     * state the enumeration read is unchanged. */
   def storeStamp(): String = {
     val (fs, root) = IndexStore.fsOf(s"${IndexStore.root}/card_feedback")
     if (!fs.exists(root)) return "empty"
-    // RECURSIVE FILE listing (r16 review, both passes): a re-record
-    // recreates its entry within one coarse-mtime tick with identical
-    // dir name/mtime, but parquet part-FILE names carry a per-write
-    // UUID — `listFiles(recursive)` reaches them at any depth, and on
-    // object stores it is a flat LIST (one RPC-class call), not a
-    // per-entry walk
+    // RECURSIVE FILE listing (r16 review, both passes): an entry's
+    // dir name and mtime can repeat within one coarse-mtime tick, but
+    // each commit's stamp, version and part-FILE names are new —
+    // `listFiles(recursive)` reaches them at any depth, and on object
+    // stores it is a flat LIST (one RPC-class call), not a per-entry
+    // walk
     val it = fs.listFiles(root, true)
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
@@ -79,16 +79,24 @@ object CardFeedback {
 
   /** Execute `df` once and persist its observed output cardinality
     * under its plan key. Returns the observation, or None for an
-    * unkeyable plan (never recorded — see class scaladoc). Identical
-    * re-records are idempotent overwrites of the same value. */
+    * unkeyable plan (never recorded — see class scaladoc). Each key
+    * is committed once: its source stamp fixes the count, so a
+    * re-record of a committed key writes nothing. */
   def record(s: SparkSession, df: DataFrame): Option[Long] =
     ResultCache.keyOf(df.queryExecution.analyzed).map { key =>
       val n = df.count()
-      import s.implicits._
-      Seq(n).toDF("rows").coalesce(1)
-        .write.mode("overwrite").parquet(feedbackPath(key))
+      commitObservation(s, key, n)
       n
     }
+
+  /** Commit `n` as the observation filed under `key` through the
+    * stamp's plan-keyed face (one commit per key, written once). */
+  private def commitObservation(s: SparkSession, key: String, n: Long): Unit = {
+    import s.implicits._
+    EnsureWatermark.commit(feedbackPath(key), key)(
+      Seq(n).toDF("rows").coalesce(1).write.parquet(_))
+    ()
+  }
 
   /** Stamp-keyed memo: the key embeds the source stamp, so a cached
     * positive can never go stale (a mutated source re-keys); only
@@ -156,16 +164,14 @@ object CardFeedback {
       val hit = cache.get(key)
       if (hit != null) Some(hit.longValue())
       else {
-        val path = feedbackPath(key)
-        if (!IndexStore.artifactReady(path)) None
-        else {
-          // fail CLOSED on a read race (r15 self-review): the async
-          // harvest overwrites entries and the opportunistic sweep
-          // deletes them — an estimate must fall back to the algebra,
-          // never fail the user's query from the optimizer
+        ResultCache.committed(feedbackPath(key), key).flatMap { part =>
+          // fail CLOSED on a read race (r15 self-review): the
+          // opportunistic sweep deletes entries — an estimate must
+          // fall back to the algebra, never fail the user's query from
+          // the optimizer
           try {
-            val n = graft.operators.IndexStore
-              .readAs(s, "rows BIGINT", path).head().getAs[Long]("rows")
+            val n = IndexStore.readAs(s, "rows BIGINT", part).head()
+              .getAs[Long]("rows")
             memoize(key, n)
             Some(n)
           } catch { case scala.util.control.NonFatal(_) => None }
@@ -241,9 +247,7 @@ object CardFeedback {
   }
 
   private def writeObservation(s: SparkSession, key: String, n: Long): Unit = {
-    import s.implicits._
-    Seq(n).toDF("rows").coalesce(1)
-      .write.mode("overwrite").parquet(feedbackPath(key))
+    commitObservation(s, key, n)
     memoize(key, n)
     // opportunistic retention (r14 advice): the store is otherwise
     // only bounded by an explicit sweep() nobody is obliged to call

@@ -2,14 +2,18 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** The one commit-and-serve protocol of every stamped artifact: the
-  * O(batch)-MAINTAINED families (StatsMaintain's column stats, key
+/** The one commit-and-serve protocol of every rebuildable artifact:
+  * the O(batch)-MAINTAINED families (StatsMaintain's column stats, key
   * profiles, MCV lists and column groups; SampledAgg's uniform and
   * stratified samples, group rollups and group histograms) cover a
   * live source listing; the FINGERPRINT-KEYED ones
   * (`<root>/<fingerprint>/<name>`: the seven [[DailyRollup]]s,
   * Dictionary, EntityIndex, StatsCatalog's stats, key profiles,
-  * column groups and MCV lists) cover their path's fingerprint.
+  * column groups and MCV lists, IndexStore's indexes, the steering
+  * and tolerance fixtures, the partition- and schema-evolution
+  * layouts, the shard export) cover their path's fingerprint; the
+  * PLAN-KEYED ones (ResultCache entries, CardFeedback observations,
+  * GraphRank's bucketed edges) cover the key they are filed under.
   *
   *  - [[commit]] writes the parts into a FRESH version `v_<seq>_<uuid>`,
   *    then lands ONE stamp `_GRAFT_STAMP.<seq>` LAST (covered
@@ -31,10 +35,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    one listing of the artifact and one per part, the stamp read
   *    memoized on its (name, mtime, length).
   *  - [[veto]] comes before any in-place mutation (the rollups' and
-  *    the entity store's `appendBatch`, the entity store's vacuum): a
-  *    stamp marking the same version VETOED lands first, so a crash
-  *    mid-mutation fails closed — [[intact]] for the maintained
-  *    readers, never current again until a fresh commit.
+  *    the entity store's `appendBatch`): a stamp marking the same
+  *    version VETOED lands first, so a crash mid-mutation fails
+  *    closed — [[intact]] for the maintained readers, never current
+  *    again until a fresh commit.
   *  - [[maintain]] is the maintained families' append half: current →
   *    no-op; absent or torn → rebuild; covered rows + |batch| ≠ |table|
   *    → rebuild; else the family merges the batch into the STAMPED
@@ -55,7 +59,8 @@ private[graft] object EnsureWatermark {
     * parts, the family's baked knobs, each part's data-file listing. */
   final case class Stamp(covered: String, rows: Long, version: String,
       knobs: Map[String, Long], listing: Map[String, String]) {
-    def part(path: String, name: String): String = s"$path/$version/$name"
+    def dir(path: String): String = s"$path/$version"
+    def part(path: String, name: String): String = s"${dir(path)}/$name"
     def vetoed: Boolean = covered == Vetoed
   }
 
@@ -93,7 +98,8 @@ private[graft] object EnsureWatermark {
     (Seq(s"covered=${st.covered}", s"rows=${st.rows}",
         s"version=${st.version}") ++
       st.knobs.toSeq.sorted.map { case (k, v) => s"knob.$k=$v" } ++
-      st.listing.toSeq.sorted.map { case (k, v) => s"part.$k=$v" } :+
+      st.listing.toSeq.sorted.map { case (k, v) =>
+        s"part.${java.net.URLEncoder.encode(k, "UTF-8")}=$v" } :+
       StampEnd).mkString("\n")
 
   private def parse(text: String): Option[Stamp] = {
@@ -106,14 +112,20 @@ private[graft] object EnsureWatermark {
       kv.collect { case (k, v) if k.startsWith(pre) => k.stripPrefix(pre) -> v }
     scala.util.Try(Stamp(kv("covered"), kv("rows").toLong, kv("version"),
       prefixed("knob.").map { case (k, v) => k -> v.toLong },
-      prefixed("part."))).toOption
+      // a part name may hold `=` (hive-style `gen=0`): it is stored
+      // URL-encoded, so the first `=` always ends the key
+      prefixed("part.").map { case (k, v) =>
+        java.net.URLDecoder.decode(k, "UTF-8") -> v })).toOption
   }
 
   /** (stamp name, mtime, length) → parsed stamp, per artifact path: a
     * new commit lands under a new name, so the cache can never serve
-    * a superseded stamp. */
+    * a superseded stamp. Bounded: the plan-keyed families file one
+    * artifact per distinct plan, so past [[StampCacheMax]] paths it
+    * clears — a clear only re-reads small stamp files. */
   private val stampCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long, Option[Stamp])]()
+  private val StampCacheMax = 4096
 
   private def read(fs: FileSystem, path: String, f: FileStatus): Option[Stamp] = {
     val key = (f.getPath.getName, f.getModificationTime, f.getLen)
@@ -129,6 +141,7 @@ private[graft] object EnsureWatermark {
             parse(new String(bs.toByteArray, "UTF-8"))
           } finally in.close()
         } catch { case _: java.io.IOException => None }
+      if (stampCache.size >= StampCacheMax) stampCache.clear()
       stampCache.put(path, (key._1, key._2, key._3, parsed))
       parsed
     }
@@ -184,11 +197,18 @@ private[graft] object EnsureWatermark {
     * precondition). */
   def ensured(path: String, dir: String, table: String)(
       write: String => Unit): String =
-    intact(path, Data).getOrElse {
-      commitData(path, dir, table)(write)
-      intact(path, Data).getOrElse(
+    ensured(path, Data, dir, table)(v => write(s"$v/data")).part(path, "data")
+
+  /** The intact commit of a keyed artifact's `parts`, committed
+    * through `write` (which receives the fresh version directory)
+    * first when absent or torn. */
+  def ensured(path: String, parts: Seq[String], dir: String, table: String)(
+      write: String => Unit): Stamp =
+    intact(path, parts).getOrElse {
+      commit(path, dir, table, 0L)(write)
+      intact(path, parts).getOrElse(
         sys.error(s"$path: no intact commit after its build"))
-    }.part(path, "data")
+    }
 
   /** Land `st` as stamp `seq`: staged inside its version, renamed
     * into place by a rename that fails when the name exists
@@ -249,6 +269,28 @@ private[graft] object EnsureWatermark {
     val (fs, p) = IndexStore.fsOf(path)
     val seq = 1L + on.fold(latest(children(fs, p)).fold(0L)(_._2))(
       _.version match { case VersionName(k) => k.toLong })
+    commitAt(fs, p, path, seq, covered, rows, knobs)(write)
+  }
+
+  /** The commit of a PLAN-KEYED artifact: its `data` part, written
+    * through `write`, covering `key` itself. Unless an intact commit
+    * covering `key` is already there, it lands on the latest stamp it
+    * read, so of concurrent first commits exactly one lands and none
+    * retires a version a reader was handed. True when this call's
+    * commit landed; a reader probes with
+    * `intact(path, Data).filter(_.covered == key)`. */
+  def commit(path: String, key: String)(write: String => Unit): Boolean = {
+    val (fs, p) = IndexStore.fsOf(path)
+    val last = latest(children(fs, p))
+    val live = last.flatMap { case (f, _) => read(fs, path, f) }
+      .exists(st => st.covered == key && partsIntact(path, Data, st))
+    !live && commitAt(fs, p, path, 1L + last.fold(0L)(_._2), key, 0L,
+      Map.empty)(v => write(s"$v/data"))
+  }
+
+  private def commitAt(fs: FileSystem, p: Path, path: String, seq: Long,
+      covered: String, rows: Long, knobs: Map[String, Long])(
+      write: String => Unit): Boolean = {
     val version = s"v_${seq}_${java.util.UUID.randomUUID()}"
     // a commit landing `seq` or later retires this version while it is
     // written: the failed write is then a lost race

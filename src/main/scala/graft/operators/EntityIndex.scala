@@ -17,11 +17,9 @@ import org.apache.spark.sql.functions._
   * pruning (`PartitionFilters` on `bucket` — spec-pinned by
   * counting the files the serve plan actually touches).
   *
-  * Day grain (not lifetime totals) because (a) distinct-day counts
-  * are then exact under append merging (duplicate (user, day) rows
-  * fold by SUM / re-distinct), and (b) the serve can answer
-  * windowed profiles ("active days in January") from the same
-  * artifact — the lattice argument of D81, applied to entities.
+  * Day grain (not lifetime totals) because distinct-day counts are
+  * then exact under append merging (duplicate (user, day) rows fold
+  * by SUM / re-distinct).
   *
   * Bucket function: `floorMod(user_id, Buckets)` — deterministic
   * and driver-replayable, so the lookup computes its target buckets
@@ -105,42 +103,6 @@ object EntityIndex {
       .write.partitionBy("bucket").mode("append").parquet(st.get.part(path, "data"))
   }
 
-  /** WINDOWED profile serve — the day grain's payoff the class
-    * scaladoc promises ("active days in January"): the same ≤|users|
-    * bucket-partition reads, day-range filtered before the fold, so
-    * a windowed profile costs exactly what a lifetime profile costs.
-    * Same fail-closed raw-scan fallback as [[serve]]. */
-  def serveWindow(s: SparkSession, dir: String, users: Seq[Long],
-      lo: String, hi: String): (DataFrame, Boolean) = {
-    require(users.nonEmpty, "empty lookup set")
-    val loTs = lit(MinMaxManifest.utc(lo))
-    val hiTs = lit(MinMaxManifest.utc(hi))
-    servable(dir).map { data =>
-      val buckets = users.map(bucketOf).distinct
-      val df = IndexStore.readAs(s, "user_id BIGINT, day TIMESTAMP, n BIGINT, v_fp BIGINT, bucket BIGINT", data)
-        .where(col("bucket").isin(buckets: _*) &&
-          col("user_id").isin(users: _*) &&
-          col("day") >= loTs && col("day") < hiTs)
-        .groupBy(col("user_id"))
-        .agg(sum(col("n")).as("n"), sum(col("v_fp")).as("v_fp"),
-          countDistinct(col("day")).as("days"))
-        .orderBy(col("user_id"))
-      (df, true)
-    }.getOrElse {
-      val df = graft.Tables(s, dir, "events")
-        .where(col("user_id").isin(users: _*) &&
-          MinMaxManifest.utcDay(col("ts")) >= loTs &&
-          MinMaxManifest.utcDay(col("ts")) < hiTs)
-        .select(col("user_id"), MinMaxManifest.utcDay(col("ts")).as("day"),
-          floor(col("value")).as("v"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("v_fp"),
-          countDistinct(col("day")).as("days"))
-        .orderBy(col("user_id"))
-      (df, false)
-    }
-  }
-
   /** STREAMING maintenance — the [[HistogramRollup.processStreamBatch]]
     * batch-id discipline verbatim: each foreachBatch micro-batch's
     * partials land in their own `batch=b<id>` partition via
@@ -189,10 +151,9 @@ object EntityIndex {
   // GDPR purge (D89) — the erasure story every other artifact family
   // already has (AnnDeletes for ANN, HistogramRollup CDC deletes,
   // DeletionVectors for the DV table), applied to the entity store:
-  // merge-on-read TOMBSTONES at delete time (O(purge-set), no scan),
-  // a purged serve face that anti-joins them on BOTH paths, and a
-  // surgical vacuum that rewrites ONLY the buckets containing purged
-  // users. Tombstones live beside the index (batch-tagged overwrite
+  // merge-on-read TOMBSTONES at delete time (O(purge-set), no scan)
+  // and a purged serve face that anti-joins them on BOTH paths.
+  // Tombstones live beside the index (batch-tagged overwrite
   // — replays are bit-idempotent, distinct tags accumulate, the
   // AnnDeletes discipline verbatim); the UNPURGED serve face ignores
   // them, so gates over raw semantics (q73) and governed semantics
@@ -237,145 +198,6 @@ object EntityIndex {
     val (df, viaIndex) = serve(s, dir, users)
     (df.join(purgedKeys(s, dir), Seq("user_id"), "left_anti")
       .orderBy(col("user_id")), viaIndex)
-  }
-
-  /** The governed serve with stream batches folded in: the purge
-    * anti-join applies AFTER the base ∪ stream union, so a purged
-    * user never surfaces through a micro-batch either — erasure
-    * outranks freshness on every path. */
-  def servePurgedWithStream(s: SparkSession, dir: String,
-      users: Seq[Long]): DataFrame =
-    serveWithStream(s, dir, users)
-      .join(purgedKeys(s, dir), Seq("user_id"), "left_anti")
-      .orderBy(col("user_id"))
-
-  /** Materialize the tombstones: rewrite ONLY the bucket partitions
-    * that contain purged users (dynamic partition overwrite — the
-    * other buckets' files are untouched, spec-pinned byte-identical),
-    * then clear the tombstones LAST, so a crash at any point re-runs
-    * to completion with [[servePurged]] exact throughout (before the
-    * clear, the anti-join still filters; after, it is a no-op).
-    * POST-VACUUM SEMANTICS: the store now IS the purged table — the
-    * plain [[serve]] face reflects the erasure, exactly as a vacuumed
-    * table format serves everyone the rewritten files. */
-  def vacuumPurged(s: SparkSession, dir: String): Unit = {
-    val purged = purgedKeys(s, dir)
-    val hit = purged.select(
-      pmod(col("user_id"), lit(Buckets.toLong)).as("bucket"))
-      .distinct().collect().map(_.getLong(0))
-    if (hit.isEmpty) return
-    // veto index serving BEFORE any bucket moves; the rewritten
-    // version re-commits at the end (a vacuum is the owner's own
-    // commit, not an accidental mutation)
-    val path = indexPath(dir)
-    ensure(s, dir)
-    val version = EnsureWatermark.veto(path).get.version
-    val data = s"$path/$version/data"
-    // STAGE the survivors of the touched buckets (a parquet overwrite
-    // cannot read the path it replaces), then swap bucket-by-bucket:
-    // staged partitions move in via dynamic overwrite, fully-purged
-    // buckets (no staged partition) are dropped explicitly. Every
-    // post-stage step is idempotent, and the tombstones clear LAST,
-    // so a crash anywhere re-runs to completion with [[servePurged]]
-    // exact throughout (before the clear the anti-join still filters;
-    // after, it is a no-op).
-    val staging = path + ".vacuum"
-    s.read.parquet(data)
-      .where(col("bucket").isin(hit.toSeq: _*))
-      .join(purged, Seq("user_id"), "left_anti")
-      .select(col("user_id"), col("day"), col("n"), col("v_fp"), col("bucket"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(staging)
-    val (fs, stagingP) = IndexStore.fsOf(staging)
-    val alive = fs.listStatus(stagingP).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("bucket="))
-      .map(_.stripPrefix("bucket=").toLong).toSet
-    val prior = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      if (alive.nonEmpty)
-        s.read.parquet(staging)
-          .write.partitionBy("bucket").mode("overwrite").parquet(data)
-    } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-    hit.filterNot(alive).foreach { b =>
-      val (dfs, p) = IndexStore.fsOf(s"$data/bucket=$b")
-      dfs.delete(p, true)
-    }
-    // the STREAM partials carry purged users too (r13 review's top
-    // finding: clearing tombstones while a committed batch still
-    // holds a purged user's rows would resurface them on every
-    // stream-folded face). Rewrite each committed batch that holds a
-    // purged row via its own staged swap.
-    // stage/trash dirs are named OUTSIDE the `batch=` namespace so a
-    // torn swap can never be read as a batch. The swap is rename-only
-    // — old renamed ASIDE, stage renamed IN — so readers see the old
-    // batch or the new one with only two atomic metadata ops between
-    // (never a recursive delete's worth of darkness; the r13 advice's
-    // visibility window), and servePurged* stays exact throughout
-    // because the tombstones clear LAST. Recovery first — finish or
-    // roll back any swap a crash left half-done:
-    //   stage ready + target gone  -> rename the stage in
-    //   trash present + target gone -> roll the old batch back
-    //   anything with a live target -> superseded leftover, delete
-    val (sfs, spp) = IndexStore.fsOf(streamPath(dir))
-    if (sfs.exists(spp)) {
-      sfs.listStatus(spp).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("vacuum_batch="))
-        .foreach { stgName =>
-          val tag = stgName.stripPrefix("vacuum_")
-          val target = new org.apache.hadoop.fs.Path(spp, tag)
-          val stg = new org.apache.hadoop.fs.Path(spp, stgName)
-          if (!sfs.exists(target) &&
-              IndexStore.artifactReady(stg.toString))
-            require(sfs.rename(stg, target),
-              s"vacuum recovery: rename $stg -> $target failed")
-          else sfs.delete(stg, true) // torn or superseded stage
-        }
-      sfs.listStatus(spp).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("trash_batch="))
-        .foreach { tName =>
-          val tag = tName.stripPrefix("trash_")
-          val target = new org.apache.hadoop.fs.Path(spp, tag)
-          val t = new org.apache.hadoop.fs.Path(spp, tName)
-          if (!sfs.exists(target)) // torn-stage rollback
-            require(sfs.rename(t, target),
-              s"vacuum recovery: rollback $t -> $target failed")
-          else sfs.delete(t, true) // swap completed; drop the old copy
-        }
-    }
-    IndexStore.readyBatches(streamPath(dir)).foreach { tag =>
-      val bp = s"${streamPath(dir)}/$tag"
-      val (bfs, bpp) = IndexStore.fsOf(bp)
-      val stg = new org.apache.hadoop.fs.Path(spp, s"vacuum_$tag")
-      val aside = new org.apache.hadoop.fs.Path(spp, s"trash_$tag")
-      val batchDf = s.read.parquet(bp)
-      if (!batchDf.join(purged, Seq("user_id"), "left_semi").isEmpty) {
-        batchDf.join(purged, Seq("user_id"), "left_anti")
-          .coalesce(1).write.mode("overwrite").parquet(stg.toString)
-        // FAIL LOUD on either rename (r14 review): a silently failed
-        // swap followed by the tombstone clear below would resurrect
-        // the purged rows — aborting here leaves the tombstones in
-        // place and the recovery legs above repair on the next run
-        require(bfs.rename(bpp, aside),
-          s"vacuum swap: rename $bpp -> $aside failed")
-        require(bfs.rename(stg, bpp),
-          s"vacuum swap: rename $stg -> $bpp failed")
-        bfs.delete(aside, true)
-        ()
-      }
-    }
-    // re-commit the rewritten version (moved in by one rename) so
-    // serving continues against the now-purged store
-    EnsureWatermark.commit(path, dir, "events", 0L) { v =>
-      fs.rename(new org.apache.hadoop.fs.Path(s"$path/$version"),
-        new org.apache.hadoop.fs.Path(v))
-      ()
-    }
-    fs.delete(stagingP, true)
-    // clear LAST — idempotent replay point
-    val (tfs, tp) = IndexStore.fsOf(purgePath(dir))
-    tfs.delete(tp, true)
-    ()
   }
 
   /** The per-user profile for `users`: (n, v_fp, active days).

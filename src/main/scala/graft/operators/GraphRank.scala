@@ -167,29 +167,36 @@ object GraphRank {
   }
 
   /** Idempotent build-or-reuse of a persisted bucketed edge table:
-    * files ready + catalog entry → reuse; files ready but the
-    * (session-local) catalog lost the entry — the NORMAL state in a
-    * fresh JVM — → re-register the external table by DDL with the
-    * identical bucket spec (the files carry their bucket ids in
-    * their names, so the declared spec stays trustworthy); files
-    * absent → derive `edges` and pay the one-time
-    * [[writeEdgesBucketed]] build. */
+    * the files are the one part of a stamped commit at `path`, covering
+    * the key its parent directory is named by, built once from
+    * `edges` through [[writeEdgesBucketed]]. The catalog entry is
+    * session-local — absent in a fresh JVM, or naming a version a
+    * rebuild retired — so unless it names the committed part, the
+    * external table is re-registered by DDL with LOCATION the part and
+    * the identical bucket spec (the files carry their bucket ids in
+    * their names, so the declared spec stays trustworthy). */
   def ensureBucketedEdges(s: org.apache.spark.sql.SparkSession,
       table: String, path: String, edges: => DataFrame): DataFrame = {
-    val ready = IndexStore.artifactReady(path)
-    val inCatalog = s.catalog.tableExists(table)
-    if (ready && inCatalog) s.table(table)
-    else if (ready) {
+    val key = new org.apache.hadoop.fs.Path(path).getParent.getName
+    def committed = EnsureWatermark.current(path).map(_.part(path, "data"))
+    val part = committed.getOrElse {
+      s.sql(s"DROP TABLE IF EXISTS `$table`")
+      EnsureWatermark.commit(path, key)(writeEdgesBucketed(edges, table, _, EdgeBuckets))
+      committed.getOrElse(sys.error(s"$path: no committed edges after the build"))
+    }
+    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
+    val catalog = s.sessionState.catalog
+    val registered = catalog.tableExists(ident) &&
+      catalog.getTableMetadata(ident).location.getPath ==
+        new org.apache.hadoop.fs.Path(part).toUri.getPath
+    if (!registered) {
       s.sql(s"DROP TABLE IF EXISTS `$table`")
       s.sql(s"""CREATE TABLE `$table` (src BIGINT, dst BIGINT, deg BIGINT)
         USING parquet
         CLUSTERED BY (src) SORTED BY (src) INTO $EdgeBuckets BUCKETS
-        LOCATION '$path'""")
-      s.table(table)
-    } else {
-      s.sql(s"DROP TABLE IF EXISTS `$table`")
-      writeEdgesBucketed(edges, table, path, EdgeBuckets)
+        LOCATION '$part'""")
     }
+    s.table(table)
   }
 
   def pagerankBucketed(bucketedEdges: DataFrame,

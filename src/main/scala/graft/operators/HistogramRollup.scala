@@ -265,11 +265,12 @@ object HistogramRollup {
     * INTEGER-EXACT END-TO-END: the estimate is a 1e4-scaled BIGINT
     * `pXX_e4 = 50000·bin + (50000·(k − cum + cnt)) DIV cnt` with
     * floor semantics in BOTH engines (Spark `DIV` ≡ DuckDB `//` on
-    * BIGINTs). Round 7's `round(interp, 4)` double landed on exactly
+    * BIGINTs). A `round(interp, 4)` double lands on exactly
     * representable 4-decimal ties (34.21875-shaped, common when cnt
     * has a 2^k divisor) where Spark's BigDecimal HALF_UP and a
-    * DuckDB version's tie-break can disagree — the only red rows in
-    * CORRECTNESS_r07. Integer floor division has no tie to break.
+    * DuckDB version's tie-break disagree — it turned the percentile
+    * rows red against the DuckDB oracle. Integer floor division has
+    * no tie to break.
     * Callers wanting the pretty double divide by 1e4 OUTSIDE the
     * hash gate. */
   def percentiles(merged: DataFrame, pNums: Seq[Int]): DataFrame = {

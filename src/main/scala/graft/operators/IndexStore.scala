@@ -169,9 +169,12 @@ object IndexStore {
       .digest(desc.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  /** The `_SUCCESS` readiness rule of the persisted layouts not
-    * committed through [[EnsureWatermark]] (ShardExport, ResultCache,
-    * …). */
+  /** The `_SUCCESS` readiness rule of the two crash-recovery
+    * journals of table mutations — WriteAuditPublish's staging and
+    * intent, DeletionVectors' journal and delete files. They record an
+    * in-flight mutation, not a rebuildable artifact, so they stay off
+    * the stamp; every rebuildable artifact's readiness is
+    * [[EnsureWatermark]]'s. */
   private[graft] def artifactReady(path: String): Boolean = {
     val (fs, p) = fsOf(path)
     val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")

@@ -37,31 +37,31 @@ object PartitionEvolution {
 
   def rootPath(dir: String): String =
     s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/events_pev"
-  private def gen0(dir: String) = s"${rootPath(dir)}/spec0"
-  private def gen1(dir: String) = s"${rootPath(dir)}/spec1"
+  private val Specs = Seq("spec0", "spec1")
 
-  private def ready(dir: String): Boolean =
-    IndexStore.artifactReady(gen0(dir)) && IndexStore.artifactReady(gen1(dir))
-
-  /** Write the two spec generations if absent. The build runs on a
-    * UTC-pinned cloned session ([[IndexStore.utcSession]]): the
-    * partition VALUES are date_format renderings, which follow the
-    * session zone — under a non-UTC caller the directory names would
-    * disagree with [[read]]'s UTC-pinned predicate strings and
-    * pruning would silently exclude in-window rows (the r7 advice).
-    * Pinning the WRITE side makes the persisted names UTC forever,
-    * matching the reader on any session zone. */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    if (ready(dir)) return
-    val us = IndexStore.utcSession(s)
-    val ev = graft.Tables(us, dir, "events")
-    val cut = lit(MinMaxManifest.utc(SpecChange))
-    ev.where(col("ts") < cut)
-      .withColumn("pmonth", date_format(col("ts"), "yyyy-MM"))
-      .write.mode("overwrite").partitionBy("pmonth").parquet(gen0(dir))
-    ev.where(col("ts") >= cut)
-      .withColumn("pday", date_format(col("ts"), "yyyy-MM-dd"))
-      .write.mode("overwrite").partitionBy("pday").parquet(gen1(dir))
+  /** Commit the two spec generations, parts `spec0` and `spec1` of one
+    * stamped version, if absent; returns the committed version
+    * directory. The build runs on a UTC-pinned cloned session
+    * ([[IndexStore.utcSession]]): the partition VALUES are
+    * date_format renderings, which follow the session zone — under a
+    * non-UTC caller the directory names would disagree with
+    * [[read]]'s UTC-pinned predicate strings and pruning would
+    * silently exclude in-window rows (the r7 advice). Pinning the
+    * WRITE side makes the persisted names UTC forever, matching the
+    * reader on any session zone. */
+  def ensure(s: SparkSession, dir: String): String = {
+    val path = rootPath(dir)
+    EnsureWatermark.ensured(path, Specs, dir, "events") { v =>
+      val us = IndexStore.utcSession(s)
+      val ev = graft.Tables(us, dir, "events")
+      val cut = lit(MinMaxManifest.utc(SpecChange))
+      ev.where(col("ts") < cut)
+        .withColumn("pmonth", date_format(col("ts"), "yyyy-MM"))
+        .write.partitionBy("pmonth").parquet(s"$v/spec0")
+      ev.where(col("ts") >= cut)
+        .withColumn("pday", date_format(col("ts"), "yyyy-MM-dd"))
+        .write.partitionBy("pday").parquet(s"$v/spec1")
+    }.dir(path)
   }
 
   /** The evolved-table read over [lo, hi): each spec's files planned
@@ -70,7 +70,8 @@ object PartitionEvolution {
     * two legs too so specs can pin each plan. */
   def read(s: SparkSession, dir: String, lo: String,
       hi: String): (DataFrame, DataFrame, DataFrame) = {
-    ensure(s, dir)
+    val layout = ensure(s, dir)
+    val (gen0, gen1) = (s"$layout/spec0", s"$layout/spec1")
     val (loTs, hiTs) = (MinMaxManifest.utc(lo), MinMaxManifest.utc(hi))
     val rowPred = col("ts") >= lit(loTs) && col("ts") < lit(hiTs)
     val fmtM = new java.text.SimpleDateFormat("yyyy-MM")
@@ -97,14 +98,14 @@ object PartitionEvolution {
     val g1Schema = evSchema.add("pday",
       org.apache.spark.sql.types.StringType)
     val leg0 =
-      if (!loTs.before(cut)) s.read.schema(g0Schema).parquet(gen0(dir)).drop("pmonth").where(lit(false))
-      else s.read.schema(g0Schema).parquet(gen0(dir))
+      if (!loTs.before(cut)) s.read.schema(g0Schema).parquet(gen0).drop("pmonth").where(lit(false))
+      else s.read.schema(g0Schema).parquet(gen0)
         .where(col("pmonth") >= fmtM.format(loTs) &&
           col("pmonth") <= fmtM.format(hiTs) && rowPred)
         .drop("pmonth")
     val leg1 =
-      if (!cut.before(hiTs)) s.read.schema(g1Schema).parquet(gen1(dir)).drop("pday").where(lit(false))
-      else s.read.schema(g1Schema).parquet(gen1(dir))
+      if (!cut.before(hiTs)) s.read.schema(g1Schema).parquet(gen1).drop("pday").where(lit(false))
+      else s.read.schema(g1Schema).parquet(gen1)
         .where(col("pday") >= fmtD.format(loTs) &&
           col("pday") <= fmtD.format(hiTs) && rowPred)
         .drop("pday")

@@ -50,27 +50,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * written coalesce(1), so the read-back preserves row order — an
   * ORDER BY survives the cache.
   *
-  * CONCURRENT MISSES are safe by staged write + rename commit: each
-  * writer computes into its own `$path.staged-<uuid>` directory and
-  * COMMITS with one atomic rename onto the final entry path — the
-  * first rename wins, losers delete their stage and serve the
-  * winner's entry. A reader that passed [[IndexStore.artifactReady]]
-  * can never observe a half-written or deleted entry, because the
-  * final path is only ever created by a rename of a complete stage
-  * and is never overwritten in place — with ONE stated legacy
-  * exception: repairing a PRE-FIX torn leftover (a state the fixed
-  * writer can no longer create) moves the junk ASIDE with one atomic
-  * rename to a `.torn-` sibling (r16 — never a delete: a competitor's
-  * complete entry racing that repair stays intact on disk), and the
-  * repairer's own identical entry re-commits immediately after;
-  * loud at worst for the one atomic op, never wrong, and unreachable
-  * for entries written by this code. (Two dashboard viewers missing
-  * simultaneously is the DESIGNED workload of a query-keyed cache,
-  * so this is load-bearing, not defensive.) Results are RESULT-sized
-  * by assumption — a caller caching a corpus-sized frame gets
-  * exactly the storage bill it asked for. Entries are immutable once
-  * committed; stale entries (dead stamps) and crashed stage
-  * directories are orphans the periodic sweep deletes by directory
+  * CONCURRENT MISSES converge through the stamp every rebuildable
+  * artifact shares ([[EnsureWatermark.commit]]'s plan-keyed face):
+  * each writer computes into its own fresh version and lands one
+  * stamp covering the entry's key by a rename that fails when the
+  * name exists — the first stamp wins, losers delete their version
+  * and serve the winner's entry, and a stamp never lands over an
+  * intact entry, so no reader's version is retired under it. A
+  * missing, torn or unparsable stamp, or a version whose files are
+  * not the listed ones, reads as a MISS and rebuilds in place.
+  * (Two dashboard viewers missing simultaneously is the DESIGNED
+  * workload of a query-keyed cache, so this is load-bearing, not
+  * defensive.) Results are RESULT-sized by assumption — a caller
+  * caching a corpus-sized frame gets exactly the storage bill it
+  * asked for. Entries are immutable once committed; stale entries
+  * (dead stamps) are orphans the periodic sweep deletes by directory
   * age — they can never serve. */
 object ResultCache {
 
@@ -143,10 +137,6 @@ object ResultCache {
     }
   }
 
-  /** Serve `df` through the cache: (result frame, whether it HIT).
-    * A miss computes, writes the entry, and serves the written copy
-    * (write-through — the next identical query hits). Uncacheable
-    * plans compute directly with hit = false and no entry. */
   /** The scaladoc's promised orphan sweep: entries whose source
     * stamps died are unreachable by construction, so retention is
     * pure storage hygiene — keep the newest `maxEntries` by mtime,
@@ -164,78 +154,45 @@ object ResultCache {
     victims.length
   }
 
+  /** Serve `df` through the cache: (result frame, whether it HIT).
+    * A miss computes, writes the entry, and serves the written copy
+    * (write-through — the next identical query hits). Uncacheable
+    * plans compute directly with hit = false and no entry. */
   def through(s: SparkSession, df: DataFrame): (DataFrame, Boolean) = {
     val (stamp, cacheable) = sourceStamp(df)
     if (!cacheable) return (df, false)
     val key = md5(df.queryExecution.analyzed.canonicalized.toString + "\u0000" + stamp)
-    val path = cachePath(key)
-    // the entry's schema IS the cached frame's own (writeEntry writes
+    // the entry's schema IS the cached frame's own (the commit writes
     // df verbatim) — passing it skips the footer-inference job on
     // every hit (r17)
-    if (IndexStore.artifactReady(path)) (s.read.schema(df.schema).parquet(path), true)
-    else {
-      writeEntry(df, path)
-      (s.read.schema(df.schema).parquet(path), false)
+    def read(part: String) = s.read.schema(df.schema).parquet(part)
+    entry(key) match {
+      case Some(part) => (read(part), true)
+      case None =>
+        commitEntry(df, key)
+        (read(entry(key).getOrElse(sys.error(
+          s"result cache: no committed entry for $key after its commit"))), false)
     }
   }
 
-  /** Stage-then-rename commit of one entry (see class scaladoc):
-    * write `df` into a private stage, commit with ONE atomic rename
-    * onto `path`. A lost race (the rename finds the path taken)
-    * deletes the stage and returns false — the winner's entry is
-    * byte-equivalent by keying, so the loser serves it. A rename
-    * blocked by a TORN leftover (a directory without its _SUCCESS —
-    * only a pre-fix overwrite or an outside mutation can leave one)
-    * clears the junk and retries once; a second failure is loud. */
-  private[graft] def writeEntry(df: DataFrame, path: String): Boolean = {
-    val stage = s"$path.staged-${java.util.UUID.randomUUID().toString.take(12)}"
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    val (fs, target) = IndexStore.fsOf(path)
-    val st = new org.apache.hadoop.fs.Path(stage)
-    // FileContext.rename, NOT FileSystem.rename: the FileSystem face
-    // MOVES-INTO an existing destination directory (the loser's stage
-    // would nest inside the winner's entry and double its rows on
-    // read); the FileContext face fails atomically when the
-    // destination exists — exactly the commit-or-lose semantics the
-    // race needs
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, df.sparkSession.sessionState.newHadoopConf())
-    def tryCommit(): Boolean =
-      try { fc.rename(st, target); true }
-      catch { case _: java.io.IOException => false }
-    def discard(): Unit = { fs.delete(st, true); () }
-    if (tryCommit()) true
-    else if (IndexStore.artifactReady(path)) { discard(); false }
-    else {
-      // torn-leftover repair. Post-fix, a torn FINAL path cannot be
-      // CREATED (finals appear only by atomic rename of a complete
-      // stage), so this leg only ever fires on a pre-fix leftover or
-      // an external mutation. The junk is moved ASIDE with one atomic
-      // rename (r16 advice) — never deleted in place: a COMPETING
-      // writer committing its complete entry between our readiness
-      // re-check and the repair now has that entry renamed to a
-      // junk-suffixed sibling (still intact on disk) instead of
-      // destroyed mid-read, and our own identical entry re-commits
-      // immediately after — the loud window shrinks to the one atomic
-      // op. Junk paths are `.torn-` siblings under result_cache, so
-      // the age-based [[sweep]] retires them with the stale entries.
-      if (!IndexStore.artifactReady(path)) {
-        val junk = new org.apache.hadoop.fs.Path(
-          s"$path.torn-${java.util.UUID.randomUUID().toString.take(12)}")
-        try fc.rename(target, junk)
-        catch { case _: java.io.IOException => () } // already gone or taken
-      }
-      val won = tryCommit()
-      // the stage is discarded on EVERY non-winning exit — including
-      // the loud one (r15 review #2: a result-sized stage orphaned
-      // per failed repair would accumulate unbounded junk)
-      if (!won) discard()
-      if (won) true
-      else if (IndexStore.artifactReady(path)) false
-      else sys.error(
-        s"result cache: could not commit $path and no committed entry exists")
-    }
-  }
+  /** The committed result part of the entry filed under `key`, while
+    * an intact stamp covers it — FS metadata only. */
+  private[graft] def entry(key: String): Option[String] =
+    committed(cachePath(key), key)
+
+  /** The `data` part of the plan-keyed artifact at `path` while an
+    * intact stamp covers `key` (the entries here, CardFeedback's
+    * observations). */
+  private[graft] def committed(path: String, key: String): Option[String] =
+    EnsureWatermark.intact(path, EnsureWatermark.Data)
+      .filter(_.covered == key).map(_.part(path, "data"))
+
+  /** Write `df` once as the entry filed under `key` (see the class
+    * scaladoc); false when an entry already stood or a concurrent
+    * writer's commit won. Written coalesce(1) so the read-back keeps
+    * the row order. */
+  private def commitEntry(df: DataFrame, key: String): Boolean =
+    EnsureWatermark.commit(cachePath(key), key)(df.coalesce(1).write.parquet(_))
 
   /** Cache key of an arbitrary plan: canonicalized form ‖ source
     * stamp, None when uncacheable — the shared keying for both
@@ -248,16 +205,16 @@ object ResultCache {
     else Some(md5(plan.canonicalized.toString + "\u0000" + stamp))
   }
 
-  /** The schema the entry at `path` was written with, as Spark
-    * recorded it in its part file's footer — one listing and one
-    * footer read, no Spark job. None when the entry has no part file
+  /** The schema the committed entry part `part` was written with, as
+    * Spark recorded it in its part file's footer — one listing and one
+    * footer read, no Spark job. None when the part has no parquet file
     * or its footer carries no readable Spark schema. */
-  private[graft] def entrySchema(path: String)
+  private[graft] def entrySchema(part: String)
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-    val (fs, p) = IndexStore.fsOf(path)
+    val (fs, p) = IndexStore.fsOf(part)
     fs.listStatus(p).find(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
       try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
@@ -297,10 +254,7 @@ object ResultCache {
     if (readsCache(plan)) return false
     keyOf(plan) match {
       case None => false
-      case Some(key) =>
-        val path = cachePath(key)
-        if (IndexStore.artifactReady(path)) false
-        else writeEntry(df, path)
+      case Some(key) => entry(key).isEmpty && commitEntry(df, key)
     }
   }
 }

@@ -861,20 +861,30 @@ object SampledAgg {
         lit(0L).as("rel_err_ppm"), lit("exact").as("source")), "exact")
   }
 
-  /** The q93/q95 GATE FIXTURE: a four-equal-group table derived from
+  /** The artifact path of the tolerance fixture `table`. */
+  private[graft] def tolerancePath(dir: String, table: String): String =
+    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/aqp_${table}_fixture"
+
+  /** A tolerance fixture: the four-equal-group table derived from
     * events (g = event_id mod 4 — DuckDB replays it inline; the raw
-    * value column rides along for the SUM face), with the 25%
-    * uniform sample and the stratified-by-g artifact built.
-    * Idempotent per events fingerprint; _v2 in the path = the
-    * fixture-version discipline (v1 lacked the value column — a warm
-    * host must not serve the old shape). */
-  def ensureToleranceFixture(s: SparkSession, dir: String): String = {
-    val fix = s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/aqp_tol_fixture_v2"
-    if (!IndexStore.artifactReady(s"$fix/tol_t.parquet"))
+    * value column rides along for the SUM face) as the one part
+    * `<table>.parquet` of a stamped commit, once per events
+    * fingerprint. Returns the committed version directory. */
+  private def toleranceTable(s: SparkSession, dir: String,
+      table: String): String = {
+    val path = tolerancePath(dir, table)
+    EnsureWatermark.ensured(path, Seq(s"$table.parquet"), dir, "events") { v =>
       graft.Tables(s, dir, "events")
         .select(col("event_id"), pmod(col("event_id"), lit(4L)).as("g"),
           col("value"))
-        .write.mode("overwrite").parquet(s"$fix/tol_t.parquet")
+        .write.parquet(s"$v/$table.parquet")
+    }.dir(path)
+  }
+
+  /** The q93/q95 GATE FIXTURE: the tolerance table `tol_t` with the
+    * 25% uniform sample and the stratified-by-g artifact built. */
+  def ensureToleranceFixture(s: SparkSession, dir: String): String = {
+    val fix = toleranceTable(s, dir, "tol_t")
     ensureSample(s, fix, "tol_t", "event_id", 250000L)
     ensureStratifiedSample(s, fix, "tol_t", "event_id", "g", 500)
     fix
@@ -886,12 +896,7 @@ object SampledAgg {
     * sampled-rung pins on `tol_t` — artifact isolation per gate, the
     * fixture discipline. */
   def ensureToleranceAvgFixture(s: SparkSession, dir: String): String = {
-    val fix = s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/aqp_tol_fixture_v2"
-    if (!IndexStore.artifactReady(s"$fix/tol_a.parquet"))
-      graft.Tables(s, dir, "events")
-        .select(col("event_id"), pmod(col("event_id"), lit(4L)).as("g"),
-          col("value"))
-        .write.mode("overwrite").parquet(s"$fix/tol_a.parquet")
+    val fix = toleranceTable(s, dir, "tol_a")
     ensureSample(s, fix, "tol_a", "event_id", 250000L)
     fix
   }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *    implemented as drop+add would null out all history — the
   *    mapping is what keeps old files readable under new names.
   *
-  * The fixture writes THREE schema generations of the events table
-  * into one layout (hive-style `gen=N` directories, so generation
+  * The fixture commits THREE schema generations of the events table
+  * as one stamped version (hive-style `gen=N` parts, so generation
   * provenance rides along as a partition column and the reader can be
   * audited per generation):
   *   gen 0 — the original schema;
@@ -65,36 +65,35 @@ object SchemaEvolution {
   def layoutPath(dir: String): String =
     s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/events_sev_v$FixtureVersion"
 
-  private def ready(dir: String): Boolean =
-    (0 to 2).forall(g =>
-      IndexStore.artifactReady(s"${layoutPath(dir)}/gen=$g"))
+  private val Generations = (0 to 2).map(g => s"gen=$g")
 
-  /** Write the three schema generations if absent (idempotent — each
-    * generation directory carries its own _SUCCESS marker). */
-  def ensure(s: SparkSession, dir: String): Unit = {
-    if (ready(dir)) return
-    val ev = graft.Tables(s, dir, "events")
-    val t1 = lit(MinMaxManifest.utc(Gen1Start))
-    val t2 = lit(MinMaxManifest.utc(Gen2Start))
+  /** Commit the three schema generations, parts `gen=0..2` of one
+    * stamped version, if absent; returns the committed version
+    * directory. */
+  def ensure(s: SparkSession, dir: String): String = {
     val lp = layoutPath(dir)
-    // gen 0: the original schema
-    ev.where(col("ts") < t1)
-      .write.mode("overwrite").parquet(s"$lp/gen=0")
-    // gen 1: ADD channel
-    ev.where(col("ts") >= t1 && col("ts") < t2)
-      .withColumn("channel",
-        concat(lit("ch"), (col("user_id") % 3).cast("string")))
-      .write.mode("overwrite").parquet(s"$lp/gen=1")
-    // gen 2: ADD score, DROP props. Score is integer "cents"
-    // (floor(value·100) as BIGINT) so cross-generation sums are
-    // engine-exact — a round(double) score diverged from DuckDB by
-    // accumulated half-rounding-mode ulps at sf0.01
-    ev.where(col("ts") >= t2)
-      .withColumn("channel",
-        concat(lit("ch"), (col("user_id") % 3).cast("string")))
-      .withColumn("score", floor(col("value") * 100).cast("long"))
-      .drop("props")
-      .write.mode("overwrite").parquet(s"$lp/gen=2")
+    EnsureWatermark.ensured(lp, Generations, dir, "events") { v =>
+      val ev = graft.Tables(s, dir, "events")
+      val t1 = lit(MinMaxManifest.utc(Gen1Start))
+      val t2 = lit(MinMaxManifest.utc(Gen2Start))
+      // gen 0: the original schema
+      ev.where(col("ts") < t1).write.parquet(s"$v/gen=0")
+      // gen 1: ADD channel
+      ev.where(col("ts") >= t1 && col("ts") < t2)
+        .withColumn("channel",
+          concat(lit("ch"), (col("user_id") % 3).cast("string")))
+        .write.parquet(s"$v/gen=1")
+      // gen 2: ADD score, DROP props. Score is integer "cents"
+      // (floor(value·100) as BIGINT) so cross-generation sums are
+      // engine-exact — a round(double) score diverged from DuckDB by
+      // accumulated half-rounding-mode ulps at sf0.01
+      ev.where(col("ts") >= t2)
+        .withColumn("channel",
+          concat(lit("ch"), (col("user_id") % 3).cast("string")))
+        .withColumn("score", floor(col("value") * 100).cast("long"))
+        .drop("props")
+        .write.parquet(s"$v/gen=2")
+    }.dir(lp)
   }
 
   /** The unified read: parquet schema-union across all generations
@@ -103,8 +102,7 @@ object SchemaEvolution {
     * downstream consumers see one stable table regardless of which
     * generations exist yet. */
   def readUnified(s: SparkSession, dir: String): DataFrame = {
-    ensure(s, dir)
-    val raw = s.read.option("mergeSchema", "true").parquet(layoutPath(dir))
+    val raw = s.read.option("mergeSchema", "true").parquet(ensure(s, dir))
     val mapped = NameMapping.foldLeft(raw) { case (df, (stored, current)) =>
       df.withColumnRenamed(stored, current)
     }

@@ -25,17 +25,16 @@ import graft.functions.DetHash
   *    one shard repartition), and reading shards round-robin yields
   *    hash-ordered ≈ uniformly shuffled data end to end.
   *  - **Layout** = one directory per shard (`partitionBy`, the
-  *    [[IndexStore.ivfadcIndex]] convention), keyed by the documents
-  *    fingerprint like every artifact; a trainer resumes by skipping
-  *    whole shard directories it has consumed.
+  *    [[IndexStore.ivfadcIndex]] convention) inside the committed
+  *    part, keyed by the documents fingerprint like every artifact; a
+  *    trainer resumes by skipping whole shard directories it has
+  *    consumed.
   *
   * At 100 TB: one hash-partition exchange + local sorts, every stage
   * map-side beyond it; NumShards scales to O(corpus/shard-budget)
-  * (here 8 for a 500-doc gate corpus). Appending a new batch lands
-  * new files in existing shard dirs (a blind append, like any file
-  * sink); within-shard order then holds per file, not across files
-  * — the trainer's reader interleaves, which is itself a shuffle, so
-  * the contract degrades gracefully. */
+  * (here 8 for a 500-doc gate corpus). A changed corpus re-keys the
+  * layout and rebuilds it whole; a file dropped into a committed
+  * part that its stamp does not list vetoes serving. */
 object ShardExport {
 
   val NumShards = 8
@@ -44,11 +43,11 @@ object ShardExport {
   def path(dir: String): String =
     s"${IndexStore.root}/${IndexStore.fingerprint(dir, "documents")}/shards$NumShards"
 
-  /** Build the shard layout if absent; return it re-read (shard as a
-    * normalized long — partition columns come back type-inferred). */
+  /** Build the shard layout if absent — one partitioned part of a
+    * stamped commit; return it re-read (shard as a normalized long —
+    * partition columns come back type-inferred). */
   def ensure(s: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!IndexStore.artifactReady(p)) {
+    val part = EnsureWatermark.ensured(path(dir), dir, "documents") { data =>
       graft.Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"),
           size(graft.functions.TextStats.tokens(col("text"))).as("toks"),
@@ -64,9 +63,9 @@ object ShardExport {
         // otherwise inject its own (unstable) sort, destroying the
         // h order this layout exists to provide
         .sortWithinPartitions(col("shard"), col("h"))
-        .write.mode("overwrite").partitionBy("shard").parquet(p)
+        .write.partitionBy("shard").parquet(data)
     }
-    s.read.parquet(p)
+    s.read.parquet(part)
       .withColumn("shard", col("shard").cast("long"))
   }
 }

@@ -275,6 +275,37 @@ object Steering {
     }
   }
 
+  /** The artifact path of the steering fixture `name` derived from
+    * `dir`'s events. */
+  private[graft] def fixturePath(dir: String, name: String): String =
+    s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/$name"
+
+  /** One steering fixture: its tables are the `parts` of ONE stamped
+    * commit at [[fixturePath]], derived once per events fingerprint
+    * by `write` (which receives the fresh version directory). Returns
+    * the committed version directory — the fixture's `dir` for
+    * [[graft.Tables]] and [[StatsCatalog]]. */
+  private def fixture(dir: String, name: String, parts: String*)(
+      write: String => Unit): String = {
+    val path = fixturePath(dir, name)
+    EnsureWatermark.ensured(path, parts, dir, "events")(write).dir(path)
+  }
+
+  /** A skewed fact derived from events: `k = hot` for every row whose
+    * user_id ≡ 0 (mod `mod`), `k = event_id` (near-unique) for the
+    * tail. */
+  private def hotFact(s: SparkSession, dir: String, mod: Long,
+      hot: Long): DataFrame =
+    graft.Tables(s, dir, "events").select(
+      when(col("user_id") % mod === 0, lit(hot))
+        .otherwise(col("event_id")).as("k"),
+      col("event_id"), col("value"))
+
+  /** The distinct keys of `fact` with a derived `seg = k mod segs`. */
+  private def segDim(fact: DataFrame, segs: Long): DataFrame =
+    fact.select(col("k")).distinct()
+      .withColumn("seg", pmod(col("k"), lit(segs)))
+
   /** The q69 SKEW FIXTURE, derived DETERMINISTICALLY from the events
     * table so the DuckDB oracle replays it with one CASE expression:
     * `k = -1` for every row of the user_id ≡ 0 (mod 3) third of the
@@ -282,29 +313,19 @@ object Steering {
     * that melts a shuffle partition), `k = event_id` (near-unique)
     * for the tail; the dim is the distinct key set with a derived
     * `seg` attribute, near-fact-sized so no honest budget can
-    * broadcast it. Materialized once per events fingerprint under
-    * the artifact root (the raw sf dir is read-only), as plain
-    * parquet tables [[StatsCatalog]] / [[graft.Tables]] can serve. */
-  def ensureSkewFixture(s: SparkSession, dir: String): String = {
-    val fix = s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/steer_fixture"
-    if (!IndexStore.artifactReady(s"$fix/skew_fact.parquet") ||
-        !IndexStore.artifactReady(s"$fix/skew_dim.parquet")) {
-      val ev = graft.Tables(s, dir, "events")
-      val fact = ev.select(
-        when(col("user_id") % 3 === 0, lit(-1L))
-          .otherwise(col("event_id")).as("k"),
-        col("event_id"), col("value"))
-      fact.write.mode("overwrite").parquet(s"$fix/skew_fact.parquet")
-      fact.select(col("k")).distinct()
-        .withColumn("seg", pmod(col("k"), lit(7L)))
-        .write.mode("overwrite").parquet(s"$fix/skew_dim.parquet")
+    * broadcast it. Committed once per events fingerprint under the
+    * artifact root (the raw sf dir is read-only), as plain parquet
+    * tables [[StatsCatalog]] / [[graft.Tables]] can serve. */
+  def ensureSkewFixture(s: SparkSession, dir: String): String =
+    fixture(dir, "steer_fixture", "skew_fact.parquet", "skew_dim.parquet") { v =>
+      val fact = hotFact(s, dir, 3L, -1L)
+      fact.write.parquet(s"$v/skew_fact.parquet")
+      segDim(fact, 7L).write.parquet(s"$v/skew_dim.parquet")
     }
-    fix
-  }
 
-  /** The q90 LEARNED-ORDERING FIXTURE: two more tables beside the
-    * skew fixture's fact, each DETERMINISTICALLY derived so the
-    * DuckDB oracle replays them inline —
+  /** The q90 LEARNED-ORDERING FIXTURE: the skew fixture's fact beside
+    * two more tables, each DETERMINISTICALLY derived so the DuckDB
+    * oracle replays them inline —
     *  - `ord_b`: every event's (event_id, b_g = event_id mod 400) —
     *    fact-sized, near-unique join key, a 400-value group key;
     *  - `ord_c`: the DISTINCT b_g values under 100 from ORDERS'
@@ -317,26 +338,24 @@ object Steering {
     * filter at its true ~n/3 frequency, making ord_b⋈ord_c (n/4)
     * the cheaper seed — one persisted skew artifact flips the
     * transparent plan, scale-independently (n/3 vs n/4). */
-  def ensureOrderTierFixture(s: SparkSession, dir: String): String = {
-    val fix = ensureSkewFixture(s, dir)
-    if (!IndexStore.artifactReady(s"$fix/ord_b.parquet") ||
-        !IndexStore.artifactReady(s"$fix/ord_c.parquet")) {
+  def ensureOrderTierFixture(s: SparkSession, dir: String): String =
+    fixture(dir, "steer_ord_fixture", "skew_fact.parquet", "ord_b.parquet",
+        "ord_c.parquet") { v =>
+      hotFact(s, dir, 3L, -1L).write.parquet(s"$v/skew_fact.parquet")
       graft.Tables(s, dir, "events")
         .select(col("event_id"), pmod(col("event_id"), lit(400L)).as("b_g"))
-        .write.mode("overwrite").parquet(s"$fix/ord_b.parquet")
+        .write.parquet(s"$v/ord_b.parquet")
       graft.Tables(s, dir, "orders")
         .select(pmod(col("o_orderkey"), lit(400L)).as("g"))
         .where(col("g") < 100L).distinct()
-        .write.mode("overwrite").parquet(s"$fix/ord_c.parquet")
+        .write.parquet(s"$v/ord_c.parquet")
     }
-    fix
-  }
 
   /** The q91 CATALOG FIXTURE: the skew fact's rows laid out at a
     * path that does NOT follow the engine's `<table>.parquet` naming
-    * (`cat/fact_cat`) — the shape every catalog table (`CREATE TABLE
-    * … USING parquet LOCATION`, `saveAsTable`) presents. Identity
-    * reaches the engine brain only through
+    * (the part `fact_cat`) — the shape every catalog table (`CREATE
+    * TABLE … USING parquet LOCATION`, `saveAsTable`) presents.
+    * Identity reaches the engine brain only through
     * [[graft.plans.JoinElimination.registerTablePath]]; the rows are
     * byte-derived from the skew fact, so the registration's
     * "same rows" assertion holds by construction and the DuckDB
@@ -344,11 +363,10 @@ object Steering {
     * registered path. */
   def ensureCatalogFixture(s: SparkSession, dir: String): String = {
     val fix = ensureSkewFixture(s, dir)
-    val path = s"$fix/cat/fact_cat"
-    if (!IndexStore.artifactReady(path))
+    val path = fixture(dir, "steer_cat_fixture", "fact_cat") { v =>
       IndexStore.readAs(s, "k BIGINT, event_id BIGINT, value DOUBLE",
-        s"$fix/skew_fact.parquet")
-        .write.mode("overwrite").parquet(path)
+        s"$fix/skew_fact.parquet").write.parquet(s"$v/fact_cat")
+    } + "/fact_cat"
     graft.plans.JoinElimination.registerTablePath(path, fix, "skew_fact")
     path
   }
@@ -358,43 +376,49 @@ object Steering {
     * built — dedicated tables so no other gate's profiled fixture can
     * leak a profile in; only the MCV list (built by the gate) can
     * diagnose the skew. Deterministically derived for the oracle. */
-  def ensureMcvSteerFixture(s: SparkSession, dir: String): String = {
-    val fix = s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/steer_mcv_fixture"
-    if (!IndexStore.artifactReady(s"$fix/mcv_fact.parquet") ||
-        !IndexStore.artifactReady(s"$fix/mcv_dim.parquet")) {
-      val ev = graft.Tables(s, dir, "events")
-      val fact = ev.select(
-        when(col("user_id") % 4 === 0, lit(-7L))
-          .otherwise(col("event_id")).as("k"),
-        col("event_id"), col("value"))
-      fact.write.mode("overwrite").parquet(s"$fix/mcv_fact.parquet")
-      fact.select(col("k")).distinct()
-        .withColumn("seg", pmod(col("k"), lit(9L)))
-        .write.mode("overwrite").parquet(s"$fix/mcv_dim.parquet")
+  def ensureMcvSteerFixture(s: SparkSession, dir: String): String =
+    fixture(dir, "steer_mcv_fixture", "mcv_fact.parquet", "mcv_dim.parquet") { v =>
+      val fact = hotFact(s, dir, 4L, -7L)
+      fact.write.parquet(s"$v/mcv_fact.parquet")
+      segDim(fact, 9L).write.parquet(s"$v/mcv_dim.parquet")
     }
-    fix
-  }
 
   /** The q92 COMPOSITE-KEY FIXTURE: a fact keyed by TWO columns
     * (g1 = event_id mod 500, g2 = user_id mod 7) and the distinct
     * (g1, g2) dim with a derived segment — the generated-BI shape
     * the single-equality matcher used to pass over silently. Both
     * deterministically derived from events for the oracle replay. */
-  def ensureCompositeFixture(s: SparkSession, dir: String): String = {
-    val fix = ensureSkewFixture(s, dir)
-    if (!IndexStore.artifactReady(s"$fix/comp_fact.parquet") ||
-        !IndexStore.artifactReady(s"$fix/comp_dim.parquet")) {
-      val ev = graft.Tables(s, dir, "events")
-      val fact = ev.select(
+  def ensureCompositeFixture(s: SparkSession, dir: String): String =
+    fixture(dir, "steer_comp_fixture", "comp_fact.parquet", "comp_dim.parquet") { v =>
+      val fact = graft.Tables(s, dir, "events").select(
         pmod(col("event_id"), lit(500L)).as("g1"),
         pmod(col("user_id"), lit(7L)).as("g2"),
         col("value"))
-      fact.write.mode("overwrite").parquet(s"$fix/comp_fact.parquet")
+      fact.write.parquet(s"$v/comp_fact.parquet")
       fact.select(col("g1"), col("g2")).distinct()
         .withColumn("seg", pmod(col("g1") + col("g2"), lit(5L)))
-        .write.mode("overwrite").parquet(s"$fix/comp_dim.parquet")
+        .write.parquet(s"$v/comp_dim.parquet")
     }
-    fix
+
+  /** A maintained fixture: its dim is the committed part
+    * `<dimTable>.parquet`, and its fact `table` is a LIVE table in the
+    * same version directory — `build` writes a base, builds the
+    * maintained artifacts, then appends a slice and maintains them
+    * at O(batch). Served while the dim part is intact and `current`
+    * holds over the version directory; otherwise rebuilt as a fresh
+    * commit, the replaced version's maintained artifacts dropped. */
+  private def maintainedFixture(dir: String, name: String, table: String,
+      dimTable: String)(current: String => Boolean)(
+      build: String => Unit): String = {
+    val path = fixturePath(dir, name)
+    def served = EnsureWatermark.intact(path, Seq(s"$dimTable.parquet"))
+      .map(_.dir(path))
+    served.filter(current).getOrElse {
+      served.foreach(fix =>
+        IndexStore.removeArtifact(StatsMaintain.maintPath(fix, table)))
+      EnsureWatermark.commit(path, dir, "events", 0L)(build)
+      served.getOrElse(sys.error(s"$path: no intact commit after its build"))
+    }
   }
 
   /** The q84 MAINTAINED-ADVICE FIXTURE: the skew fixture's fact
@@ -413,33 +437,21 @@ object Steering {
     * skips all mutation. */
   def ensureMaintainedSkewFixture(s: SparkSession, dir: String,
       hotFreq: Long = 200L): String = {
-    val fix = s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/steer_maint_fixture"
     val T = "fact_m"
-    if (StatsMaintain.statsIfCurrent(s, fix, T).isEmpty ||
-        StatsMaintain.keyProfileIfCurrent(s, fix, T, "k").isEmpty ||
-        !IndexStore.artifactReady(s"$fix/dim_m.parquet")) {
-      val (tfs, tp) = IndexStore.fsOf(s"$fix/$T.parquet")
-      tfs.delete(tp, true)
-      val (afs, ap) = IndexStore.fsOf(StatsMaintain.maintPath(fix, T))
-      afs.delete(ap, true)
-      val ev = graft.Tables(s, dir, "events")
-      val fact = ev.select(
-        when(col("user_id") % 3 === 0, lit(-1L))
-          .otherwise(col("event_id")).as("k"),
-        col("event_id"), col("value"))
+    maintainedFixture(dir, "steer_maint_fixture", T, "dim_m")(fix =>
+      StatsMaintain.statsIfCurrent(s, fix, T).isDefined &&
+        StatsMaintain.keyProfileIfCurrent(s, fix, T, "k").isDefined) { fix =>
+      val fact = hotFact(s, dir, 3L, -1L)
       val isSlice = pmod(col("event_id"), lit(5L)) === 2L
-      fact.where(!isSlice).write.mode("overwrite").parquet(s"$fix/$T.parquet")
+      fact.where(!isSlice).write.parquet(s"$fix/$T.parquet")
       StatsMaintain.ensure(s, fix, T)
       StatsMaintain.ensureKeyProfileMaint(s, fix, T, "k", hotFreq = hotFreq)
       fact.where(isSlice).write.mode("append").parquet(s"$fix/$T.parquet")
       StatsMaintain.appendMaintain(s, fix, T, fact.where(isSlice))
       StatsMaintain.appendMaintainKeyProfile(s, fix, T, "k",
         fact.where(isSlice))
-      fact.select(col("k")).distinct()
-        .withColumn("seg", pmod(col("k"), lit(7L)))
-        .write.mode("overwrite").parquet(s"$fix/dim_m.parquet")
+      segDim(fact, 7L).write.parquet(s"$fix/dim_m.parquet")
     }
-    fix
   }
 
   /** The q98 MAINTAINED-MCV FIXTURE (D105): the q94 derivation
@@ -453,31 +465,19 @@ object Steering {
     * DuckDB oracle replays the q94 derivation from raw events.
     * Idempotent per events fingerprint. */
   def ensureMaintainedMcvFixture(s: SparkSession, dir: String): String = {
-    val fix = s"${IndexStore.root}/${IndexStore.fingerprint(dir, "events")}/steer_mcv_maint_fixture"
     val T = "mcvm_fact"
-    if (StatsMaintain.statsIfCurrent(s, fix, T).isEmpty ||
-        StatsMaintain.mcvMaintIfCurrent(s, fix, T, "k").isEmpty ||
-        !IndexStore.artifactReady(s"$fix/mcvm_dim.parquet")) {
-      val (tfs, tp) = IndexStore.fsOf(s"$fix/$T.parquet")
-      tfs.delete(tp, true)
-      val (afs, ap) = IndexStore.fsOf(StatsMaintain.maintPath(fix, T))
-      afs.delete(ap, true)
-      val ev = graft.Tables(s, dir, "events")
-      val fact = ev.select(
-        when(col("user_id") % 4 === 0, lit(-7L))
-          .otherwise(col("event_id")).as("k"),
-        col("event_id"), col("value"))
+    maintainedFixture(dir, "steer_mcv_maint_fixture", T, "mcvm_dim")(fix =>
+      StatsMaintain.statsIfCurrent(s, fix, T).isDefined &&
+        StatsMaintain.mcvMaintIfCurrent(s, fix, T, "k").isDefined) { fix =>
+      val fact = hotFact(s, dir, 4L, -7L)
       val isSlice = pmod(col("user_id"), lit(5L)) === 2L
-      fact.where(!isSlice).write.mode("overwrite").parquet(s"$fix/$T.parquet")
+      fact.where(!isSlice).write.parquet(s"$fix/$T.parquet")
       StatsMaintain.ensure(s, fix, T)
       StatsMaintain.ensureMcvMaint(s, fix, T, "k")
       fact.where(isSlice).write.mode("append").parquet(s"$fix/$T.parquet")
       StatsMaintain.appendMaintain(s, fix, T, fact.where(isSlice))
       StatsMaintain.appendMaintainMcv(s, fix, T, "k", fact.where(isSlice))
-      fact.select(col("k")).distinct()
-        .withColumn("seg", pmod(col("k"), lit(11L)))
-        .write.mode("overwrite").parquet(s"$fix/mcvm_dim.parquet")
+      segDim(fact, 11L).write.parquet(s"$fix/mcvm_dim.parquet")
     }
-    fix
   }
 }

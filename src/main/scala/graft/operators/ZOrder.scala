@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-ORDER (Morton-curve) data layout — the lakehouse `OPTIMIZE
@@ -43,14 +43,4 @@ object ZOrder {
     expr(interleaveSql(
       quantizeSql(x, mnx.toString, mxx.toString, "div"),
       quantizeSql(y, mny.toString, mxy.toString, "div")))
-
-  /** Rewrite a frame in Z-order: range-partition by z, sort within
-    * partitions, drop the helper column (projection preserves the
-    * established row order). Each output file then covers one narrow
-    * z range = one small (x, y) box. */
-  def layoutBy(df: DataFrame, z: Column, files: Int): DataFrame =
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
 }

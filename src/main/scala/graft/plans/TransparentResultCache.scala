@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.operators.{IndexStore, ResultCache}
+import graft.operators.ResultCache
 
 /** TRANSPARENT RESULT-CACHE SERVING as a Catalyst optimizer rule —
   * the last of the engine's serving tiers to go transparent (the r13
@@ -19,9 +19,10 @@ import graft.operators.{IndexStore, ResultCache}
   * query's OPTIMIZED canonicalized plan ‖ source stamp (the form this
   * rule sees — `through`'s analyzed-plan keyspace is disjoint and
   * untouched). On every optimization, the rule keys the plan it was
-  * handed; a READY entry whose schema matches substitutes the whole
-  * plan with a scan of the entry, aliased back to the ORIGINAL output
-  * exprIds so the query's schema is oblivious to the substitution.
+  * handed; a COMMITTED entry (an intact stamp covering the key) whose
+  * schema matches substitutes the whole plan with a scan of the
+  * entry, aliased back to the ORIGINAL output exprIds so the query's
+  * schema is oblivious to the substitution.
   *
   * Exactness is the cache's own contract: the canonicalized key makes
   * any semantic difference a different entry, the source stamp makes
@@ -45,9 +46,10 @@ import graft.operators.{IndexStore, ResultCache}
   *     types, arity) vetoes the substitution; the entry's schema is
   *     the one its writer recorded in its part file's footer, and an
   *     entry without one vetoes too;
-  *   - keying costs one canonicalization, one FS listing and one
-  *     footer read per optimization — the EnsureWatermark class of
-  *     plan-time cost — and NO jobs: the entry is read with the
+  *   - keying costs one canonicalization, the stamp probe's FS
+  *     listings and one footer read per optimization — the
+  *     EnsureWatermark class of plan-time cost — and NO jobs: the
+  *     entry is read with the
   *     plan's own schema, so nothing infers one, and rows load when
   *     the query executes.
   *
@@ -62,10 +64,9 @@ class TransparentResultCacheRule(spark: SparkSession)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (ResultCache.readsCache(plan)) return plan
-    ResultCache.keyOf(plan) match {
-      case Some(key) if IndexStore.artifactReady(ResultCache.cachePath(key)) =>
-        val path = ResultCache.cachePath(key)
-        val compatible = ResultCache.entrySchema(path).exists { entry =>
+    ResultCache.keyOf(plan).flatMap(ResultCache.entry) match {
+      case Some(part) =>
+        val compatible = ResultCache.entrySchema(part).exists { entry =>
           entry.size == plan.output.size &&
             entry.zip(plan.output).forall { case (c, o) =>
               c.name == o.name && c.dataType == o.dataType
@@ -73,7 +74,7 @@ class TransparentResultCacheRule(spark: SparkSession)
         }
         if (!compatible) plan
         else {
-          val rel = spark.read.schema(plan.schema).parquet(path)
+          val rel = spark.read.schema(plan.schema).parquet(part)
             .queryExecution.analyzed
           Project(rel.output.zip(plan.output).map { case (c, o) =>
             Alias(c, o.name)(exprId = o.exprId)

@@ -855,11 +855,8 @@ object DedupQueries {
     * id spawning a NEW doc above the id range, every 11th doc
     * tombstoned at version 3, every 22nd reinserted at version 4 above
     * its own tombstone. Returns (base, delta); delta carries the `op`
-    * column [[graft.operators.SnapshotMerge.applyCdc]] resolves.
-    * `private[graft]` so `tools.IvmBench` can measure the amortized
-    * maintain-only path against the full recompute on the same
-    * scenario. */
-  private[graft] def cdcScenario(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    * column [[graft.operators.SnapshotMerge.applyCdc]] resolves. */
+  private def cdcScenario(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
       .select($"doc_id", $"text", $"lang", $"source")

@@ -88,16 +88,6 @@ object StreamingDedup {
     in.join(best, Seq("doc_id"), "left_anti")
       .select(col("doc_id").as("corpus_id"), col("bucket"), col("toks"))
 
-  /** One micro-batch: returns (decisions, novelIndexEntries).
-    * Decision rows: (doc_id, dup_of nullable, jaccard nullable).
-    * Pure composition for tests — the streaming path goes through
-    * processBatch, which persists the shared sub-plans. */
-  def dedupBatch(batch: DataFrame, index: DataFrame): (DataFrame, DataFrame) = {
-    val in = indexed(batch, "doc_id")
-    val best = bestMatch(in, index)
-    (decisionsOf(in, best), novelOf(in, best))
-  }
-
   /** Wire a streaming (doc_id, text) source through per-batch dedup:
     * decisions append to `outDir`, novel docs' entries to `indexDir`. */
   def run(docs: DataFrame, indexDir: String, outDir: String,

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom streaming state (SURVEY.md §2.7 T5 extension): per-taxi
   * running session stats maintained with `flatMapGroupsWithState` —
@@ -55,47 +54,5 @@ object TaxiSessionTracker {
     import cleaned.sparkSession.implicits._
     sessionState(cleaned
       .select("taxi_id", "trip_total", "trip_seconds").as[TripEvent])
-  }
-
-  /** The same per-taxi accumulator on Spark 4's `transformWithState`
-    * (the arbitrary-state API that supersedes flatMapGroupsWithState):
-    * typed `ValueState` obtained from the processor handle, optional
-    * TTL instead of manual timeout bookkeeping, and composable
-    * ListState/MapState/timers for richer state. Requires the RocksDB
-    * state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` →
-    * `...state.RocksDBStateStoreProvider`) — which is also the right
-    * provider at 100 TB: state lives off-heap/on-disk with changelog
-    * checkpointing instead of filling executor heaps. */
-  class SessionProcessor
-      extends StatefulProcessor[String, TripEvent, TaxiSession] {
-    @transient private var session: ValueState[TaxiSession] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      session = getHandle.getValueState[TaxiSession](
-        "session", Encoders.product[TaxiSession], TTLConfig.NONE)
-
-    override def handleInputRows(taxiId: String, events: Iterator[TripEvent],
-        timerValues: TimerValues): Iterator[TaxiSession] = {
-      var s =
-        if (session.exists()) session.get()
-        else TaxiSession(taxiId, 0L, 0.0, 0L)
-      events.foreach { e =>
-        s = s.copy(
-          trips = s.trips + 1,
-          revenue = s.revenue + e.trip_total.getOrElse(0.0),
-          seconds = s.seconds + e.trip_seconds.getOrElse(0).toLong)
-      }
-      session.update(s)
-      Iterator.single(s)
-    }
-  }
-
-  def sessionStateTws(trips: Dataset[TripEvent]): Dataset[TaxiSession] = {
-    import trips.sparkSession.implicits._
-    trips
-      .groupByKey(_.taxi_id)
-      .transformWithState(new SessionProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 }

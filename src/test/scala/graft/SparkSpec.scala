@@ -10,6 +10,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * under the settings the bench measures. */
 object TestSession {
   lazy val spark: SparkSession = GraftSession(4)
+
+  /** Every directory [[SparkSpec.tmpDir]] made; deleted, with its
+    * contents, when the test JVM exits. */
+  private val made = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  private lazy val cleanup = Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    made.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))))
+
+  def tmpDir(prefix: String): String = {
+    cleanup
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    made.add(d)
+    d.toString
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -49,8 +62,9 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory under the temp root, deleted when the test JVM
+    * exits. */
+  def tmpDir(prefix: String): String = TestSession.tmpDir(prefix)
 
   /** Run `body` against a fresh, isolated artifact root (the
     * graft.index.dir system property every IndexStore-derived layout

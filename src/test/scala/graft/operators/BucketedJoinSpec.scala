@@ -44,47 +44,6 @@ class BucketedJoinSpec extends SparkSpec {
     assert(joined.exceptAll(plain).isEmpty && plain.exceptAll(joined).isEmpty)
   }
 
-  test("appended batches keep the join exchange-free (bucket metadata survives)") {
-    val dir = tmpDir("bucketsapp")
-    val liBase = graft.Tables(spark, sf, "lineitem")
-      .select($"l_orderkey", $"l_quantity")
-    Bucketing.writeBucketed(liBase, "l_orderkey", 8,
-      "spec_li_appended", s"$dir/lineitem")
-    // day 2: a second batch lands in the same bucketed table
-    val li = Bucketing.appendBucketed(liBase.withColumn(
-      "l_quantity", $"l_quantity" + 100), "l_orderkey", 8, "spec_li_appended")
-    val ord = Bucketing.writeBucketed(
-      graft.Tables(spark, sf, "orders")
-        .select($"o_orderkey", $"o_orderpriority"),
-      "o_orderkey", 8, "spec_ord_appended", s"$dir/orders")
-
-    val joined = li.hint("merge").join(ord, $"l_orderkey" === $"o_orderkey")
-    joined.collect()
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("SortMergeJoin"),
-      s"expected a sort-merge join over bucketed scans, got:\n$plan")
-    assert(!plan.contains("Exchange"),
-      s"append must not break the zero-exchange contract, got:\n$plan")
-    assert(plan.contains("SelectedBucketsCount"),
-      s"scans must stay bucket-aware after append, got:\n$plan")
-
-    // both batches are present and correct vs the plain doubled join
-    val plain = liBase.unionByName(
-      liBase.withColumn("l_quantity", $"l_quantity" + 100))
-      .join(graft.Tables(spark, sf, "orders")
-        .select($"o_orderkey", $"o_orderpriority"),
-        $"l_orderkey" === $"o_orderkey")
-    assert(joined.count() == plain.count())
-    assert(joined.exceptAll(plain).isEmpty && plain.exceptAll(joined).isEmpty)
-
-    // the degradation the scaladoc documents: one MORE file per bucket
-    // per append — the compaction trigger
-    val files = new java.io.File(s"$dir/lineitem").listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-    assert(files.length == 16,
-      s"expected 2 files per bucket after one append, got ${files.length}")
-  }
-
   test("one file per bucket, so sortBy metadata is trusted downstream") {
     val dir = tmpDir("buckets1f")
     Bucketing.writeBucketed(

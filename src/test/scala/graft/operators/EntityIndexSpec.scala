@@ -146,108 +146,6 @@ class EntityIndexSpec extends SparkSpec {
       EntityIndex.purgeUsers(spark, sf, Seq(14L), tag = "t2")
       assert(EntityIndex.servePurged(spark, sf, users)._1
         .select($"user_id").as[Long].collect().sorted === Array(1L, 7L))
-      // erasure outranks freshness: a purged user arriving in a
-      // stream batch still never surfaces on the governed face
-      val batch = Seq((3L, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"), 1.0))
-        .toDF("user_id", "ts", "value")
-      EntityIndex.processStreamBatch(spark, sf, batch, batchId = 9L)
-      assert(EntityIndex.servePurgedWithStream(spark, sf, users)
-        .select($"user_id").as[Long].collect().sorted === Array(1L, 7L))
-      // while the raw streaming face still reports the batch
-      assert(EntityIndex.serveWithStream(spark, sf, Seq(3L))
-        .select($"n").as[Long].head() > 0)
-    }
-  }
-
-  test("vacuum rewrites only the purged users' buckets, then clears tombstones") {
-    withIndexRoot("graft-ent-vacuum") {
-      EntityIndex.ensure(spark, sf)
-      val root = EntityIndex.indexPath(sf)
-      def filesOf(bucket: Long): Set[(String, Long)] = {
-        val data = EnsureWatermark.stampOf(root).get.part(root, "data")
-        val d = new java.io.File(s"$data/bucket=$bucket")
-        if (!d.isDirectory) Set.empty
-        else d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.length)).toSet
-      }
-      // purge user 3 (bucket 3); bucket 7's files must not move
-      val before7 = filesOf(7L)
-      val before3 = filesOf(3L)
-      assert(before7.nonEmpty && before3.nonEmpty)
-      EntityIndex.purgeUsers(spark, sf, Seq(3L), tag = "v1")
-      val want = EntityIndex.servePurged(spark, sf, users)._1
-        .collect().map(_.toString).sorted
-      EntityIndex.vacuumPurged(spark, sf)
-      assert(filesOf(7L) === before7, "untouched bucket must be byte-identical")
-      assert(filesOf(3L) !== before3, "the purged user's bucket must rewrite")
-      // tombstones cleared; the PLAIN face now reflects the erasure
-      assert(EntityIndex.purgedKeys(spark, sf).count() === 0L)
-      assert(EntityIndex.serve(spark, sf, users)._1
-        .select($"user_id").as[Long].collect().sorted === Array(1L, 7L, 11L, 14L))
-      // and servePurged is unchanged across the vacuum (no-op filter)
-      assert(EntityIndex.servePurged(spark, sf, users)._1
-        .collect().map(_.toString).sorted.sameElements(want))
-      // idempotent: vacuum with nothing recorded is a no-op
-      EntityIndex.vacuumPurged(spark, sf)
-      assert(EntityIndex.serve(spark, sf, users)._1
-        .select($"user_id").as[Long].collect().sorted === Array(1L, 7L, 11L, 14L))
-    }
-  }
-
-  test("windowed profiles: day-range serve equals the raw window on both paths") {
-    withIndexRoot("graft-ent-window") {
-      EntityIndex.ensure(spark, sf)
-      val (lo, hi) = ("2024-01-08 00:00:00", "2024-01-15 00:00:00")
-      val (idx, via) = EntityIndex.serveWindow(spark, sf, users, lo, hi)
-      assert(via)
-      val got = idx.collect().map(_.toString).sorted
-      val built = EnsureWatermark.stampOf(EntityIndex.indexPath(sf)).get
-      EnsureWatermark.veto(EntityIndex.indexPath(sf))
-      val (raw, via2) = EntityIndex.serveWindow(spark, sf, users, lo, hi)
-      assert(!via2, "broken watermark -> raw-scan fallback")
-      assert(raw.collect().map(_.toString).sorted.sameElements(got),
-        "windowed index serve must equal the raw windowed aggregate")
-      // the window genuinely restricts: fewer active days than lifetime
-      EnsureWatermark.rewriteStampForTest(EntityIndex.indexPath(sf))(_ => built)
-      val lifetime = EntityIndex.serve(spark, sf, Seq(3L))._1
-        .select($"days").as[Long].head()
-      val windowed = EntityIndex.serveWindow(spark, sf, Seq(3L), lo, hi)._1
-        .select($"days").as[Long].head()
-      assert(windowed < lifetime && windowed <= 7L)
-    }
-  }
-
-  test("vacuum purges committed STREAM partials too — no resurfacing after the tombstones clear") {
-    withIndexRoot("graft-ent-vacuum-stream") {
-      EntityIndex.ensure(spark, sf)
-      // user 3 arrives in a committed stream batch; user 7's batch
-      // holds no purged rows and must not be rewritten
-      val b1 = Seq((3L, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"), 1.0),
-        (1L, java.sql.Timestamp.valueOf("2024-02-01 01:00:00"), 1.0))
-        .toDF("user_id", "ts", "value")
-      val b2 = Seq((7L, java.sql.Timestamp.valueOf("2024-02-02 00:00:00"), 1.0))
-        .toDF("user_id", "ts", "value")
-      EntityIndex.processStreamBatch(spark, sf, b1, batchId = 1L)
-      EntityIndex.processStreamBatch(spark, sf, b2, batchId = 2L)
-      val d2 = new java.io.File(s"${EntityIndex.streamPath(sf)}/batch=b2")
-      val before2 = d2.listFiles().map(f => (f.getName, f.length)).toSet
-      EntityIndex.purgeUsers(spark, sf, Seq(3L), tag = "v1")
-      EntityIndex.vacuumPurged(spark, sf)
-      assert(EntityIndex.purgedKeys(spark, sf).count() === 0L)
-      // the RAW stream-folded face no longer knows user 3 — erasure
-      // is materialized in the batch files, not just filtered
-      val got = EntityIndex.serveWithStream(spark, sf, Seq(1L, 3L, 7L))
-        .select($"user_id").as[Long].collect().sorted
-      assert(!got.contains(3L),
-        s"a vacuumed user must not resurface from stream partials: ${got.mkString(",")}")
-      // user 1's streamed event survived the batch rewrite
-      val base1 = EntityIndex.serve(spark, sf, Seq(1L))._1
-        .select($"n").as[Long].head()
-      assert(EntityIndex.serveWithStream(spark, sf, Seq(1L))
-        .select($"n").as[Long].head() === base1 + 1)
-      // and the purge-free batch was not touched
-      assert(d2.listFiles().map(f => (f.getName, f.length)).toSet === before2,
-        "a batch holding no purged rows must be byte-identical")
     }
   }
 

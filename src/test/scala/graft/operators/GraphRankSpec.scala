@@ -114,7 +114,7 @@ class GraphRankSpec extends SparkSpec {
         // 1) cold: builds the artifact
         var built = 0
         val t1 = GraphRank.ensureBucketedEdges(spark, tbl, path, { built += 1; derive })
-        assert(built === 1 && IndexStore.artifactReady(path))
+        assert(built === 1 && EnsureWatermark.current(path).isDefined)
         val r1 = GraphRank.pagerankBucketed(t1, 2)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // 2) warm: catalog + files present — edge derivation NOT re-run

@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
   * fingerprint and a torn part both read as absent; (c) a retry after
   * "data committed, stamp not" merges the batch once; (d) an artifact
   * in the stamp-less older layout (`meta/`, `data/stamp/`) reads as
-  * absent and rebuilds in place. The fingerprint-keyed families, over
-  * one events table: (a) and (b), an out-of-band file in a committed
-  * version reads as absent, an artifact in the older ensure-manifest
-  * layout reads as absent and rebuilds in place, and an in-place
-  * mutator vetoes serving before it writes. And (e): two builders
-  * committing one fingerprint converge on one whole version while a
-  * reader only ever reads whole versions. */
+  * absent and rebuilds in place. The fingerprint- and plan-keyed
+  * families, over one events table: (a) and (b), an out-of-band file
+  * in a committed version reads as absent, an artifact in an older
+  * layout (the ensure manifest, or `_SUCCESS` data at the path and in
+  * each part's directory) reads as absent and rebuilds in place, and
+  * an in-place mutator vetoes serving before it writes. And (e): two
+  * builders committing one fingerprint, or one result-cache entry,
+  * converge on one whole version while a reader only ever reads whole
+  * versions. */
 class MaintainedProtocolSpec extends SparkSpec {
   import spark.implicits._
 
@@ -225,6 +227,64 @@ class MaintainedProtocolSpec extends SparkSpec {
     }
   }
 
+  test("two concurrent misses of one result-cache entry converge on one whole version while a reader reads") {
+    withIndexRoot("graft-protocol-race-rc") {
+      val key = "race_entry"
+      val path = ResultCache.cachePath(key)
+      def write(part: String): Unit =
+        rowsOf(1L, 3000L).coalesce(1).write.parquet(part)
+      import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+      val bWritten = new CountDownLatch(1)
+      val aCommitted = new CountDownLatch(1)
+      val problems = new ConcurrentLinkedQueue[String]()
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def thread(body: => Unit): Thread = {
+        val t = new Thread(() =>
+          try body catch { case e: Throwable => problems.add(e.toString); () })
+        t.start()
+        t
+      }
+      var served = false
+      val reader = thread {
+        while (!done.get()) ResultCache.entry(key) match {
+          case Some(part) =>
+            served = true
+            val n = spark.read.parquet(part).count()
+            if (n != 3000L) problems.add(s"a reader saw $n rows")
+          case None =>
+            if (served) problems.add("a served entry read as absent")
+        }
+      }
+      // both misses saw no entry; A's stamp lands while B's version is
+      // complete but not yet stamped
+      val won = new ConcurrentLinkedQueue[Boolean]()
+      val a = thread {
+        won.add(EnsureWatermark.commit(path, key) { part =>
+          write(part)
+          assert(bWritten.await(120, TimeUnit.SECONDS))
+        })
+        aCommitted.countDown()
+      }
+      val b = thread {
+        won.add(EnsureWatermark.commit(path, key) { part =>
+          write(part)
+          bWritten.countDown()
+          assert(aCommitted.await(120, TimeUnit.SECONDS))
+        })
+      }
+      a.join(); b.join()
+      done.set(true); reader.join()
+      assert(problems.isEmpty, problems.toArray.mkString("; "))
+      assert(won.toArray.count(_ == true) === 1, "exactly one miss commits")
+      val part = ResultCache.entry(key).getOrElse(fail("the converged entry must serve"))
+      assert(spark.read.parquet(part).count() === 3000L)
+      assert(versions(path).size === 1 && stamps(path) === Seq("_GRAFT_STAMP.1"),
+        "the losing version is deleted and the winner's stamp stands alone")
+      assert(!EnsureWatermark.commit(path, key)(write),
+        "a later miss finds the entry and writes nothing")
+    }
+  }
+
   /** A commit of `rows` rows at a fresh artifact path, on stamp `on`
     * (None: the latest); `after` runs once its part is written. */
   private def casCommit(path: String, dir: String, rows: Long,
@@ -280,14 +340,32 @@ class MaintainedProtocolSpec extends SparkSpec {
   // The fingerprint-keyed families
   // ------------------------------------------------------------------
 
-  /** One keyed family: its artifact path, build, serving probe, and —
-    * for the families maintained in place — its append mutator. A
-    * family keyed on a table other than events names it as `source`,
-    * copied from the sf0.001 fixture into the test's data dir. */
+  /** One keyed family: its artifact path, build, serving probe, the
+    * parts of its commit and — for the families maintained in place —
+    * its append mutator. The tables a family reads besides events are
+    * its `sources`, copied from the sf0.001 fixture into the test's
+    * data dir. */
   private case class Keyed(name: String, path: String => String,
       ensure: String => Unit, probe: String => Option[Any],
       mutate: Option[(String, DataFrame) => Unit] = None,
-      source: Option[String] = None)
+      sources: Seq[String] = Nil, parts: Seq[String] = EnsureWatermark.Data)
+
+  /** A cacheable plan over the test's events, and its plan key — the
+    * key the plan-keyed rows file under. */
+  private def perType(d: String): DataFrame =
+    graft.Tables(spark, d, Ev).groupBy($"event_type").agg(count(lit(1)).as("n"))
+  private def planKey(d: String): String =
+    ResultCache.keyOf(perType(d).queryExecution.analyzed).getOrElse(fail("uncacheable"))
+
+  /** A fixture committed as the `parts` of one version keyed on the
+    * events fingerprint. */
+  private def fixtureRow(name: String, path: String => String,
+      ensure: String => Unit, parts: String*): Keyed =
+    Keyed(name, path, ensure,
+      d => EnsureWatermark.current(path(d), parts, d, Ev), parts = parts)
+
+  private def edgesOf(d: String): (String, String) =
+    GraphRank.edgeArtifact(d, "region", "nation", "spec_edges")
 
   private val Ev = "events"
   private val Sf = "/root/testdata/sf0.001"
@@ -316,8 +394,7 @@ class MaintainedProtocolSpec extends SparkSpec {
       d => EnsureWatermark.current(DecayedFeatures.dailyPath(d)),
       Some(DecayedFeatures.appendBatch(spark, _, _))),
     Keyed("entity index", EntityIndex.indexPath, EntityIndex.ensure(spark, _),
-      d => Some(EntityIndex.serveWindow(spark, d, Seq(1L),
-        "2024-03-01 00:00:00", "2024-03-04 00:00:00")).filter(_._2),
+      d => EnsureWatermark.current(EntityIndex.indexPath(d)),
       Some(EntityIndex.appendBatch(spark, _, _))),
     Keyed("dictionary", Dictionary.dictPath(_, Ev, "event_type"),
       Dictionary.ensure(spark, _, Ev, "event_type"),
@@ -336,20 +413,58 @@ class MaintainedProtocolSpec extends SparkSpec {
       StatsCatalog.mcvIfReady(spark, _, Ev, "event_type")),
     Keyed("ivf pivots", IndexStore.ivfPivotPath, IndexStore.ivfPivots(spark, _, 2),
       d => EnsureWatermark.current(IndexStore.ivfPivotPath(d)),
-      source = Some("embeddings")),
+      sources = Seq("embeddings")),
     Keyed("ivf-flat index", IndexStore.ivfFlatPath(_, 2), IndexStore.ivfFlat(spark, _, 2),
       d => EnsureWatermark.current(IndexStore.ivfFlatPath(d, 2)),
-      source = Some("embeddings")),
+      sources = Seq("embeddings")),
     Keyed("minhash bands", IndexStore.minhashBandsPath(_, 13, 5),
       IndexStore.minhashBands(spark, _, 13, 5),
       d => EnsureWatermark.current(IndexStore.minhashBandsPath(d, 13, 5)),
-      source = Some("documents")),
+      sources = Seq("documents")),
     Keyed("bm25 postings", IndexStore.bm25PostingsPath, IndexStore.bm25Postings(spark, _),
       d => EnsureWatermark.current(IndexStore.bm25PostingsPath(d)),
-      source = Some("documents")),
+      sources = Seq("documents")),
     Keyed("min/max manifest", MinMaxManifest.manifestPath(_),
       MinMaxManifest.ensure(spark, _),
-      d => EnsureWatermark.current(MinMaxManifest.manifestPath(d))))
+      d => EnsureWatermark.current(MinMaxManifest.manifestPath(d))),
+    Keyed("result-cache entry", d => ResultCache.cachePath(planKey(d)),
+      d => ResultCache.through(spark, perType(d)),
+      d => ResultCache.entry(planKey(d))),
+    Keyed("feedback observation", d => CardFeedback.feedbackPath(planKey(d)),
+      d => CardFeedback.record(spark, perType(d)),
+      d => ResultCache.committed(CardFeedback.feedbackPath(planKey(d)), planKey(d))),
+    fixtureRow("skew fixture", Steering.fixturePath(_, "steer_fixture"),
+      Steering.ensureSkewFixture(spark, _), "skew_fact.parquet", "skew_dim.parquet"),
+    fixtureRow("order-tier fixture", Steering.fixturePath(_, "steer_ord_fixture"),
+      Steering.ensureOrderTierFixture(spark, _), "skew_fact.parquet",
+      "ord_b.parquet", "ord_c.parquet").copy(sources = Seq("orders")),
+    fixtureRow("catalog fixture", Steering.fixturePath(_, "steer_cat_fixture"),
+      Steering.ensureCatalogFixture(spark, _), "fact_cat"),
+    fixtureRow("mcv-steering fixture", Steering.fixturePath(_, "steer_mcv_fixture"),
+      Steering.ensureMcvSteerFixture(spark, _), "mcv_fact.parquet", "mcv_dim.parquet"),
+    fixtureRow("composite fixture", Steering.fixturePath(_, "steer_comp_fixture"),
+      Steering.ensureCompositeFixture(spark, _), "comp_fact.parquet", "comp_dim.parquet"),
+    fixtureRow("maintained-skew fixture", Steering.fixturePath(_, "steer_maint_fixture"),
+      Steering.ensureMaintainedSkewFixture(spark, _), "dim_m.parquet"),
+    fixtureRow("maintained-mcv fixture", Steering.fixturePath(_, "steer_mcv_maint_fixture"),
+      Steering.ensureMaintainedMcvFixture(spark, _), "mcvm_dim.parquet"),
+    fixtureRow("tolerance fixture", SampledAgg.tolerancePath(_, "tol_t"),
+      SampledAgg.ensureToleranceFixture(spark, _), "tol_t.parquet"),
+    fixtureRow("tolerance avg fixture", SampledAgg.tolerancePath(_, "tol_a"),
+      SampledAgg.ensureToleranceAvgFixture(spark, _), "tol_a.parquet"),
+    fixtureRow("partition evolution", PartitionEvolution.rootPath,
+      PartitionEvolution.ensure(spark, _), "spec0", "spec1"),
+    fixtureRow("schema evolution", SchemaEvolution.layoutPath,
+      SchemaEvolution.ensure(spark, _), "gen=0", "gen=1", "gen=2"),
+    Keyed("shard export", ShardExport.path, ShardExport.ensure(spark, _),
+      d => EnsureWatermark.current(ShardExport.path(d)),
+      sources = Seq("documents")),
+    Keyed("bucketed edges", edgesOf(_)._1,
+      d => GraphRank.ensureBucketedEdges(spark, edgesOf(d)._2, edgesOf(d)._1,
+        graft.Tables(spark, d, "nation")
+          .select($"n_nationkey".as("src"), $"n_regionkey".as("dst"))),
+      d => EnsureWatermark.current(edgesOf(d)._1),
+      sources = Seq("region", "nation")))
 
   private def events: DataFrame =
     (0L until 600L).map { i =>
@@ -368,7 +483,7 @@ class MaintainedProtocolSpec extends SparkSpec {
       withIndexRoot("graft-protocol-keyed") {
         val dir = tmpDir("graft-protocol-keyed-data")
         events.write.mode("overwrite").parquet(s"$dir/$Ev.parquet")
-        f.source.foreach(t => copyTree(java.nio.file.Paths.get(s"$Sf/$t.parquet"),
+        f.sources.foreach(t => copyTree(java.nio.file.Paths.get(s"$Sf/$t.parquet"),
           java.nio.file.Paths.get(s"$dir/$t.parquet")))
         f.ensure(dir)
         val path = f.path(dir)
@@ -384,7 +499,7 @@ class MaintainedProtocolSpec extends SparkSpec {
         assert(f.probe(dir).isEmpty, "a stale stamp must not serve")
         EnsureWatermark.rewriteStampForTest(path)(_ => built)
         assert(f.probe(dir).isDefined)
-        val data = new java.io.File(built.part(path, "data"))
+        val data = new java.io.File(built.part(path, f.parts.head))
         assert(new java.io.File(data, "_SUCCESS").delete())
         assert(f.probe(dir).isEmpty, "a torn part must not serve")
         f.ensure(dir)
@@ -392,22 +507,25 @@ class MaintainedProtocolSpec extends SparkSpec {
 
         // an out-of-band file dropped into the committed version
         val committed = EnsureWatermark.stampOf(path).get
-        val victim = parquetFiles(new java.io.File(committed.part(path, "data"))).head
+        val victim = f.parts
+          .flatMap(p => parquetFiles(new java.io.File(committed.part(path, p)))).head
         java.nio.file.Files.copy(victim.toPath,
           victim.toPath.resolveSibling(s"oob-${victim.getName}"))
         assert(f.probe(dir).isEmpty, "an out-of-band file must veto serving")
         f.ensure(dir)
         assert(f.probe(dir).isDefined, "ensure must rebuild it")
 
-        // the older ensure-manifest layout: data files, _SUCCESS and a
-        // manifest directly under the artifact path
+        // the older layouts: data files, _SUCCESS and a manifest
+        // directly under the artifact path, and a `_SUCCESS`-marked
+        // directory per part
         IndexStore.removeArtifact(path)
         events.coalesce(1).write.parquet(path)
+        f.parts.foreach(p => events.coalesce(1).write.parquet(s"$path/$p"))
         val listing = parquetFiles(new java.io.File(path))
           .map(p => s"${p.getName}:${p.length}").mkString("\n")
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(path, "_GRAFT_ENSURE_MANIFEST"), listing)
-        assert(f.probe(dir).isEmpty, "a manifest-layout artifact reads as absent")
+        assert(f.probe(dir).isEmpty, "an older-layout artifact reads as absent")
         f.ensure(dir)
         assert(f.probe(dir).isDefined, "ensure rebuilds it in place")
         val left = new java.io.File(path).list().toSeq
@@ -430,9 +548,10 @@ class MaintainedProtocolSpec extends SparkSpec {
             assert(f.probe(dir).isEmpty, "an appended artifact must not serve")
             assert(EnsureWatermark.intact(path, EnsureWatermark.Data).isDefined,
               "an appended artifact stays intact for its maintained readers")
-          case None =>
+          case None if f.parts == EnsureWatermark.Data =>
             EnsureWatermark.veto(path)
             assert(f.probe(dir).isEmpty, "a vetoed artifact must not serve")
+          case None => ()
         }
       }
     }

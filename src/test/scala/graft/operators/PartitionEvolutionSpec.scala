@@ -54,8 +54,7 @@ class PartitionEvolutionSpec extends SparkSpec {
       // directory-level skip is real: the 2-day window reads only
       // its days' files out of ~16 day partitions
       val touched = leg1.select(input_file_name()).distinct().count()
-      val total = spark.read.parquet(
-          s"${PE.rootPath(sf)}/spec1")
+      val total = spark.read.parquet(s"${PE.ensure(spark, sf)}/spec1")
         .select(input_file_name()).distinct().count()
       assert(touched < total / 3,
         s"2 of ~16 day partitions should read far fewer files ($touched/$total)")

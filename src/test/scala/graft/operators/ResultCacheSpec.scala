@@ -111,30 +111,49 @@ class ResultCacheSpec extends SparkSpec {
       writeTable(dir)
       val shape = graft.Tables(spark, dir, "t")
         .groupBy($"k").agg(count(lit(1)).as("n")).orderBy($"k")
-      val path = s"${IndexStore.root}/result_cache/race_entry"
-      // deterministic loser leg: the first commit wins, the second
-      // (same key, simulating the concurrent miss that lost) must
-      // find the path taken, delete its stage, and report false
-      assert(ResultCache.writeEntry(shape, path), "first writer commits")
-      assert(!ResultCache.writeEntry(shape, path), "second writer loses, never overwrites")
-      assert(IndexStore.artifactReady(path))
-      val (fs, root) = IndexStore.fsOf(s"${IndexStore.root}/result_cache")
-      assert(!fs.listStatus(root).exists(_.getPath.getName.contains(".staged-")),
-        "loser stages are deleted, not leaked")
-      // torn-leftover recovery: a directory WITHOUT its _SUCCESS (a
-      // crashed pre-fix overwrite) must not wedge the commit
-      val torn = s"${IndexStore.root}/result_cache/torn_entry"
-      fs.mkdirs(new org.apache.hadoop.fs.Path(torn, "junk"))
-      assert(ResultCache.writeEntry(shape, torn), "torn junk is cleared and the commit lands")
-      assert(IndexStore.artifactReady(torn))
-      // the junk is moved ASIDE atomically (r16 advice), never deleted
-      // in place: a competitor's complete entry racing the repair
-      // stays intact on disk, retired later by the age-based sweep
-      val aside = fs.listStatus(root)
-        .filter(_.getPath.getName.startsWith("torn_entry.torn-"))
-      assert(aside.length === 1, "exactly one junk-aside path")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(aside.head.getPath, "junk")),
-        "the moved-aside junk keeps its contents")
+      val expected = shape.collect().map(_.toString).toSeq
+      def commit(key: String): Boolean =
+        EnsureWatermark.commit(ResultCache.cachePath(key), key)(
+          shape.coalesce(1).write.parquet(_))
+      def children(key: String): Seq[String] =
+        new java.io.File(ResultCache.cachePath(key)).list().toSeq
+          .filterNot(_.startsWith(".")).sorted
+      def served(key: String): Seq[String] =
+        spark.read.parquet(ResultCache.entry(key).getOrElse(fail(s"no $key entry")))
+          .collect().map(_.toString).toSeq
+      // deterministic loser leg: the concurrent miss's stamp lands
+      // while this writer's version (its stage) is complete but not
+      // yet stamped — its stamp name is then taken, so it must delete
+      // its version and report false, never overwrite the winner
+      val lost = !EnsureWatermark.commit(ResultCache.cachePath("race_entry"),
+          "race_entry") { part =>
+        shape.coalesce(1).write.parquet(part)
+        assert(commit("race_entry"), "the concurrent writer commits")
+      }
+      assert(lost, "the writer whose stamp name was taken loses")
+      assert(!commit("race_entry"), "a later writer finds the entry and never overwrites")
+      assert(children("race_entry").size === 2 &&
+        children("race_entry").contains("_GRAFT_STAMP.1"),
+        s"one stamp and one version; the loser's stage is deleted: ${children("race_entry")}")
+      assert(served("race_entry") === expected)
+      // torn leftovers never wedge the commit: a directory with no
+      // stamp (an older layout's junk) reads as a miss, and the commit
+      // lands and retires it
+      val torn = ResultCache.cachePath("torn_entry")
+      new java.io.File(torn, "junk").mkdirs()
+      assert(ResultCache.entry("torn_entry").isEmpty)
+      assert(commit("torn_entry"), "torn junk is retired and the commit lands")
+      assert(!children("torn_entry").contains("junk"))
+      assert(served("torn_entry") === expected)
+      // ...and a committed entry whose part lost its _SUCCESS reads as
+      // a miss and re-commits in place, retiring the torn version
+      val part = ResultCache.entry("torn_entry").get
+      assert(new java.io.File(part, "_SUCCESS").delete())
+      assert(ResultCache.entry("torn_entry").isEmpty, "a torn entry must not serve")
+      assert(commit("torn_entry"))
+      assert(children("torn_entry").size === 2 &&
+        children("torn_entry").contains("_GRAFT_STAMP.2"))
+      assert(served("torn_entry") === expected)
     }
   }
 
@@ -162,8 +181,10 @@ class ResultCacheSpec extends SparkSpec {
       } finally pool.shutdown()
       val (fs, root) = IndexStore.fsOf(s"${IndexStore.root}/result_cache")
       val entries = fs.listStatus(root).map(_.getPath.getName)
-      assert(!entries.exists(_.contains(".staged-")), "no stage directories leak")
       assert(entries.length === 1, s"exactly one committed entry, got ${entries.toSeq}")
+      val entry = fs.listStatus(root).head.getPath
+      assert(fs.listStatus(entry).count(_.getPath.getName.startsWith("v_")) === 1,
+        "the losing miss's version is deleted, not leaked")
       assert(ResultCache.through(spark, shape)._2, "the committed entry serves the next identical plan")
     }
   }

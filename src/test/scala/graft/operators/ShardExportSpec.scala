@@ -17,10 +17,17 @@ class ShardExportSpec extends SparkSpec {
     finally sys.props.remove("graft.index.dir")
   }
 
+  /** The committed shard layout part. */
+  private def committed: String = {
+    val p = ShardExport.path(sf)
+    EnsureWatermark.current(p).getOrElse(fail("no committed shard layout"))
+      .part(p, "data")
+  }
+
   test("layout: one directory per shard; union is exactly the corpus") {
     withRoot {
       val shards = ShardExport.ensure(spark, sf)
-      val dirs = new java.io.File(ShardExport.path(sf)).listFiles()
+      val dirs = new java.io.File(committed).listFiles()
         .filter(_.getName.startsWith("shard=")).map(_.getName).sorted
       assert(dirs.length === ShardExport.NumShards,
         s"expected ${ShardExport.NumShards} shard dirs, got ${dirs.toSeq}")
@@ -37,7 +44,7 @@ class ShardExportSpec extends SparkSpec {
       // monotonically_increasing_id is ordered within a partition and
       // each parquet file reads as its own partition(s) here, so a
       // per-file (id order vs h order) comparison proves on-disk order
-      val rows = spark.read.parquet(ShardExport.path(sf))
+      val rows = spark.read.parquet(committed)
         .select(input_file_name().as("f"), col("h"),
           monotonically_increasing_id().as("rid"))
         .collect()

@@ -101,41 +101,6 @@ class SkewAndStateSpec extends SparkSpec {
       === viaWindow.map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))))
   }
 
-  test("transformWithState (RocksDB provider) matches flatMapGroupsWithState semantics") {
-    implicit val sql = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[TripEvent]
-      val sessions = TaxiSessionTracker.sessionStateTws(mem.toDS())
-      val q = sessions.writeStream.format("memory").queryName("sessions_tws")
-        .outputMode("update").start()
-      try {
-        mem.addData(TripEvent("taxiA", Some(10.0), Some(600)),
-          TripEvent("taxiA", Some(5.5), Some(300)),
-          TripEvent("taxiB", Some(20.0), None))
-        q.processAllAvailable()
-        val s1 = spark.table("sessions_tws").as[TaxiSession].collect()
-          .groupBy(_.taxi_id).view.mapValues(_.last).toMap
-        assert(s1("taxiA") === TaxiSession("taxiA", 2, 15.5, 900))
-        assert(s1("taxiB") === TaxiSession("taxiB", 1, 20.0, 0))
-        // state survives into the next micro-batch
-        mem.addData(TripEvent("taxiA", Some(4.5), Some(100)))
-        q.processAllAvailable()
-        val s2 = spark.table("sessions_tws").as[TaxiSession].collect()
-          .filter(_.taxi_id == "taxiA").last
-        assert(s2 === TaxiSession("taxiA", 3, 20.0, 1000))
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("VectorAgg.vectorMean equals the posexplode centroid formulation at round-8") {
     val e = Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .select($"label", $"embedding".cast("array<double>").as("v"))

@@ -108,8 +108,7 @@ class SnapshotMergeSpec extends SparkSpec {
   }
 
   test("pruneToTouchedPartitions: reader-level pruning, maintenance-equal result") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("prune-base").resolve("t").toString
+    val dir = tmpDir("prune-base") + "/t"
     Seq((1L, "a", 10, 1, "2024-01"), (2L, "a", 20, 1, "2024-01"),
       (3L, "b", 30, 1, "2024-02"), (4L, "b", 40, 1, "2024-03"))
       .toDF("k", "g", "x", "version", "month")

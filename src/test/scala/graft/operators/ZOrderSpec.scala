@@ -39,8 +39,10 @@ class ZOrderSpec extends SparkSpec {
       min($"l_suppkey"), max($"l_suppkey")).head()
     val (mnx, mxx, mny, mxy) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     val dir = tmpDir("zorder")
-    ZOrder.layoutBy(li,
-      ZOrder.zValue("l_partkey", mnx, mxx, "l_suppkey", mny, mxy), files = 16)
+    // the z layout: range-partition by z, sort within partitions, so
+    // each file covers one narrow z range = one small (x, y) box
+    li.withColumn("__z", ZOrder.zValue("l_partkey", mnx, mxx, "l_suppkey", mny, mxy))
+      .repartitionByRange(16, $"__z").sortWithinPartitions($"__z").drop("__z")
       .write.parquet(s"$dir/zordered")
     // natural layout: same 16 files, arrival order (keys spread evenly
     // through every file, so every file intersects any box)

@@ -123,18 +123,15 @@ class TransparentResultCacheSpec extends SparkSpec {
         assert(jobsDuring { hit.queryExecution.optimizedPlan; () } === 0,
           "serving an entry must not infer its schema with a job")
         assert(hit.inputFiles.forall(_.contains("result_cache")))
-        // the same entry rewritten with `s` as a string: names and
+        // the same entry re-committed with `s` as a string: names and
         // arity still match, the type does not
         val entry = new java.io.File(s"${graft.operators.IndexStore.root}/result_cache")
           .listFiles().filter(_.isDirectory).toSeq
         assert(entry.size === 1)
-        val forged = tmpDir("graft-trc-schema-forged")
-        shape.select($"k", $"s".cast("string").as("s")).coalesce(1)
-          .write.mode("overwrite").parquet(forged)
-        entry.head.listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
-        new java.io.File(forged).listFiles().filter(_.getName.endsWith(".parquet"))
-          .foreach(f => java.nio.file.Files.copy(f.toPath,
-            new java.io.File(entry.head, f.getName).toPath))
+        val key = entry.head.getName
+        org.apache.commons.io.FileUtils.deleteDirectory(entry.head)
+        assert(graft.operators.EnsureWatermark.commit(ResultCache.cachePath(key), key)(
+          shape.select($"k", $"s".cast("string").as("s")).coalesce(1).write.parquet(_)))
         assert(shape.inputFiles.exists(_.contains("t.parquet")),
           "a type mismatch with the entry's footer must compute from the source")
         assert(shape.collect().map(_.getLong(1)).sum === (1L to 800L).sum)

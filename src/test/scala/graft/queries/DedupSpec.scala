@@ -118,7 +118,7 @@ class DedupSpec extends SparkSpec {
     // every singleton bucket plus only the cheapest hot ones — pairs among
     // the identical docs must STILL all surface (any one admitted hot
     // bucket yields them all), and the skipped mass must be disclosed.
-    val dir = java.nio.file.Files.createTempDirectory("d02budget").toString
+    val dir = tmpDir("d02budget")
     val hotText = Seq.tabulate(40)(i => s"tok$i").mkString(" ")
     val rnd = new scala.util.Random(7)
     val docs =
@@ -175,7 +175,7 @@ class DedupSpec extends SparkSpec {
     // cheap bucket plus only the cheapest hot ones — any ONE admitted
     // hot bucket yields every identical-doc pair, so recall of true
     // dups survives while the skipped mass is disclosed.
-    val dir = java.nio.file.Files.createTempDirectory("d01budget").toString
+    val dir = tmpDir("d01budget")
     val hotText = Seq.tabulate(40)(i => s"tok$i").mkString(" ")
     val rnd = new scala.util.Random(11)
     val docs =
@@ -235,7 +235,7 @@ class DedupSpec extends SparkSpec {
     // and the reliable-checkpoint path (eager parquet write-then-read
     // into a fault-tolerant dir — the cluster-mode option) instead of
     // localCheckpoint
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    val dir = tmpDir("cc-ckpt")
     val path = (1L to 16L).sliding(2).map(s => (s.head, s.last)).toSeq
       .toDF("a", "b")
     val got = ConnectedComponents
@@ -336,7 +336,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("d10 SemDeDup policy: every cell keeps >=1; keeper is the centroid-order minimum") {
-    val dir = java.nio.file.Files.createTempDirectory("d10-root").toString
+    val dir = tmpDir("d10-root")
     sys.props("graft.index.dir") = dir
     try {
       val rows = graft.QueryRegistry.asMap("d10_semantic_dedup")(

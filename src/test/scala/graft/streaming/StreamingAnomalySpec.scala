@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 class StreamingAnomalySpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = tmpDir(p)
   private def d(s: String) = java.sql.Date.valueOf(s)
 
   test("scoreBatch: spike flagged, steady day not, thin history abstains") {

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = tmpDir(p)
 
   test("cross-batch near-dups are flagged against the standing index") {
     implicit val sql = spark.sqlContext
@@ -168,27 +167,5 @@ class StreamingDedupSpec extends SparkSpec {
         (1L, "after-expiry")),
         s"got $out")
     } finally q.stop()
-  }
-
-  test("per-batch logic matches the batch (d05-shape) formulation") {
-    // same decision on the same data when run as one batch join —
-    // batch/stream parity for the dedup family
-    val corpus = Seq((10L, "alpha bravo charlie delta echo foxtrot golf hotel"))
-      .toDF("doc_id", "text")
-    val incoming = Seq(
-      (20L, "alpha bravo charlie delta echo foxtrot golf hotelx"),
-      (21L, "nothing in common with the corpus at all"))
-      .toDF("doc_id", "text")
-    val index = corpus.select(
-      $"doc_id".as("corpus_id"),
-      substring($"text", 1, 20).as("bucket"),
-      array_distinct(split(trim($"text"), "\\s+")).as("toks"))
-    val (decisions, novel) = StreamingDedup.dedupBatch(incoming, index)
-    val d = decisions.collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      .toMap
-    assert(d(20L) === Some(10L))
-    assert(d(21L) === None)
-    assert(novel.select($"corpus_id").as[Long].collect().toSeq === Seq(21L))
   }
 }

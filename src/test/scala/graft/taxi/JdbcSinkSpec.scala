@@ -42,7 +42,7 @@ class JdbcSinkSpec extends SparkSpec {
   }
 
   test("OrcSink round-trips a view with working predicate pushdown") {
-    val dir = java.nio.file.Files.createTempDirectory("orc-sink").toString
+    val dir = tmpDir("orc-sink")
     val sink = new OrcSink(dir)
     val v = Seq(("2021-03-05", "Acme", 1212.5), ("2021-03-06", "Beta", 31.5))
       .toDF("trip_start_date", "company", "fares")
